@@ -3,12 +3,16 @@
     python3 perfbench/run.py --workload planet_full --seed 1 --seconds 10 --trace 0
 
 From the root of a checkout of this repository.  The run makes its inputs
-from ``--seed``, starts Spark on ``local[<cores>]`` (median of three
-session set-ups), runs one warm-up pass of the workload (checked, not
-timed), then timed passes until ``--seconds`` have passed, checking every
-pass's outputs.  With ``--trace 1`` it adds one traced pass (spans around
-each layer's public functions, Spark event log on) and single-layer probes,
-and reports the per-layer metrics instead of the end-to-end ones.
+from ``--seed``, starts Spark on ``local[<cores>]`` (median of five
+session set-ups on the running JVM), then runs timed passes of the
+workload until ``--seconds`` have passed, checking every pass's outputs.
+The first pass runs in a JVM that has run only the set-ups, as in each
+invocation of the program.  Times are wall times less the share of CPU
+time the hypervisor stole (see ``Pass.own_wall``).  With ``--trace 1`` it
+adds one traced pass (spans around each layer's public functions, Spark
+event log on), one more untraced pass as warm as the traced one, and
+single-layer probes, and reports the per-layer metrics instead of the
+end-to-end ones.
 
 The last line of standard output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics": {name: {"value", "unit"}}}``
@@ -20,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import dataclasses
 import json
 import os
 import shutil
@@ -31,7 +36,8 @@ import time
 import traceback
 
 import check
-from tracing import LAYERS, RssSampler, Tracer, event_log_counters, self_times
+from tracing import (LAYERS, RssSampler, Tracer, cpu_ticks, event_log_counters, self_times,
+                     stolen_share)
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -47,7 +53,7 @@ END_TO_END = {
 
 CURATE_PHASES = ("raw", "exact_dedup", "near_dedup", "decontaminated", "quality",
                  "materialize", "dedup_artifact")
-INCREMENT_PHASES = ("setup", "batch_exact", "corpus_exact", "near_dedup",
+INCREMENT_PHASES = ("setup", "batch_exact", "stale_check", "corpus_exact", "near_dedup",
                     "decontaminated", "quality", "append", "artifact_extend")
 
 PER_LAYER = {
@@ -67,7 +73,8 @@ PER_LAYER = {
     **{f"llm_pipeline.increment.{p}_s": "s" for p in INCREMENT_PHASES},
     "llm_pipeline.increment_s": "s", "llm_pipeline.keep_share": "share",
     "llm_pipeline.appended": "count",
-    "session.cold_setup_s": "s", "session.jobs": "count", "session.tasks": "count",
+    "session.cold_setup_s": "s", "session.warmup_s": "s", "session.stolen_share": "share",
+    "session.jobs": "count", "session.tasks": "count",
     "session.executor_run_s": "s", "session.gc_s": "s", "session.busy_share": "share",
     "session.shuffle_write_mb": "MB", "session.spill_mb": "MB",
     **{f"self.{layer}_s": "s" for layer in LAYERS},
@@ -75,12 +82,15 @@ PER_LAYER = {
     "trace.overhead_s": "s",
 }
 
-SETUPS = 3
-DRIVER_MEMORY = "2g"
+SETUPS = 6  # the first launches the JVM; setup_s is the median of the others
+
+
+T_START = time.perf_counter()
 
 
 def log(msg: str) -> None:
-    print(f"perfbench: {msg}", file=sys.stderr, flush=True)
+    print(f"perfbench: [{time.perf_counter() - T_START:6.1f} s] {msg}", file=sys.stderr,
+          flush=True)
 
 
 def parse_args(argv):
@@ -104,13 +114,10 @@ def configure_env(work: str) -> int:
         "PYTHONPATH": ROOT + (os.pathsep + path if path else ""),
         "PYSPARK_PYTHON": sys.executable,
         "SPARK_GRAFT_CPUS": str(cores),
-        "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEMORY,
         "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
+        # the program's own JVM options, plus a temp directory in the checkout
         "SPARK_GRAFT_DRIVER_JAVA_OPTS":
-            "-Xlog:disable -Xlog:all=warning:stderr:uptime,level,tags "
-            # a heap of fixed, pre-touched size: its RSS is the same in every
-            # run, so peak RSS shows memory outside the GC's sizing choices
-            f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp}",
+            f"-Xlog:disable -Xlog:all=warning:stderr:uptime,level,tags -Djava.io.tmpdir={tmp}",
         "TMPDIR": tmp,
         # no /tmp/hsperfdata_<user> file from any JVM the run starts
         "JAVA_TOOL_OPTIONS": "-XX:-UsePerfData",
@@ -139,10 +146,10 @@ def set_up_sessions(work: str, event_dir: str | None):
             extra.update({"spark.eventLog.enabled": "true",
                           "spark.eventLog.dir": "file://" + event_dir,
                           "spark.eventLog.compress": "false"})
-        t0 = time.perf_counter()
+        t0, ticks0 = time.perf_counter(), cpu_ticks()
         spark = get_spark("perfbench", extra_conf=extra)
         spark.range(1).count()
-        times.append(time.perf_counter() - t0)
+        times.append((time.perf_counter() - t0) * (1 - stolen_share(ticks0, cpu_ticks())))
     return spark, times
 
 
@@ -177,21 +184,38 @@ def shut_down(spark, known_pids: set[int]) -> None:
             pass
 
 
+@dataclasses.dataclass
+class Pass:
+    wall: float  # seconds in the workload's run() alone
+    start: float  # epoch seconds when run() began
+    end: float  # and ended
+    stolen: float  # share of the CPU time the run() wanted that the hypervisor gave others
+    sizes: dict
+    stats: dict
+    res: dict
+
+    @property
+    def own_wall(self) -> float:
+        """Wall time less the share the hypervisor stole: what the pass
+        takes on CPUs of its own, which other guests' load does not move."""
+        return self.wall * (1 - self.stolen)
+
+
 class Run:
     """One benchmark run: passes, their checks, and the tallies."""
 
-    def __init__(self, wl, work: str, seed: int) -> None:
-        self.wl, self.work = wl, work
-        self.book = check.DigestBook(
-            os.path.join(ROOT, ".bench_work", "digests", f"{wl.name}-seed{seed}.json"))
+    def __init__(self, work: str, book_path: str) -> None:
+        self.work = work
+        self.book = check.DigestBook(book_path)
         self.rss = RssSampler()
         self.attempted = self.failed = 0
         self.crashed = False
         self.n_pass = 0
 
-    def one_pass(self, spark, sample_rss: bool = False, tracer=None, keep: bool = False):
-        """Runs, sizes and checks one pass.  Returns (wall, sizes, stats,
-        result); the pass directory is removed unless ``keep``."""
+    def one_pass(self, spark, wl, sample_rss: bool = False, tracer=None,
+                 keep: bool = False) -> Pass | None:
+        """Runs, sizes and checks one pass of ``wl``; None when it crashed.
+        The pass directory is removed unless ``keep``."""
         self.n_pass += 1
         pass_dir = os.path.join(self.work, f"pass{self.n_pass}")
         os.makedirs(pass_dir)
@@ -199,9 +223,10 @@ class Run:
             tracer.active = True
         try:
             with self.rss if sample_rss else contextlib.nullcontext():
-                t0 = time.perf_counter()
-                res = self.wl.run(spark, pass_dir)
-                wall = time.perf_counter() - t0
+                start, t0, ticks0 = time.time(), time.perf_counter(), cpu_ticks()
+                res = wl.run(spark, pass_dir)
+                wall, end = time.perf_counter() - t0, time.time()
+                stolen = stolen_share(ticks0, cpu_ticks())
         except Exception:
             traceback.print_exc()
             self.crashed = True
@@ -209,63 +234,71 @@ class Run:
         finally:
             if tracer is not None:
                 tracer.active = False
-        sizes = self.wl.sizes(res)
-        per_output, stats = self.wl.check(spark, res)
+        sizes = wl.sizes(res)
+        per_output, stats = wl.check(spark, res)
         for name, (failures, digest) in per_output.items():
-            failures = failures + self.book.check(name, digest)
-            self.attempted += 1
-            self.failed += bool(failures)
-            for f in failures:
-                log(f"check failed: {f}")
+            self.record(failures + self.book.check(name, digest))
         if not keep:
             shutil.rmtree(pass_dir)
-        log(f"pass {self.n_pass}: {wall:.2f} s{' (traced)' if tracer else ''}")
-        return wall, sizes, stats, res
+        log(f"pass {self.n_pass}: {wall:.2f} s{' (traced)' if tracer else ''}, "
+            f"{stolen:.1%} stolen")
+        return Pass(wall, start, end, stolen, sizes, stats, res)
+
+    def record(self, failures: list[str]) -> None:
+        """Counts one checked output, failed when ``failures`` is not empty."""
+        self.attempted += 1
+        self.failed += bool(failures)
+        for f in failures:
+            log(f"check failed: {f}")
 
 
-def end_to_end(run: Run, setups, passes) -> dict:
-    walls = [p[0] for p in passes]
-    wall = statistics.median(walls)
+def end_to_end(run: Run, wl, setups, passes) -> dict:
+    wall = statistics.median(p.own_wall for p in passes)
     return {
-        "setup_s": statistics.median(setups),
+        "setup_s": statistics.median(setups[1:]),
         "wall_s": wall,
-        "rows_per_s": run.wl.input_rows / wall,
-        "output_mb": statistics.median(p[1]["output"] for p in passes) / 1e6,
-        "scratch_mb": statistics.median(p[1]["scratch"] for p in passes) / 1e6,
+        "rows_per_s": wl.input_rows / wall,
+        "output_mb": statistics.median(p.sizes["output"] for p in passes) / 1e6,
+        "scratch_mb": statistics.median(p.sizes["scratch"] for p in passes) / 1e6,
         "peak_rss_mb": run.rss.peak_bytes / 1e6,
     }
 
 
-def per_layer(run: Run, setups, untraced, traced, spans, layer, counters) -> dict:
+def per_layer(run: Run, wl, setups, timed, traced, warm, spans, layer, counters) -> dict:
     """Every PER_LAYER metric: the workload's own (``layer``), the session
-    counters, self times; 0 for a layer the workload does not run."""
+    counters, self times; 0 for a layer the workload does not run.
+    ``timed`` are the passes the end-to-end metrics come from (the first
+    in a fresh JVM), ``traced`` the pass after them and ``warm`` an
+    untraced pass after that."""
     m = dict.fromkeys(PER_LAYER, 0.0)
     m.update((k, v) for k, v in layer.items() if k in PER_LAYER)
     m.update(counters)
-    m["sources.input_mb"] = run.wl.input_bytes / 1e6
-    m["sources.rows"] = run.wl.input_rows
+    m["sources.input_mb"] = wl.input_bytes / 1e6
+    m["sources.rows"] = wl.input_rows
     for name, s in self_times(spans).items():
         m[f"self.{name}_s"] = s
     m["session.cold_setup_s"] = setups[0]
     m["check.failed_share"] = run.failed / max(1, run.attempted)
-    m["trace.overhead_s"] = traced[0] - statistics.median(p[0] for p in untraced)
+    m["session.stolen_share"] = timed[0].stolen
+    m["session.warmup_s"] = timed[0].own_wall - warm.own_wall
+    m["trace.overhead_s"] = traced.own_wall - warm.own_wall
     return m
 
 
 def measure(args, wl, work: str, cores: int):
-    """Set-ups, the warm-up pass, the timed passes and, with ``--trace 1``,
-    the traced pass and probes.  Returns (run, metrics); metrics are empty
-    when a pass crashed."""
+    """Set-ups, the timed passes and, with ``--trace 1``, the traced pass,
+    an untraced pass as warm as the traced one, and the probes.  Returns
+    (run, metrics); metrics are empty when a pass crashed."""
     event_dir = os.path.join(work, "events") if args.trace else None
     spark, setups = set_up_sessions(work, event_dir)
     log("set-ups: " + ", ".join(f"{t:.2f} s" for t in setups))
-    run = Run(wl, work, args.seed)
-    passes, traced, tracer = [], None, None
+    run = Run(work, os.path.join(ROOT, ".bench_work", "digests",
+                                 f"{wl.name}-n{wl.size}-seed{args.seed}.json"))
+    passes, traced, warm, tracer, layer = [], None, None, None, {}
     try:
-        run.one_pass(spark)  # warm-up: checked, not timed
         t_loop = time.perf_counter()
         while not run.crashed:
-            p = run.one_pass(spark, sample_rss=not args.trace)
+            p = run.one_pass(spark, wl, sample_rss=not args.trace)
             if p is not None:
                 passes.append(p)
             if time.perf_counter() - t_loop >= args.seconds:
@@ -273,14 +306,17 @@ def measure(args, wl, work: str, cores: int):
         if args.trace and not run.crashed:
             tracer = Tracer(f"{args.workload}-seed{args.seed}")
             try:
-                t0 = time.time()
-                traced = run.one_pass(spark, tracer=tracer, keep=True)
-                t1 = time.time()
-                if traced is not None:
-                    layer = wl.layer_metrics(traced[3], traced[2], tracer.spans,
-                                             os.path.join(work, "probe"))
+                traced = run.one_pass(spark, wl, tracer=tracer, keep=True)
             finally:
                 tracer.close()
+            warm = None if run.crashed else run.one_pass(spark, wl)
+            if warm is not None:
+                layer = wl.layer_metrics(traced.res, traced.stats, tracer.spans,
+                                         os.path.join(work, "probe"))
+            # a layer metric the benchmark does not list (a phase the
+            # program added or renamed) fails the run instead of vanishing
+            unknown = sorted(set(layer) - set(PER_LAYER))
+            run.record([f"layer metric {k} is not in PER_LAYER" for k in unknown])
             traces = os.path.join(ROOT, ".bench_work", "traces")
             os.makedirs(traces, exist_ok=True)
             tracer.dump(os.path.join(traces, f"{args.workload}-seed{args.seed}.json"))
@@ -288,12 +324,14 @@ def measure(args, wl, work: str, cores: int):
     finally:
         run.book.save()
         shut_down(spark, run.rss.seen | set(run.rss.descendants()))
-    if run.crashed or not passes:
+        log("stopped")
+    if run.crashed or not passes:  # a crash leaves traced or warm None too
         return run, {}
     if not args.trace:
-        return run, end_to_end(run, setups, passes)
-    counters = event_log_counters(event_dir, app_id, t0, t1, cores)
-    return run, per_layer(run, setups, passes, traced, tracer.spans, layer, counters)
+        return run, end_to_end(run, wl, setups, passes)
+    # the Spark jobs of the program's own calls, not of the checker's
+    counters = event_log_counters(event_dir, app_id, traced.start, traced.end, cores)
+    return run, per_layer(run, wl, setups, passes, traced, warm, tracer.spans, layer, counters)
 
 
 def main(argv=None) -> int:
@@ -311,8 +349,10 @@ def main(argv=None) -> int:
     shutil.rmtree(work, ignore_errors=True)
     try:
         cores = configure_env(work)
-        wl = WORKLOADS[args.workload]()
+        cls = WORKLOADS[args.workload]
+        wl = cls(cls.SIZE)
         wl.prepare(os.path.join(work, "input"), args.seed)
+        log(f"inputs: {wl.input_rows} rows, {wl.input_bytes / 1e6:.1f} MB")
         run, metrics = measure(args, wl, work, cores)
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -113,8 +113,7 @@ def _rewrite(path: str, edit) -> None:
 def test_checker_flags_corrupted_outputs(spark, tmp_path):
     from workloads import PlanetFull
 
-    wl = PlanetFull()
-    wl.N_NODES = 300
+    wl = PlanetFull(300)
     wl.prepare(str(tmp_path / "in"), 9)
     res = wl.run(spark, str(tmp_path / "pass"))
     per_output, stats = wl.check(spark, res)
@@ -154,3 +153,10 @@ def test_benchmark_json_names_every_metric():
     from workloads import WORKLOADS
 
     assert [w["name"] for w in bench["workloads"]] == list(WORKLOADS)
+
+
+def test_stolen_share():
+    from tracing import stolen_share
+
+    assert stolen_share((100, 10), (190, 20)) == pytest.approx(0.1)
+    assert stolen_share((5, 5), (5, 5)) == 0.0

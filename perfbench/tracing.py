@@ -239,6 +239,23 @@ class RssSampler:
         self._thread.join()
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(busy, stolen) clock ticks of all CPUs so far, from ``/proc/stat``:
+    stolen ticks are those a virtual CPU wanted to run but the hypervisor
+    ran another guest."""
+    with open("/proc/stat", encoding="ascii") as fh:
+        f = [int(x) for x in fh.readline().split()[1:9]]
+    user, nice, system, _idle, _iowait, irq, softirq, steal = f
+    return user + nice + system + irq + softirq, steal
+
+
+def stolen_share(before: tuple[int, int], after: tuple[int, int]) -> float:
+    """Share of the CPU time wanted between two ``cpu_ticks`` readings that
+    the hypervisor gave to other guests."""
+    busy, stolen = (b - a for a, b in zip(before, after))
+    return stolen / max(1, busy + stolen)
+
+
 def event_log_counters(log_dir: str, app_id: str, t0: float, t1: float, cores: int) -> dict:
     """Spark runtime counters for the jobs submitted in [t0, t1] (epoch
     seconds), parsed from the uncompressed event log of ``app_id``."""

@@ -36,12 +36,15 @@ class PlanetFull:
     and history XML, changesets XML, planet and history PBF."""
 
     name = "planet_full"
-    N_NODES = 8000
+    SIZE = 16000  # node ids
+
+    def __init__(self, size: int) -> None:
+        self.size = size
 
     def prepare(self, input_dir: str, seed: int) -> None:
         os.makedirs(input_dir, exist_ok=True)
         self.dump = os.path.join(input_dir, "planet.sql")
-        self.truth = gen_osm.generate_planet(self.dump, seed, self.N_NODES)
+        self.truth = gen_osm.generate_planet(self.dump, seed, self.size)
         self.input_rows = self.truth["input"]["rows"]
         self.input_bytes = self.truth["input"]["bytes"]
 
@@ -139,10 +142,13 @@ class CurateIncrement:
     ``curate_increment`` of the other 25% into the curated dataset."""
 
     name = "curate_increment"
-    N_DOCS = 3000
+    SIZE = 3000  # docs
+
+    def __init__(self, size: int) -> None:
+        self.size = size
 
     def prepare(self, input_dir: str, seed: int) -> None:
-        self.truth = gen_docs.generate(input_dir, seed, self.N_DOCS)
+        self.truth = gen_docs.generate(input_dir, seed, self.size)
         self.input_rows = self.truth["rows"]["base"] + self.truth["rows"]["batch"]
         self.input_bytes = self.truth["input_bytes"]
 
