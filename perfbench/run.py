@@ -1,18 +1,18 @@
 """Runs one benchmark workload and prints its metrics.
 
-    python3 perfbench/run.py --workload planet_full --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload planet_full --seed 1 --seconds 17 --trace 0
 
 From the root of a checkout of this repository.  The run makes its inputs
 from ``--seed``, starts Spark on ``local[<cores>]`` (median of five
-session set-ups on the running JVM), then runs timed passes of the
-workload until ``--seconds`` have passed, checking every pass's outputs.
-The first pass runs in a JVM that has run only the set-ups, as in each
-invocation of the program.  Times are wall times less the share of CPU
-time the hypervisor stole (see ``Pass.own_wall``).  With ``--trace 1`` it
-adds one traced pass (spans around each layer's public functions, Spark
-event log on), one more untraced pass as warm as the traced one, and
-single-layer probes, and reports the per-layer metrics instead of the
-end-to-end ones.
+session set-ups on the running JVM), runs one warm-up pass of the
+workload that is checked but not timed, then timed passes while the next
+one is expected to end within ``--seconds`` (at least one), checking every
+pass's outputs.  Times are wall times less the share of CPU time the
+hypervisor stole (see ``Pass.own_wall``); ``wall_s`` is the median over
+the timed passes.  With ``--trace 1`` the warm-up pass is followed by one
+traced pass (spans around each layer's public functions, Spark event log
+on), one untraced pass, and single-layer probes instead, and the run
+reports the per-layer metrics instead of the end-to-end ones.
 
 The last line of standard output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics": {name: {"value", "unit"}}}``
@@ -23,7 +23,6 @@ run writes stays under ``.bench_work/`` in the checkout.
 from __future__ import annotations
 
 import argparse
-import contextlib
 import dataclasses
 import json
 import os
@@ -48,7 +47,6 @@ END_TO_END = {
     "rows_per_s": "1/s",
     "output_mb": "MB",
     "scratch_mb": "MB",
-    "peak_rss_mb": "MB",
 }
 
 CURATE_PHASES = ("raw", "exact_dedup", "near_dedup", "decontaminated", "quality",
@@ -74,6 +72,7 @@ PER_LAYER = {
     "llm_pipeline.increment_s": "s", "llm_pipeline.keep_share": "share",
     "llm_pipeline.appended": "count",
     "session.cold_setup_s": "s", "session.warmup_s": "s", "session.stolen_share": "share",
+    "session.peak_rss_mb": "MB",
     "session.jobs": "count", "session.tasks": "count",
     "session.executor_run_s": "s", "session.gc_s": "s", "session.busy_share": "share",
     "session.shuffle_write_mb": "MB", "session.spill_mb": "MB",
@@ -212,8 +211,7 @@ class Run:
         self.crashed = False
         self.n_pass = 0
 
-    def one_pass(self, spark, wl, sample_rss: bool = False, tracer=None,
-                 keep: bool = False) -> Pass | None:
+    def one_pass(self, spark, wl, tracer=None, keep: bool = False) -> Pass | None:
         """Runs, sizes and checks one pass of ``wl``; None when it crashed.
         The pass directory is removed unless ``keep``."""
         self.n_pass += 1
@@ -222,11 +220,10 @@ class Run:
         if tracer is not None:
             tracer.active = True
         try:
-            with self.rss if sample_rss else contextlib.nullcontext():
-                start, t0, ticks0 = time.time(), time.perf_counter(), cpu_ticks()
-                res = wl.run(spark, pass_dir)
-                wall, end = time.perf_counter() - t0, time.time()
-                stolen = stolen_share(ticks0, cpu_ticks())
+            start, t0, ticks0 = time.time(), time.perf_counter(), cpu_ticks()
+            res = wl.run(spark, pass_dir)
+            wall, end = time.perf_counter() - t0, time.time()
+            stolen = stolen_share(ticks0, cpu_ticks())
         except Exception:
             traceback.print_exc()
             self.crashed = True
@@ -252,7 +249,7 @@ class Run:
             log(f"check failed: {f}")
 
 
-def end_to_end(run: Run, wl, setups, passes) -> dict:
+def end_to_end(wl, setups, passes) -> dict:
     wall = statistics.median(p.own_wall for p in passes)
     return {
         "setup_s": statistics.median(setups[1:]),
@@ -260,16 +257,14 @@ def end_to_end(run: Run, wl, setups, passes) -> dict:
         "rows_per_s": wl.input_rows / wall,
         "output_mb": statistics.median(p.sizes["output"] for p in passes) / 1e6,
         "scratch_mb": statistics.median(p.sizes["scratch"] for p in passes) / 1e6,
-        "peak_rss_mb": run.rss.peak_bytes / 1e6,
     }
 
 
-def per_layer(run: Run, wl, setups, timed, traced, warm, spans, layer, counters) -> dict:
+def per_layer(run: Run, wl, setups, warmup, traced, warm, spans, layer, counters) -> dict:
     """Every PER_LAYER metric: the workload's own (``layer``), the session
     counters, self times; 0 for a layer the workload does not run.
-    ``timed`` are the passes the end-to-end metrics come from (the first
-    in a fresh JVM), ``traced`` the pass after them and ``warm`` an
-    untraced pass after that."""
+    ``warmup`` is the first pass in the JVM, ``traced`` the pass after it
+    and ``warm`` an untraced pass after that."""
     m = dict.fromkeys(PER_LAYER, 0.0)
     m.update((k, v) for k, v in layer.items() if k in PER_LAYER)
     m.update(counters)
@@ -279,16 +274,18 @@ def per_layer(run: Run, wl, setups, timed, traced, warm, spans, layer, counters)
         m[f"self.{name}_s"] = s
     m["session.cold_setup_s"] = setups[0]
     m["check.failed_share"] = run.failed / max(1, run.attempted)
-    m["session.stolen_share"] = timed[0].stolen
-    m["session.warmup_s"] = timed[0].own_wall - warm.own_wall
+    m["session.stolen_share"] = statistics.median(p.stolen for p in (warmup, traced, warm))
+    m["session.warmup_s"] = warmup.own_wall - warm.own_wall
+    m["session.peak_rss_mb"] = run.rss.peak_bytes / 1e6
     m["trace.overhead_s"] = traced.own_wall - warm.own_wall
     return m
 
 
 def measure(args, wl, work: str, cores: int):
-    """Set-ups, the timed passes and, with ``--trace 1``, the traced pass,
-    an untraced pass as warm as the traced one, and the probes.  Returns
-    (run, metrics); metrics are empty when a pass crashed."""
+    """Set-ups, the warm-up pass, then the timed passes or, with
+    ``--trace 1``, the traced pass, an untraced pass after it, and the
+    probes.  Returns (run, metrics); metrics are empty when a pass
+    crashed."""
     event_dir = os.path.join(work, "events") if args.trace else None
     spark, setups = set_up_sessions(work, event_dir)
     log("set-ups: " + ", ".join(f"{t:.2f} s" for t in setups))
@@ -296,42 +293,48 @@ def measure(args, wl, work: str, cores: int):
                                  f"{wl.name}-n{wl.size}-seed{args.seed}.json"))
     passes, traced, warm, tracer, layer = [], None, None, None, {}
     try:
-        t_loop = time.perf_counter()
-        while not run.crashed:
-            p = run.one_pass(spark, wl, sample_rss=not args.trace)
-            if p is not None:
-                passes.append(p)
-            if time.perf_counter() - t_loop >= args.seconds:
-                break
-        if args.trace and not run.crashed:
-            tracer = Tracer(f"{args.workload}-seed{args.seed}")
-            try:
-                traced = run.one_pass(spark, wl, tracer=tracer, keep=True)
-            finally:
-                tracer.close()
-            warm = None if run.crashed else run.one_pass(spark, wl)
-            if warm is not None:
-                layer = wl.layer_metrics(traced.res, traced.stats, tracer.spans,
-                                         os.path.join(work, "probe"))
+        with run.rss:
+            # class loading, code generation, JIT, Python worker start-up
+            # and heap growth of a fresh JVM, kept out of the timed passes
+            warmup = run.one_pass(spark, wl)
+            if args.trace and not run.crashed:
+                tracer = Tracer(f"{args.workload}-seed{args.seed}")
+                try:
+                    traced = run.one_pass(spark, wl, tracer=tracer, keep=True)
+                finally:
+                    tracer.close()
+                warm = None if run.crashed else run.one_pass(spark, wl)
+            t_loop = time.perf_counter()
+            while not args.trace and not run.crashed:
+                t_pass = time.perf_counter()
+                passes.append(run.one_pass(spark, wl))
+                now = time.perf_counter()
+                # another pass only when, as long as this one, it ends in time
+                if 2 * now - t_pass - t_loop > args.seconds:
+                    break
+        if warm is not None:
+            layer = wl.layer_metrics(traced.res, traced.stats, tracer.spans,
+                                     os.path.join(work, "probe"))
             # a layer metric the benchmark does not list (a phase the
             # program added or renamed) fails the run instead of vanishing
             unknown = sorted(set(layer) - set(PER_LAYER))
             run.record([f"layer metric {k} is not in PER_LAYER" for k in unknown])
+            app_id = spark.sparkContext.applicationId
+        if tracer is not None:
             traces = os.path.join(ROOT, ".bench_work", "traces")
             os.makedirs(traces, exist_ok=True)
             tracer.dump(os.path.join(traces, f"{args.workload}-seed{args.seed}.json"))
-            app_id = spark.sparkContext.applicationId
     finally:
         run.book.save()
         shut_down(spark, run.rss.seen | set(run.rss.descendants()))
         log("stopped")
-    if run.crashed or not passes:  # a crash leaves traced or warm None too
+    if run.crashed:  # a crashed pass leaves warm or a timed pass None
         return run, {}
     if not args.trace:
-        return run, end_to_end(run, wl, setups, passes)
+        return run, end_to_end(wl, setups, passes)
     # the Spark jobs of the program's own calls, not of the checker's
     counters = event_log_counters(event_dir, app_id, traced.start, traced.end, cores)
-    return run, per_layer(run, wl, setups, passes, traced, warm, tracer.spans, layer, counters)
+    return run, per_layer(run, wl, setups, warmup, traced, warm, tracer.spans, layer, counters)
 
 
 def main(argv=None) -> int:

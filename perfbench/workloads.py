@@ -142,7 +142,7 @@ class CurateIncrement:
     ``curate_increment`` of the other 25% into the curated dataset."""
 
     name = "curate_increment"
-    SIZE = 3000  # docs
+    SIZE = 500  # docs
 
     def __init__(self, size: int) -> None:
         self.size = size
