@@ -187,6 +187,7 @@ def _write_dedup_artifact(
     import shutil
     from concurrent.futures import ThreadPoolExecutor
 
+    from planet_dump_ng_spark.session import capture_job_context
     from planet_dump_ng_spark.streaming.jobs import corpus_lsh_buckets
 
     d = _dedup_artifact_dir(dataset_dir)
@@ -236,27 +237,32 @@ def _write_dedup_artifact(
         F.col("doc_id"), tx.fingerprint("text").alias("fp")
     )
     extras = [concurrent_extra] if concurrent_extra is not None else []
+    # pool threads do not inherit the caller's local properties: each task
+    # re-applies its scheduler pool and job description first
+    job_context = capture_job_context(docs.sparkSession)
+
+    def in_context(task) -> None:
+        job_context()
+        task()
+
+    def run_side_by_side(*tasks) -> None:
+        with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+            for fut in [pool.submit(in_context, t) for t in tasks]:
+                fut.result()
+
     if mode == "overwrite":
         fp_tmp = f"{d}/fingerprints.build"
         shutil.rmtree(f"{d}/fingerprints", ignore_errors=True)
         shutil.rmtree(fp_tmp, ignore_errors=True)
-        tasks = [
+        run_side_by_side(
             _write_buckets,
             _write_urls,
             lambda: fp_df.write.mode("overwrite").parquet(fp_tmp),
             *extras,
-        ]
-        with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-            for fut in [pool.submit(t) for t in tasks]:
-                fut.result()
+        )
         os.rename(fp_tmp, f"{d}/fingerprints")
     elif include_buckets or url_col is not None:
-        with ThreadPoolExecutor(max_workers=2 + len(extras)) as pool:
-            for fut in [
-                pool.submit(t)
-                for t in (_write_buckets, _write_urls, *extras)
-            ]:
-                fut.result()
+        run_side_by_side(_write_buckets, _write_urls, *extras)
         fp_df.write.mode(mode).parquet(f"{d}/fingerprints")
     else:
         # exact-family append: no same-directory table precedes the
@@ -265,17 +271,10 @@ def _write_dedup_artifact(
         # curate_increment's stale pass validates independently — so
         # the fingerprints append may overlap it; _synced still lands
         # only after both complete
-        with ThreadPoolExecutor(max_workers=1 + len(extras)) as pool:
-            for fut in [
-                pool.submit(t)
-                for t in (
-                    *extras,
-                    lambda: fp_df.write.mode(mode).parquet(
-                        f"{d}/fingerprints"
-                    ),
-                )
-            ]:
-                fut.result()
+        run_side_by_side(
+            *extras,
+            lambda: fp_df.write.mode(mode).parquet(f"{d}/fingerprints"),
+        )
     # known-clean marker, written strictly after the commit-marker table:
     # its presence lets the next increment skip the dataset-vs-artifact
     # count check entirely (curate_increment deletes it before every

@@ -240,8 +240,10 @@ def max_data_timestamp(*dfs_and_cols: tuple[DataFrame, str]):
     planet-dump.cpp:144-151) — drives the <osm timestamp> header and the
     changeset open flag.  Returns a 1-row DataFrame; callers collect the
     scalar once (a driver-side scalar, not a per-row subquery)."""
-    parts = [df.agg(F.max(c).alias("t")) for df, c in dfs_and_cols]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
+    # one aggregate over the union of the columns: a single exchange
+    # (one Spark job under AQE) instead of one per table
+    cols = [df.select(F.col(c).alias("t")) for df, c in dfs_and_cols]
+    out = cols[0]
+    for c in cols[1:]:
+        out = out.unionAll(c)
     return out.agg(F.max("t").alias("max_ts"))

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DAEMON_MODULE = "planet_dump_ng_spark.worker_daemon"
 
 
 def get_spark(
@@ -117,7 +118,7 @@ def get_spark(
             ),
         )
         # FAIR task scheduling: the multicast emit (pipeline.write_outputs)
-        # submits one job chain per output from threads — under FIFO an
+        # submits one job per output from threads — under FIFO an
         # earlier output's wide stage monopolizes every task slot and the
         # sibling outputs' stages queue whole-stage-at-a-time behind it
         # (observed as multi-second straggler gaps on the XML outputs).
@@ -125,6 +126,13 @@ def get_spark(
         # the reference's one-thread-per-writer concurrency model
         # (planet-dump.cpp:242-259) expressed in scheduler terms.
         .config("spark.scheduler.mode", "FAIR")
+        # Python workers fork from the package's daemon: the stock
+        # pyspark.daemon plus a zip importer that re-reads pyspark.zip
+        # only when the archive changed.  The stock importer re-reads it
+        # for every cached package path on every task (about 0.2 s per
+        # task on CPython 3.11) — see worker_daemon.py.  The workers
+        # import this package for the engine's UDFs anyway.
+        .config("spark.python.daemon.module", DAEMON_MODULE)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -138,12 +146,11 @@ def capture_job_context(spark: SparkSession):
     return a thunk that re-applies them on whatever thread calls it.
 
     PySpark local properties are PER PYTHON THREAD (pinned-thread mode):
-    a plain ``ThreadPoolExecutor`` worker does NOT inherit them, so a
-    sink that fans its write jobs out through a sub-pool silently drops
-    the caller's FAIR pool assignment — every job lands in the default
-    FIFO pool and the one-pool-per-output round-robin the multicast emit
-    relies on (pipeline.write_outputs) never engages.  Each sub-thread
-    task calls the thunk first; worker threads are reused, so it must be
+    a plain ``ThreadPoolExecutor`` worker does NOT inherit them, so jobs
+    fanned out through a pool silently drop the caller's FAIR pool and
+    job description — they land in the default FIFO pool, unlabelled
+    (llm_pipeline._write_dedup_artifact applies it).  Each pool task
+    calls the thunk first; worker threads are reused, so it must be
     applied per task, not per thread."""
     sc = spark.sparkContext
     pool = sc.getLocalProperty("spark.scheduler.pool")

@@ -29,6 +29,7 @@ tags/refs and nodes write lat=lon=0 (:341-349,580,604,637).
 from __future__ import annotations
 
 import calendar
+import functools
 import os
 import struct
 import zlib
@@ -37,6 +38,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, functions as F
 
 from planet_dump_ng_spark.functions import protowire as pw
+from planet_dump_ng_spark.sinks import committed
 
 GRANULARITY = 100  # nanodeg per unit -> units == 1e-7-deg fixed-point ints
 DATE_GRANULARITY = 1000  # ms per unit -> units == unix seconds
@@ -775,6 +777,35 @@ def _partition_encoder(
     return run
 
 
+def _rows_arrow_encoder(
+    table: str, history: bool, anonymize: bool, out_dir: str
+):
+    """mapInArrow adapter for the row encoders (the ``--dense-nodes=false``
+    nodes stream): feeds each partition's rows, as dicts, to
+    :func:`_partition_encoder` and yields its part path."""
+    import pyarrow as pa
+
+    encode = _partition_encoder(table, history, anonymize, out_dir, dense_nodes=False)
+
+    def run(batches):
+        from pyspark import TaskContext
+
+        rows = (r for b in batches for r in b.to_pylist())
+        for path in encode(TaskContext.get().partitionId(), rows):
+            yield pa.RecordBatch.from_pydict({"path": [path]})
+
+    return run
+
+
+_STREAMS = ("nodes", "ways", "relations")
+
+
+def _part_order(path: str) -> tuple[int, int]:
+    """(stream, partition) of a ``{kind}-NNNNN.pbfpart`` file."""
+    kind, idx = os.path.basename(path)[: -len(".pbfpart")].rsplit("-", 1)
+    return _STREAMS.index(kind), int(idx)
+
+
 def write_pbf_file(
     nodes: DataFrame,
     ways: DataFrame,
@@ -789,83 +820,56 @@ def write_pbf_file(
     dense_nodes: bool = True,
 ) -> None:
     """Emit one ordered .osm.pbf: header blob, then nodes, ways, relations
-    in (id, version) order (Sort.Type_then_ID).  Each range partition
-    encodes its own complete blobs executor-side; the driver concatenates.
+    in (id, version) order (Sort.Type_then_ID).  One job encodes all three
+    streams — each range partition its own complete blobs, executor-side —
+    and the driver concatenates them into a temporary file that is renamed
+    onto ``out_path`` only when complete (``committed``).
     ``pre_arranged``: inputs are already range-sorted (shared across
     output variants) — skip the per-call shuffle."""
-    out_dir = out_path + ".parts"
-    os.makedirs(out_dir, exist_ok=True)
-
-    # re-apply the caller's FAIR pool + description on the sub-pool
-    # threads (executor threads don't inherit local properties; see
-    # session.capture_job_context)
-    from planet_dump_ng_spark.session import capture_job_context
-
-    ctx = capture_job_context(nodes.sparkSession)
-
-    def encode_one(table: str, df: DataFrame) -> list[str]:
-        ctx()
-        if not pre_arranged:
-            cols = [F.col("id"), F.col("version")]
-            df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        if table == "nodes" and dense_nodes:
-            # columnar Arrow path for the volume-dominant dense stream
-            return sorted(
-                r["path"]
-                for r in df.mapInArrow(
-                    _dense_arrow_encoder(history, anonymize, out_dir),
-                    schema="path string",
-                ).collect()
-            )
-        if table in ("ways", "relations"):
-            # columnar encoders — byte-identical to the row paths
-            # (test_round7_pbf); after dense nodes, ways refs and
-            # mega-relation member lists are the remaining volume
-            enc = (
-                _ways_arrow_encoder
-                if table == "ways"
-                else _relations_arrow_encoder
-            )
-            return sorted(
-                r["path"]
-                for r in df.mapInArrow(
-                    enc(history, anonymize, out_dir),
-                    schema="path string",
-                ).collect()
-            )
-        return sorted(
-            df.rdd.mapPartitionsWithIndex(
-                _partition_encoder(table, history, anonymize, out_dir, dense_nodes)
-            ).collect()
-        )
-
-    # the three per-type encode jobs are independent — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        part_lists = list(
-            pool.map(
-                lambda args: encode_one(*args),
-                [("nodes", nodes), ("ways", ways), ("relations", relations)],
-            )
-        )
-
     import shutil
 
-    # stream part files through a bounded buffer (matches xml_sink's
-    # fragment concat): a fat range partition at planet scale is a
-    # multi-GB file, and part.read() would allocate all of it on the
-    # driver at once.
-    with open(out_path, "wb") as out:
-        out.write(
-            encode_header_block(generator, history, max_ts, source, dense_nodes)
+    out_dir = out_path + ".parts"
+    with committed(out_path, out_dir) as tmp_path:
+        os.makedirs(out_dir, exist_ok=True)
+        encoders = {
+            # columnar Arrow encoders, byte-identical to the row paths
+            # (test_round7_pbf); dense nodes are ~90% of planet volume
+            "nodes": (
+                _dense_arrow_encoder
+                if dense_nodes
+                else functools.partial(_rows_arrow_encoder, "nodes")
+            ),
+            "ways": _ways_arrow_encoder,
+            "relations": _relations_arrow_encoder,
+        }
+        streams = []
+        for table, df in zip(_STREAMS, (nodes, ways, relations)):
+            if not pre_arranged:
+                cols = [F.col("id"), F.col("version")]
+                df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+            streams.append(
+                df.mapInArrow(
+                    encoders[table](history, anonymize, out_dir),
+                    schema="path string",
+                )
+            )
+        # part names carry stream and partition, so the order holds
+        # however the union lays out its partitions
+        paths = sorted(
+            (r["path"] for r in functools.reduce(DataFrame.union, streams).collect()),
+            key=_part_order,
         )
-        for paths in part_lists:
+        # stream part files through a bounded buffer (matches xml_sink's
+        # fragment concat): a fat range partition at planet scale is a
+        # multi-GB file, and part.read() would allocate all of it on the
+        # driver at once.
+        with open(tmp_path, "wb") as out:
+            out.write(
+                encode_header_block(generator, history, max_ts, source, dense_nodes)
+            )
             for p in paths:
                 with open(p, "rb") as part:
                     shutil.copyfileobj(part, out, 1 << 20)
-
-    shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # -- reader (verification path; also a usable source) ------------------------

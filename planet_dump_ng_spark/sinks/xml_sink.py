@@ -18,8 +18,9 @@ row loop).  Semantics matched against the reference's golden outputs
   (:377-386,462-472,346-357)
 - XML-invalid control chars scrub to '?' (:41-56,293-322); &<>" escape
 
-Single ordered file at scale: fragments are written as per-partition
-bzip2 files under a range-partitioned global order, then byte-concatenated
+Single ordered file at scale: fragments are written by one job as
+per-partition bzip2 files under a range-partitioned global order, then
+byte-concatenated
 (multistream .bz2 is valid bzip2) — compression runs cluster-parallel,
 unlike the reference's single external ``bzip2 -c`` pipe
 (xml_writer.cpp:58-79).
@@ -28,11 +29,14 @@ unlike the reference's single external ``bzip2 -c`` pipe
 from __future__ import annotations
 
 import bz2
+import functools
 import os
 import shutil
 from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from planet_dump_ng_spark.sinks import committed
 
 #: default data metainfo — overridable like the reference's --meta-*
 #: options (src/planet-dump.cpp:62-72: meta-author/source/copyleft/
@@ -315,10 +319,12 @@ def write_xml_file(
 
     ``rendered_in_order``: [(df_with_xml_col, sort_cols)] in output stream
     order (changesets, nodes, ways, relations — planet-dump.cpp:242-249).
-    Each frame is range-partitioned + sorted on its keys and written as
-    per-partition bz2 part files (global order = partition-range order);
-    the driver then streams header + parts + footer into one multistream
-    .bz2 (or plain text when out_path lacks the .bz2 suffix).
+    Each frame is range-partitioned + sorted on its keys; one job writes
+    all of them as per-partition bz2 part files (global order = stream
+    order, then partition-range order); the driver then streams header +
+    parts + footer into one multistream .bz2 (or plain text when out_path
+    lacks the .bz2 suffix).  The file is written under a temporary name
+    and renamed onto ``out_path`` only when complete (``committed``).
 
     ``pre_arranged``: the caller already range-partitioned + sorted the
     frames (and typically persisted them so several output variants share
@@ -355,100 +361,77 @@ def write_xml_file(
             codec = None
     tmp_dir = tmp_dir or out_path + ".parts"
 
-    # the sub-pool threads below must re-apply the caller's FAIR pool +
-    # job description (plain executor threads don't inherit local
-    # properties — without this every fragment write lands in the
-    # default FIFO pool and the per-output round-robin never engages)
-    from planet_dump_ng_spark.session import capture_job_context
-
-    ctx = (
-        capture_job_context(rendered_in_order[0][0].sparkSession)
-        if rendered_in_order
-        else (lambda: None)
-    )
-
-    def write_one(i: int, df: DataFrame, sort_cols: list[str]) -> str:
-        ctx()
-        d = os.path.join(tmp_dir, f"t{i}")
-        if not pre_arranged:
-            cols = [F.col(c) for c in sort_cols]
-            df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        writer = df.select("xml").write.mode("overwrite")
+    with committed(out_path, tmp_dir) as tmp_path:
+        # one job for the whole file: the fragment streams, each cut to
+        # its xml column, unioned in output order.  Union partitions
+        # follow the children in order — the projection drops the sort
+        # keys, so no child reports a partitioning that Spark's
+        # unionOutputPartitioning could zip with a sibling's.
+        streams = []
+        for df, sort_cols in rendered_in_order:
+            if not pre_arranged:
+                cols = [F.col(c) for c in sort_cols]
+                df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+            streams.append(df.select("xml"))
+        writer = functools.reduce(DataFrame.union, streams).write.mode("overwrite")
         if codec:
             writer = writer.option("compression", codec)
-        writer.text(d)
-        return d
-
-    # the per-type fragment jobs are independent — run them concurrently
-    # (order is restored at concat time below)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(rendered_in_order) or 1) as pool:
-        part_dirs = list(
-            pool.map(
-                lambda args: write_one(*args),
-                [
-                    (i, df, sc)
-                    for i, (df, sc) in enumerate(rendered_in_order)
-                ],
-            )
+        writer.text(tmp_dir)
+        suffix = {"bzip2": ".bz2", "gzip": ".gz"}.get(codec, "")
+        parts = sorted(
+            n
+            for n in os.listdir(tmp_dir)
+            if n.startswith("part-") and n.endswith(f".txt{suffix}")
         )
 
-    def comp(data: bytes) -> bytes:
-        if codec == "bzip2":
-            return bz2.compress(data)
-        if codec == "gzip":
-            import gzip
+        def comp(data: bytes) -> bytes:
+            if codec == "bzip2":
+                return bz2.compress(data)
+            if codec == "gzip":
+                import gzip
 
-            # mtime=0: deterministic member bytes (gzip headers embed a
-            # timestamp; golden compares decompress first, but identical
-            # reruns should still produce identical files)
-            return gzip.compress(data, mtime=0)
-        return data
+                # mtime=0: deterministic member bytes (gzip headers embed
+                # a timestamp; golden compares decompress first, but
+                # identical reruns should still produce identical files)
+                return gzip.compress(data, mtime=0)
+            return data
 
-    def concat_into(sink) -> None:
-        sink.write(comp(format_osm_header(generator, max_ts, meta).encode()))
-        for d in part_dirs:
-            suffix = {"bzip2": ".bz2", "gzip": ".gz"}.get(codec, "")
-            names = sorted(
-                n
-                for n in os.listdir(d)
-                if n.startswith("part-") and n.endswith(f".txt{suffix}")
-            )
-            for n in names:
-                with open(os.path.join(d, n), "rb") as part:
+        def concat_into(sink) -> None:
+            sink.write(comp(format_osm_header(generator, max_ts, meta).encode()))
+            for n in parts:
+                with open(os.path.join(tmp_dir, n), "rb") as part:
                     shutil.copyfileobj(part, sink, 1 << 20)
-        sink.write(comp(b"</osm>\n"))
+            sink.write(comp(b"</osm>\n"))
 
-    if external is not None:
-        # the reference's popen(compress_command) shape: the user's own
-        # command, shell semantics and all, fed the plain concat on
-        # stdin with the output file on stdout
-        import subprocess
+        with open(tmp_path, "wb") as out:
+            if external is None:
+                concat_into(out)
+            else:
+                _pipe_through(external, concat_into, out, out_path)
 
-        with open(out_path, "wb") as out:
-            proc = subprocess.Popen(
-                external, shell=True, stdin=subprocess.PIPE, stdout=out
-            )
-            try:
-                # a command that dies mid-stream breaks the pipe; swallow
-                # that here so the loud diagnostic below (with the exit
-                # code) is what the caller sees, not a bare EPIPE
-                try:
-                    concat_into(proc.stdin)
-                except BrokenPipeError:
-                    pass
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-            if proc.wait() != 0:
-                raise RuntimeError(
-                    f"--compress-command {external!r} exited "
-                    f"{proc.returncode} for {out_path!r}"
-                )
-    else:
-        with open(out_path, "wb") as out:
-            concat_into(out)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
+
+def _pipe_through(command: str, concat_into, out, out_path: str) -> None:
+    """The reference's popen(compress_command) shape: the user's own
+    command, shell semantics and all, fed the plain concat on stdin with
+    the output file on stdout."""
+    import subprocess
+
+    proc = subprocess.Popen(command, shell=True, stdin=subprocess.PIPE, stdout=out)
+    try:
+        # a command that dies mid-stream breaks the pipe; swallow that
+        # here so the loud diagnostic below (with the exit code) is what
+        # the caller sees, not a bare EPIPE
+        try:
+            concat_into(proc.stdin)
+        except BrokenPipeError:
+            pass
+    finally:
+        try:
+            proc.stdin.close()
+        except BrokenPipeError:
+            pass
+    if proc.wait() != 0:
+        raise RuntimeError(
+            f"--compress-command {command!r} exited "
+            f"{proc.returncode} for {out_path!r}"
+        )
