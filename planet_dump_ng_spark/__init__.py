@@ -1,27 +1,29 @@
-"""planet_dump_ng_spark — a PySpark-native analytics/ETL engine with the
-query and data-processing capabilities of zerebubuth/planet-dump-ng.
+"""planet_dump_ng_spark — a PySpark rebuild of zerebubuth/planet-dump-ng,
+plus a training-data curation path.
 
-The reference (C++03/Boost, /root/reference) is a fixed-plan batch ETL
-pipeline: pg_dump archive -> typed table scans -> external sort -> streaming
-sort-merge joins (element x tags x inners) -> decorator filters -> XML/PBF
-sinks.  This package re-expresses every operator Spark-first:
+The reference (C++03/Boost) is a fixed-plan batch ETL pipeline: pg_dump
+archive -> typed table scans -> external sort -> streaming sort-merge joins
+(element x tags x inners) -> decorator filters -> XML/PBF sinks.  Here:
 
+- ``cli`` / ``pipeline``: the planet-dump-ng flag surface and the
+  dump -> decode -> stage -> assemble -> emit lifecycle (``run_dump``).
 - ``sources``   : COPY-text decode (dump_reader.cpp / unescape_copy_row.hpp)
-                  and Parquet staging with resume markers (dump_archive.cpp).
+                  and the JSONL corpus connector; ``staging`` writes the
+                  decoded tables to parquet with resume markers
+                  (dump_archive.cpp).
 - ``operators`` : element assembly joins (copy_elements.cpp), the
                   latest-version "history filter" (history_filter.cpp),
-                  attribution joins (changeset_map.cpp), anonymization,
-                  plus large-scale training-data operators (dedup,
-                  similarity search, text analysis, multimodal) that the
-                  100 TB deployment needs.
-- ``functions`` : the scalar-function surface (SURVEY.md section 2.6).
+                  attribution joins (changeset_map.cpp), and the
+                  operators curation chains.
+- ``functions`` : the protobuf wire codec the PBF sink uses.
 - ``sinks``     : OSM XML (xml_writer.cpp) and PBF (pbf_writer.cpp) writers.
-- ``plans``     : declarative headline queries used by the driver gates.
-- ``streaming`` : Structured Streaming variants of the batch operators.
+- ``llm_pipeline``: ``curate`` / ``curate_increment`` and their CLI.
+- ``session`` / ``worker_daemon``: the tuned SparkSession and the Python
+  worker daemon it starts.
 
 Everything is DataFrame/Catalyst-first; Python UDFs appear only where the
 built-in operators genuinely cannot express the semantics (stateful binary
-encoders in sinks, vectorized hashing in dedup).
+encoders in sinks, vectorized kernels in curation).
 """
 
 __version__ = "0.1.0"

@@ -18,7 +18,7 @@ standard curation sequence:
       -> optional sequence-packing manifest for the train split
          (global token offsets in deterministic order)
 
-Every stage is the already-oracle-checked operator; this module only
+Every stage is an operator of ``operators/``; this module only
 wires them.  Scale shape: stages communicate through DataFrames (no
 driver materialization); the only collect is the final per-split
 manifest.  Each stage logs its row attrition so a curation run is
@@ -119,9 +119,10 @@ def _write_dedup_artifact(
     """Persist the dataset's dedup probe tables beside it — the corpus
     fingerprint set (16-byte digests) and the LSH bucket table
     ``(id, band, bh)`` — plus a ``meta.json`` header recording the
-    probe geometry (the same header discipline as the IVFPQ/BM25
-    artifacts: a prober must never have to guess the band parameters,
-    because mismatched bands make every probe miss SILENTLY).  Built
+    probe geometry (the same header discipline as the BM25 and
+    tokenizer artifacts: a prober must never have to guess the band
+    parameters, because mismatched bands make every probe miss
+    SILENTLY).  Built
     once per curation (one survivor-sized pass) so every later
     increment probes these artifacts instead of re-deriving
     corpus-sized signatures per batch; increments APPEND their own
@@ -137,11 +138,11 @@ def _write_dedup_artifact(
     table increments probe), FINGERPRINTS last, because the
     stale-artifact repair in
     :func:`curate_increment` uses the fingerprint row count as the
-    commit marker — the same write-the-idempotence-key-last discipline
-    as ivfpq_add_to_dir.  A crash anywhere before the fingerprints
-    append leaves the fingerprint count short (or the table absent),
-    which the next increment detects and repairs by rebuild; writing
-    fingerprints earlier would let the count check pass with the
+    commit marker (write the idempotence key last).  A crash anywhere
+    before the fingerprints append leaves the fingerprint count short
+    (or the table absent), which the next increment detects and
+    repairs by rebuild; writing fingerprints earlier would let the
+    count check pass with the
     buckets table silently missing rows (every later LSH probe would
     miss those docs' near-dups) or with the meta header — and its
     recorded split fractions — missing, so later increments would
@@ -188,7 +189,6 @@ def _write_dedup_artifact(
     from concurrent.futures import ThreadPoolExecutor
 
     from planet_dump_ng_spark.session import capture_job_context
-    from planet_dump_ng_spark.streaming.jobs import corpus_lsh_buckets
 
     d = _dedup_artifact_dir(dataset_dir)
     os.makedirs(d, exist_ok=True)
@@ -210,7 +210,7 @@ def _write_dedup_artifact(
         bkt = (
             buckets
             if buckets is not None
-            else corpus_lsh_buckets(docs, **_DEDUP_LSH)
+            else dd.lsh_buckets(docs, **_DEDUP_LSH)
         )
         if max_bucket is not None:
             bkt = dd.cap_lsh_buckets(bkt, max_bucket)
@@ -285,8 +285,7 @@ def _write_dedup_artifact(
 
 def _check_dedup_meta(art: str) -> None:
     """Raise if an artifact's recorded geometry contradicts this
-    code's probe parameters (pre-header artifacts pass — same policy as
-    read_ivfpq_index)."""
+    code's probe parameters (pre-header artifacts pass)."""
     import json
     import os
 
@@ -409,8 +408,7 @@ def compact_artifacts(spark, dataset_dir: str) -> dict:
     :func:`dedup_compact` on the ``_dedup`` tables plus, when the
     dataset carries the exact-family ``_pindex`` artifact, its
     :func:`operators.dedup.prefix_index_compact` — so the CLI's
-    ``--compact-dedup`` and the streaming ingest's folded maintenance
-    pass can never diverge on which artifacts get compacted.  Returns
+    ``--compact-dedup`` never misses one of the artifacts.  Returns
     {"dedup": {...}, "pindex": {...}|None}."""
     import os
 
@@ -2195,8 +2193,7 @@ def main(argv: list[str] | None = None) -> int:
         metavar="DIR",
         help="after materialization, build the persisted BM25 index "
         "(operators.text_index) over the curated TRAIN split into DIR — "
-        "ship the dataset searchable; extend it later with "
-        "`bm25_cli add` as new batches curate in",
+        "ship the dataset searchable",
     )
     p.add_argument(
         "--train-tokenizer",
@@ -2204,8 +2201,7 @@ def main(argv: list[str] | None = None) -> int:
         help="after materialization, train a BPE tokenizer on the "
         "curated TRAIN split and persist the artifact "
         "(operators.tokenizer) into DIR — ship the dataset with the "
-        "tokenizer trained on it; encode any corpus later with "
-        "`tokenizer_cli encode`",
+        "tokenizer trained on it",
     )
     p.add_argument(
         "--tokenizer-merges",

@@ -1,8 +1,9 @@
-"""Reusable DataFrame -> DataFrame operators.
+"""DataFrame -> DataFrame operators.
 
-OSM-core operators mirror the reference's semantics (cited per module);
-the training-data operators (dedup, similarity, text, multimodal) extend
-the engine for 100 TB-scale corpus pipelines.
+``assembly`` and ``history`` are the OSM path's and mirror the reference's
+semantics (cited per module).  The rest are the ones ``llm_pipeline``
+chains: ``dedup``, ``text``, ``dsir``, ``lm``, ``ivf``, ``graph``,
+``sampling``, ``dataset``, ``text_index`` and ``tokenizer``.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ def compact_python_input(
     exists so CPU-dense JVM scans use every core, but it splits by BYTE
     RANGE: a small parquet table is one row group, so the extra splits
     are EMPTY — and an Arrow ``mapInPandas`` stage still pays a Python
-    worker round-trip per split (measured ~0.35 s per task warm:
-    embedding_gram ran 7 tasks, 6 empty, 2.5 s where 1 task takes
+    worker round-trip per split (measured ~0.35 s per task warm: a
+    7-task stage with 6 empty splits took 2.5 s where 1 task takes
     0.3 s).  Coalescing to ceil(bytes / bytes_per_task) restores one
     task per 128 MB — identical to the production split size, so at
     scale this is a NO-OP (the coalesce target equals the scan's own

@@ -9,7 +9,7 @@ for the user dimension; the hand-built cursor machinery disappears.
 Scale notes (100 TB planet):
 - elements x tags / inners join on (id, version): both sides shuffle-hash
   or SMJ on the same key; pre-bucketing both tables by id makes it
-  co-located (see staging.write_staged).
+  co-located.
 - changeset_id -> uid attribution (J6) is a join against the CHANGESETS
   table: ~10^8 rows for the full planet — deliberately NOT broadcast
   (SURVEY.md section 4); AQE may still broadcast it at small SF.

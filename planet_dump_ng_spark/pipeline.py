@@ -29,9 +29,9 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from planet_dump_ng_spark.operators import assembly, history
+from planet_dump_ng_spark.schemas import TABLES
 from planet_dump_ng_spark.sinks import pbf_sink, xml_sink
 from planet_dump_ng_spark.sources import (
-    extract_custom_dump,  # noqa: F401 — kept public for single-pass callers
     extract_tables_parallel,
     read_copy_table,
     split_dump_file,
@@ -169,8 +169,8 @@ def write_outputs(
     # the advisory size, so at planet scale the arrangements keep their
     # thousands of ~advisory-sized partitions — scale-adaptive.  NOT set
     # globally: it hides cache partitioning from consumers, which costs
-    # plans that REUSE it (pagerank's per-round rank cache gained one
-    # exchange per consumer in the pinned budgets).  The emit's consumers
+    # plans that REUSE it (each round of graph.connected_components
+    # re-shuffles its persisted label state).  The emit's consumers
     # only scan the arrangements in partition order, so here the
     # unknown-partitioning trade costs nothing.
     _CACHED_REPART = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -412,13 +412,16 @@ def run_dump(
     With ``stage`` (default) every table is decoded once into parquet
     (staging.py, operator S9) so the N output actions scan columnar data
     instead of re-parsing COPY text N times; ``resume`` additionally skips
-    tables whose stage is already marked complete."""
+    tables whose stage is already marked complete for this dump and the
+    current decode schema."""
     from planet_dump_ng_spark import staging
 
     copy_dir = os.path.join(work_dir, "copy")
     stage_dir = os.path.join(work_dir, "stage")
+    if stage:
+        staging.claim_stage(stage_dir, dump_file)
     all_staged = stage and all(
-        staging.is_staged(stage_dir, t) for t in ELEMENT_TABLES
+        staging.is_staged(stage_dir, t, TABLES[t][0]) for t in ELEMENT_TABLES
     )
     if resume and all_staged:
         tables = {

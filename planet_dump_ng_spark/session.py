@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 DAEMON_MODULE = "planet_dump_ng_spark.worker_daemon"
 
 
@@ -34,8 +34,8 @@ def get_spark(
     - Arrow on: every Pandas-UDF operator (dedup hashing, sinks) rides the
       vectorized path.
     - UTC session timezone: the reference treats all timestamps as UTC
-      (src/time_epoch.cpp custom 2004 epoch); we must too or oracle
-      comparisons drift.
+      (src/time_epoch.cpp custom 2004 epoch); we must too or rendered
+      timestamps drift.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -57,26 +57,20 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Scan-parallelism FLOOR (split size = min(maxPartitionBytes,
         # max(openCostInBytes, bytes/minPartitionNum))): the default 4 MB
-        # openCost floored an 11 MB table into 3 splits, so single-task
-        # scan stages strand the other 31 cores at bench SFs (profiled:
-        # assemble_order_lines ran its probe-side scan+join as ONE 0.9 s
-        # task).  128 KB only binds when bytes/core < 4 MB — at 100 TB
-        # bytes/core >> maxPartitionBytes, so production splits stay
-        # 128 MB and this knob is inert; it is a small-input floor, not a
-        # local[32] tuning constant.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST", "131072"),
-        )
+        # openCost splits an 11 MB staged table into 3 scan tasks, which
+        # strands the other cores in the assembly joins over it.  128 KB
+        # only binds when bytes/core < 4 MB — at 100 TB bytes/core >>
+        # maxPartitionBytes, so production splits stay 128 MB and this
+        # knob is inert; it is a small-input floor, not a local[N] tuning
+        # constant (operators.compact_python_input undoes it for Python
+        # stages).
+        .config("spark.sql.files.openCostInBytes", "131072")
         # Same floor for AQE-coalesced reduce partitions: the 1 MB
         # default minPartitionSize collapses a 5 MB shuffle to ~5 tasks
         # under parallelismFirst.  At scale advisoryPartitionSizeInBytes
         # (bytes/core >> advisory) governs coalescing and this floor is
         # inert.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_COALESCE", "65536"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
         # AQE sort-merge -> shuffled-hash rewrite (guide §3.1): when
         # every post-shuffle build-side map is under this bound, the
         # join builds per-partition hash tables instead of externally
@@ -85,11 +79,10 @@ def get_spark(
         # of sort spill at the 10x corpus; hash-building the same
         # partitions spills nothing).  Runtime- and size-gated by AQE
         # itself — partitions above the bound keep sort-merge, so this
-        # is scale-adaptive, not a local[32] constant; pre-AQE plans
-        # (and the pinned exchange budgets) are untouched.
+        # is scale-adaptive, not a local[N] constant; pre-AQE plans are
+        # untouched.
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "134217728"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728"
         )
         # NOTE on spark.sql.optimizer.canChangeCachedPlanOutputPartitioning:
         # deliberately NOT set globally.  Letting AQE re-partition cached
@@ -97,19 +90,16 @@ def get_spark(
         # the multicast emit, which scopes the conf around itself —
         # pipeline.write_outputs), but it also makes the planner treat
         # every cache's output partitioning as unknown, so consumers that
-        # REUSE a cache's hash partitioning re-shuffle: measured +3
-        # exchanges on supplier_part_pagerank (one per rank round) and a
-        # flapping plan on ngram_containment_pairs.  Per-round shuffles of
-        # the rank table are exactly the scale regression the budgets
-        # exist to catch, so the conf stays scoped to the emit.
+        # REUSE a cache's hash partitioning re-shuffle it — e.g. each
+        # round of graph.connected_components over its persisted label
+        # state — so the conf stays scoped to the emit.
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # JVM unified logging -> STDERR: the default (-Xlog to stdout)
-        # interleaves async GC warnings with the bench's one-line JSON
-        # contract on stdout — observed: "[gc,alloc] ... GCLocker too
-        # often" landing mid-stream during a memory-pressured stage,
-        # which would corrupt the driver's 2000-char stdout tail parse.
-        # Warnings stay visible, just on the diagnostic channel.
+        # interleaves async GC warnings ("[gc,alloc] ... GCLocker too
+        # often") with whatever a caller prints on stdout, such as the
+        # CLIs' JSON reports.  Warnings stay visible, just on the
+        # diagnostic channel.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
@@ -161,32 +151,3 @@ def capture_job_context(spark: SparkSession):
         sc.setLocalProperty("spark.job.description", desc)
 
     return apply
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver's synthetic parquet tables as a dict of DataFrames
-    and register each as a temp view (mirrors DuckDB's pre-registered
-    views so ``spark.sql`` text matches ``oracle_sql`` text closely)."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    from planet_dump_ng_spark.plans.registry import table
-
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            # registry.table handles the events TIMESTAMP(NANOS) quirk
-            df = table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -33,7 +33,7 @@ import functools
 import os
 import struct
 import zlib
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, functions as F
 

@@ -5,7 +5,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from planet_dump_ng_spark.session import get_spark  # noqa: E402
+from planet_dump_ng_spark.session import DEFAULT_SHUFFLE_PARTITIONS, get_spark  # noqa: E402
+
+
+def table(spark, sf_dir, name):
+    """One synthetic parquet table of the test data (``<sf_dir>/<name>.parquet``)."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @pytest.fixture(scope="session")
@@ -15,7 +20,7 @@ def spark():
     # and AQE materializes each exchange as its own job.  One shuffle
     # partition + AQE off measured -27% on the slowest curation tests
     # (103 s -> 75 s for two representative end-to-end tests) with
-    # identical results — the suite verifies CORRECTNESS; the bench and
+    # identical results — the suite verifies CORRECTNESS; perfbench and
     # the pipeline/golden paths still run the production session
     # (get_spark defaults: AQE on).  Tests that assert PLAN shape under
     # the production planner opt back in via ``plan_session``.
@@ -31,16 +36,11 @@ def spark():
 @pytest.fixture(scope="session")
 def plan_session(spark):
     """A sibling session over the same SparkContext with the PRODUCTION
-    planning confs (AQE on, the engine's default shuffle width) — what
-    plan-shape assertions must capture so their counts match the
-    QUERIES.md budgets pinned by tools/gen_query_inventory.py /
-    patch_budgets.py, which run under ``get_spark`` defaults."""
+    planning confs (AQE on, the engine's default shuffle width), so
+    plan-shape assertions see the plans ``get_spark`` would run."""
     s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "true")
-    s2.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-    )
+    s2.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
     yield s2
 
 

@@ -50,6 +50,89 @@ def test_stage_roundtrip_and_resume(spark, tmp_path):
     assert sorted(r.x for r in out3.collect()) == [0, 1, 2]
 
 
+def test_resume_rebuilds_stage_of_another_dump(spark, tmp_path):
+    dump_a, dump_b = tmp_path / "a.sql", tmp_path / "b.sql"
+    dump_a.write_text("a\n")
+    dump_b.write_text("bb\n")
+    stage_dir = str(tmp_path / "stage")
+    staging.claim_stage(stage_dir, str(dump_a))
+    staging.stage_table(spark, spark.range(5).toDF("x"), stage_dir, "t1")
+
+    # the same dump again keeps the stage
+    staging.claim_stage(stage_dir, str(dump_a))
+    assert staging.is_staged(stage_dir, "t1")
+
+    # another dump: the stage is discarded, so resume rebuilds
+    staging.claim_stage(stage_dir, str(dump_b))
+    assert not staging.is_staged(stage_dir, "t1")
+    out = staging.stage_table(
+        spark, spark.range(3).toDF("x"), stage_dir, "t1", resume=True
+    )
+    assert sorted(r.x for r in out.collect()) == [0, 1, 2]
+
+    # the same path rewritten is another dump too
+    dump_b.write_text("changed\n")
+    staging.claim_stage(stage_dir, str(dump_b))
+    assert not staging.is_staged(stage_dir, "t1")
+
+
+def test_resume_rebuilds_stage_with_changed_schema(spark, tmp_path):
+    stage_dir = str(tmp_path / "stage")
+    old = spark.range(5).toDF("x")
+    staging.stage_table(spark, old, stage_dir, "t1")
+    assert staging.is_staged(stage_dir, "t1", old.schema)
+
+    new = spark.createDataFrame([(7, "a"), (8, "b")], "x bigint, y string")
+    assert not staging.is_staged(stage_dir, "t1", new.schema)
+    out = staging.stage_table(spark, new, stage_dir, "t1", resume=True)
+    assert sorted(tuple(r) for r in out.collect()) == [(7, "a"), (8, "b")]
+    assert staging.is_staged(stage_dir, "t1", new.schema)
+
+
+def test_run_dump_resume_rebuilds_stage_of_another_dump(spark, tmp_path):
+    """--resume over a stage made from another dump (here: the same path,
+    regenerated) decodes the new dump: its output equals a fresh run's."""
+    import sys
+
+    from planet_dump_ng_spark import pipeline
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "perfbench"))
+    import gen_osm
+
+    def changesets_xml(work, out, resume):
+        out = str(tmp_path / out)
+        spec = pipeline.OutputSpec(out, "changesets")
+        pipeline.run_dump(spark, dump, [spec], str(tmp_path / work), resume=resume)
+        with open(out, "rb") as fh:
+            return fh.read()
+
+    dump = str(tmp_path / "dump.sql")
+    gen_osm.generate_planet(dump, 1, 300)
+    first = changesets_xml("w", "a.osm", resume=False)
+    gen_osm.generate_planet(dump, 2, 300)
+    resumed = changesets_xml("w", "b.osm", resume=True)
+    assert resumed != first
+    assert resumed == changesets_xml("w2", "c.osm", resume=False)
+
+
+def test_decoded_schema_is_the_declared_one(spark, tmp_path):
+    """run_dump's all-staged check compares markers with the declared
+    decode schemas, so the decoder must produce exactly those."""
+    from planet_dump_ng_spark.pipeline import ELEMENT_TABLES
+    from planet_dump_ng_spark.schemas import TABLES
+    from planet_dump_ng_spark.sources import read_copy_table
+
+    for t in ELEMENT_TABLES:
+        schema = TABLES[t][0]
+        path = tmp_path / f"{t}.copy"
+        path.write_text(
+            f"COPY public.{t} ({', '.join(f.name for f in schema)}) FROM stdin;\n\\.\n"
+        )
+        df = read_copy_table(spark, str(path), t)
+        assert df.schema.simpleString() == schema.simpleString(), t
+
+
 @pytest.mark.skipif(
     shutil.which("pg_restore") is None or not os.path.isdir(REF),
     reason="needs pg_restore + reference fixtures",

@@ -9,7 +9,6 @@ import subprocess
 import pytest
 
 from planet_dump_ng_spark import pipeline
-from planet_dump_ng_spark.functions import protowire as pw
 from planet_dump_ng_spark.sinks.pbf_sink import read_pbf
 
 REF = "/root/reference/test"
@@ -18,22 +17,6 @@ pytestmark = pytest.mark.skipif(
     shutil.which("pg_restore") is None or not os.path.isdir(REF),
     reason="needs pg_restore + reference test fixtures",
 )
-
-
-def test_protowire_roundtrip():
-    vals = [0, 1, 127, 128, 300, 2**31, 2**63 - 1]
-    for v in vals:
-        buf = pw.varint(v)
-        got, pos = pw.read_varint(buf, 0)
-        assert got == v and pos == len(buf)
-    svals = [0, -1, 1, -2**31, 2**31, -2**62]
-    assert [pw.unzigzag(pw.zigzag(v)) for v in svals] == svals
-    assert pw.delta_decode(pw.delta_encode([5, 3, 10, 10])) == [5, 3, 10, 10]
-    msg = pw.field_varint(1, 42) + pw.field_string(2, "hé") + pw.packed_sint64s(3, [-1, 2])
-    fields = list(pw.iter_fields(msg))
-    assert fields[0] == (1, 0, 42)
-    assert fields[1][2].decode() == "hé"
-    assert pw.unpack_sint64s(fields[2][2]) == [-1, 2]
 
 
 @pytest.fixture(scope="module")
@@ -70,44 +53,3 @@ def test_pbf_semantic_parity(pbf_outputs, name, golden):
     assert mine["header"] == ref["header"]
     for kind in ("nodes", "ways", "relations"):
         assert sorted(mine[kind]) == sorted(ref[kind]), kind
-
-
-def test_pbf_source_roundtrip(spark, pbf_outputs):
-    """The distributed PBF source reads back exactly what the sink wrote."""
-    from planet_dump_ng_spark.sources.pbf_source import read_pbf_df
-
-    path = str(pbf_outputs / "history.osm.pbf")
-    ref = read_pbf(path)
-    for kind in ("nodes", "ways", "relations"):
-        df = read_pbf_df(spark, path, kind)
-        assert df.count() == len(ref[kind])
-    nodes = read_pbf_df(spark, path, "nodes")
-    row = nodes.orderBy("id", "version").first()
-    first = sorted(ref["nodes"])[0]
-    assert (row.id, row.version, row.visible) == first[:3]
-    assert row.ts == first[3] and row.latitude == first[7]
-    assert [(t.k, t.v) for t in row.tags] == list(first[9])
-
-
-def test_ingest_cli_writes_parquet_tables(spark, pbf_outputs, tmp_path):
-    """pbf2parquet CLI: one parquet dataset per kind, row counts equal to
-    the reference single-threaded parse of the same file."""
-    from planet_dump_ng_spark import ingest_cli
-
-    path = str(pbf_outputs / "planet.osm.pbf")
-    out = str(tmp_path / "ingested")
-    rc = ingest_cli.main(["--input", path, "--output", out])
-    assert rc == 0
-    ref = read_pbf(path)
-    for kind in ("nodes", "ways", "relations"):
-        df = spark.read.parquet(f"{out}/{kind}")
-        assert df.count() == len(ref[kind]), kind
-
-
-def test_ingest_cli_missing_file(tmp_path, capsys):
-    from planet_dump_ng_spark import ingest_cli
-
-    rc = ingest_cli.main(
-        ["--input", str(tmp_path / "nope.pbf"), "--output", str(tmp_path / "o")]
-    )
-    assert rc == 2

@@ -1,12 +1,7 @@
 """JSONL connector: clean/quarantine split, round-trip, and the
 no-silent-loss invariant (every input line lands on exactly one side)."""
 
-from pyspark.sql import functions as F
-
-from planet_dump_ng_spark.sources import (
-    read_documents_jsonl,
-    write_documents_jsonl,
-)
+from planet_dump_ng_spark.sources import read_documents_jsonl
 
 
 def _write_lines(path, lines):
@@ -40,11 +35,11 @@ def test_jsonl_clean_and_quarantine(spark, tmp_path):
 
 
 def test_jsonl_round_trip(spark, sf_dir, tmp_path):
-    from planet_dump_ng_spark.plans.registry import table
+    from conftest import table
 
     docs = table(spark, sf_dir, "documents").limit(100)
     out = str(tmp_path / "export")
-    write_documents_jsonl(docs, out)
+    docs.write.json(out)
     good, bad = read_documents_jsonl(spark, out)
     assert bad.count() == 0
     a = {r.doc_id: r.text for r in docs.collect()}

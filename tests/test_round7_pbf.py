@@ -8,6 +8,22 @@ import random
 from planet_dump_ng_spark.functions import protowire as pw
 
 
+def test_protowire_roundtrip():
+    vals = [0, 1, 127, 128, 300, 2**31, 2**63 - 1]
+    for v in vals:
+        buf = pw.varint(v)
+        got, pos = pw.read_varint(buf, 0)
+        assert got == v and pos == len(buf)
+    svals = [0, -1, 1, -2**31, 2**31, -2**62]
+    assert [pw.unzigzag(pw.zigzag(v)) for v in svals] == svals
+    assert pw.delta_decode(pw.delta_encode([5, 3, 10, 10])) == [5, 3, 10, 10]
+    msg = pw.field_varint(1, 42) + pw.field_string(2, "hé") + pw.packed_sint64s(3, [-1, 2])
+    fields = list(pw.iter_fields(msg))
+    assert fields[0] == (1, 0, 42)
+    assert fields[1][2].decode() == "hé"
+    assert pw.unpack_sint64s(fields[2][2]) == [-1, 2]
+
+
 def test_varints_np_each_matches_scalar():
     rng = random.Random(11)
     extremes = [0, -1, 1, 127, 128, -128, 2**63 - 1, -(2**63), 2**31]
