@@ -20,6 +20,10 @@ archive -> typed table scans -> external sort -> streaming sort-merge joins
 - ``llm_pipeline``: ``curate`` / ``curate_increment`` and their CLI.
 - ``session`` / ``worker_daemon``: the tuned SparkSession and the Python
   worker daemon it starts.
+- ``plans``, ``streaming`` and the side CLIs (``*_cli``, ``dataset_card``):
+  legacy.  The retired scoring driver's query registry and tools, which no
+  production path reaches; they stay while tests still check them
+  (tests/test_layout.py pins the set).
 
 Everything is DataFrame/Catalyst-first; Python UDFs appear only where the
 built-in operators genuinely cannot express the semantics (stateful binary

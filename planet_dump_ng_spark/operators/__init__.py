@@ -4,6 +4,9 @@
 semantics (cited per module).  The rest are the ones ``llm_pipeline``
 chains: ``dedup``, ``text``, ``dsir``, ``lm``, ``ivf``, ``graph``,
 ``sampling``, ``dataset``, ``text_index`` and ``tokenizer``.
+``similarity`` serves ``ivf``.  ``layout``, ``linalg``, ``multimodal``,
+``sketches``, ``skew``, ``temporal`` and ``unigram`` are legacy: only the
+query registry (``plans``) and the side CLIs use them.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, spans,
-benchmark containment.
+"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 Scale design (100 TB corpus):
 - exact dedup is one hash-partitioned groupBy on a fingerprint — the only
@@ -10,14 +9,18 @@ Scale design (100 TB corpus):
   hash-partitions; AQE skew-join handles hot buckets (boilerplate shingles).
 - candidate verification re-joins the shingle sets only for candidate
   pairs, so exact-Jaccard cost is O(candidates), not O(n^2).
+- SimHash is the one Pandas-UDF operator (bit-twiddling over md5 digests);
+  it is Arrow-batched and embarrassingly parallel.
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from planet_dump_ng_spark.operators.text import bind, fingerprint, tokens
 
@@ -74,7 +77,8 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     tokens (but not empty) fall back to their full token string so they
     still carry one shingle; TOKENLESS documents carry NO shingles — they
     are exact-dup territory, and a near-dup metric over an empty set is
-    meaningless.
+    meaningless (tests/test_xxh64_property.py pins this contract against
+    the DuckDB oracle expression).
 
     Built by k-1 zip_with passes (each joining the array against itself
     shifted one position) instead of a slice-per-window transform —
@@ -217,7 +221,7 @@ def lsh_buckets(
     """The LSH bucket table ``(id, band, bh)`` — one row per document per
     band.  This is the shared substrate of the self-join candidate
     generator, the asymmetric ingest join, and the persisted corpus
-    bucket artifact (llm_pipeline._write_dedup_artifact)."""
+    bucket artifact (streaming.jobs.corpus_lsh_buckets delegates here)."""
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     rows = num_hashes // bands
     sigs = minhash_signatures_df(df, text_col, id_col, num_hashes, k, seed)
@@ -242,6 +246,23 @@ def cap_lsh_buckets(buckets: DataFrame, max_bucket: int) -> DataFrame:
         buckets.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= max_bucket)
         .drop("_rk")
+    )
+
+
+def lsh_bucket_stats(buckets: DataFrame, min_size: int = 2) -> DataFrame:
+    """Bucket-size histogram ``(bucket_size, n_buckets)`` over an LSH
+    bucket table — the loud audit for the pair-quadratic risk: a row
+    like (10_000, 3) says three buckets would each emit ~5*10^7
+    candidate pairs under all-pairs emission.  Read it BEFORE choosing
+    ``mode``/``max_bucket`` on :func:`minhash_lsh_candidates`.  One
+    map-side-combinable aggregation; singleton buckets (no pairs) are
+    dropped by ``min_size``."""
+    return (
+        buckets.groupBy("band", "bh")
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .filter(F.col("bucket_size") >= min_size)
+        .groupBy("bucket_size")
+        .agg(F.count(F.lit(1)).alias("n_buckets"))
     )
 
 
@@ -286,8 +307,10 @@ def minhash_lsh_candidates(
       trade is the price of surviving 100 TB.
 
     ``max_bucket`` (pairs mode): drop buckets larger than this bound
-    BEFORE the self-join.  Docs in a dropped bucket still pair through
-    their 15 other bands.  Ignored in star mode
+    BEFORE the self-join — the same discipline as the inverted-index
+    ``max_df`` cap (superset_containment_pairs).  Docs in a dropped
+    bucket still pair through their 15 other bands; audit what you
+    dropped with :func:`lsh_bucket_stats` first.  Ignored in star mode
     (star is already linear).
     """
     if mode not in ("pairs", "star"):
@@ -308,8 +331,8 @@ def minhash_lsh_candidates(
         # signature aggregation twice, and the blocks are released when
         # the result goes out of scope (ContextCleaner on GC) — persist()
         # here left one CacheManager entry per call for the session's
-        # lifetime, an unbounded leak for long-lived callers (every
-        # curate_increment runs this once or twice).
+        # lifetime, an unbounded leak for per-micro-batch callers
+        # (curate_ingest_stream runs this once or twice per batch).
         # eager=False keeps the operator lazy (the checkpoint runs
         # inside the consumer's first action, no extra up-front job —
         # measured 2.0 s vs eager's 2.3 s on the sf0.1 self-join).
@@ -588,7 +611,7 @@ def prefix_index_add(
 ) -> dict:
     """Extend a persisted prefix index with a new batch — the lifecycle
     verb that keeps the artifact in step with a growing corpus without
-    the once-per-snapshot rebuild (the
+    the once-per-snapshot rebuild (the ``ivfpq_add_to_dir`` /
     ``_write_dedup_artifact(mode="append")`` pattern).
 
     Idempotent: ids already present in the ``docs`` table anti-join
@@ -632,7 +655,8 @@ def prefix_index_add(
         spread_small_input(new_docs)
         .select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
         # the anti-join below only screens ids ALREADY in the index: a
-        # batch carrying the same id twice would otherwise append duplicate docs/pindex
+        # batch carrying the same id twice (reachable via the public
+        # pindex_cli add) would otherwise append duplicate docs/pindex
         # rows — inflating n_docs and emitting duplicate pairs from
         # every later probe.  One batch-sized shuffle; the index-side
         # builder (write_prefix_index) takes curation survivors, whose
@@ -991,8 +1015,8 @@ def minhash_lsh_join(
     ``(id, band, bh)`` is a precomputed artifact (bucketed/partitioned by
     ``(band, bh)``) that each ingest batch equi-joins against: per-batch
     cost is proportional to the batch, not the corpus — pass it as
-    ``corpus_buckets`` (the curation dataset persists it as the
-    ``_dedup`` artifact); without it
+    ``corpus_buckets`` (streaming.jobs.corpus_lsh_buckets builds it, the
+    curation dataset persists it as the ``_dedup`` artifact); without it
     the bucket table is re-derived from ``corpus`` per call, paying a
     corpus-sized signature pass.  Band hashes are
     uniform by construction, so the join keys don't skew; but a hot
@@ -1193,6 +1217,253 @@ def ngram_jaccard_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
+def superset_containment_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 3,
+    threshold: float = 0.8,
+    max_df: int = 50,
+) -> DataFrame:
+    """Asymmetric shingle containment |A∩B| / |A| — the near-superset
+    detector (Broder's containment): a short document quoted or wrapped
+    inside a longer one scores containment ~1.0 while its symmetric
+    Jaccard stays far below any dedup threshold, so this is the signal
+    that catches quote-expansion and boilerplate-wrapper duplicates
+    ``ngram_jaccard_pairs`` structurally cannot.
+
+    Plan: hashed distinct shingles (31-bit folded xxhash64 — 8-byte
+    shuffle keys), a document-frequency cap dropping shingles present in
+    more than ``max_df`` docs (stop-shingles are both semantically
+    uninformative and the quadratic blow-up risk of any inverted index;
+    the cap bounds per-shingle pair fan-out at max_df^2 and is applied
+    identically in the oracle), then the inverted-index self-join; the
+    capped per-doc size is joined onto the A side only (it must be
+    counted post-cap, so it cannot ride along from the explode the way
+    ngram_jaccard_pairs' pre-cap size does).  Both directions
+    (a,b)/(b,a) emit — containment is asymmetric.
+    Denominator = A's CAPPED shingle count, so a doc of pure boilerplate
+    doesn't dilute its own score.  Pairs sharing no informative shingle
+    never materialize.
+    """
+    assert threshold > 0, "inverted-index path requires a positive threshold"
+    ex = (
+        spread_small_input(df)
+        .select(
+            F.col(id_col).alias("id"),
+            F.explode(F.array_distinct(shingle_hashes(text_col, k))).alias("h"),
+        )
+        .persist()  # feeds the df-cap count AND the capped index
+    )
+    dfc = ex.groupBy("h").agg(F.count(F.lit(1)).alias("ndocs"))
+    # rows are (id, h)-distinct, so COUNT(*) per h IS the doc frequency
+    capped = ex.join(dfc.filter(F.col("ndocs") <= max_df), "h").select("id", "h")
+    sized = capped.join(
+        capped.groupBy("id").agg(F.count(F.lit(1)).alias("sz")), "id"
+    )
+    ca, cb = sized.alias("a"), capped.alias("b")
+    pairs = (
+        ca.join(
+            cb,
+            (F.col("a.h") == F.col("b.h")) & (F.col("a.id") != F.col("b.id")),
+        )
+        .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .agg(
+            F.count(F.lit(1)).alias("shared"),
+            F.first(F.col("a.sz")).alias("size_a"),
+        )
+    )
+    out = pairs.select(
+        "doc_a",
+        "doc_b",
+        "shared",
+        "size_a",
+        (F.col("shared").cast("double") / F.col("size_a")).alias("containment"),
+    ).filter(F.col("containment") >= threshold)
+    out = out.persist()
+    out.count()
+    ex.unpersist()
+    return out
+
+
+# -- Winnowing ----------------------------------------------------------------
+
+
+def winnow_fingerprints(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 20,
+    w: int = 31,
+) -> DataFrame:
+    """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
+    "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
+    2003 — public): ``(id, h)`` with one row per DISTINCT selected
+    fingerprint per document.
+
+    Every character position's k-gram is hashed (31-bit folded
+    xxhash64, the corpus-wide fingerprint namespace the strided
+    substring detector shares), then each sliding window of ``w``
+    consecutive hashes contributes its MINIMUM — so two documents
+    sharing any substring of length >= ``w + k - 1`` chars share at
+    least one selected fingerprint (the windows covering the match see
+    the same hash sequence, hence pick the same minimum).  That is a
+    GUARANTEE the strided sampler cannot give: stride-s sampling
+    misses any duplicate whose window never lands on a sampled
+    position, while winnowing's expected index density ~2/(w+1) is
+    BETTER than 1/s at comparable guarantees (w=31, k=20 detects
+    every >= 50-char copy at ~6.3% of positions indexed vs stride-10's
+    10% with a one-window miss bound).
+
+    Plan shape: map-only per document — the hash array is projected
+    into a column FIRST and the window-min transform reads the
+    projected array (per the repo's lambda-capture discipline:
+    expressions inside ``F.transform`` lambdas re-evaluate per
+    element), costing O(n·w) comparisons per doc with w a small
+    constant; no UDF, no shuffle before the fingerprint explode.  Docs
+    shorter than ``w + k - 1`` chars carry no full window and drop
+    (exact-dedup territory).
+    """
+    docs = spread_small_input(df).filter(
+        F.length(text_col) >= k + w - 1
+    )
+    hs = F.expr(
+        f"transform(sequence(1, length({text_col}) - {k - 1}), "
+        f"q -> pmod(xxhash64(substring({text_col}, q, {k})), "
+        f"{_MERSENNE_31}))"
+    )
+    fps = F.expr(
+        f"array_distinct(transform(sequence(1, size(_hs) - {w - 1}), "
+        f"j -> array_min(slice(_hs, j, {w}))))"
+    )
+    return (
+        docs.select(F.col(id_col).alias("id"), hs.alias("_hs"))
+        .select("id", F.explode(fps).alias("h"))
+    )
+
+
+def substring_duplication(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    mode: str = "winnow",
+    k: int = 20,
+    w: int = 31,
+    stride: int = 10,
+    window: int = 50,
+) -> DataFrame:
+    """Char-level substring-duplication stats per document:
+    ``(doc_id, n_fingerprints, n_dup_fingerprints,
+    dup_fingerprint_fraction)`` — a fingerprint is "dup" when its hash
+    occurs in at least one OTHER document.
+
+    ``mode="winnow"`` (default): winnowing fingerprints — every
+    duplicated substring of >= ``w + k - 1`` chars is detected
+    (see :func:`winnow_fingerprints`).  ``mode="strided"``: the
+    measured control — every ``window``-char gram at ``stride``
+    positions, detection bounded by a one-window miss (the trade the
+    exact_substring_duplication registry query documents).
+    """
+    if mode == "winnow":
+        fp = winnow_fingerprints(df, text_col, id_col, k=k, w=w)
+    elif mode == "strided":
+        grams = F.expr(
+            f"transform(sequence(1, length({text_col}) - {window - 1}, "
+            f"{stride}), q -> substring({text_col}, q, {window}))"
+        )
+        fp = (
+            spread_small_input(df)
+            .filter(F.length(text_col) >= window)
+            .select(F.col(id_col).alias("id"), F.explode(grams).alias("s"))
+            .select(
+                "id",
+                F.pmod(F.xxhash64("s"), F.lit(_MERSENNE_31)).alias("h"),
+            )
+        )
+    else:
+        raise ValueError(f"mode must be 'winnow' or 'strided', got {mode!r}")
+    fp = fp.persist()  # feeds the corpus count AND the join-back
+    cnt = fp.groupBy("h").agg(F.countDistinct("id").alias("ndocs"))
+    dup = (F.col("ndocs") > 1).cast("bigint")
+    out = (
+        fp.join(cnt, "h")
+        .groupBy("id")
+        .agg(
+            F.count(F.lit(1)).alias("n_fingerprints"),
+            F.sum(dup).cast("bigint").alias("n_dup_fingerprints"),
+            (F.sum(dup).cast("double") / F.count(F.lit(1))).alias(
+                "dup_fingerprint_fraction"
+            ),
+        )
+        .withColumnRenamed("id", "doc_id")
+    )
+    out = out.persist()
+    out.count()
+    fp.unpersist()
+    return out
+
+
+# -- SimHash ------------------------------------------------------------------
+
+
+@F.pandas_udf(T.LongType())
+def simhash64(texts: pd.Series) -> pd.Series:
+    """64-bit SimHash over whitespace tokens (md5-derived token hashes).
+
+    Arrow-batched; the per-batch loop is pure Python but each call
+    processes thousands of rows, and SimHash's bit-vote accumulation has
+    no built-in Spark expression equivalent.
+    """
+
+    def one(text: str | None) -> int:
+        if not text:
+            return 0
+        votes = [0] * 64
+        for tok in text.split():
+            h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
+            for bit in range(64):
+                votes[bit] += 1 if (h >> bit) & 1 else -1
+        out = 0
+        for bit in range(64):
+            if votes[bit] > 0:
+                out |= 1 << bit
+        # fold into signed 64-bit for Spark LongType
+        return out - (1 << 64) if out >= (1 << 63) else out
+
+    return texts.map(one)
+
+
+def simhash_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+    block_bits: int = 16,
+) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance.
+
+    Scale path: block on the top ``block_bits`` bits (near-dups almost
+    always agree there), equi-join within blocks, then exact popcount
+    filter — the same band-then-verify shape as MinHash LSH.
+    """
+    sh = spread_small_input(df).select(
+        F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sh")
+    )
+    blocked = sh.withColumn("blk", F.shiftrightunsigned("sh", 64 - block_bits))
+    a, b = blocked.alias("a"), blocked.alias("b")
+    xor = F.expr("a.sh ^ b.sh")
+    hamming = F.bit_count(xor)
+    return (
+        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            hamming.alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 # -- benchmark contamination ---------------------------------------------------
 
 
@@ -1306,7 +1577,8 @@ def span_dedup(
     hash for the election (map-side combinable MIN), once more joining the
     winner back, then one per-doc aggregate — all keys are either the
     span hash or doc_id, no pair space anywhere, cost linear in corpus
-    token mass.  Identical-hash collisions merge spans.
+    token mass.  Identical-hash collisions merge spans in both engines
+    alike (the oracle replays the same xxhash64).
     """
     # both the election and the join-back read the exploded table;
     # persist so tokenize+slice+hash runs once, not twice
@@ -1342,7 +1614,7 @@ def span_dedup(
     ).persist()
     # materialize, then release the corpus-text-sized span cache — a
     # lazily-leaked occ cache would squat executor memory for the rest
-    # of the session
+    # of the session (the superset_containment_pairs discipline)
     out.count()
     occ.unpersist()
     return out

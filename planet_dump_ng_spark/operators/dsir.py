@@ -17,7 +17,9 @@ Spark-first shape (and why it scales):
 
 - ONE tokenize+explode pass produces (doc_id, bucket) feature
   instances; bucket = ``pmod(xxhash64(gram), n_buckets)`` — the same
-  JVM-side hash the LSH banding uses.
+  JVM-side hash the LSH banding uses, with the same DuckDB inline
+  replica (plans/duck_xxh64.py), so the whole technique is
+  hash-oracle-able.
 - The two n-gram language models collapse into ONE map-side-combinable
   aggregate keyed by ``bucket`` (<= n_buckets rows carry both the raw
   count and the target count) — the shuffle after the corpus scan is
@@ -29,7 +31,7 @@ Spark-first shape (and why it scales):
 - No libm: per-bucket log-ratios use a Q20 fixed-point Mitchell log2
   (integer/bit arithmetic only, see :func:`ilog2_q20`), so the per-doc
   weight is an exact BIGINT SUM — order-independent and bit-identical
-  across Spark and Python, where a float ``ln()`` sum would be
+  across Spark, DuckDB and Python, where a float ``ln()`` sum would be
   association-order noise.
 
 Operating bounds (documented, asserted in tests): ``ilog2_q20`` needs
@@ -84,8 +86,8 @@ def ilog2_q20(n: Column, d: Column) -> Column:
 
         ilog2_q20(n, d) = (e - 20) * 2^20 + ((rq - 2^e) * 2^20) div 2^e
 
-    Pure bigint/bit arithmetic — Spark and Python agree bit-for-bit
-    (tests/test_dsir.py), and SUMs of it are
+    Pure bigint/bit arithmetic — Spark, DuckDB (plans/dsir_plans
+    ``_ilog2_q20_sql``) and Python agree bit-for-bit, and SUMs of it are
     order-independent where float log sums are not.  Max error vs true
     log2 is Mitchell's ~0.086 bits plus a log2(1 + 1/rq) truncation
     term (material only near the 2^-20 clamp floor, where rq is
@@ -108,7 +110,8 @@ def grams_from_tokens(toks: Column) -> Column:
     """Unigrams ++ adjacent bigrams of a BOUND token-array column.
 
     The bigram list is guarded empty below 2 tokens — Spark's
-    ``sequence(1, 0)`` would COUNT DOWN, not yield empty.
+    ``sequence(1, 0)`` would COUNT DOWN, not yield empty (DuckDB's
+    ``range`` handles it; the oracle needs no guard).
 
     ``toks`` must be a projected column (attribute), not the
     tokenization expression itself: ``toks`` is referenced INSIDE the
@@ -127,6 +130,17 @@ def grams_from_tokens(toks: Column) -> Column:
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.concat(toks, bigrams)
+
+
+def gram_array(text_col: Column | str) -> Column:
+    """One-expression unigram+bigram builder — unit-test convenience.
+
+    Fine on a handful of rows; for corpus-scale extraction use
+    :func:`hashed_gram_features`, which projects the token array once
+    (see :func:`grams_from_tokens` for the O(len^2) lambda-capture
+    hazard this avoids).
+    """
+    return grams_from_tokens(tx.tokens(text_col))
 
 
 def hashed_gram_features(
@@ -243,15 +257,43 @@ def _weights_from_buckets(
     )
 
 
+def dsir_bucket_scores(
+    df: DataFrame,
+    target: Column,
+    text_col: str = "text",
+    n_buckets: int = 4096,
+) -> DataFrame:
+    """Per-bucket Q20 log-ratio scores — the trained DSIR "model".
+
+    One aggregate computes BOTH hashed-ngram language models (the
+    target rows are a subset of the raw corpus, so ``raw_count`` counts
+    every instance and ``target_count`` the flagged ones), then each
+    bucket scores
+
+        delta_q20 = ilog2_q20(tc + 1, tt + B) - ilog2_q20(rc + 1, rt + B)
+
+    — the add-one-smoothed log p_target/p_raw in Q20 bits.  Returns
+    (bucket, target_count, raw_count, delta_q20), <= n_buckets rows: a
+    broadcastable dimension and a natural persisted artifact.
+    """
+    feats = hashed_gram_features(
+        df.withColumn("__is_t", target.cast("long")),
+        text_col=text_col,
+        n_buckets=n_buckets,
+        carry=("__is_t",),
+    )
+    return _scores_from_features(feats, n_buckets)
+
+
 def _scores_from_features(feats: DataFrame, n_buckets: int) -> DataFrame:
     """Bucket-score dimension from a (.., __is_t, bucket) feature table.
 
     The delta is guarded by :func:`ilog2_q20`'s exact-integer window
     (``d < 2**33``): past ~8.6e9 gram instances the float division in
-    ``_idiv`` silently rounds and Spark/Python deltas diverge.
+    ``_idiv`` silently rounds and Spark/DuckDB/Python deltas diverge.
     ``write_dsir_model`` enforces this at artifact-write time; the
-    inline path (``dsir_importance_weights`` with ``scores=None``) runs
-    through here, so
+    inline paths (``dsir_bucket_scores``, ``dsir_importance_weights``
+    with ``scores=None``, the registry queries) run through here, so
     the same bound fails LOUDLY at evaluation instead of losing
     exactness — a per-row ``raise_error`` branch that never fires
     inside the window (tt <= rt, so the raw total is the binding one).
@@ -341,6 +383,35 @@ def dsir_importance_weights(
     )
 
 
+def dsir_topk_select(
+    df: DataFrame,
+    target: Column,
+    k: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_buckets: int = 4096,
+) -> DataFrame:
+    """Deterministic DSIR selection: top-k docs by MEAN per-feature
+    weight (total weight is length-biased — a long off-domain doc with
+    many mildly-positive buckets would outscore a short on-domain one).
+
+    orderBy+limit lowers to TakeOrderedAndProject (a per-partition
+    heap + driver merge of k rows, never a global sort); (mean, doc_id)
+    is a total order, so the selected SET is deterministic.
+    """
+    w = dsir_importance_weights(
+        df, target, text_col=text_col, id_col=id_col, n_buckets=n_buckets
+    )
+    mean_bits = (
+        F.col("logw_q20").cast("double") / F.col("n_feats") / F.lit(float(Q20))
+    ).alias("mean_logw_bits")
+    return (
+        w.select(id_col, "n_feats", "logw_q20", mean_bits)
+        .orderBy(F.col("mean_logw_bits").desc(), id_col)
+        .limit(k)
+    )
+
+
 def write_dsir_model(
     df: DataFrame,
     target: Column,
@@ -409,8 +480,8 @@ def write_dsir_model(
     if (tot["rt"] or 0) + n_buckets >= EXACT_LOG_WINDOW:
         # ilog2_q20's exact-integer window (docstring: 1 <= n <= d <
         # 2^33).  Past it the float division inside _idiv rounds and
-        # the written deltas would silently diverge from the exact
-        # pure-Python values — refuse BEFORE the header commits, same
+        # the written deltas would silently diverge from the DuckDB /
+        # pure-Python twins — refuse BEFORE the header commits, same
         # crash-window shape as above.  At that corpus mass, shard the
         # model (per-source/per-shard totals) or raise the Q scale.
         raise ValueError(

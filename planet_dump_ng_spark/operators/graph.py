@@ -84,3 +84,266 @@ def connected_components(
             return labels.select("id", F.col("lab").alias("component"))
     sym.unpersist()
     raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+
+
+def pagerank(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    n_rounds: int = 3,
+    damping: float = 0.85,
+) -> DataFrame:
+    """Fixed-round PageRank over a directed edge list -> (id, rank).
+
+    The second Pregel-shaped iterative operator next to
+    :func:`connected_components`, built engine-deterministic: each
+    ``rank/degree`` contribution TRUNCATES to integer micro-units before
+    the (exact, associative) integer aggregation — truncation, not a
+    decimal cast, because rank/degree hits exact .5 ties at the 6th
+    decimal whenever the degree is a power of two, where Spark rounds
+    HALF_UP and DuckDB HALF_EVEN.  Ranks are therefore bit-identical
+    regardless of partitioning or aggregation order — reproducible
+    between runs AND replayable by a SQL oracle with unrolled rounds.  Each round is one shuffle (contributions keyed by
+    destination) plus the broadcast-sized degree join.
+
+    Nodes are everything appearing as a source (for sink-free semantics
+    symmetrize the edges first, as the registered query does): dangling
+    nodes contribute nothing and keep the 1-damping base.
+    """
+    # hash-partition the edge arrangement by src ONCE and persist it:
+    # every round's e-side join then satisfies the join's required
+    # distribution from cache, so the only per-round exchange of
+    # edge-sized data is the contribution aggregation itself (keyed by
+    # dst — unavoidable, it IS the algorithm).  deg shares the same
+    # partitioning, and rank state is carried WITH deg so each round is
+    # one join + one agg + one small left join, not three joins.
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .repartition("src")
+        .persist()
+    )
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    state = deg.withColumn("rank", F.lit(1.0))
+    for _ in range(n_rounds):
+        contrib = e.join(state, "src").select(
+            F.col("dst").alias("src"),
+            ((F.col("rank") / F.col("deg")) * F.lit(1e6)).cast("long").alias("c"),
+        )
+        inflow = contrib.groupBy("src").agg(F.sum("c").alias("inflow"))
+        state = (
+            deg.join(inflow, "src", "left")
+            .select(
+                "src",
+                "deg",
+                (
+                    F.lit(1.0 - damping)
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.col("inflow"), F.lit(0)).cast("double")
+                        / F.lit(1e6)
+                    )
+                ).alias("rank"),
+            )
+        )
+    # node-sized final ranks materialize, edge-sized caches release
+    # (connected_components' cleanup idiom)
+    out = state.select(F.col("src").alias("id"), "rank").persist()
+    out.count()
+    e.unpersist()
+    deg.unpersist()
+    return out
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Count triangles in an undirected simple graph given as distinct
+    ``(s1, s2)`` edges with ``s1 < s2``.
+
+    Degree-ordered wedge enumeration: orient every edge from its
+    lower-(degree, id) endpoint, enumerate wedges at the low apex, and
+    close them with one equi-join back onto the oriented edge list.
+    Each triangle is produced exactly once, and a hub of degree d
+    contributes O(d^1.5) oriented wedges instead of O(d^2) — the bound
+    that keeps the wedge join skew-free on power-law graphs.  Three
+    shuffles total (degree agg, wedge join, closing join).
+    """
+    deg = (
+        edges.select(F.col("s1").alias("v"))
+        .unionAll(edges.select(F.col("s2").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    e = edges.join(deg.withColumnsRenamed({"v": "s1", "d": "d1"}), "s1").join(
+        deg.withColumnsRenamed({"v": "s2", "d": "d2"}), "s2"
+    )
+    lower = (F.col("d1") < F.col("d2")) | (
+        (F.col("d1") == F.col("d2")) & (F.col("s1") < F.col("s2"))
+    )
+    oriented = e.select(
+        F.when(lower, F.col("s1")).otherwise(F.col("s2")).alias("lo"),
+        F.when(lower, F.col("s2")).otherwise(F.col("s1")).alias("hi"),
+    ).persist()
+    w1 = oriented.alias("w1")
+    w2 = oriented.alias("w2")
+    c = oriented.alias("c")
+    return (
+        w1.join(
+            w2,
+            (F.col("w1.lo") == F.col("w2.lo")) & (F.col("w1.hi") < F.col("w2.hi")),
+        )
+        .join(
+            c, (F.col("c.lo") == F.col("w1.hi")) & (F.col("c.hi") == F.col("w2.hi"))
+        )
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    )
+
+
+def kcore(
+    edges: DataFrame,
+    k: int = 3,
+    n_rounds: int = 3,
+    src_col: str = "src",
+    dst_col: str = "dst",
+) -> DataFrame:
+    """Fixed-round k-core peel -> (id, degree) of the surviving subgraph.
+
+    ``edges`` must be the SYMMETRIZED distinct edge list.  Each round
+    drops every node whose current degree is below ``k`` and restricts
+    the edge set to survivors on both endpoints; after ``n_rounds``
+    peels the remaining nodes' degrees are returned.  Fixed rounds keep
+    the plan oracle-unrollable (like :func:`pagerank` /
+    :func:`label_propagation`); when peeling converges within
+    ``n_rounds`` — typical for the low diameters of projected
+    co-occurrence graphs — the result IS the exact k-core.
+
+    The curation use: spam/bot rings and boilerplate mills show up as
+    low-core noise around a dense core of genuinely-connected entities.
+    Plan shape per round: one degree aggregate + two left-semi joins
+    (survivor filter on each endpoint) — all equi-joins on the edge
+    keys, no windows, hub-degree skew handled by AQE.  State is the
+    edge list itself; nothing reaches the driver.
+
+    Each round's edge set is persisted and materialized before the next
+    round references it THREE times (degree, and both survivor semis) —
+    without the cut, round r+1's lineage embeds round r's subtree 3x
+    and the base derivation blows up 3^rounds (the same reason
+    connected_components persists per-round state).  The previous
+    round's cache is released as soon as its successor is materialized.
+    """
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).persist()
+    e.count()
+    first: DataFrame | None = e
+    for _ in range(n_rounds):
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+        keep = deg.filter(F.col("d") >= k).select("src")
+        e = _round_state(
+            e.join(keep, "src", "left_semi")
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
+        )
+        if first is not None:
+            first.unpersist()
+            first = None
+    out = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("degree"))
+        .select(F.col("src").alias("id"), "degree")
+        .persist()
+    )
+    out.count()
+    return out
+
+
+def label_propagation(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    n_rounds: int = 3,
+) -> DataFrame:
+    """Fixed-round synchronous label propagation -> (id, community).
+
+    Each node starts labeled with its own id; every round it adopts the
+    most frequent label among its in-neighbors, ties broken toward the
+    SMALLEST label — a total order, so rounds are deterministic under
+    any partitioning (unlike classic async LPA, whose result depends on
+    visit order).  The per-node argmax is a lexicographic
+    MAX(struct(count, -label)) aggregate — one row of state per node,
+    map-side combinable, no window function.
+
+    Plan shape per round: one join of the persisted src-partitioned
+    edge arrangement against the label state (same arrangement reuse as
+    :func:`pagerank`) + one count aggregate keyed by destination.  With
+    symmetrized edges every node has in-degree >= 1, so no outer join
+    is needed to carry isolated state.
+    """
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .repartition("src")
+        .persist()
+    )
+    labels = e.select("src").distinct().withColumn("label", F.col("src"))
+    for _ in range(n_rounds):
+        msgs = e.join(labels, "src").select(F.col("dst").alias("src"), "label")
+        cnt = msgs.groupBy("src", "label").agg(F.count(F.lit(1)).alias("n"))
+        labels = (
+            cnt.groupBy("src")
+            .agg(
+                F.max(
+                    F.struct(F.col("n"), (-F.col("label")).alias("nl"))
+                ).alias("m")
+            )
+            .select("src", (-F.col("m.nl")).alias("label"))
+        )
+    # materialize the node-sized result, then release the edge-sized
+    # arrangement (same cleanup as connected_components — without this the
+    # edge cache is held for the rest of the session)
+    out = labels.select(
+        F.col("src").alias("id"), F.col("label").alias("community")
+    ).persist()
+    out.count()
+    e.unpersist()
+    return out
+
+
+def bfs_levels(
+    edges: DataFrame,
+    n_rounds: int = 3,
+    src_col: str = "src",
+    dst_col: str = "dst",
+) -> DataFrame:
+    """Bounded-hop BFS from the minimum node id over a symmetric edge
+    set: after ``n_rounds`` frontier expansions, return every reached
+    node with its hop distance (id, dist).
+
+    The n-hop-neighborhood / reachability primitive (lineage blast
+    radius, ego networks).  The source is elected declaratively (MIN
+    over the edge table broadcast back), so no driver round-trip; each
+    round is one equi-join on the persisted src-partitioned edge
+    arrangement plus a MIN-aggregate — dist is monotone, so re-visited
+    nodes collapse by MIN and the frontier table stays one row per
+    reached node (O(V) state, never the exponential path set).  Rounds
+    persist/unpersist like connected_components.
+    """
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .repartition("src")
+        .persist()
+    )
+    d = (
+        e.agg(F.min("src").alias("id"))
+        .select("id", F.lit(0).cast("int").alias("dist"))
+        .persist()
+    )
+    d.count()
+    for _ in range(n_rounds):
+        expanded = (
+            e.join(d.withColumnRenamed("id", "src"), "src")
+            .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
+        )
+        d = _round_state(
+            d.unionByName(expanded)
+            .groupBy("id")
+            .agg(F.min("dist").cast("int").alias("dist"))
+        )
+    e.unpersist()
+    return d

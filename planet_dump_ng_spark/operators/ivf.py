@@ -1,31 +1,26 @@
-"""IVF (inverted-file) cell blocking for curation's semantic dedup
-(SemDeDup): only vectors in the same coarse cell are compared.
+"""IVF (inverted-file) approximate nearest neighbour: the second scale
+path for similarity search next to hyperplane LSH.
 
 Pipeline: train a coarse quantizer (mini distributed k-means, Lloyd
 rounds as DataFrame ops — the engine's second iterative algorithm next
 to connected components), assign every corpus vector to its nearest
-centroid cell, then compare pairs within each cell with the exact
-deterministic cosine.
+centroid cell, then answer queries by probing only the ``n_probe``
+closest cells and reranking with the exact deterministic cosine.
 
 Scale notes: centroids are tiny (n_cells x dim) and ride a broadcast;
-assignment is map-only; the pair stage is an equi-join on cell id, so
-pair work is sum(cell^2), not n^2.
+assignment is map-only; the probe join is an equi-join on cell id, so
+the corpus shuffles once by cell and queries touch
+n_probe/n_cells of it — the classic IVF cost model.
 """
 
 from __future__ import annotations
 
 import pandas as pd  # noqa: F401 — pandas-UDF type hints resolve via module globals
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 from planet_dump_ng_spark.operators import compact_python_input
 
-
-def _dot_exact(a: Column, b: Column) -> Column:
-    """Deterministic dot product: IEEE double multiply + strict left-to-right
-    fold (do not reorder the reduction — double addition is not
-    associative)."""
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+from planet_dump_ng_spark.operators.similarity import cosine
 
 
 def _centroids_df(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
@@ -43,17 +38,35 @@ def _centroids_df(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     )
 
 
+def _dist2():
+    """Exact squared-L2 between the row vector ``v`` and the joined
+    ``centroid`` — same strict fold (zip, per-dim square, left-to-right
+    sum) the literal formulation used, so results are bit-identical.
+    Built lazily: constructing Column expressions needs an active
+    SparkContext, and this module must stay importable before one
+    exists (e.g. CLI arg-parse paths)."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("v"),
+            F.col("centroid"),
+            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _dist2_fold(V, C):
     """Exact-fold squared-L2 distance matrix (B x K) between row
     vectors V (B x d, float64) and centroids C (K x d, float64).
 
-    BIT-IDENTICAL to a strict left-to-right scalar fold: the
-    accumulator starts at +0.0 and adds
+    BIT-IDENTICAL to the Catalyst :func:`_dist2` fold and the DuckDB
+    ``list_reduce`` replica: the accumulator starts at +0.0 and adds
     the per-dimension squared difference left-to-right, one vectorized
     float64 add per dimension — the same IEEE operation sequence per
     (row, cell), just batched across the B x K plane instead of
     interpreted per element.  (No einsum/BLAS here on purpose: those
-    reassociate the sum and break last-ulp parity.)
+    reassociate the sum and break last-ulp parity with the oracle.)
     """
     import numpy as np
 
@@ -66,7 +79,7 @@ def _dist2_fold(V, C):
 
 def _fold_self_dot(V):
     """Exact-fold dot(v, v) per row — bit-identical to
-    ``_dot_exact(v, v)`` (float64 element products summed
+    ``similarity._dot_exact(v, v)`` (float64 element products summed
     left-to-right from a +0.0 seed)."""
     import numpy as np
 
@@ -86,8 +99,8 @@ def _assign_np(
 ) -> DataFrame:
     """(vec_id, v) -> (vec_id, v, cell) by nearest centroid under the
     exact-fold squared L2, ties to the lower cell id (argmin over the
-    cell-id-sorted centroid matrix picks the FIRST minimum — a total
-    order on (dist, cell)).
+    cell-id-sorted centroid matrix picks the FIRST minimum — identical
+    to the oracle's ROW_NUMBER ORDER BY dist, cell).
 
     MAP-ONLY: the centroid matrix ships as a Spark BROADCAST VARIABLE
     (once per executor, torrent-distributed — n_cells x dim doubles can
@@ -233,6 +246,82 @@ def train_kmeans(
     return centroids
 
 
+def ivf_cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    n_cells: int = 8,
+    n_probe: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate top-k: probe the ``n_probe`` nearest cells per query,
+    exact-cosine rerank inside them.
+
+    Cache discipline: the corpus stays persisted only through training
+    and the assignment materialization, then releases; what survives
+    for the returned (lazy) plan is the much smaller assignment table.
+    """
+    corpus = corpus.persist()
+    cdf = train_kmeans_df(
+        corpus, dim, n_cells, vec_col=vec_col, id_col=id_col
+    )
+
+    c = (
+        _assign(
+            corpus.select(
+                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+            ),
+            cdf,
+        )
+        .select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("v").alias("cv"),
+            "cell",
+        )
+        .persist()
+    )
+    c.count()
+    corpus.unpersist()
+    # per query: the n_probe closest cells by centroid distance (rank over
+    # the broadcast-joined centroid table; ties on dist go to the lower
+    # cell id, matching the oracle's ORDER BY dist, cell)
+    pw = W.partitionBy("query_id").orderBy("dist", "cell")
+    q = (
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
+        )
+        .join(F.broadcast(cdf))
+        .select(
+            "query_id",
+            F.col("v").alias("qv"),
+            "cell",
+            _dist2().alias("dist"),
+        )
+        .withColumn("rn", F.row_number().over(pw))
+        .filter(F.col("rn") <= n_probe)
+        .select("query_id", "qv", "cell")
+    )
+    scored = (
+        c.join(F.broadcast(q), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine(F.col("qv"), F.col("cv")).alias("cosine"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
 def assign_cells(
     corpus: DataFrame,
     dim: int,
@@ -261,7 +350,8 @@ def assign_cells(
 #: many vectors (the cell-blocked pair space is sum(cell^2), so a
 #: bounded mean cell keeps total pair work ~linear in the corpus) but
 #: never drop below the minimum (tiny corpora still get a real
-#: clustering).
+#: clustering, and the DuckDB oracle's unrolled Lloyd prefix stays at
+#: the floor for every test scale <= min_cells * target rows).
 SEMANTIC_TARGET_CELL_ROWS = 250
 SEMANTIC_MIN_CELLS = 8
 
@@ -275,7 +365,9 @@ def derive_n_cells(
     floor of ``min_cells`` — but never more than n // 32 cells (a tiny
     corpus must not shatter into near-singleton cells, where the
     cell-blocked pair join degenerates to "no pairs at all" and every
-    near-dup survives)."""
+    near-dup survives).  Shared by the operator and the oracle-SQL
+    generator so both sides of the correctness gate parameterize on the
+    SAME count."""
     import math
 
     n = max(int(n_rows), 1)
@@ -302,7 +394,8 @@ def derive_super_cells(n_cells: int) -> int:
 def _train_sample(vecs: DataFrame, cap: int) -> DataFrame:
     """Deterministic bounded training sample: the ``cap`` rows with the
     smallest (xxhash64(vec_id), vec_id) — the same total order the
-    k-means seeds already use.  TakeOrdered-shaped (per-partition heap + merge),
+    k-means seeds already use, so the oracle replays it with its
+    xxhash64 replica.  TakeOrdered-shaped (per-partition heap + merge),
     no full sort."""
     return (
         vecs.withColumn("_h", F.xxhash64("vec_id"))
@@ -346,7 +439,7 @@ def _hier_assign_np(
     candidates).  Also emits the exact-fold self-dot ``norm`` in the
     same Arrow pass so the pair stage never recomputes per-vector norms
     per pair.  Every argmin uses the exact fold with lower-id ties, so
-    the assignment is deterministic bit-for-bit."""
+    the DuckDB oracle replays the assignment bit-for-bit."""
     import numpy as np
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
@@ -410,9 +503,10 @@ def _hier_assign_np(
 def fold_dot_udf():
     """Arrow pandas UDF: exact left-to-right-fold dot product of two
     vector columns in float64 — bit-identical to
-    ``_dot_exact`` (the acc starts at +0.0 and adds elementwise
-    products in index order; the numpy adds are the same IEEE op
-    sequence, batched)."""
+    ``similarity._dot_exact`` and the oracle's ``list_reduce`` (the acc
+    starts at +0.0 and adds elementwise products in index order; the
+    numpy adds are the same IEEE op sequence, batched).  Shared by the
+    batch pair stage and the streaming semantic probe."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -437,7 +531,8 @@ def _pair_verdict(a: DataFrame, threshold: float) -> DataFrame:
 
     One equi-join on cell bounds the pair space to sum(cell^2); the
     per-pair cosine is ONE exact-fold dot (Arrow pandas UDF, float64
-    products summed left-to-right) over the precomputed per-vector norms.
+    products summed left-to-right — bit-identical to the oracle's
+    list_reduce) over the precomputed per-vector norms.
 
     Zero-norm guard: a failed-encode all-zeros vector yields cosine =
     0/0 = NaN, and both engines order NaN ABOVE any number, so NaN >=
@@ -506,9 +601,9 @@ def semantic_dedup(
     (full-corpus training, flat assignment) for callers that want a
     fixed, small quantizer.  Both paths end in the same cell-blocked
     pair stage (:func:`_pair_verdict`); AQE splits any residual skewed
-    mega-cell.  Every stage is exact-fold deterministic: sample, both
-    Lloyd chains, the fine->super map, the two-stage argmin and the pair
-    cosines are the same bit-for-bit on every run.
+    mega-cell.  Every stage is exact-fold deterministic, so the DuckDB
+    oracle replays sample, both Lloyd chains, the fine->super map, the
+    two-stage argmin, and the pair cosines bit-for-bit.
     """
     corpus = corpus.select(id_col, vec_col).persist()
     vecs = corpus.select(
@@ -518,6 +613,8 @@ def semantic_dedup(
         quant = train_semantic_quantizer(vecs, dim)
         a = assign_semantic_cells(vecs, quant)
     else:
+        from planet_dump_ng_spark.operators.similarity import _dot_exact
+
         a = assign_cells(
             corpus, dim, n_cells, id_col=id_col, vec_col=vec_col
         ).withColumn("norm", _dot_exact(F.col("v"), F.col("v")))
@@ -535,9 +632,11 @@ def train_semantic_quantizer(
 ) -> dict:
     """Train the derived two-level quantizer over (vec_id, v) -> a small
     plain-python artifact {n_cells, k1, fine, sup, f2s} (centroid lists
-    and the fine->super map).  This is the FROZEN state an incremental
-    batch re-assigns against, so new rows land in exactly the cells the
-    corpus snapshot was blocked by."""
+    and the fine->super map).  This is the FROZEN state a streaming
+    probe (or an incremental batch) re-assigns against, so live rows
+    land in exactly the cells the corpus snapshot was blocked by —
+    shared by :func:`semantic_dedup` and
+    streaming.jobs.semantic_dedup_stream."""
     if n_cells is None:
         n_cells = derive_n_cells(vecs.count())
     k1 = derive_super_cells(n_cells)
@@ -683,6 +782,751 @@ def _train_two_kmeans(
 
 def assign_semantic_cells(vecs: DataFrame, quant: dict) -> DataFrame:
     """(vec_id, v) -> (vec_id, v, cell, norm) under a FROZEN trained
-    quantizer (:func:`train_semantic_quantizer`); the kernel is a
-    map-only mapInPandas."""
+    quantizer (:func:`train_semantic_quantizer`) — works on batch and
+    streaming DataFrames alike (the kernel is a map-only
+    mapInPandas)."""
     return _hier_assign_np(vecs, quant["fine"], quant["sup"], quant["f2s"])
+
+
+
+def pq_codebooks(
+    corpus: DataFrame,
+    dim: int,
+    n_sub: int = 4,
+    n_cells: int = 8,
+    n_rounds: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[DataFrame]:
+    """One trained (cell, centroid) codebook DataFrame per subspace —
+    shared by pq_encode (storage side) and pq_adc_topk (query side)."""
+    sub_dim = dim // n_sub
+
+    def train_one(s: int) -> DataFrame:
+        sub = corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("sub"),
+        )
+        return train_kmeans_df(
+            sub, sub_dim, n_cells, n_rounds, vec_col="sub", id_col="vec_id"
+        )
+
+    # subspace trainings are independent Lloyd loops over the same cached
+    # corpus — submit them concurrently so their per-round driver
+    # materializations overlap (the dominant cost is round latency, not
+    # executor work; measured ~2x on the IVFPQ pipeline at sf0.1)
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=n_sub) as pool:
+        return list(pool.map(train_one, range(n_sub)))
+
+
+def pq_encode(
+    corpus: DataFrame,
+    dim: int,
+    n_sub: int = 4,
+    n_cells: int = 8,
+    n_rounds: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Product quantization: split each vector into ``n_sub`` subspaces,
+    train an independent k-means codebook per subspace, and encode every
+    vector as ``n_sub`` small codes plus its total reconstruction error
+    -> (vec_id, code0..code{n_sub-1}, recon_err).
+
+    The third ANN compression next to int8 quantization and the JL
+    projection: storage drops from dim floats to n_sub bytes while
+    asymmetric distance queries stay answerable from codebook lookup
+    tables.  Each subspace training is the same broadcast-Lloyd loop as
+    the IVF coarse quantizer over a dim/n_sub slice (codebooks are tiny
+    and independent — at scale they train concurrently from one cached
+    corpus scan); encoding is n_sub broadcast joins merged on the id.
+    recon_err is the sum of per-subspace squared distances to the chosen
+    centroid — exactly the quantity PQ minimizes, and a deterministic
+    left-to-right sum of exact fold results.
+    """
+    sub_dim = dim // n_sub
+    assert sub_dim * n_sub == dim, "dim must divide evenly into subspaces"
+    corpus = corpus.persist()
+    books = pq_codebooks(
+        corpus, dim, n_sub, n_cells, n_rounds, id_col=id_col, vec_col=vec_col
+    )
+    out = None
+    for s in range(n_sub):
+        sub = corpus.select(
+            F.col(id_col).alias("vec_id"),
+            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("sub"),
+        )
+        cdf = books[s]
+        assigned = (
+            sub.withColumnRenamed("sub", "v")
+            .join(F.broadcast(cdf))
+            .select(
+                "vec_id",
+                F.struct(
+                    _dist2().alias("dist"), F.col("cell").alias("cell")
+                ).alias("dc"),
+            )
+            .groupBy("vec_id")
+            .agg(F.min("dc").alias("dc"))
+            .select(
+                "vec_id",
+                F.col("dc")["cell"].cast("int").alias(f"code{s}"),
+                F.col("dc")["dist"].alias(f"_d{s}"),
+            )
+        )
+        out = assigned if out is None else out.join(assigned, "vec_id")
+    err = F.col("_d0")
+    for s in range(1, n_sub):
+        err = err + F.col(f"_d{s}")
+    result = out.select(
+        "vec_id",
+        *[f"code{s}" for s in range(n_sub)],
+        err.alias("recon_err"),
+    ).persist()
+    result.count()
+    corpus.unpersist()
+    return result
+
+
+def pq_adc_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    n_sub: int = 4,
+    n_cells: int = 8,
+    n_rounds: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """PQ asymmetric-distance top-k: approximate nearest neighbours from
+    CODES ONLY — the query path product quantization exists for.
+
+    Per query and subspace, a lookup table of squared distances from the
+    query's sub-vector to each codebook centroid (n_queries x n_cells
+    rows — tiny, broadcast); each corpus vector's approximate distance
+    is then the sum of ``n_sub`` LUT lookups keyed by its stored codes,
+    so the scan over the corpus touches ONLY the code columns (n_sub
+    bytes/vector at scale), never the original floats.  Ranking is a
+    per-query window with (dist, id) tie-break, exactly like the other
+    ANN paths.
+
+    Cache discipline mirrors ivf_cosine_topk: the corpus persists only
+    through training + encoding; the returned plan reads the much
+    smaller code table.
+    """
+    sub_dim = dim // n_sub
+    corpus = corpus.persist()
+    books = pq_codebooks(
+        corpus, dim, n_sub, n_cells, n_rounds, id_col=id_col, vec_col=vec_col
+    )
+    codes = pq_encode(
+        corpus, dim, n_sub, n_cells, n_rounds, id_col=id_col, vec_col=vec_col
+    )  # persisted + materialized inside
+    corpus.unpersist()
+
+    adc = codes.select(
+        F.col("vec_id").alias("neighbor_id"),
+        *[f"code{s}" for s in range(n_sub)],
+    )
+    for s in range(n_sub):
+        lut = (
+            queries.select(
+                F.col(id_col).alias("query_id"),
+                F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("v"),
+            )
+            .join(F.broadcast(books[s]))
+            .select(
+                "query_id",
+                F.col("cell").alias(f"code{s}"),
+                _dist2().alias(f"_d{s}"),
+            )
+        )
+        join_on = (
+            [f"code{s}"] if s == 0 else ["query_id", f"code{s}"]
+        )
+        adc = adc.join(F.broadcast(lut), join_on)
+    dist = F.col("_d0")
+    for s in range(1, n_sub):
+        dist = dist + F.col(f"_d{s}")
+    scored = adc.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", dist.alias("adc_dist")
+    )
+    w = W.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    )
+
+
+def ivfpq_adc_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    n_cells: int = 8,
+    coarse_rounds: int = 2,
+    n_sub: int = 4,
+    pq_cells: int = 8,
+    pq_rounds: int = 2,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF+PQ asymmetric-distance top-k — the composed index (FAISS's
+    IVFADC): a coarse quantizer routes each vector to a cell, product
+    quantization encodes the RESIDUAL (vector minus its coarse
+    centroid — residuals are far better centered than raw vectors, the
+    reason real systems compose the two), and queries probe only the
+    ``n_probe`` nearest cells, ranking candidates by the sum of
+    per-subspace LUT lookups on the residual codes.
+
+    Scale shape = the product of the two parents': the corpus shuffles
+    once by coarse cell; per query the candidate scan covers
+    n_probe/n_cells of the code table (n_sub bytes per vector, never
+    the floats); all LUTs are (queries x probed cells x pq_cells)
+    rows — broadcast.  Every stage is the deterministic machinery the
+    separate IVF and PQ paths already hash-verify: exact-fold L2,
+    1e-12-truncated Lloyd means, (dist, id) tie-breaks.
+    """
+    coarse, books, codes = ivfpq_build(
+        corpus, dim, n_cells, coarse_rounds, n_sub, pq_cells, pq_rounds,
+        id_col=id_col, vec_col=vec_col,
+    )
+    return ivfpq_query(
+        coarse, books, codes, queries, dim, k=k, n_sub=n_sub,
+        n_probe=n_probe, id_col=id_col, vec_col=vec_col,
+    )
+
+
+def ivfpq_build(
+    corpus: DataFrame,
+    dim: int,
+    n_cells: int = 8,
+    coarse_rounds: int = 2,
+    n_sub: int = 4,
+    pq_cells: int = 8,
+    pq_rounds: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, list[DataFrame], DataFrame]:
+    """Train the IVFPQ index -> (coarse centroids, per-subspace residual
+    codebooks, code table).  These three tables ARE the index artifact:
+    persist them (write_ivfpq_index) and serve queries without ever
+    touching the raw vectors again — the build-once/query-many shape of
+    a production vector store."""
+    sub_dim = dim // n_sub
+    assert sub_dim * n_sub == dim, "dim must divide evenly into subspaces"
+    corpus = corpus.persist()
+    vecs = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+    )
+    coarse = train_kmeans_df(
+        corpus, dim, n_cells, coarse_rounds, vec_col=vec_col, id_col=id_col
+    )
+    # residual table: v - centroid(cell) — float64 subtraction of exact
+    # operands, deterministic on both engines
+    resid = (
+        _assign(vecs, coarse)
+        .join(F.broadcast(coarse), "cell")
+        .select(
+            "vec_id",
+            "cell",
+            F.zip_with(
+                "v", "centroid", lambda a, b: a.cast("double") - b
+            ).alias("rv"),
+        )
+        .persist()
+    )
+    resid.count()
+    corpus.unpersist()
+    books = pq_codebooks(
+        resid, dim, n_sub, pq_cells, pq_rounds, id_col="vec_id", vec_col="rv"
+    )
+    codes = None
+    for s in range(n_sub):
+        sub = resid.select(
+            "vec_id", F.slice("rv", s * sub_dim + 1, sub_dim).alias("v")
+        )
+        assigned = (
+            sub.join(F.broadcast(books[s]))
+            .select(
+                "vec_id",
+                F.struct(
+                    _dist2().alias("dist"), F.col("cell").alias("cell")
+                ).alias("dc"),
+            )
+            .groupBy("vec_id")
+            .agg(F.min("dc")["cell"].cast("int").alias(f"code{s}"))
+        )
+        codes = assigned if codes is None else codes.join(assigned, "vec_id")
+    codes = (
+        resid.select("vec_id", "cell").join(codes, "vec_id").persist()
+    )
+    codes.count()
+    resid.unpersist()
+    return coarse, books, codes
+
+
+def write_ivfpq_index(
+    coarse: DataFrame,
+    books: list[DataFrame],
+    codes: DataFrame,
+    out_dir: str,
+    vectors: DataFrame | None = None,
+) -> None:
+    """Persist the trained index as three parquet tables (coarse /
+    codebooks / codes) PLUS a ``meta.json`` header recording the
+    build-time geometry (dim, n_sub, n_cells, pq_cells) — the FAISS
+    index-header discipline: a reader must never have to guess the
+    subspace split, because a wrong n_sub silently yields empty
+    codebook frames and garbage rankings instead of an error.
+    Codebooks stack into one table with a ``subspace`` key.  The codes
+    table is the only corpus-sized piece (n_sub small ints + cell per
+    vector).
+
+    ``vectors`` (the raw (vec_id, embedding) corpus) turns the artifact
+    into FAISS's IndexRefineFlat shape: the floats are stored beside
+    the codes, PARTITIONED BY the same coarse cell, so
+    :func:`ivfpq_query_rerank` can repair ADC ranking errors by exact
+    re-scoring — reading only the probed cells' vector files (dynamic
+    partition pruning on the (cell, id) join), never the whole flat
+    table."""
+    import json
+
+    d = out_dir.rstrip("/")
+    coarse.write.mode("overwrite").parquet(f"{d}/coarse")
+    stacked = None
+    for s, b in enumerate(books):
+        bs = b.select(F.lit(s).alias("subspace"), "cell", "centroid")
+        stacked = bs if stacked is None else stacked.unionByName(bs)
+    stacked.write.mode("overwrite").parquet(f"{d}/codebooks")
+    # codes PARTITIONED BY coarse cell: ivfpq_query's first ADC join
+    # broadcasts the (probed cells x LUT) table, so dynamic partition
+    # pruning skips every unprobed cell's files — the IVF "scan
+    # n_probe/n_cells of the index" promise realized at the storage
+    # layer, not just in the join filter (pinned by the plan test).
+    codes.write.mode("overwrite").partitionBy("cell").parquet(f"{d}/codes")
+    if vectors is not None:
+        (
+            vectors.select("vec_id", "embedding")
+            .join(codes.select("vec_id", "cell"), "vec_id")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(f"{d}/vectors")
+        )
+    head = coarse.select("centroid").first()
+    book_head = books[0].select("centroid").first()
+    meta = {
+        "format": "ivfpq-parquet-v1",
+        "dim": len(head["centroid"]),
+        "n_sub": len(books),
+        "sub_dim": len(book_head["centroid"]),
+        "n_cells": coarse.count(),
+        "pq_cells": books[0].count(),
+        "has_vectors": vectors is not None,
+    }
+    with open(f"{d}/meta.json", "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+
+
+def read_ivfpq_meta(index_dir: str) -> dict | None:
+    """The meta.json header of a persisted IVFPQ index; None for
+    pre-header artifacts (whose geometry the caller must then supply)."""
+    import json
+    import os
+
+    path = f"{index_dir.rstrip('/')}/meta.json"
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def read_ivfpq_index(
+    spark, index_dir: str, n_sub: int | None = None
+) -> tuple[DataFrame, list[DataFrame], DataFrame]:
+    """Load an index written by write_ivfpq_index.
+
+    ``n_sub`` is DERIVED from the artifact's meta.json header by
+    default; passing it explicitly is only needed for pre-header
+    artifacts, and a value that contradicts the header raises instead
+    of silently slicing the codebooks wrong."""
+    d = index_dir.rstrip("/")
+    meta = read_ivfpq_meta(d)
+    if meta is not None:
+        if n_sub is not None and n_sub != meta["n_sub"]:
+            raise ValueError(
+                f"n_sub={n_sub} contradicts the index header "
+                f"(built with n_sub={meta['n_sub']}); drop the flag — "
+                "the artifact knows its own geometry"
+            )
+        n_sub = meta["n_sub"]
+    elif n_sub is None:
+        raise ValueError(
+            f"{d} has no meta.json header and no n_sub was supplied"
+        )
+    coarse = spark.read.parquet(f"{d}/coarse")
+    stacked = spark.read.parquet(f"{d}/codebooks")
+    books = [
+        stacked.filter(F.col("subspace") == s).select("cell", "centroid")
+        for s in range(n_sub)
+    ]
+    codes = spark.read.parquet(f"{d}/codes")
+    return coarse, books, codes
+
+
+def ivfpq_query(
+    coarse: DataFrame,
+    books: list[DataFrame],
+    codes: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    n_sub: int = 4,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    with_cell: bool = False,
+) -> DataFrame:
+    """Serve top-k from a (possibly loaded-from-disk) IVFPQ index: probe
+    the n_probe nearest coarse cells, rank by summed residual-LUT
+    lookups over the stored codes.  Reads only the code table plus the
+    broadcast-sized centroid/codebook tables — never raw vectors.
+
+    ``with_cell`` appends each neighbor's coarse cell to the output —
+    the key the re-rank stage needs to fetch its float vector with
+    partition pruning instead of a flat-table scan."""
+    sub_dim = dim // n_sub
+    # query side: n_probe nearest coarse cells, query residual per probe
+    pw = W.partitionBy("query_id").orderBy("dist", "cell")
+    probes = (
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("v")
+        )
+        .join(F.broadcast(coarse))
+        .select(
+            "query_id", "v", "cell", "centroid", _dist2().alias("dist")
+        )
+        .withColumn("rn", F.row_number().over(pw))
+        .filter(F.col("rn") <= n_probe)
+        .select(
+            "query_id",
+            "cell",
+            F.zip_with(
+                "v", "centroid", lambda a, b: a.cast("double") - b
+            ).alias("qres"),
+        )
+    )
+    adc = codes.select(
+        F.col("vec_id").alias("neighbor_id"),
+        "cell",
+        *[f"code{s}" for s in range(n_sub)],
+    )
+    for s in range(n_sub):
+        lut = (
+            probes.select(
+                "query_id",
+                "cell",
+                F.slice("qres", s * sub_dim + 1, sub_dim).alias("v"),
+            )
+            .join(
+                F.broadcast(books[s].withColumnRenamed("cell", f"code{s}")),
+            )
+            .select(
+                "query_id",
+                "cell",
+                F.col(f"code{s}").cast("int").alias(f"code{s}"),
+                _dist2().alias(f"_d{s}"),
+            )
+        )
+        join_on = (
+            ["cell", f"code{s}"]
+            if s == 0
+            else ["query_id", "cell", f"code{s}"]
+        )
+        adc = adc.join(F.broadcast(lut), join_on)
+    dist = F.col("_d0")
+    for s in range(1, n_sub):
+        dist = dist + F.col(f"_d{s}")
+    extra = ["cell"] if with_cell else []
+    scored = adc.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", *extra, dist.alias("adc_dist")
+    )
+    w = W.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", *extra, "rank", "adc_dist")
+    )
+
+
+def read_ivfpq_vectors(spark, index_dir: str) -> DataFrame:
+    """The stored flat vectors of an IndexRefineFlat-shaped artifact
+    (cell, vec_id, embedding); raises if the index was built without
+    stored vectors."""
+    d = index_dir.rstrip("/")
+    meta = read_ivfpq_meta(d)
+    if not (meta or {}).get("has_vectors"):
+        raise ValueError(
+            f"{d} stores no flat vectors (built without store-vectors) "
+            "— exact re-rank needs them; rebuild with vectors or query "
+            "without --rerank"
+        )
+    return spark.read.parquet(f"{d}/vectors")
+
+
+def ivfpq_query_rerank(
+    coarse: DataFrame,
+    books: list[DataFrame],
+    codes: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    k: int = 5,
+    k_cand: int = 25,
+    n_sub: int = 4,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Serve exact-re-ranked top-k from a persisted IndexRefineFlat
+    artifact: the ADC path produces a ``k_cand`` shortlist from stored
+    codes, then ONLY those |Q| x k_cand candidates fetch their float
+    vectors from the cell-partitioned flat table — the (cell, id) join
+    key lets dynamic partition pruning skip every unprobed cell's
+    vector files — and re-score with the exact-fold cosine, the same
+    scoring (and therefore bit-identical ranking) as
+    operators.similarity.rerank_exact."""
+    from planet_dump_ng_spark.operators.similarity import _dot_exact, _norm
+
+    short = ivfpq_query(
+        coarse, books, codes, queries, dim, k=k_cand, n_sub=n_sub,
+        n_probe=n_probe, id_col=id_col, vec_col=vec_col, with_cell=True,
+    )
+    cv = vectors.select(
+        "cell",
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        _norm(F.col(vec_col)).alias("qn"),
+    )
+    scored = (
+        short.select("query_id", "neighbor_id", "cell")
+        .join(cv, ["cell", "neighbor_id"])
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            (
+                _dot_exact(F.col("qv"), F.col("cv"))
+                / (F.col("qn") * _norm(F.col("cv")))
+            ).alias("cosine"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
+def ivfpq_add(
+    coarse: DataFrame,
+    books: list[DataFrame],
+    new_vectors: DataFrame,
+    dim: int,
+    n_sub: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Incremental index ingest (the FAISS ``add()`` shape): encode NEW
+    vectors against the FROZEN quantizers — assign each to its nearest
+    existing coarse cell, encode its residual with the existing
+    per-subspace codebooks — and return their code-table rows to append
+    (same schema as ivfpq_build's codes).  No retraining: per-batch
+    cost is the batch size x broadcast-tiny centroid tables, never the
+    corpus, which is what makes continuous ingest viable; periodic
+    re-trains when drift accumulates (embedding_drift_by_dim is the
+    trigger signal) swap the artifact wholesale.
+    """
+    sub_dim = dim // n_sub
+    assert sub_dim * n_sub == dim, "dim must divide evenly into subspaces"
+    vecs = new_vectors.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
+    )
+    resid = (
+        _assign(vecs, coarse)
+        .join(F.broadcast(coarse), "cell")
+        .select(
+            "vec_id",
+            "cell",
+            F.zip_with(
+                "v", "centroid", lambda a, b: a.cast("double") - b
+            ).alias("rv"),
+        )
+    )
+    codes = None
+    for s in range(n_sub):
+        sub = resid.select(
+            "vec_id", F.slice("rv", s * sub_dim + 1, sub_dim).alias("v")
+        )
+        assigned = (
+            sub.join(F.broadcast(books[s]))
+            .select(
+                "vec_id",
+                F.struct(
+                    _dist2().alias("dist"), F.col("cell").alias("cell")
+                ).alias("dc"),
+            )
+            .groupBy("vec_id")
+            .agg(F.min("dc")["cell"].cast("int").alias(f"code{s}"))
+        )
+        codes = assigned if codes is None else codes.join(assigned, "vec_id")
+    return resid.select("vec_id", "cell").join(codes, "vec_id")
+
+
+def ivfpq_add_to_dir(
+    spark,
+    index_dir: str,
+    new_vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> int:
+    """Idempotently fold a new batch into a PERSISTED index directory:
+    anti-join on vec_id against the existing code table (a retried or
+    redelivered batch appends nothing), encode the survivors against
+    the frozen quantizers (:func:`ivfpq_add`), append into the
+    cell-partitioned codes layout.  Returns the number of vectors
+    actually added.
+
+    The shared ingest kernel of ann_cli ``add`` and the streaming tail
+    (streaming.jobs.ivfpq_ingest_stream) — one code path, so the
+    streamed artifact is row-identical to CLI adds by construction.
+    Requires a header-bearing artifact (meta.json): ingest into an
+    index whose geometry must be guessed is how codes get mis-sliced.
+    """
+    d = index_dir.rstrip("/")
+    meta = read_ivfpq_meta(d)
+    if meta is None:
+        raise ValueError(
+            f"{d} has no meta.json header — cannot ingest into an "
+            "artifact whose geometry would have to be guessed"
+        )
+    coarse, books, codes = read_ivfpq_index(spark, d)
+    fresh = new_vectors.join(
+        codes.select(F.col("vec_id").alias(id_col)).distinct(),
+        id_col,
+        "left_anti",
+    )
+    # localCheckpoint, NOT persist: the append below writes into the
+    # same codes path this plan reads, and Spark's recache-by-path then
+    # RECOMPUTES cached dependents from the grown files (the anti-join
+    # would see its own output and collapse to zero rows mid-function).
+    # Checkpointing materializes the rows and cuts the lineage to the
+    # parquet source, so the batch stays stable across both appends.
+    added = ivfpq_add(
+        coarse,
+        books,
+        fresh,
+        meta["dim"],
+        n_sub=meta["n_sub"],
+        id_col=id_col,
+        vec_col=vec_col,
+    ).localCheckpoint(eager=True)
+    n_added = added.count()
+    if n_added:
+        if meta.get("has_vectors"):
+            # IndexRefineFlat artifacts keep the flat vectors in sync
+            # with the codes: the same fresh batch, cell from the codes
+            # just encoded, appended into the same cell partitioning.
+            # Vectors land FIRST, idempotently (anti-join against the
+            # stored vector ids): idempotence of the whole add is keyed
+            # on the CODES table (written last), so a crash between the
+            # two appends is self-repairing — the redelivered batch is
+            # still "fresh" (its codes are missing), the vector rows it
+            # already wrote anti-join away, and the codes append
+            # completes the pair.  Writing codes first would strand the
+            # vectors forever (the retry would see the codes and skip).
+            # Join the RAW batch against the checkpointed `added` rows —
+            # `fresh` is a lazy anti-join against the codes parquet and
+            # must not be re-evaluated after any append.
+            spark = new_vectors.sparkSession
+            new_vecs = (
+                new_vectors.select(
+                    F.col(id_col).alias("vec_id"),
+                    F.col(vec_col).alias("embedding"),
+                )
+                .join(added.select("vec_id", "cell"), "vec_id")
+                .join(
+                    spark.read.parquet(f"{d}/vectors").select("vec_id"),
+                    "vec_id",
+                    "left_anti",
+                )
+                # cut lineage to the vectors path before appending to it
+                .localCheckpoint(eager=True)
+            )
+            new_vecs.write.mode("append").partitionBy("cell").parquet(
+                f"{d}/vectors"
+            )
+        added.write.mode("append").partitionBy("cell").parquet(f"{d}/codes")
+    added.unpersist()
+    return n_added
+
+
+def ivfpq_compact(spark, index_dir: str) -> dict:
+    """Rewrite the codes table at full width — the maintenance pass for
+    an index grown by many incremental adds (each append leaves one
+    small parquet file per touched cell; query-time scan cost becomes
+    file-count-bound).  Content untouched: same rows, same
+    cell-partitioned layout the ADC query prunes on, queries score
+    identically before and after (pinned in tests).  Hash-repartition
+    ON the cell column puts each cell's rows in one task, so partitionBy
+    writes ONE file per cell directory; the rewrite lands in a sibling
+    directory and swaps in via rename, so a crash mid-compact never
+    corrupts the live index.  coarse/codebooks are centroid-sized and
+    never fragment (only codes takes appends).  Returns
+    {files_before, files_after}.
+    """
+    import os
+    import shutil
+
+    d = index_dir.rstrip("/")
+    meta = read_ivfpq_meta(d)
+    if meta is None:
+        raise ValueError(f"{d} has no meta.json — not an IVFPQ index")
+
+    def _nfiles(path: str) -> int:
+        return sum(
+            1
+            for root, _, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    tables = ["codes"] + (["vectors"] if meta.get("has_vectors") else [])
+    before = after = 0
+    for t in tables:
+        src, tmp, old = f"{d}/{t}", f"{d}/{t}.compact", f"{d}/{t}.old"
+        before += _nfiles(src)
+        spark.read.parquet(src).repartition(F.col("cell")).write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(tmp)
+        os.rename(src, old)
+        os.rename(tmp, src)
+        shutil.rmtree(old)
+        after += _nfiles(src)
+    return {"files_before": before, "files_after": after}

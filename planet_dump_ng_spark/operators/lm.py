@@ -6,7 +6,7 @@ CCNet (Wenzek et al. 2020, public) filters crawl text by the perplexity
 of a language model trained on a trusted corpus — text whose word
 TRANSITIONS the model finds surprising is boilerplate, spam, or noise
 even when its vocabulary looks ordinary.  This module is that signal
-in exact integer arithmetic (no libm anywhere):
+under the repo's oracle-exactness discipline (no libm anywhere):
 
 - the model is the exact integer bigram count tables ``cnt (p, w, c)``
   and ``ctx (p, cp)`` plus the 1-row total, persisted meta-LAST with
@@ -16,7 +16,8 @@ in exact integer arithmetic (no libm anywhere):
 - scoring is bit-length arithmetic (``length(bin(x))`` =
   floor(log2 x)+1): a seen bigram costs ``bitlen(cp) - bitlen(c)``
   bits, a novel continuation of a seen context ``bitlen(cp) + 1``, a
-  novel context ``bitlen(nb) + 1`` — a bounded integer backoff.
+  novel context ``bitlen(nb) + 1`` — the bounded integer backoff the
+  ``heldout_bigram_surprisal`` registry query pins against DuckDB.
 
 Scale shape: training is ONE tokenize+zip scan plus a
 bigram-vocab-sized aggregate (map-side combinable; the vocabulary is
@@ -230,8 +231,9 @@ def score_with_bigram_lm(
     serving path every ``curate_increment`` batch takes.  One tokenize
     scan over the batch, two equi-joins against the persisted count
     tables, one per-doc aggregate.  Docs with <2 tokens emit no row
-    (no transition evidence).  Backoff is pinned bit-equal to a Python
-    reference in tests/test_round10_curation.py."""
+    (no transition evidence).  Backoff is pinned bit-equal to the
+    ``heldout_bigram_surprisal`` registry oracle in
+    tests/test_round10_curation.py."""
     cnt, ctx, meta = read_bigram_lm(docs.sparkSession, model_dir)
     bg = bigram_instances(docs, text_col=text_col, id_col=id_col)
     return _score(bg, cnt, ctx, meta["n_bigrams"])

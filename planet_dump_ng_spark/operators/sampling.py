@@ -7,13 +7,38 @@ fraction threshold, so the sample is stable across runs, partitionings,
 engines, and incremental re-runs (new rows don't reshuffle old
 membership — the property that makes train/test splits trustworthy).
 
-Buckets come from xxhash64, Spark's built-in 64-bit hash, so membership
-is a pure function of the key.
+Portable flavor here uses md5 hex prefixes (comparable string-wise in
+any engine, used by the oracle-checked queries); a Spark-only deployment
+would swap xxhash64 for speed without changing semantics.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+#: md5-hex prefix length used for thresholding (8 hex chars = 32 bits)
+_PREFIX = 8
+_SPACE = 16**_PREFIX
+
+
+def _bucket(key: Column) -> Column:
+    """Uniform [0, 1) position from the md5 of the key's string form."""
+    return F.conv(F.substring(F.md5(key.cast("string")), 1, _PREFIX), 16, 10).cast(
+        "double"
+    ) / F.lit(float(_SPACE))
+
+
+def hash_sample(df: DataFrame, key: str, fraction: float) -> DataFrame:
+    """Keep rows whose hash bucket < fraction (reproducible sample)."""
+    return df.filter(_bucket(F.col(key)) < fraction)
+
+
+def train_test_split(
+    df: DataFrame, key: str, test_fraction: float = 0.1
+) -> tuple[DataFrame, DataFrame]:
+    """Disjoint, reproducible (train, test) split on the key hash."""
+    b = _bucket(F.col(key))
+    return df.filter(b >= test_fraction), df.filter(b < test_fraction)
 
 
 def weighted_mix(
@@ -65,7 +90,7 @@ def temperature_resample(
     runs, partitionings, and appends.  For ``alpha=0.5`` the keep
     fraction is computed as ``sqrt(min_count) / sqrt(count_g)``: sqrt
     and division are correctly-rounded IEEE ops, so the thresholds are
-    bit-identical in any engine.  Other
+    bit-identical in any engine (the oracle-checkable path).  Other
     alphas go through ``pow`` (deterministic within Spark, but libm
     pow is not cross-engine exact).
 
@@ -118,7 +143,8 @@ def xxhash_split(
 ) -> DataFrame:
     """Deterministic train/val/test assignment on the JVM-side xxhash64.
 
-    One codegen'd hash per row, no string conversion.  The key hashes into
+    The md5 path above is the portable flavor; this is the fast path — one
+    codegen'd hash per row, no string conversion.  The key hashes into
     ``buckets`` equal slots and consecutive fraction ranges map to split
     labels, so membership is content-stable: re-running, repartitioning,
     or appending rows never reassigns an existing key, and enlarging a
@@ -136,6 +162,29 @@ def xxhash_split(
     assert abs(edge - 1.0) < 1e-9, "fractions must sum to 1"
     return df.withColumn("bucket", bucket).withColumn(
         "split", expr.otherwise(list(fractions)[-1])
+    )
+
+
+def stratified_take(
+    df: DataFrame, key: str, group_col: str, n_per_group: int
+) -> DataFrame:
+    """Deterministic class balancing: at most ``n_per_group`` rows per
+    group, chosen by content-hash order.
+
+    The training-set balancer: capping over-represented classes without
+    RNG.  Hash order (xxhash64(key), key) is a total order independent
+    of partitioning and engine, so the selection is reproducible AND
+    stable under appends: a new row displaces at most the current
+    largest-hash member, never reshuffles the whole selection.  One
+    partitioned rank window — shuffles each group once, no global sort.
+    """
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy(group_col).orderBy(F.xxhash64(F.col(key)), key)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n_per_group)
+        .drop("_rn")
     )
 
 

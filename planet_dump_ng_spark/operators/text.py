@@ -13,14 +13,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: whitespace tokenizer pattern
+#: whitespace tokenizer pattern (kept identical in DuckDB oracles)
 TOKEN_SPLIT = r"\s+"
 
 #: BPE-ish word/number/punct pattern for finer-grained token estimates
 BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 #: tiny per-language stopword lists for the n-gram/stopword language
-#: heuristic.  Deterministic; a production system
+#: heuristic.  Deterministic and oracle-expressible; a production system
 #: would swap in a real model via mapInPandas without changing the plan.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to", "in", "is", "it"),
@@ -84,11 +84,52 @@ def stopword_hits(col: Column | str, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(wl, F.lower(t))))
 
 
+def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Length / punctuation / stopword-ratio quality features.
+
+    ``quality_score`` is a deterministic rational of integer counts so
+    Spark and any SQL oracle agree bit-for-bit.
+    """
+    c = F.col(text_col)
+    wl = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
+
+    def _feats(toks: Column) -> Column:
+        # every reference to ``toks`` is a bound-variable read: the regex
+        # tokenizer runs ONCE per row instead of once per referencing
+        # output column (bind_struct; ~5 evaluations collapsed to 1)
+        n_tok = F.size(toks)
+        n_char = F.length(c)
+        n_punct = F.size(F.regexp_extract_all(c, F.lit(PUNCT_RE), 0))
+        n_stop = F.size(F.filter(toks, lambda t: F.array_contains(wl, F.lower(t))))
+        return F.struct(
+            n_tok.alias("n_tokens"),
+            n_char.alias("n_chars_calc"),
+            (n_punct.cast("double") / F.greatest(n_char, F.lit(1))).alias(
+                "punct_ratio"
+            ),
+            (n_stop.cast("double") / F.greatest(n_tok, F.lit(1))).alias(
+                "stopword_ratio"
+            ),
+            (
+                (n_char - (n_tok - 1)).cast("double")
+                / F.greatest(n_tok, F.lit(1))
+            ).alias("mean_token_len"),
+        )
+
+    return bind_struct(
+        df,
+        tokens(c),
+        _feats,
+        ["n_tokens", "n_chars_calc", "punct_ratio", "stopword_ratio",
+         "mean_token_len"],
+    )
+
+
 #: fasttext-style linear quality model: (feature, weight) with a bias.
 #: Weights are plan literals — the trained artifact a production pipeline
 #: would broadcast; swapping them is a config change, not a plan change.
-#: Feature order is FIXED (the score folds left-to-right, so every run
-#: lands on the bit-identical IEEE double).
+#: Feature order is FIXED (the score folds left-to-right so Spark and the
+#: SQL oracle land on the bit-identical IEEE double).
 QUALITY_MODEL_BIAS = -0.5
 QUALITY_MODEL_WEIGHTS: tuple[tuple[str, float], ...] = (
     ("stop_ratio", 3.2),
@@ -109,7 +150,7 @@ def linear_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     bit-deterministic across engines); ``keep`` is ``margin > 0``.
     Ratios are single double divisions of exact integer counts and the
     dot product folds in the fixed ``QUALITY_MODEL_WEIGHTS`` order, so
-    the score is bit-exact run to run.  Map-only: scales
+    the score is hash-exact against the SQL oracle.  Map-only: scales
     linearly with input splits, no shuffle.
     """
     # NOT let-bound, by measurement: the duplicated subtrees here are one
@@ -145,9 +186,137 @@ def linear_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def log2_ratio_mitchell(n, d):
+    """Engine-exact log2(n/d) approximation (Mitchell's piecewise-linear
+    log, 1962): with ``r = trunc(2^20 * n / d)`` and ``e = bitlen(r) - 1``,
+
+        log2(n/d) ≈ (e + (r - 2^e) / 2^e) - 20
+
+    — integer/bit arithmetic plus ONE division by an exact power of
+    two, no libm, so Spark, DuckDB (plans/text_plans._mitchell_idf_sql)
+    and plain Python produce the identical double bit-for-bit.  Max
+    error vs true log2 is ~0.086 (the mantissa linearization); monotone
+    in n/d, and 0 exactly when n == d.
+
+    This replaced the coarser ``bitlen(N) - bitlen(df)`` IDF: that one
+    floors to ZERO whenever df shares N's power-of-two bracket (e.g.
+    every term with df > N/2), which zeroes ALL scores on a
+    small-vocabulary corpus.  Mitchell keeps the no-libm discipline but
+    resolves within the bracket.
+    """
+    n = n.cast("bigint")
+    rq = ((n * F.lit(1048576)).cast("double") / d.cast("double")).cast(
+        "long"
+    )
+    e = (F.length(F.bin(rq)) - F.lit(1)).cast("int")
+    p2 = F.call_function("shiftleft", F.lit(1).cast("bigint"), e)
+    return (
+        e.cast("double") + (rq - p2).cast("double") / p2.cast("double")
+    ) - F.lit(20.0)
+
+
+def bm25_scores(
+    df: DataFrame,
+    terms: list[str],
+    k1: float = 1.2,
+    b: float = 0.75,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """BM25 keyword retrieval scores for ``terms`` over a document frame
+    -> (id, n_matched_terms, score_q, bm25_score).
+
+    Classic tf-saturation term (doc-length normalized) weighted by a
+    Mitchell-interpolated log2 IDF (:func:`log2_ratio_mitchell` of
+    N/df — no libm log, engine-exact); per-term scores are
+    1e-9-truncated and summed as integers so the doc score is
+    order-independent.  The tf table only
+    materializes rows for the query terms (the isin filter pushes into
+    the explode scan), df/avgdl are broadcast-tiny aggregates — cost is
+    proportional to docs CONTAINING a term, not the corpus.
+    """
+    toks = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
+    dl = toks.select("doc_id", F.size("toks").alias("dl")).persist()
+    tok = toks.select("doc_id", F.explode("toks").alias("w")).filter(
+        F.col("w").isin(list(terms))
+    )
+    tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
+    out = score_bm25_tables(tf, dl, k1=k1, b=b).persist()
+    out.count()
+    dl.unpersist()
+    return out
+
+
+def score_bm25_tables(
+    tf: DataFrame, dl: DataFrame, k1: float = 1.2, b: float = 0.75
+) -> DataFrame:
+    """BM25 scoring over PRE-BUILT inverted-index tables: ``tf``
+    (doc_id, w, tf) already filtered to the query terms, ``dl``
+    (doc_id, dl) over the FULL corpus.  The shared scoring kernel of
+    :func:`bm25_scores` (on-the-fly tokenize) and the persisted-index
+    query path (operators.text_index) — one formula, so the served
+    result is bit-identical to the direct one by construction.
+
+    n_docs / avgdl are derived from ``dl`` (broadcast-tiny aggregate);
+    per-term df from the term-filtered ``tf`` itself (filtering cannot
+    change df: df(w) counts docs containing w).  Per-term scores are
+    1e-9-truncated and summed as integers — order-independent.
+    """
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    )
+    dfq = tf.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
+    idf = log2_ratio_mitchell(F.col("n_docs"), F.col("df"))
+    sat = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
+        F.col("tf").cast("double")
+        + F.lit(k1)
+        * (
+            F.lit(1.0 - b)
+            + F.lit(b) * (F.col("dl").cast("double") / F.col("avgdl"))
+        )
+    )
+    term_score = idf * sat
+    return (
+        tf.join(F.broadcast(dfq), "w")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", (term_score * 1e9).cast("long").alias("tsq"))
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_matched_terms"),
+            F.sum("tsq").cast("bigint").alias("score_q"),
+            (F.sum("tsq").cast("double") / F.lit(1e9)).alias("bm25_score"),
+        )
+    )
+
+
+def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+    """Stopword-count language heuristic with deterministic tie-break.
+
+    argmax over per-language hit counts; ties resolve to the
+    lexicographically smallest language code (stable under any row order,
+    hence oracle-comparable).
+    """
+    c = F.col(text_col)
+    scored = F.array(
+        *[
+            F.struct(
+                (-stopword_hits(c, words)).alias("neg_hits"),
+                F.lit(lang).alias("lang"),
+            )
+            for lang, words in sorted(LANG_STOPWORDS.items())
+        ]
+    )
+    best = F.array_min(scored)
+    return df.withColumn(out_col, best["lang"]).withColumn(
+        f"{out_col}_hits", -best["neg_hits"]
+    )
+
+
 #: PII scrub patterns, applied in order (emails first so their digit runs
 #: can't half-match the later numeric patterns).  Restricted to the
-#: regex subset where the Java and RE2 regex engines agree by
+#: regex subset where Java (Spark) and RE2 (DuckDB) agree by
 #: construction: character classes, bounded quantifiers, non-capturing
 #: groups, ASCII word boundaries — no lookaround, no backreferences.
 PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
@@ -156,6 +325,20 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
     ("longnum", r"\d{9,}", "<NUM>"),
     ("phone", r"\+?\d[\d -]{7,}\d", "<PHONE>"),
 )
+
+
+def pii_hits(col: Column | str) -> dict[str, Column]:
+    """Per-category PII match counts (before scrubbing).
+
+    Counts overlap-free occurrences of each raw pattern independently on
+    the ORIGINAL text — a reporting signal (how much PII a source
+    carries), deliberately not derived from the sequential scrub below.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    return {
+        f"n_{name}": F.size(F.regexp_extract_all(c, F.lit(pat), 0))
+        for name, pat, _ in PII_PATTERNS
+    }
 
 
 def scrub_pii(col: Column | str) -> Column:
@@ -195,15 +378,96 @@ def _longest_equal_run(arr: Column) -> Column:
     return F.aggregate(F.array_sort(arr), init, step, lambda acc: acc["best"])
 
 
+def repetition_features(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Gopher-style repetition ratios, entirely map-only (zero shuffle).
+
+    - ``dup_word_ratio``: fraction of tokens that are repeats of an
+      earlier token (1 - distinct/total);
+    - ``top_word_ratio``: frequency share of the most common token;
+    - ``dup_bigram_ratio``: same as dup_word_ratio over adjacent pairs;
+    - ``repetition_keep``: the filter verdict at the classic thresholds
+      (docs under 10 tokens pass trivially — ratio gates are
+      meaningless at that length and would reject all short text).
+
+    Distinct counts use ``array_distinct`` and the top frequency is a
+    sorted-array fold (:func:`_longest_equal_run`) — per-document array
+    expressions instead of explode+groupBy, so a 100 TB scan stays one
+    map stage with no aggregation exchange at all.  Ratios are single
+    IEEE divisions of integer counts (engine-exact).
+    """
+    def _ratios(toks: Column) -> Column:
+        # toks is a bound variable (bind_struct): the tokenizer runs once
+        # per row; bigrams are bound the same way one level down so the
+        # zip_with runs once instead of three times
+        n = F.size(toks)
+        bigrams = F.when(
+            n >= 2,
+            F.zip_with(
+                F.slice(toks, 1, n - 1),
+                F.slice(toks, 2, n - 1),
+                lambda a, b: F.concat_ws(" ", a, b),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+        d = F.greatest(n, F.lit(1)).cast("double")
+
+        def _with_bigrams(bg: Column) -> Column:
+            nb = F.size(bg)
+            db = F.greatest(nb, F.lit(1)).cast("double")
+            return F.struct(
+                n.alias("n"),
+                ((n - F.size(F.array_distinct(toks))).cast("double") / d).alias(
+                    "dw"
+                ),
+                (_longest_equal_run(toks).cast("double") / d).alias("tw"),
+                ((nb - F.size(F.array_distinct(bg))).cast("double") / db).alias(
+                    "db"
+                ),
+            )
+
+        return bind(bigrams, _with_bigrams)
+
+    def _feats(s: Column) -> Column:
+        # second binding level: the four ratios are computed once and the
+        # keep verdict reads them as struct-field refs instead of
+        # re-evaluating each ratio's whole expression tree
+        return F.struct(
+            s["n"].alias("n_words"),
+            s["dw"].alias("dup_word_ratio"),
+            s["tw"].alias("top_word_ratio"),
+            s["db"].alias("dup_bigram_ratio"),
+            (
+                (s["n"] < 10)
+                | ((s["dw"] <= 0.5) & (s["tw"] <= 0.2) & (s["db"] <= 0.3))
+            ).alias("repetition_keep"),
+        )
+
+    return bind_struct(
+        df,
+        bind(tokens(text_col), _ratios),
+        _feats,
+        ["n_words", "dup_word_ratio", "top_word_ratio", "dup_bigram_ratio",
+         "repetition_keep"],
+    )
+
+
 def rule_quality_features(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """The curation rule gate's features (token/char counts, punctuation
-    and stopword ratios, mean token length) plus the Gopher-style
-    repetition gates (duplicate-word, top-word and duplicate-bigram
-    ratios, ``repetition_keep``) from ONE let-bound tokenizer
-    evaluation per row: a second tokenize pass over the full surviving
-    corpus would be pure cost at 100 TB."""
+    """Fused :func:`quality_features` + :func:`repetition_features` — the
+    exact column set (names, order, values) of
+    ``repetition_features(quality_features(df))`` from ONE let-bound
+    tokenizer evaluation per row.
+
+    The composed form stacks two ``bind_struct`` Generates, each binding
+    ``tokens(text)`` separately, so the regex tokenizer runs twice per
+    row; the curation rule gate (batch + increment + streaming twin) is
+    exactly this composition over the full surviving corpus, which at
+    100 TB is a second tokenize pass per curation for no new
+    information.  Every field below is the same expression tree the two
+    operators build — same integer counts, same single IEEE divisions —
+    so outputs are bit-identical to the composition."""
     c = F.col(text_col)
     wl = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
 
@@ -253,8 +517,9 @@ def rule_quality_features(
             )
 
         def _final(s: Column) -> Column:
-            # second binding level: the ratios are computed once and the
-            # keep verdict reads them as struct-field refs
+            # second binding level, same as repetition_features: the
+            # ratios are computed once and the keep verdict reads them
+            # as struct-field refs
             return F.struct(
                 s["n_tokens"].alias("n_tokens"),
                 s["n_chars_calc"].alias("n_chars_calc"),
@@ -307,7 +572,8 @@ def canonical_url(col: Column | str) -> Column:
     dropped (other params kept in order), default ports ``:443`` \
     (https) / ``:80`` (http) stripped, trailing slashes trimmed, and a
     query left empty by param filtering loses its ``?``.  No lookahead
-    anywhere, so the rules mean the same under RE2."""
+    anywhere, so the DuckDB oracle twin replays rule-for-rule under
+    RE2."""
     u = F.col(col) if isinstance(col, str) else col
     u = F.regexp_replace(u, "#.*$", "")  # fragment
     # lowercase scheme://host[:port] only: extract the anchored head,
@@ -429,3 +695,71 @@ def _bpe_rounds(
         cur = nxt
     rules = spark.createDataFrame(rows, _RULE_SCHEMA)
     return cur, rules, caches
+
+
+def bpe_learn_merges(
+    docs: DataFrame, text_col: str = "text", n_merges: int = 3
+) -> DataFrame:
+    """Learn the first ``n_merges`` BPE merge rules over the corpus.
+
+    The real tokenizer-training loop (Sennrich et al.), not just one
+    round of pair statistics: each round counts adjacent symbol pairs
+    weighted by word frequency, elects the most frequent pair (ties:
+    lexicographically smallest), and rewrites every word's symbol
+    sequence with a left-to-right non-overlapping merge fold.  Returns
+    one row per learned rule: (round, pair_left, pair_right, n).
+
+    Scale shape: the loop runs entirely on the DISTINCT-word table
+    (vocabulary-sized — grows sub-linearly with the corpus, so at
+    100 TB this is a few million rows after one corpus-wide word
+    count), each round is one map-side-combinable pair count plus a
+    TakeOrdered(1) whose 1-row result is collected and folded into the
+    next round's rewrite as a literal (a bounded collect, like the
+    curation manifests), so nothing but the word count ever scans the
+    corpus and each round costs exactly one job.
+    """
+    _, rules, caches = _bpe_rounds(docs, text_col, n_merges)
+    for c in caches:
+        c.unpersist()
+    return rules
+
+
+def bpe_encode_stats(
+    docs: DataFrame, text_col: str = "text", n_merges: int = 3
+) -> DataFrame:
+    """Fit-and-transform: learn ``n_merges`` BPE rules, then encode every
+    document and report per-doc symbol statistics — (doc_id, n_tokens,
+    n_chars, n_symbols, compression).
+
+    The transform never re-folds per token INSTANCE: the merge rewrite
+    happens once per distinct word (the vocabulary-sized model table),
+    and documents join back on the word — the same broadcast-model
+    shape as tokenize_with_vocab, so the per-document cost at 100 TB is
+    one map-side join plus an aggregate.
+    """
+    cur, _, caches = _bpe_rounds(docs, text_col, n_merges)
+    wn = cur.select(
+        "w",
+        F.size("s").cast("bigint").alias("n_sym"),
+        F.length("w").cast("bigint").alias("n_chr"),
+    )
+    dtok = docs.select("doc_id", F.explode(tokens(text_col)).alias("w"))
+    out = (
+        dtok.join(wn, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum("n_chr").cast("bigint").alias("n_chars"),
+            F.sum("n_sym").cast("bigint").alias("n_symbols"),
+            (
+                F.sum("n_sym").cast("double") / F.sum("n_chr").cast("double")
+            ).alias("compression"),
+        )
+        # localCheckpoint, not persist — same no-stranded-cache rationale
+        # as bpe_learn_merges above (materialize before the round caches
+        # drop, release on GC)
+        .localCheckpoint(eager=True)
+    )
+    for c in caches:
+        c.unpersist()
+    return out

@@ -1,30 +1,41 @@
-"""Persisted BM25 inverted-index artifact: build and write.
+"""Persisted BM25 inverted-index artifact: build / write / read / query
+/ incremental add.
 
-``curate(build_bm25_index=)`` ships a curated train split searchable:
-term-sharded postings plus a doc-length table, so a later query reads
-only the artifact, never the raw text.  A ``meta.json`` header records
-the build-time geometry, so a reader never guesses.
+The serving-path complement to operators.text.bm25_scores (which
+re-tokenizes the corpus per query): build ONCE, then every query reads
+only the artifact — term-sharded postings plus a doc-length table —
+never the raw text.  Same artifact discipline as the IVFPQ index
+(operators/ivf.py write_ivfpq_index): parquet tables + a meta.json
+header recording build-time geometry, so a reader never guesses.
 
 Scale design (100 TB corpus):
 - postings are PARTITIONED BY a term shard ``wshard =
   pmod(xxhash64(w), n_shards)``: a query for a handful of terms prunes
-  to n_terms/n_shards of the postings files at the STORAGE layer, so
-  serving cost follows term hits, not corpus size.  Vocabulary-keyed
-  partitioning (one dir per term) would mint millions of directories;
-  64 hash shards keep the layout bounded.
-- doc lengths are one slim (doc_id, dl) table; n_docs and the exact
-  integer sum of lengths are stored in the header.
+  to n_terms/n_shards of the postings files at the STORAGE layer
+  (static partition filter — the literal shard list is computed from
+  the query terms), so serving cost follows term hits, not corpus
+  size.  Vocabulary-keyed partitioning (one dir per term) would mint
+  millions of directories; 64 hash shards keep the layout bounded.
+- doc lengths are one slim (doc_id, dl) table; n_docs / avgdl are a
+  broadcast-tiny aggregate over it.
+- ``add`` is per-batch: tokenize only the batch, anti-join on doc_id
+  for idempotence (a retried batch must not double tf counts), append
+  into the same sharded layout.  No rebuild, no corpus rescan.
+- scoring reuses operators.text.score_bm25_tables — the SAME kernel
+  the direct path runs, so served results are bit-identical to
+  bm25_scores by construction (pinned in tests/test_text_index.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from planet_dump_ng_spark.operators.text import tokens
+from planet_dump_ng_spark.operators.text import score_bm25_tables, tokens
 
 FORMAT = "bm25-parquet-v1"
 DEFAULT_SHARDS = 64
@@ -99,3 +110,143 @@ def read_bm25_meta(index_dir: str) -> dict:
             f"{index_dir} is format {meta.get('format')!r}, expected {FORMAT}"
         )
     return meta
+
+
+def read_bm25_index(
+    spark: SparkSession, index_dir: str
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Load (postings, doclen, meta) from a persisted index."""
+    d = index_dir.rstrip("/")
+    meta = read_bm25_meta(d)
+    postings = spark.read.parquet(f"{d}/postings")
+    doclen = spark.read.parquet(f"{d}/doclen")
+    return postings, doclen, meta
+
+
+def _term_shards(
+    spark: SparkSession, terms: list[str], n_shards: int
+) -> list[int]:
+    """The shard ids the query terms live in, as driver-side literals —
+    one tiny 1-row job, so the shard filter lands on the partition
+    column as a STATIC IN-list and parquet prunes unread shards."""
+    if not terms:
+        return []
+    row = spark.range(1).select(
+        *[
+            F.pmod(F.xxhash64(F.lit(t)), F.lit(n_shards)).alias(f"s{i}")
+            for i, t in enumerate(terms)
+        ]
+    ).first()
+    return sorted({row[i] for i in range(len(terms))})
+
+
+def bm25_index_query(
+    spark: SparkSession,
+    postings: DataFrame,
+    doclen: DataFrame,
+    terms: list[str],
+    k1: float = 1.2,
+    b: float = 0.75,
+    n_shards: int = DEFAULT_SHARDS,
+) -> DataFrame:
+    """Score ``terms`` from the persisted tables -> (doc_id,
+    n_matched_terms, score_q, bm25_score) — bit-identical to
+    bm25_scores on the same corpus (shared kernel).  Touches only the
+    query terms' shards of the postings."""
+    shards = _term_shards(spark, list(terms), n_shards)
+    tf = postings.filter(
+        F.col("wshard").isin(shards) & F.col("w").isin(list(terms))
+    ).select("doc_id", "w", "tf")
+    return score_bm25_tables(tf, doclen, k1=k1, b=b)
+
+
+def bm25_index_compact(spark: SparkSession, index_dir: str) -> dict:
+    """Rewrite the postings and doclen tables at full width — the
+    maintenance pass for an index grown by many incremental adds (each
+    ``append`` leaves one small parquet file per touched shard per
+    batch; thousands of adds mean thousands of tiny files per shard,
+    and query-time scan cost becomes file-count-bound instead of
+    byte-bound).
+
+    Content is untouched (same rows, same shard layout — queries score
+    bit-identically before and after, pinned in tests); only the file
+    geometry changes: one pass repartitioned BY the shard column so
+    each partition directory lands as one file.  The rewrite goes to a
+    sibling directory first and swaps in via rename, so a crash
+    mid-compact never corrupts the live index.  Returns
+    {files_before, files_after} per table.
+    """
+    d = index_dir.rstrip("/")
+    read_bm25_meta(d)  # loud error on a non-index dir
+
+    def _nfiles(path: str) -> int:
+        return sum(
+            1
+            for root, _, files in os.walk(path)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    stats = {}
+    for name, part_col in (("postings", "wshard"), ("doclen", None)):
+        src, tmp, old = f"{d}/{name}", f"{d}/{name}.compact", f"{d}/{name}.old"
+        before = _nfiles(src)
+        df = spark.read.parquet(src)
+        if part_col:
+            # hash-repartition ON the shard column: every shard's rows
+            # land in exactly one task, so partitionBy writes ONE file
+            # per shard directory regardless of how many adds fed it
+            df.repartition(F.col(part_col)).write.mode(
+                "overwrite"
+            ).partitionBy(part_col).parquet(tmp)
+        else:
+            # the scan packs small files into maxPartitionBytes-sized
+            # splits, so a plain rewrite merges them (no coalesce(1) —
+            # doclen is corpus-row-sized and must stay parallel)
+            df.write.mode("overwrite").parquet(tmp)
+        os.rename(src, old)
+        os.rename(tmp, src)
+        shutil.rmtree(old)
+        stats[name] = {"files_before": before, "files_after": _nfiles(src)}
+    return stats
+
+
+def bm25_index_add(
+    spark: SparkSession,
+    index_dir: str,
+    new_docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> int:
+    """Incrementally index a new batch: tokenize ONLY the batch,
+    anti-join against already-indexed doc_ids (idempotent — a retried
+    batch appends nothing), append postings/doclen in place, refresh
+    the exact corpus stats in meta.json.  Returns the number of docs
+    actually added."""
+    d = index_dir.rstrip("/")
+    meta = read_bm25_meta(d)
+    n_shards = meta["n_shards"]
+    existing = spark.read.parquet(f"{d}/doclen").select("doc_id")
+    fresh = new_docs.join(
+        existing.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
+    )
+    postings, doclen = build_bm25_index(
+        fresh, id_col=id_col, text_col=text_col, n_shards=n_shards
+    )
+    doclen = doclen.persist()
+    n_added = doclen.count()
+    if n_added:
+        postings.write.mode("append").partitionBy("wshard").parquet(
+            f"{d}/postings"
+        )
+        doclen.write.mode("append").parquet(f"{d}/doclen")
+        stats = spark.read.parquet(f"{d}/doclen").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").cast("bigint").alias("sum_dl"),
+        ).first()
+        meta["n_docs"] = stats["n_docs"]
+        meta["sum_dl"] = stats["sum_dl"] or 0
+        with open(f"{d}/meta.json", "w", encoding="utf-8") as fh:
+            json.dump(meta, fh)
+    doclen.unpersist()
+    return n_added

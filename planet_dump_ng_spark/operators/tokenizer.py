@@ -1,12 +1,31 @@
-"""Persisted BPE tokenizer artifact: train once, ship with the dataset.
+"""Persisted BPE tokenizer artifact: train once, encode anywhere.
 
-``curate(train_tokenizer=)`` trains the merge rules on the curated train
-split (:func:`text._bpe_rounds` is the training loop) and persists a
-parquet directory holding the learned merge table and the final symbol
-vocabulary, plus a ``meta.json`` header with the training parameters.
-The 100 TB shape is train-once / apply-everywhere: training runs on one
-corpus sample (the merge loop is vocabulary-bound) and the artifact
-ships to every downstream job.
+``bpe_learn_merges`` (operators/text.py) is the training loop; this
+module gives its output the same build/serve lifecycle as the BM25 and
+IVFPQ artifacts — a parquet directory holding the learned merge table
+and the final symbol vocabulary, plus a ``meta.json`` header with the
+training parameters validated at read time.  The 100 TB shape is
+train-once / apply-everywhere: tokenizer training runs on one corpus
+sample (the merge loop is vocabulary-bound), the artifact ships to
+every downstream job, and encoding a new corpus never re-derives rules.
+
+Encoding discipline: the merge fold runs once per DISTINCT word — the
+vocabulary-sized model table — and documents join back on the word
+(the tokenize_with_vocab shape), so per-document cost is one map-side
+join regardless of rule count.  The per-word fold itself is an
+Arrow-batched pandas UDF equivalent to the training rewrite (text.py
+``_BPE_MERGE_EXPR``, one left-to-right non-overlapping fold per rule
+in round order): rule lists in real tokenizers run to 10^4+, where
+chaining plan-literal SQL folds would grow the plan linearly and die
+in analysis, and even a sequential Python replay is
+O(rules x word_length) per word — rule count would dominate encode at
+32k merges.  Serving therefore folds RANK-PRIORITY
+(:func:`_fold_symbols_ranked`): a heap of adjacent pairs keyed by
+first-admissible rule rank, O(len * log len) per word and independent
+of rule count, pinned bit-equal to the sequential reference fold
+(:func:`_fold_symbols`) by property test over random rule sets.
+Served-equals-direct (bpe_apply_stats vs text.bpe_encode_stats) is
+pinned bit-exact in tests/test_tokenizer_artifact.py.
 """
 
 from __future__ import annotations
@@ -14,15 +33,160 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from planet_dump_ng_spark.operators.text import tokens
 
 _FORMAT = "bpe-tokenizer-v1"
-#: recorded in meta.json: the pre-tokenizer (the word splitter feeding
-#: the merge loop) the rules were trained against — an encoder with a
-#: different splitter would silently mis-encode every document.
+#: recorded in meta.json so an artifact trained against a DIFFERENT
+#: pre-tokenizer (the word splitter feeding the merge loop) is refused
+#: at read instead of silently mis-encoding every document.
 _PRETOKENIZER = "whitespace-v1"
+
+
+def _fold_symbols(word: str, rules: list[tuple[str, str]]) -> list[str]:
+    """The word's symbol sequence after replaying every merge rule in
+    round order — the ONE Python twin of text.py's ``_BPE_MERGE_EXPR``
+    aggregate (left-to-right, non-overlapping, a freshly merged symbol
+    can seed the next step's left side within the same round).  Every
+    serving path folds through here so the subtle fold semantics can
+    never desync between count and symbol consumers."""
+    syms = list(word)
+    for a, b in rules:
+        acc: list[str] = []
+        for x in syms:
+            if acc and acc[-1] == a and x == b:
+                acc[-1] = acc[-1] + x
+            else:
+                acc.append(x)
+        syms = acc
+    return syms
+
+
+def _build_rule_index(
+    rules: list[tuple[str, str]],
+) -> dict[tuple[str, str], list[int]]:
+    """(left, right) -> ascending rule ranks.  Built ONCE per frozen rule
+    table and shared across every word fold — the O(rules) cost leaves
+    the per-word path entirely (duplicate pairs in a rule list keep all
+    their ranks; the fold picks the first rank admissible for a given
+    pair instance)."""
+    idx: dict[tuple[str, str], list[int]] = {}
+    for rank, (a, b) in enumerate(rules):
+        idx.setdefault((a, b), []).append(rank)
+    return idx
+
+
+def _fold_symbols_ranked(
+    word: str, idx: dict[tuple[str, str], list[int]]
+) -> list[str]:
+    """Rank-priority twin of :func:`_fold_symbols`: repeatedly merge the
+    lowest-admissible-rank adjacent pair (heap + linked list), giving
+    O(len * log) per word INDEPENDENT of rule count — at a realistic
+    32k-merge table the sequential replay is O(rules * len) per word
+    and dominates encode; this path is what serving uses, pinned
+    bit-equal to the sequential fold by property test
+    (tests/test_tokenizer_artifact.py).
+
+    Equality argument: the sequential fold applies rule r's single
+    left-to-right non-overlapping pass over the state produced by rules
+    0..r-1, so a pair instance merges at the FIRST rank that (a) maps
+    to its strings and (b) exceeds the creation rank of both member
+    symbols — a pair whose symbols were created at rank c cannot exist
+    before pass c finishes, and sequential passes never revisit earlier
+    rules.  The heap processes candidates in exactly that admissible-
+    rank order (ties left-to-right by original character position, the
+    pass's scan order); a merge at rank r only creates candidates with
+    admissible rank > r (their creation rank IS r), so no earlier-rank
+    work is ever reopened — matching the sequential fold's refusal to
+    re-run finished passes even when a later merge re-forms an
+    earlier rule's string pair."""
+    import bisect
+    import heapq
+
+    n = len(word)
+    if n <= 1:
+        return [word] if n else []
+    strs = list(word)
+    created = [-1] * n
+    nxt = list(range(1, n)) + [-1]
+    prv = [-1] + list(range(0, n - 1))
+    alive = [True] * n
+    orig = list(range(n))  # leftmost original char position of the node
+
+    def eff(i: int, j: int) -> int | None:
+        ranks = idx.get((strs[i], strs[j]))
+        if not ranks:
+            return None
+        p = bisect.bisect_right(ranks, max(created[i], created[j]))
+        return ranks[p] if p < len(ranks) else None
+
+    heap: list[tuple[int, int, int, int]] = []
+    for i in range(n - 1):
+        e = eff(i, i + 1)
+        if e is not None:
+            heap.append((e, i, i, i + 1))
+    heapq.heapify(heap)
+    while heap:
+        e, _pos, i, j = heapq.heappop(heap)
+        if not (alive[i] and alive[j] and nxt[i] == j):
+            continue  # lazy deletion: a neighbor already merged away
+        k = len(strs)
+        strs.append(strs[i] + strs[j])
+        created.append(e)
+        orig.append(orig[i])
+        alive.append(True)
+        p_, q_ = prv[i], nxt[j]
+        prv.append(p_)
+        nxt.append(q_)
+        alive[i] = alive[j] = False
+        if p_ != -1:
+            nxt[p_] = k
+            e2 = eff(p_, k)
+            if e2 is not None:
+                heapq.heappush(heap, (e2, orig[p_], p_, k))
+        if q_ != -1:
+            prv[q_] = k
+            e2 = eff(k, q_)
+            if e2 is not None:
+                heapq.heappush(heap, (e2, orig[k], k, q_))
+    out: list[str] = []
+    head = next(
+        m for m in range(len(strs)) if alive[m] and prv[m] == -1
+    )
+    while head != -1:
+        out.append(strs[head])
+        head = nxt[head]
+    return out
+
+
+def _fold_word(word: str, idx: dict[tuple[str, str], list[int]]) -> int:
+    return len(_fold_symbols_ranked(word, idx))
+
+
+def _collect_rules(merges: DataFrame) -> list[tuple[str, str]]:
+    """The frozen rule list in round order — driver-side but bounded
+    (one (left, right) pair per learned merge, the artifact's whole
+    reason to exist)."""
+    return [
+        (r.pair_left, r.pair_right)
+        for r in merges.orderBy("round").collect()
+    ]
+
+
+def bpe_symbol_count(rules: list[tuple[str, str]]) -> Column:
+    """Column factory: ``f(word) -> n_symbols`` under the frozen rules.
+    The rule index is built once driver-side and ships in the UDF
+    closure; each word pays the rank-priority fold only."""
+    idx = _build_rule_index(rules)
+
+    @F.pandas_udf("bigint")
+    def _n_sym(ws: pd.Series) -> pd.Series:
+        return ws.map(lambda w: _fold_word(w, idx))
+
+    return _n_sym
 
 
 def write_bpe_tokenizer(
@@ -35,8 +199,8 @@ def write_bpe_tokenizer(
     ``merges`` (round, pair_left, pair_right, n), ``vocab`` (the final
     symbol table with corpus-weighted counts — the thing an embedding
     layer is sized from), and ``meta.json`` LAST as the commit marker
-    (a half-written artifact has no header, so it reads as no
-    artifact, never as a silently-shorter rule list — which is
+    (read_bpe_tokenizer requires it, so a half-written artifact reads
+    as no artifact, never as a silently-shorter rule list — which is
     also why any PRE-EXISTING header is deleted first: a retrain that
     crashes mid-write must not leave the old header validating the new
     half-written tables).  Returns the header dict.
@@ -81,3 +245,145 @@ def write_bpe_tokenizer(
     with open(meta_path, "w", encoding="utf-8") as fh:
         json.dump(meta, fh)
     return meta
+
+
+def bpe_vocab(
+    docs: DataFrame, text_col: str = "text", n_merges: int = 8
+) -> DataFrame:
+    """The final symbol vocabulary after ``n_merges`` training rounds —
+    (symbol, n) with corpus-weighted counts, exactly the ``vocab`` table
+    :func:`write_bpe_tokenizer` persists (the table an embedding layer
+    is sized from: |vocab| <= alphabet + n_merges entries, each count
+    the total symbol mass it would absorb).  One corpus scan for the
+    word count; the rounds and the explode are vocabulary-sized."""
+    from planet_dump_ng_spark.operators.text import _bpe_rounds
+
+    if n_merges < 1:
+        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    cur, _, caches = _bpe_rounds(docs, text_col, n_merges)
+    out = (
+        cur.select(F.explode("s").alias("symbol"), "cnt")
+        .groupBy("symbol")
+        .agg(F.sum("cnt").cast("bigint").alias("n"))
+        # materialize before the round caches drop; blocks release on GC
+        .localCheckpoint(eager=True)
+    )
+    for c in caches:
+        c.unpersist()
+    return out
+
+
+def read_bpe_tokenizer(
+    spark: SparkSession, tokenizer_dir: str
+) -> tuple[DataFrame, dict]:
+    """(merges table, meta header) — loud error for a directory that is
+    not a tokenizer artifact or was written by an incompatible build
+    (format or pre-tokenizer mismatch would silently mis-encode)."""
+    d = tokenizer_dir.rstrip("/")
+    path = f"{d}/meta.json"
+    if not os.path.exists(path):
+        raise ValueError(
+            f"{tokenizer_dir} has no meta.json — not a tokenizer artifact"
+        )
+    with open(path, encoding="utf-8") as fh:
+        meta = json.load(fh)
+    if meta.get("format") != _FORMAT or (
+        meta.get("pretokenizer") != _PRETOKENIZER
+    ):
+        raise ValueError(
+            f"{tokenizer_dir} was written as "
+            f"{meta.get('format')}/{meta.get('pretokenizer')}, this build "
+            f"reads {_FORMAT}/{_PRETOKENIZER} — encoding with it would "
+            "silently diverge from the trained tokenizer"
+        )
+    return spark.read.parquet(f"{d}/merges"), meta
+
+
+def bpe_apply_stats_stateless(
+    docs: DataFrame, rules: list[tuple[str, str]], text_col: str = "text"
+) -> DataFrame:
+    """Per-doc encode statistics as a STATELESS row map — no distinct,
+    no join, no aggregation — so the same plan runs over a streaming
+    DataFrame in append mode (streaming.jobs.bpe_encode_stream) or any
+    batch frame.  Tokenization and character counts stay JVM-side;
+    only the per-word symbol fold crosses to Python, Arrow-batched with
+    a per-batch word memo (a batch's repeated words fold once).  Same
+    output schema and values as :func:`bpe_apply_stats`; that form's
+    distinct-word model table amortizes better when the corpus's
+    word-instance/distinct-word ratio is high, this one when rows must
+    be processed independently (streams)."""
+    toks = tokens(text_col)
+    idx = _build_rule_index(rules)
+
+    @F.pandas_udf("bigint")
+    def _sum_syms(tok_arrays: pd.Series) -> pd.Series:
+        memo: dict[str, int] = {}
+
+        def per_doc(ws) -> int:
+            # NULL text reaches the UDF as None (the n_tokens>0 filter
+            # sits above this project and need not be pushed below it);
+            # a poison-pill row must not kill a streaming query
+            if ws is None:
+                return 0
+            total = 0
+            for w in ws:
+                n = memo.get(w)
+                if n is None:
+                    n = _fold_word(w, idx)
+                    memo[w] = n
+                total += n
+            return total
+
+        return tok_arrays.map(per_doc)
+
+    return (
+        docs.select(
+            "doc_id",
+            F.size(toks).cast("bigint").alias("n_tokens"),
+            F.aggregate(
+                toks,
+                F.lit(0).cast("bigint"),
+                lambda acc, w: acc + F.length(w),
+            ).alias("n_chars"),
+            _sum_syms(toks).alias("n_symbols"),
+        )
+        .filter(F.col("n_tokens") > 0)
+        .withColumn(
+            "compression",
+            F.col("n_symbols").cast("double")
+            / F.col("n_chars").cast("double"),
+        )
+    )
+
+
+def bpe_apply_stats(
+    docs: DataFrame, merges: DataFrame, text_col: str = "text"
+) -> DataFrame:
+    """Encode ``docs`` under a FROZEN merge table and report per-doc
+    symbol statistics — (doc_id, n_tokens, n_chars, n_symbols,
+    compression), the exact schema of text.bpe_encode_stats so
+    served-equals-direct is a set compare.  The fold runs on the
+    distinct-word table; documents pay one join."""
+    rules = _collect_rules(merges)
+    dtok = docs.select("doc_id", F.explode(tokens(text_col)).alias("w"))
+    wn = (
+        dtok.select("w")
+        .distinct()
+        .select(
+            "w",
+            bpe_symbol_count(rules)(F.col("w")).alias("n_sym"),
+            F.length("w").cast("bigint").alias("n_chr"),
+        )
+    )
+    return (
+        dtok.join(wn, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum("n_chr").cast("bigint").alias("n_chars"),
+            F.sum("n_sym").cast("bigint").alias("n_symbols"),
+            (
+                F.sum("n_sym").cast("double") / F.sum("n_chr").cast("double")
+            ).alias("compression"),
+        )
+    )

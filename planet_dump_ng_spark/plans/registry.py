@@ -78,3 +78,30 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spark.read.parquet(path)
+
+
+def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
+    """Load the synthetic parquet tables as a dict of DataFrames and
+    register each as a temp view (mirrors DuckDB's pre-registered views
+    so ``spark.sql`` text matches ``oracle_sql`` text closely)."""
+    import os
+
+    names = names or [
+        "region",
+        "nation",
+        "customer",
+        "supplier",
+        "part",
+        "orders",
+        "lineitem",
+        "events",
+        "documents",
+        "embeddings",
+    ]
+    out = {}
+    for name in names:
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            df = table(spark, sf_dir, name)
+            df.createOrReplaceTempView(name)
+            out[name] = df
+    return out

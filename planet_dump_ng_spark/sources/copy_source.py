@@ -217,6 +217,25 @@ def read_copy_table(
     return parts.select(*out_cols)
 
 
+def extract_custom_dump(dump_path: str, out_sql: str) -> str:
+    """S1 single-pass variant: pg_dump CUSTOM-format archive -> one
+    monolithic plain COPY text file via ``pg_restore`` (kept for callers
+    that want the intermediate .sql on disk); the pipeline itself uses
+    the concurrent per-table :func:`extract_tables_parallel` fan-out.
+
+    Returns ``out_sql``.  Raises FileNotFoundError when pg_restore is not
+    installed."""
+    import shutil as _shutil
+    import subprocess
+
+    if _shutil.which("pg_restore") is None:
+        raise FileNotFoundError("pg_restore not found on PATH")
+    subprocess.run(
+        ["pg_restore", "-f", out_sql, "-a", dump_path], check=True
+    )
+    return out_sql
+
+
 def extract_tables_parallel(
     dump_path: str,
     out_dir: str,

@@ -58,3 +58,9 @@ def read_documents_jsonl(
         F.col("_corrupt").isNull() & F.col("doc_id").isNotNull()
     ).drop("_corrupt")
     return good, bad
+
+
+def write_documents_jsonl(docs: DataFrame, path: str) -> None:
+    """Partitioned JSONL writer (one file per partition, executor-
+    parallel) — the interchange-format export side."""
+    docs.write.mode("overwrite").json(path)

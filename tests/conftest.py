@@ -8,11 +8,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from planet_dump_ng_spark.session import DEFAULT_SHUFFLE_PARTITIONS, get_spark  # noqa: E402
 
 
-def table(spark, sf_dir, name):
-    """One synthetic parquet table of the test data (``<sf_dir>/<name>.parquet``)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 @pytest.fixture(scope="session")
 def spark():
     # Test-session planning knobs (NOT the production shape): at the
@@ -37,7 +32,9 @@ def spark():
 def plan_session(spark):
     """A sibling session over the same SparkContext with the PRODUCTION
     planning confs (AQE on, the engine's default shuffle width), so
-    plan-shape assertions see the plans ``get_spark`` would run."""
+    plan-shape assertions see the plans ``get_spark`` would run — the
+    ones the QUERIES.md budgets were recorded under
+    (tools/gen_query_inventory.py)."""
     s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "true")
     s2.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))

@@ -279,6 +279,21 @@ def test_minhash_lsh_join_matches_self_join_cross_pairs(docs):
     assert all(a in (1, 4) and b not in (1, 4) for a, b in asym)
 
 
+def test_simhash_near_dup(docs):
+    pairs = {
+        (r.id_a, r.id_b): r.hamming
+        for r in dd.simhash_pairs(docs, max_hamming=16, block_bits=4).collect()
+    }
+    assert pairs.get((1, 2)) == 0  # identical text -> identical simhash
+    assert pairs.get((1, 4), 99) <= 16  # near dup within hamming budget
+
+
+def test_simhash_deterministic(spark, docs):
+    a = docs.select(dd.simhash64("text").alias("h")).collect()
+    b = docs.select(dd.simhash64("text").alias("h")).collect()
+    assert [r.h for r in a] == [r.h for r in b]
+
+
 # -- round 6: mega-bucket containment (star mode / caps) -----------------------
 
 
@@ -372,6 +387,17 @@ def test_lsh_join_max_bucket_representatives(spark):
     # every candidate anchors on the batch doc and hits only the 3
     # smallest corpus ids of the boilerplate bucket
     assert got == {(0, 1), (0, 2), (0, 3)}
+
+
+def test_lsh_bucket_stats_histogram(spark):
+    docs = spark.createDataFrame(
+        [(i, BASE) for i in range(7)] + [(7, FAR), (8, FAR), (9, "tiny")],
+        "doc_id long, text string",
+    )
+    b = dd.lsh_buckets(docs, bands=16)
+    hist = {r.bucket_size: r.n_buckets for r in dd.lsh_bucket_stats(b).collect()}
+    # 16 bands x one 7-doc boilerplate bucket, 16 bands x one 2-doc FAR bucket
+    assert hist == {7: 16, 2: 16}
 
 
 def test_star_mode_rejects_unknown_mode(spark):

@@ -18,7 +18,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from planet_dump_ng_spark.operators import dsir as ds
-from planet_dump_ng_spark.operators import text as tx
 
 
 def _ilog2_q20_py(n: int, d: int) -> int:
@@ -97,22 +96,12 @@ def test_gram_array_short_docs(spark):
     df = spark.createDataFrame(
         [Row(t=""), Row(t="  "), Row(t="one"), Row(t="a b"), Row(t="a b c")]
     )
-    rows = df.select(ds.grams_from_tokens(tx.tokens("t")).alias("g")).collect()
+    rows = df.select(ds.gram_array("t").alias("g")).collect()
     assert rows[0].g == []
     assert rows[1].g == []
     assert rows[2].g == ["one"]
     assert rows[3].g == ["a", "b", "a b"]
     assert rows[4].g == ["a", "b", "c", "a b", "b c"]
-
-
-def _bucket_scores(df, target, n_buckets):
-    """The bucket-score dimension trained inline over ``df``."""
-    feats = ds.hashed_gram_features(
-        df.withColumn("__is_t", target.cast("long")),
-        n_buckets=n_buckets,
-        carry=("__is_t",),
-    )
-    return ds._scores_from_features(feats, n_buckets)
 
 
 @pytest.fixture(scope="module")
@@ -149,7 +138,9 @@ def test_weights_separate_target_lookalikes(tiny_corpus):
 def test_frozen_scores_serving_path(tiny_corpus, spark):
     """Scoring a NEW batch under a pre-trained score dim is bit-equal to
     what inline training over the same corpus produces for those docs."""
-    scores = _bucket_scores(tiny_corpus, F.col("is_t"), n_buckets=256).persist()
+    scores = ds.dsir_bucket_scores(
+        tiny_corpus, F.col("is_t"), n_buckets=256
+    ).persist()
     inline = {
         r.doc_id: (r.n_feats, r.logw_q20)
         for r in ds.dsir_importance_weights(
@@ -164,6 +155,24 @@ def test_frozen_scores_serving_path(tiny_corpus, spark):
     assert {r.doc_id: (r.n_feats, r.logw_q20) for r in served} == {
         i: inline[i] for i in (3, 4, 5)
     }
+
+
+def test_topk_deterministic_and_ordered(tiny_corpus):
+    top = ds.dsir_topk_select(
+        tiny_corpus, F.col("is_t"), k=3, n_buckets=256
+    ).collect()
+    assert [r.doc_id for r in top][:3] == sorted(
+        [r.doc_id for r in top][:3],
+        key=lambda i: next(-t.mean_logw_bits for t in top if t.doc_id == i),
+    )
+    # the 3 kept docs are exactly the target-vocabulary ones
+    assert {r.doc_id for r in top} == {0, 1, 2}
+    again = ds.dsir_topk_select(
+        tiny_corpus, F.col("is_t"), k=3, n_buckets=256
+    ).collect()
+    assert [(r.doc_id, r.logw_q20) for r in again] == [
+        (r.doc_id, r.logw_q20) for r in top
+    ]
 
 
 def test_empty_text_docs_absent(spark):
@@ -194,7 +203,9 @@ def test_model_artifact_roundtrip_and_guards(tiny_corpus, spark, tmp_path):
     assert meta2 == meta
     direct = {
         r.bucket: (r.target_count, r.raw_count, r.delta_q20)
-        for r in _bucket_scores(tiny_corpus, F.col("is_t"), n_buckets=256).collect()
+        for r in ds.dsir_bucket_scores(
+            tiny_corpus, F.col("is_t"), n_buckets=256
+        ).collect()
     }
     loaded = {
         r.bucket: (r.target_count, r.raw_count, r.delta_q20)
@@ -249,6 +260,96 @@ def test_score_with_model_matches_inline(tiny_corpus, spark, tmp_path):
         ).collect()
     }
     assert served == inline
+
+
+def test_dsir_score_stream_matches_batch(tiny_corpus, spark, tmp_path):
+    """Streaming scoring under the frozen model == batch serving over
+    the same files (stateless map + lookup fold, append mode)."""
+    from planet_dump_ng_spark.streaming import jobs
+
+    d = str(tmp_path / "dsir_stream_model")
+    ds.write_dsir_model(tiny_corpus, F.col("is_t"), d, n_buckets=256)
+
+    bus = str(tmp_path / "bus")
+    cols = ["doc_id", "text"]
+    full = tiny_corpus.select(
+        "doc_id", "text",
+        F.lit("s").alias("source"), F.lit("en").alias("lang"),
+        F.length("text").cast("long").alias("n_chars"),
+    )
+    bus_cols = ["doc_id", "source", "lang", "text", "n_chars"]
+    full.filter(F.col("doc_id") < 3).select(*bus_cols).coalesce(1).write.mode(
+        "append"
+    ).parquet(bus)
+    full.filter(F.col("doc_id") >= 3).select(*bus_cols).coalesce(1).write.mode(
+        "append"
+    ).parquet(bus)
+
+    # a null-text and an empty-text row ride the bus too: batch serving
+    # drops them (explode of null/empty emits no features) and the
+    # stream must agree instead of crashing the fold
+    spark.createDataFrame(
+        [(100, "s", "en", None, 0), (101, "s", "en", "", 0)],
+        "doc_id long, source string, lang string, text string, n_chars long",
+    ).coalesce(1).write.mode("append").parquet(bus)
+
+    stream = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    out = jobs.dsir_score_stream(stream, d)
+    jobs.run_to_memory(out, "dsir_stream_tbl", output_mode="append")
+    got = {
+        r.doc_id: (r.n_feats, r.logw_q20, r.logw_bits)
+        for r in spark.table("dsir_stream_tbl").collect()
+    }
+    want = {
+        r.doc_id: (r.n_feats, r.logw_q20, r.logw_bits)
+        for r in ds.dsir_score_with_model(
+            spark.read.parquet(bus).select(*cols), d
+        ).collect()
+    }
+    assert got == want
+
+
+def test_dsir_cli_lifecycle(tiny_corpus, spark, tmp_path, capsys):
+    """train -> score -> select through the CLI: the artifact header
+    records the target expression, scoring equals the operator path,
+    selection keeps the target-vocabulary docs."""
+    import json as _json
+
+    from planet_dump_ng_spark import dsir_cli
+
+    inp = str(tmp_path / "cli_docs.parquet")
+    tiny_corpus.write.parquet(inp)
+    model = str(tmp_path / "cli_model")
+
+    assert dsir_cli.main(
+        ["train", "--input", inp, "--model-dir", model,
+         "--target", "is_t", "--n-buckets", "256"]
+    ) == 0
+    hdr = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert hdr["target_desc"] == "is_t"
+    assert hdr["n_buckets"] == 256
+
+    wout = str(tmp_path / "cli_weights.parquet")
+    assert dsir_cli.main(
+        ["score", "--input", inp, "--model-dir", model, "--out", wout]
+    ) == 0
+    got = {
+        r.doc_id: (r.n_feats, r.logw_q20)
+        for r in spark.read.parquet(wout).collect()
+    }
+    want = {
+        r.doc_id: (r.n_feats, r.logw_q20)
+        for r in ds.dsir_score_with_model(tiny_corpus, model).collect()
+    }
+    assert got == want
+
+    kout = str(tmp_path / "cli_kept.parquet")
+    assert dsir_cli.main(
+        ["select", "--input", inp, "--model-dir", model,
+         "--k", "3", "--out", kout]
+    ) == 0
+    kept = {r.doc_id for r in spark.read.parquet(kout).collect()}
+    assert kept == {0, 1, 2}
 
 
 @pytest.fixture(scope="module")
@@ -460,6 +561,34 @@ def test_inline_scores_enforce_exact_window(tiny_corpus, monkeypatch):
     plan to raise instead of silently rounding."""
     monkeypatch.setattr(ds, "EXACT_LOG_WINDOW", 16)
     with pytest.raises(Exception, match="exact-integer log window"):
-        ds.dsir_importance_weights(
+        ds.dsir_bucket_scores(
             tiny_corpus, F.col("is_t"), n_buckets=8
         ).collect()
+
+
+def test_cli_score_custom_id_col(tiny_corpus, spark, tmp_path):
+    """--id-col threads through score/select; a missing column refuses
+    with the column inventory instead of an unresolved-attribute
+    stacktrace."""
+    from planet_dump_ng_spark import dsir_cli
+
+    renamed = tiny_corpus.withColumnRenamed("doc_id", "item_id")
+    inp = str(tmp_path / "idcol_docs.parquet")
+    renamed.write.parquet(inp)
+    model = str(tmp_path / "idcol_model")
+    assert dsir_cli.main(
+        ["train", "--input", inp, "--model-dir", model,
+         "--target", "is_t", "--n-buckets", "256"]
+    ) == 0
+    kout = str(tmp_path / "idcol_kept.parquet")
+    assert dsir_cli.main(
+        ["select", "--input", inp, "--model-dir", model,
+         "--id-col", "item_id", "--k", "3", "--out", kout]
+    ) == 0
+    kept = {r.item_id for r in spark.read.parquet(kout).collect()}
+    assert kept == {0, 1, 2}
+    with pytest.raises(SystemExit, match="not a column"):
+        dsir_cli.main(
+            ["score", "--input", inp, "--model-dir", model,
+             "--id-col", "doc_id"]
+        )

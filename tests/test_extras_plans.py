@@ -1,10 +1,155 @@
-"""Hand-computable fixtures for ``sampling.temperature_resample`` and the
-``curate(lang_temperature=)`` stage built on it: corpora small enough to
-verify the keep thresholds by hand."""
+"""Hand-computable fixtures for the extras registry queries
+(plans/extras_plans.py) — the DuckDB oracle gate checks engine parity;
+these pin the MATH on corpora small enough to verify by hand."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
+
+from planet_dump_ng_spark.plans.extras_plans import (
+    doc_bigram_surprisal,
+    event_type_user_jaccard,
+    lang_id_confusion,
+    lang_rebalance_weights,
+    zipf_slope_by_lang,
+)
+
+
+def _write_docs(spark, d, rows):
+    """rows: (doc_id, text, lang)."""
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string"
+    ).withColumn("source", F.lit("t")).withColumn(
+        "n_chars", F.length("text")
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+
+
+def test_bigram_surprisal_hand_counts(spark):
+    """Corpus: 'a b' x3 + 'a c' x1 + 'solo'.  Bigram counts: (a,b)=3,
+    (a,c)=1; prev-total c(a)=4 -> bitlen(4)=3.  'a b' doc bits =
+    3 - bitlen(3) = 1; 'a c' doc bits = 3 - bitlen(1) = 2.  Single-token
+    doc drops out."""
+    rows = [(1, "a b", "en"), (2, "a b", "en"), (3, "a b", "en"),
+            (4, "a c", "en"), (5, "solo", "en")]
+    with tempfile.TemporaryDirectory() as d:
+        _write_docs(spark, d, rows)
+        out = {r.doc_id: r for r in doc_bigram_surprisal(spark, d).collect()}
+    assert set(out) == {1, 2, 3, 4}
+    for i in (1, 2, 3):
+        assert (out[i].n_bigrams, out[i].total_bigram_bits) == (1, 1)
+        assert out[i].mean_bigram_bits == 1.0
+    assert (out[4].n_bigrams, out[4].total_bigram_bits) == (1, 2)
+    assert out[4].mean_bigram_bits == 2.0
+
+
+def test_zipf_slope_two_point_fit(spark):
+    """Vocabulary {a: 8x, b: 1x}: points (x=bitlen(rank), y=bitlen(c)) are
+    (1, 4) and (2, 1) -> exact two-point slope (1-4)/(2-1) = -3."""
+    rows = [(1, "a a a a a a a a b", "en")]
+    with tempfile.TemporaryDirectory() as d:
+        _write_docs(spark, d, rows)
+        out = zipf_slope_by_lang(spark, d).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r.lang, r.n_vocab, r.n_tokens) == ("en", 2, 9)
+    assert r.zipf_bit_slope == -3.0
+
+
+def test_lang_id_confusion_shares_sum_to_one(spark):
+    """Stopword-laden English + German docs confuse nothing; shares within
+    each label row-group sum to 1 and counts cover the corpus."""
+    rows = [
+        (1, "the of and to in is you that it he", "en"),
+        (2, "the of and to in is you that it he", "en"),
+        (3, "der die und in den von zu das mit sich", "de"),
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        _write_docs(spark, d, rows)
+        out = lang_id_confusion(spark, d).collect()
+    assert sum(r.n_docs for r in out) == 3
+    by_label = {}
+    for r in out:
+        by_label.setdefault(r.lang_label, 0.0)
+        by_label[r.lang_label] += r.label_share
+    assert all(abs(v - 1.0) < 1e-12 for v in by_label.values())
+    diag = {r.lang_label: r for r in out if r.lang_pred == r.lang_label}
+    assert diag["en"].n_docs == 2 and diag["de"].n_docs == 1
+
+
+def test_lang_rebalance_weights_majority_is_one(spark):
+    rows = [(1, "x", "en"), (2, "x", "en"), (3, "x", "en"), (4, "x", "de")]
+    with tempfile.TemporaryDirectory() as d:
+        _write_docs(spark, d, rows)
+        out = {r.lang: r for r in lang_rebalance_weights(spark, d).collect()}
+    assert out["en"].upsample_weight == 1.0
+    assert out["de"].upsample_weight == 3.0
+    assert out["en"].corpus_share == 0.75
+    assert out["de"].corpus_share == 0.25
+
+
+def test_doc_chunking_overlap_window_math(spark):
+    """60 tokens, window 50 / stride 30: chunk 0 = tokens 0-49, chunk 1 =
+    tokens 30-59 (30 tokens, 20-token overlap with chunk 0)."""
+    from planet_dump_ng_spark.plans.extras_plans import doc_chunking_overlap
+
+    text = " ".join(f"t{i}" for i in range(60))
+    with tempfile.TemporaryDirectory() as d:
+        _write_docs(spark, d, [(1, text, "en")])
+        out = sorted(
+            doc_chunking_overlap(spark, d).collect(), key=lambda r: r.chunk_idx
+        )
+    assert [(r.chunk_idx, r.chunk_start, r.n_tokens) for r in out] == [
+        (0, 0, 50),
+        (1, 30, 30),
+    ]
+    c0, c1 = out[0].chunk_text.split(), out[1].chunk_text.split()
+    assert c0 == [f"t{i}" for i in range(50)]
+    assert c1 == [f"t{i}" for i in range(30, 60)]
+    assert c0[30:] == c1[:20]  # the 20-token overlap
+
+
+def test_token_drift_tv_hand_distributions(spark):
+    """Source A = 'x x y' (p = 2/3, 1/3), source B = 'x y y' (mirror).
+    TV(A vs rest=B) = 0.5 * (|2/3-1/3| + |1/3-2/3|) = 1/3; symmetric for
+    B.  Vocabulary grid covers both sources' words."""
+    from planet_dump_ng_spark.plans.extras_plans import token_drift_tv_by_source
+
+    rows = [(1, "x x y", "A", "en"), (2, "x y y", "B", "en")]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(
+            rows, "doc_id long, text string, source string, lang string"
+        ).withColumn("n_chars", F.length("text")).write.parquet(
+            os.path.join(d, "documents.parquet")
+        )
+        out = {r.source: r for r in token_drift_tv_by_source(spark, d).collect()}
+    assert set(out) == {"A", "B"}
+    for s in ("A", "B"):
+        r = out[s]
+        assert (r.n_tokens_src, r.n_tokens_rest, r.n_types_src) == (3, 3, 2)
+        assert r.tv_distance == pytest.approx(1 / 3, abs=1e-9)
+
+
+def test_token_drift_tv_disjoint_vocab_is_one(spark):
+    """Disjoint vocabularies ('x x' vs 'y'): TV must be exactly 1 — the
+    absent-word mass is folded analytically, so a wrong closed form would
+    show up here as < 1."""
+    from planet_dump_ng_spark.plans.extras_plans import token_drift_tv_by_source
+
+    rows = [(1, "x x", "A", "en"), (2, "y", "B", "en")]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(
+            rows, "doc_id long, text string, source string, lang string"
+        ).withColumn("n_chars", F.length("text")).write.parquet(
+            os.path.join(d, "documents.parquet")
+        )
+        out = {r.source: r for r in token_drift_tv_by_source(spark, d).collect()}
+    for s in ("A", "B"):
+        assert out[s].tv_distance == pytest.approx(1.0, abs=1e-9)
+        assert out[s].n_types_src == 1
 
 
 def test_temperature_resample_thresholds(spark):
@@ -109,3 +254,29 @@ def test_curate_lang_temperature_stage(spark, tmp_path):
     assert langs.count("de") == 10  # minority language fully kept
     assert 0 < langs.count("en") < 40  # majority thinned, not wiped
 
+
+def test_event_type_user_jaccard_hand_sets(spark):
+    """view users {1,2,3}, buy users {2,3,4}: |inter|=2, |union|=4."""
+    rows = [
+        (1, "2024-01-01 00:00:00", 1, "view", 1.0, "{}"),
+        (2, "2024-01-01 00:00:01", 2, "view", 1.0, "{}"),
+        (3, "2024-01-01 00:00:02", 3, "view", 1.0, "{}"),
+        (4, "2024-01-01 00:00:03", 2, "buy", 1.0, "{}"),
+        (5, "2024-01-01 00:00:04", 3, "buy", 1.0, "{}"),
+        (6, "2024-01-01 00:00:05", 4, "buy", 1.0, "{}"),
+        (7, "2024-01-01 00:00:06", 2, "buy", 2.0, "{}"),  # dup pair ignored
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts string, user_id long, event_type string,"
+            " value double, props string",
+        ).withColumn("ts", F.to_timestamp("ts")).write.parquet(
+            os.path.join(d, "events.parquet")
+        )
+        out = event_type_user_jaccard(spark, d).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r.type_a, r.type_b) == ("buy", "view")
+    assert (r.n_a, r.n_b, r.n_common) == (3, 3, 2)
+    assert r.user_jaccard == pytest.approx(0.5)

@@ -53,3 +53,4 @@ def test_pbf_semantic_parity(pbf_outputs, name, golden):
     assert mine["header"] == ref["header"]
     for kind in ("nodes", "ways", "relations"):
         assert sorted(mine[kind]) == sorted(ref[kind]), kind
+

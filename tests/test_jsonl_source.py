@@ -1,7 +1,12 @@
 """JSONL connector: clean/quarantine split, round-trip, and the
 no-silent-loss invariant (every input line lands on exactly one side)."""
 
-from planet_dump_ng_spark.sources import read_documents_jsonl
+from pyspark.sql import functions as F
+
+from planet_dump_ng_spark.sources import (
+    read_documents_jsonl,
+    write_documents_jsonl,
+)
 
 
 def _write_lines(path, lines):
@@ -35,11 +40,11 @@ def test_jsonl_clean_and_quarantine(spark, tmp_path):
 
 
 def test_jsonl_round_trip(spark, sf_dir, tmp_path):
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents").limit(100)
     out = str(tmp_path / "export")
-    docs.write.json(out)
+    write_documents_jsonl(docs, out)
     good, bad = read_documents_jsonl(spark, out)
     assert bad.count() == 0
     a = {r.doc_id: r.text for r in docs.collect()}

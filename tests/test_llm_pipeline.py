@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from planet_dump_ng_spark.llm_pipeline import curate
 from planet_dump_ng_spark.operators import dedup as dd
-from conftest import table
+from planet_dump_ng_spark.plans.registry import table
 
 
 def test_curate_end_to_end(spark, sf_dir, tmp_path):
@@ -205,9 +205,10 @@ def test_curate_semantic_stage_no_orphan_groups(spark, tmp_path):
 def test_curate_cli_jsonl_input(spark, sf_dir, tmp_path, capsys):
     """CLI ingests JSONL, quarantines the bad line, and still curates."""
     from planet_dump_ng_spark.llm_pipeline import main
+    from planet_dump_ng_spark.sources import write_documents_jsonl
 
     src = str(tmp_path / "docs_jsonl")
-    table(spark, sf_dir, "documents").limit(50).write.json(src)
+    write_documents_jsonl(table(spark, sf_dir, "documents").limit(50), src)
     # drop a corrupt line in as its own file (appending to a Spark part
     # file would invalidate its Hadoop .crc sidecar)
     import os
@@ -284,6 +285,99 @@ def test_curate_cli_export_jsonl(spark, sf_dir, tmp_path, capsys):
     assert len(rows) > 0
 
 
+def test_dataset_card_generation(spark, sf_dir, tmp_path):
+    """dataset_card: the card's numbers agree with direct queries over
+    the materialized dataset."""
+    from planet_dump_ng_spark.dataset_card import main
+    from planet_dump_ng_spark.llm_pipeline import curate
+    from planet_dump_ng_spark.operators.text import token_count
+
+    out = str(tmp_path / "ds")
+    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    curate(docs, out)
+    card_path = str(tmp_path / "CARD.md")
+    assert main(["--dataset", out, "--out", card_path]) == 0
+    card = open(card_path).read()
+
+    ds = spark.read.parquet(out)
+    n = ds.count()
+    toks = ds.agg(F.sum(token_count("text"))).collect()[0][0]
+    assert f"documents: **{n:,}**" in card
+    assert f"tokens (whitespace): **{toks:,}**" in card
+    for split in ("train", "val", "test"):
+        assert split in card
+    assert "## Sources" in card and "## Languages" in card
+    assert "PII pattern hits" in card
+    # the language table carries the tokenizer-fertility columns
+    assert "fertility" in card
+    from planet_dump_ng_spark.operators.text import bpe_ish_token_count
+    bpe = ds.agg(F.sum(bpe_ish_token_count("text"))).collect()[0][0]
+    assert f"{bpe:,}" not in ("",) and f"{bpe / toks:.3f}"[:3] in card
+
+
+def test_dataset_card_dsir_section(spark, tmp_path):
+    """A DSIR-gated dataset's card carries the governance section: per
+    source pooled mean bits under the FROZEN model plus the recorded
+    gate threshold; an ungated dataset's card has no such section."""
+    from planet_dump_ng_spark.dataset_card import (
+        card_stats,
+        dsir_stats,
+        render_card,
+        main,
+    )
+    from planet_dump_ng_spark.llm_pipeline import curate
+    from planet_dump_ng_spark.operators import dsir as ds
+
+    on = ("alpha beta gamma delta epsilon corpus training mixture "
+          "language model quality sample data target tokens")
+    off = ("zig zag zog quux blorp frobnicate wibble wobble flumox "
+           "grindle snark boojum mimsy borogove rath")
+    rows = [
+        (i, f"{on} doc number {'word%d ' % i * 3}", "en", "feedA", 1)
+        for i in range(30)
+    ] + [
+        (100 + j, f"{off} doc number {'term%d ' % j * 3}", "xx", "feedB", 1)
+        for j in range(12)
+    ]
+    docs = spark.createDataFrame(
+        rows,
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    out = str(tmp_path / "dsir_card_ds")
+    curate(docs, out, min_tokens=5, dsir_target="lang = 'en'")
+    card_path = str(tmp_path / "CARD_DSIR.md")
+    assert main(["--dataset", out, "--out", card_path]) == 0
+    card = open(card_path).read()
+    assert "## DSIR domain match" in card
+    assert "target `lang = 'en'`" in card
+    assert "Recorded gate: mean per-feature weight >= 0.0 bits" in card
+    # the per-source pooled means equal the operator path exactly
+    kept = spark.read.parquet(out)
+    w = ds.dsir_score_with_model(kept, out + "_dsir")
+    pooled = {
+        r["source"]: r
+        for r in w.join(kept.select("doc_id", "source"), "doc_id")
+        .groupBy("source")
+        .agg(
+            F.sum("logw_q20").cast("bigint").alias("q"),
+            F.sum("n_feats").cast("bigint").alias("f"),
+        )
+        .collect()
+    }
+    for src, r in pooled.items():
+        want = r["q"] / r["f"] / 1048576.0
+        assert f"| {src} |" in card and f"{want:+.4f}" in card
+
+    # ungated dataset: stats helper returns None, section absent
+    out2 = str(tmp_path / "plain_card_ds")
+    curate(docs, out2, min_tokens=5)
+    plain = spark.read.parquet(out2)
+    assert dsir_stats(plain, out2) is None
+    stats = card_stats(plain)
+    stats["dsir"] = None
+    assert "DSIR" not in render_card(stats, out2)
+
+
 def test_curate_leakage_free_split(spark, sf_dir, tmp_path):
     """leakage_free=True: no near-dup pair (at split_jaccard) crosses a
     split boundary in the materialized dataset, and the component helper
@@ -343,10 +437,11 @@ def test_curate_leakage_free_split(spark, sf_dir, tmp_path):
 
 def test_curate_builds_bm25_index(spark, sf_dir, tmp_path):
     """--build-bm25-index ships the curated train split searchable: the
-    index header counts exactly the train docs, and its postings and
-    document lengths equal the index built directly over the same split."""
+    index header counts exactly the train docs, and querying it equals
+    direct bm25_scores over the same split."""
     from planet_dump_ng_spark.llm_pipeline import main
     from planet_dump_ng_spark.operators import text_index as ti
+    from planet_dump_ng_spark.operators.text import bm25_scores
 
     src = str(tmp_path / "docs_src")
     table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).write.parquet(src)
@@ -358,12 +453,15 @@ def test_curate_builds_bm25_index(spark, sf_dir, tmp_path):
     train = spark.read.parquet(out).filter(F.col("split") == "train")
     assert ti.read_bm25_meta(idx)["n_docs"] == train.count() > 0
 
-    postings, doclen = ti.build_bm25_index(train)
-    cols = ("doc_id", "w", "tf", "wshard")
-    served = spark.read.parquet(f"{idx}/postings").select(*cols).collect()
-    assert sorted(map(tuple, served)) == sorted(
-        map(tuple, postings.select(*cols).collect())
-    )
-    assert sorted(map(tuple, spark.read.parquet(f"{idx}/doclen").collect())) == sorted(
-        map(tuple, doclen.collect())
-    )
+    terms = ["vector", "hash"]
+    lp, ld, m = ti.read_bm25_index(spark, idx)
+    served = {
+        r.doc_id: r.score_q
+        for r in ti.bm25_index_query(
+            spark, lp, ld, terms, n_shards=m["n_shards"]
+        ).collect()
+    }
+    direct = {
+        r.doc_id: r.score_q for r in bm25_scores(train, terms).collect()
+    }
+    assert served == direct and len(served) > 0

@@ -9,8 +9,13 @@
    the behavior tests re-running that path).
 2. The LM-surprisal quality gate: frozen bigram-LM artifact lifecycle,
    curate gate + increment inheritance/refusals, and the backoff
-   scorer pinned against a Python reference of its three branches.
-3. canonical_url rule-by-rule unit pins.
+   scorer pinned against the held-out registry oracle's semantics.
+3. Winnowing substring fingerprints: the >= w+k-1 detection GUARANTEE
+   at every offset (where the strided control provably misses).
+4. dHash: real PNG decode pinned against an independent pixel-formula
+   reference, filter/color-type coverage, corrupt-payload stub
+   fallback, and the banded join's pigeonhole recall.
+5. canonical_url rule-by-rule unit pins.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from planet_dump_ng_spark.llm_pipeline import (
 )
 from planet_dump_ng_spark.operators import dedup as dd
 from planet_dump_ng_spark.operators import lm
+from planet_dump_ng_spark.operators import multimodal as mm
 from planet_dump_ng_spark.operators import text as tx
 
 
@@ -150,10 +156,12 @@ def test_bigram_lm_artifact_roundtrip(docs, tmp_path):
 
 def test_frozen_scorer_matches_heldout_oracle_semantics(spark, docs, tmp_path):
     """score_with_bigram_lm on a held-out batch under a model trained on
-    the complement == the same backoff computed in Python from the
-    training bigrams — pinning all three backoff branches of the
-    frozen-model serving path."""
-    from collections import Counter
+    the complement == the heldout_bigram_surprisal registry plan (which
+    is hash-oracled against DuckDB) — pinning all three backoff
+    branches of the frozen-model serving path."""
+    from planet_dump_ng_spark.plans.extras_plans import (
+        heldout_bigram_surprisal,
+    )
 
     d = str(tmp_path / "lm")
     train = docs.filter(F.col("doc_id") % 10 != 0)
@@ -165,21 +173,10 @@ def test_frozen_scorer_matches_heldout_oracle_semantics(spark, docs, tmp_path):
         )
         for r in lm.score_with_bigram_lm(held, d).collect()
     }
-    c = Counter((r.p, r.w) for r in lm.bigram_instances(train).collect())
-    cp = Counter()
-    for (p, _), n in c.items():
-        cp[p] += n
-    nb = sum(c.values())
-    ref: dict = {}
-    for r in lm.bigram_instances(held).collect():
-        if (r.p, r.w) in c:
-            bits, oov = cp[r.p].bit_length() - c[(r.p, r.w)].bit_length(), 0
-        elif r.p in cp:
-            bits, oov = cp[r.p].bit_length() + 1, 1
-        else:
-            bits, oov = nb.bit_length() + 1, 1
-        n, o, t = ref.get(r.id, (0, 0, 0))
-        ref[r.id] = (n + 1, o + oov, t + bits)
+    ref = {
+        r["doc_id"]: (r["n_bigrams"], r["n_oov_bigrams"], r["total_bits"])
+        for r in heldout_bigram_surprisal(spark, SF_DIR).collect()
+    }
     assert mine == ref and len(mine) > 0
     # the fixture's held-out slice may contain no OOV bigrams, so force
     # both backoff branches with a synthetic batch and pin their exact
@@ -231,7 +228,224 @@ def test_increment_surprisal_without_record_refuses(docs, tmp_path):
         curate_increment(batch, out, min_tokens=5, max_surprisal_bits=4.6)
 
 
-# -- 3. canonical_url ----------------------------------------------------------
+# -- 3. winnowing --------------------------------------------------------------
+
+
+def _dup_docs(spark, offset: int, dup_len: int = 50):
+    """Two otherwise-distinct docs sharing one dup_len-char substring,
+    planted at character ``offset`` in doc B."""
+    import random
+
+    rnd = random.Random(1234 + offset)
+    alpha = "abcdefghijklmnopqrstuvwxyz "
+
+    def rand_text(n, seed):
+        r = random.Random(seed)
+        return "".join(r.choice(alpha) for _ in range(n))
+
+    shared = "".join(rnd.choice(alpha) for _ in range(dup_len))
+    a = rand_text(120, 1) + shared + rand_text(120, 2)
+    b = rand_text(offset, 3) + shared + rand_text(150, 4)
+    return spark.createDataFrame(
+        [(1, a), (2, b)], "doc_id long, text string"
+    )
+
+
+def test_winnow_detects_every_offset(spark):
+    """The Schleimer guarantee: ANY shared substring >= w+k-1 = 50
+    chars is detected regardless of alignment."""
+    for offset in (0, 1, 7, 13, 29, 54, 101):
+        d = _dup_docs(spark, offset)
+        out = {
+            r["doc_id"]: r["n_dup_fingerprints"]
+            for r in dd.substring_duplication(d, mode="winnow").collect()
+        }
+        assert out[1] > 0 and out[2] > 0, f"missed at offset {offset}"
+
+
+def test_strided_mode_misses_where_winnow_cannot(spark):
+    """The measured control: stride-10 sampling misses a 50-char dup at
+    SOME offset (its one-window miss bound), which the guarantee above
+    proves winnowing never does."""
+    missed = 0
+    for offset in range(0, 20):
+        d = _dup_docs(spark, offset)
+        out = {
+            r["doc_id"]: r["n_dup_fingerprints"]
+            for r in dd.substring_duplication(d, mode="strided").collect()
+        }
+        if out.get(2, 0) == 0 or out.get(1, 0) == 0:
+            missed += 1
+    assert missed > 0
+
+
+def test_winnow_no_false_positives_on_disjoint_docs(spark):
+    d = spark.createDataFrame(
+        [
+            (1, "completely unrelated first document text " * 5),
+            (2, "second body sharing nothing with the other one " * 5),
+        ],
+        "doc_id long, text string",
+    )
+    out = dd.substring_duplication(d, mode="winnow").collect()
+    assert all(r["n_dup_fingerprints"] == 0 for r in out)
+
+
+# -- 4. dHash ------------------------------------------------------------------
+
+
+def _reference_dhash(variant: int, width: int = 24, height: int = 16) -> int:
+    """Independent expected dHash from synth_png's PIXEL FORMULA —
+    never touching the PNG bytes or the decoder, so a bug in either
+    the encoder or the decode path cannot cancel out."""
+    lum = [
+        [
+            (
+                299 * ((16 * x + 11 * variant) % 256)
+                + 587 * ((8 * y + 23 * variant) % 256)
+                + 114 * ((x * y + 5 * variant) % 256)
+            )
+            // 1000
+            for x in range(width)
+        ]
+        for y in range(height)
+    ]
+    grid = []
+    for r in range(8):
+        y0, y1 = r * height // 8, (r + 1) * height // 8
+        row = []
+        for c in range(9):
+            x0, x1 = c * width // 9, (c + 1) * width // 9
+            tot = sum(lum[y][x] for y in range(y0, y1) for x in range(x0, x1))
+            row.append(tot // ((y1 - y0) * (x1 - x0)))
+        grid.append(row)
+    out = 0
+    for r in range(8):
+        for c in range(8):
+            out = (out << 1) | (1 if grid[r][c] > grid[r][c + 1] else 0)
+    return out - (1 << 64) if out >= (1 << 63) else out
+
+
+def test_png_dhash_matches_pixel_formula():
+    for v in range(8):
+        assert mm.png_dhash(mm.synth_png(v)) == _reference_dhash(v)
+
+
+def test_png_decode_filters_and_color_types():
+    """Hand-encode the same pixels under every filter type plus a
+    grayscale variant; the decoder must reconstruct identical luma."""
+    import struct
+    import zlib
+
+    width, height = 12, 10
+    px = [
+        [((7 * x + 3 * y) % 256, (5 * x * y) % 256, (x + 13 * y) % 256)
+         for x in range(width)]
+        for y in range(height)
+    ]
+
+    def chunk(typ, body):
+        return (
+            struct.pack(">I", len(body)) + typ + body
+            + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF)
+        )
+
+    def encode(ftype: int) -> bytes:
+        raw = bytearray()
+        prev = bytearray(width * 3)
+        for y in range(height):
+            line = bytearray()
+            for x in range(width):
+                line += bytes(px[y][x])
+            raw.append(ftype)
+            if ftype == 0:
+                raw += line
+            elif ftype == 1:  # Sub
+                for i in range(len(line)):
+                    a = line[i - 3] if i >= 3 else 0
+                    raw.append((line[i] - a) & 0xFF)
+            elif ftype == 2:  # Up
+                for i in range(len(line)):
+                    raw.append((line[i] - prev[i]) & 0xFF)
+            elif ftype == 3:  # Average
+                for i in range(len(line)):
+                    a = line[i - 3] if i >= 3 else 0
+                    raw.append((line[i] - ((a + prev[i]) >> 1)) & 0xFF)
+            else:  # Paeth
+                for i in range(len(line)):
+                    a = line[i - 3] if i >= 3 else 0
+                    b = prev[i]
+                    c = prev[i - 3] if i >= 3 else 0
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = (
+                        a if (pa <= pb and pa <= pc)
+                        else (b if pb <= pc else c)
+                    )
+                    raw.append((line[i] - pred) & 0xFF)
+            prev = line
+        ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)
+        return (
+            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + chunk(b"IEND", b"")
+        )
+
+    expected = mm._png_luma_rows(encode(0))
+    assert expected is not None
+    for ftype in (1, 2, 3, 4):
+        got = mm._png_luma_rows(encode(ftype))
+        assert got == expected, f"filter {ftype} mismatch"
+    # grayscale: same luma directly
+    raw = bytearray()
+    for y in range(height):
+        raw.append(0)
+        raw += bytes(expected[2][y])
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    gray = (
+        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + chunk(b"IEND", b"")
+    )
+    ggot = mm._png_luma_rows(gray)
+    assert ggot is not None and ggot[2] == expected[2]
+
+
+def test_png_dhash_corrupt_falls_back_to_stub():
+    good = mm.synth_png(0)
+    assert mm.png_dhash(good) is not None
+    assert mm.png_dhash(b"not a png at all") is None
+    assert mm.png_dhash(good[:40]) is None  # truncated
+    # interlaced flag -> unsupported -> None (not a crash)
+    bad = bytearray(good)
+    bad[28] = 1  # IHDR interlace byte
+    assert mm.png_dhash(bytes(bad)) is None
+    assert isinstance(mm._fake_dhash(b"abc"), int)
+
+
+def test_dhash_pairs_pigeonhole_recall(spark):
+    """Every pair within Hamming 3 MUST be found (<=3 flipped bits
+    leave >=1 of the 4 16-bit bands intact); a far pair must not."""
+    base = 0x123456789ABCDEF0
+    flips = base ^ 0b1011  # 3 bits, all in band 0
+    far = base ^ ((1 << 1) | (1 << 17) | (1 << 33) | (1 << 49))  # 1/band
+    to_signed = lambda u: u - (1 << 64) if u >= (1 << 63) else u  # noqa: E731
+    df = spark.createDataFrame(
+        [
+            (1, to_signed(base)),
+            (2, to_signed(flips)),
+            (3, to_signed(far)),
+        ],
+        "doc_id long, dhash long",
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in mm.dhash_pairs(df, max_hamming=3).collect()
+    }
+    assert got == {(1, 2): 3}
+
+
+# -- 5. canonical_url ----------------------------------------------------------
 
 
 @pytest.mark.parametrize(
@@ -397,6 +611,48 @@ def test_increment_inert_split_jaccard_not_recorded(docs, tmp_path):
     curate_increment(batch, out, split_jaccard=0.3)  # no spurious refusal
 
 
+def test_curate_ingest_stream_inherits_surprisal_gate(spark, docs, tmp_path):
+    """The streaming ingest twin under the surprisal gate: each
+    micro-batch's curate_increment inherits the recorded ceiling and
+    scores under the FROZEN bigram LM, and the streamed dataset equals
+    the sequential-batch reference (the round-9 exact-family pin's
+    shape, for the round-10 policy)."""
+    from planet_dump_ng_spark.streaming import jobs
+
+    base = docs.filter(F.col("doc_id") % 3 == 0)
+    b1 = docs.filter(F.col("doc_id") % 3 == 1)
+    b2 = docs.filter(F.col("doc_id") % 3 == 2)
+    cols = ["doc_id", "source", "lang", "text", "n_chars"]
+
+    ref = str(tmp_path / "seq_ds")
+    curate(base, ref, min_tokens=5, max_surprisal_bits=4.7)
+    curate_increment(b1.select(*cols), ref, min_tokens=5)
+    curate_increment(b2.select(*cols), ref, min_tokens=5)
+    want = {
+        (r.doc_id, r.split)
+        for r in spark.read.parquet(ref).select("doc_id", "split").collect()
+    }
+
+    out = str(tmp_path / "stream_ds")
+    curate(base, out, min_tokens=5, max_surprisal_bits=4.7)
+    bus = str(tmp_path / "bus")
+    b1.select(*cols).coalesce(1).write.mode("append").parquet(bus)
+    b2.select(*cols).coalesce(1).write.mode("append").parquet(bus)
+    stream = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    reports = jobs.curate_ingest_stream(
+        stream, out, str(tmp_path / "ckpt"), min_tokens=5
+    )
+    got = {
+        (r.doc_id, r.split)
+        for r in spark.read.parquet(out).select("doc_id", "split").collect()
+    }
+    assert got == want
+    # every micro-batch actually ran the gate
+    assert all(
+        "surprisal_gate" in dict(rep.stages) for _bid, rep in reports
+    )
+
+
 def test_curate_exact_leakage_free_still_green(docs, tmp_path):
     """Behavior pin for the single-execution checkpoint cleanup: the
     exact+leakage-free curation still produces a split-consistent
@@ -410,6 +666,43 @@ def test_curate_exact_leakage_free_still_green(docs, tmp_path):
     assert os.path.exists(f"{_dedup_artifact_dir(out)}/_synced")
     meta = json.load(open(f"{_dedup_artifact_dir(out)}/meta.json"))
     assert meta["near_dedup"] == "exact" and meta["split_jaccard"] == 0.3
+
+
+# -- lm_cli --------------------------------------------------------------------
+
+
+def test_lm_cli_train_score_gate(spark, docs, tmp_path, capsys):
+    """The standalone lifecycle CLI over the bigram-LM artifact:
+    train persists the count tables + header, score serves the frozen
+    model, gate keeps exactly the docs the curation stage would."""
+    from planet_dump_ng_spark import lm_cli
+
+    src = str(tmp_path / "docs.parquet")
+    docs.write.parquet(src)
+    d = str(tmp_path / "lm")
+    assert lm_cli.main(["train", "--input", src, "--model-dir", d]) == 0
+    assert os.path.exists(f"{d}/meta.json")
+    out = str(tmp_path / "scores.parquet")
+    assert lm_cli.main(
+        ["score", "--input", src, "--model-dir", d, "--out", out]
+    ) == 0
+    scored = spark.read.parquet(out)
+    assert scored.count() > 0 and "mean_bits" in scored.columns
+    kept_out = str(tmp_path / "kept.parquet")
+    assert lm_cli.main(
+        ["gate", "--input", src, "--model-dir", d,
+         "--max-bits", "4.6", "--out", kept_out]
+    ) == 0
+    kept = spark.read.parquet(kept_out)
+    want = {
+        r["doc_id"]
+        for r in lm.score_with_bigram_lm(docs, d)
+        .filter(F.col("mean_bits") <= 4.6)
+        .select("doc_id")
+        .collect()
+    }
+    assert {r["doc_id"] for r in kept.select("doc_id").collect()} == want
+    assert 0 < len(want) < docs.count()  # the ceiling discriminates
 
 
 def test_policies_compose_exact_surprisal_url(spark, tmp_path):

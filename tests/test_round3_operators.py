@@ -1,4 +1,30 @@
-"""Unit test for xxhash split stability (sampling.xxhash_split)."""
+"""Unit tests for the round-3 operators: int8 quantization edges, xxhash
+split stability, PageRank against hand-computed ranks, chunk coverage."""
+
+import pytest
+from pyspark.sql import functions as F
+
+
+def test_quantize_int8_edges(spark):
+    from planet_dump_ng_spark.operators.similarity import quantize_int8
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, -2.0, 0.5]),
+            (2, [0.0, 0.0]),          # all-zero: scale 0, no NaN
+            (3, [-3.0]),              # negative max-abs
+        ],
+        "id long, v array<float>",
+    )
+    rows = {r.id: r for r in df.select("id", *quantize_int8(F.col("v"))).collect()}
+    assert rows[1].scale == 2.0 and rows[1].q == [63, -127, 31]
+    assert rows[2].scale == 0.0 and rows[2].q == [0, 0]
+    assert rows[3].scale == 3.0 and rows[3].q == [-127]
+    # round-trip error bound: |x - q*scale/127| <= scale/127
+    for r in df.collect():
+        q = rows[r.id]
+        for x, qi in zip(r.v, q.q):
+            assert abs(x - qi * q.scale / 127) <= q.scale / 127 + 1e-9
 
 
 def test_xxhash_split_superset_stability(spark):
@@ -21,3 +47,192 @@ def test_xxhash_split_superset_stability(spark):
     assert sum(1 for s in b.values() if s == "train") > sum(
         1 for s in a.values() if s == "train"
     )
+
+
+def test_pagerank_matches_hand_computation(spark):
+    """3 rounds on a 3-node path graph a-b-c (symmetrized), checked against
+    the same truncated-micro-unit recurrence computed in Python."""
+    from planet_dump_ng_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 0), (1, 2), (2, 1)], "src long, dst long"
+    )
+    got = {r.id: r.rank for r in pagerank(edges, n_rounds=3).collect()}
+
+    deg = {0: 1, 1: 2, 2: 1}
+    ranks = {0: 1.0, 1: 1.0, 2: 1.0}
+    for _ in range(3):
+        inflow = {0: 0, 1: 0, 2: 0}
+        for s, d in [(0, 1), (1, 0), (1, 2), (2, 1)]:
+            inflow[d] += int(ranks[s] / deg[s] * 1e6)  # trunc to micro-units
+        ranks = {
+            n: (1.0 - 0.85) + 0.85 * (float(inflow[n]) / 1e6) for n in deg
+        }
+    assert got == pytest.approx(ranks, abs=0.0)  # bit-identical
+    # center of the path outranks the leaves
+    assert got[1] > got[0] == got[2]
+
+
+def test_doc_chunking_covers_all_tokens(spark, sf_dir):
+    """Chunk token counts per doc must sum to the doc's token count, chunk
+    indexes are contiguous from 0, and only the last chunk is ragged."""
+    from planet_dump_ng_spark import plans
+
+    plans.load_all()
+    chunks = plans.QUERIES["doc_chunking"].spark(spark, sf_dir)
+    agg = {
+        r.doc_id: (r.total, r.n_chunks, r.max_idx)
+        for r in chunks.groupBy("doc_id")
+        .agg(
+            F.sum("n_tokens").alias("total"),
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.max("chunk_idx").alias("max_idx"),
+        )
+        .collect()
+    }
+    from planet_dump_ng_spark.operators.text import tokens
+    from planet_dump_ng_spark.plans.registry import table
+
+    docs = {
+        r.doc_id: r.n
+        for r in table(spark, sf_dir, "documents")
+        .select("doc_id", F.size(tokens("text")).alias("n"))
+        .collect()
+    }
+    for doc_id, n in docs.items():
+        if n == 0:
+            assert doc_id not in agg
+            continue
+        total, n_chunks, max_idx = agg[doc_id]
+        assert total == n
+        assert max_idx == n_chunks - 1
+        assert n_chunks == (n + 49) // 50
+    # short chunks only in last position
+    last = chunks.groupBy("doc_id").agg(F.max("chunk_idx").alias("mx"))
+    bad = (
+        chunks.join(last, "doc_id")
+        .filter((F.col("n_tokens") < 50) & (F.col("chunk_idx") != F.col("mx")))
+        .count()
+    )
+    assert bad == 0
+
+
+def test_triangle_count_known_graph(spark):
+    from planet_dump_ng_spark.operators.graph import triangle_count
+
+    # K4 on {1,2,3,4} (4 triangles) + pendant edge 4-5 (0 more) + a
+    # disjoint triangle {6,7,8} (1 more) = 5 triangles total.
+    edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    edges += [(4, 5), (6, 7), (6, 8), (7, 8)]
+    df = spark.createDataFrame(edges, "s1 long, s2 long")
+    assert triangle_count(df).first().n_triangles == 5
+
+
+def test_triangle_count_triangle_free(spark):
+    from planet_dump_ng_spark.operators.graph import triangle_count
+
+    # a 4-cycle has wedges but no closing edge
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (1, 4)], "s1 long, s2 long")
+    assert triangle_count(df).first().n_triangles == 0
+
+
+def test_gram_pca_project_matches_numpy(spark):
+    import numpy as np
+
+    from planet_dump_ng_spark.operators import linalg
+
+    rng = np.random.default_rng(7)
+    x32 = rng.normal(size=(300, 8)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x32)],
+        "vec_id long, embedding array<float>",
+    ).repartition(5)
+
+    gram = linalg.gram_matrix(df, "embedding", 8)
+    # quantized gram == numpy's row-wise truncation, any partitioning
+    x = x32.astype(np.float64)
+    expect_g = np.trunc(
+        np.einsum("ni,nj->nij", x, x) * linalg.GRAM_SCALE
+    ).astype(np.int64).sum(axis=0)
+    got_g = np.zeros((8, 8), dtype=np.int64)
+    for r in gram.collect():
+        got_g[r.i, r.j] = r.dot_q
+    assert (got_g == expect_g).all()
+
+    comps = linalg.pca_components(gram, dim=8, k=3)
+    vals, vecs = np.linalg.eigh(expect_g / linalg.GRAM_SCALE)
+    order = np.argsort(vals)[::-1][:3]
+    expect_c = vecs[:, order].T
+    for c in expect_c:
+        if c[np.argmax(np.abs(c))] < 0:
+            c *= -1.0
+    assert np.allclose(comps, expect_c, atol=1e-9)
+
+    proj = linalg.project(df, "embedding", comps).orderBy("vec_id").collect()
+    expect_p = x @ comps.T
+    got_p = np.array([r.proj for r in proj])
+    assert np.allclose(got_p, expect_p, atol=1e-9)
+
+
+def test_compact_dir_preserves_rows(spark, sf_dir, tmp_path):
+    from planet_dump_ng_spark.operators.layout import compact_dir
+
+    src = str(tmp_path / "small_files")
+    dst = str(tmp_path / "compacted")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders.repartition(40).write.parquet(src)  # simulate micro-batch litter
+
+    import glob
+
+    assert len(glob.glob(f"{src}/*.parquet")) == 40
+    n = compact_dir(spark, src, dst, target_file_bytes=64 * 1024 * 1024)
+    assert n < 40
+    a = {tuple(r) for r in spark.read.parquet(src).collect()}
+    b = {tuple(r) for r in spark.read.parquet(dst).collect()}
+    assert a == b
+
+
+def test_label_propagation_triangle_with_tail(spark):
+    """Triangle 1-2-3 with tail 3-4: synchronous min-tie LPA converges to
+    one community labeled by the smallest id within 3 rounds (hand-run:
+    r1 = {1:2, 2:1, 3:1, 4:3}, r2 = all 1 except n2 tie->1, r3 = all 1)."""
+    from pyspark.sql import functions as F
+
+    from planet_dump_ng_spark.operators.graph import label_propagation
+
+    fwd = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (3, 4)], "src bigint, dst bigint"
+    )
+    edges = fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    got = {
+        r["id"]: r["community"]
+        for r in label_propagation(edges, n_rounds=3).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def test_kcore_peels_tail_and_keeps_clique(spark):
+    """K4 clique (1-2-3-4) with a pendant chain 4-5-6: the 3-core is
+    exactly the clique (every clique node keeps degree 3 once the chain
+    peels; node 5 survives round 1 with degree 2 < 3 and is dropped, which
+    cannot resurrect clique degrees since chain nodes never feed the
+    clique).  Also checks convergence: rounds 2 and 3 are no-ops, so the
+    fixed-round result equals the true k-core here."""
+    from pyspark.sql import functions as F
+
+    from planet_dump_ng_spark.operators.graph import kcore
+
+    und = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
+    fwd = spark.createDataFrame(und, "src bigint, dst bigint")
+    edges = fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    got = {r["id"]: r["degree"] for r in kcore(edges, k=3, n_rounds=3).collect()}
+    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
+    # k=2: the chain's interior survives? 5 has degree 2 (4,6) but 6 has
+    # degree 1 and peels, dropping 5 to 1 in round 2, dropping 5 in round
+    # 3 -> 2-core is the clique alone (4's chain edge gone).
+    got2 = {r["id"]: r["degree"] for r in kcore(edges, k=2, n_rounds=3).collect()}
+    assert got2 == {1: 3, 2: 3, 3: 3, 4: 3}

@@ -42,7 +42,7 @@ def test_extract_tables_parallel_matches_split(tmp_path):
 
 def _fold_ref(vals):
     """Reference strict left-to-right fold with a +0.0 seed — the exact
-    semantics of ivf._dot_exact."""
+    semantics of similarity._dot_exact / DuckDB list_reduce."""
     acc = 0.0
     for v in vals:
         acc = acc + v
@@ -110,6 +110,37 @@ def test_semantic_dedup_auto_path_keeps_lowest_id(spark):
     assert out[1] is True
     assert out[4] is False and out[9] is False
     assert out[2] is True and out[3] is True
+
+
+def test_ivfpq_codes_scan_dynamic_partition_pruning(spark, tmp_path):
+    """The persisted codes table is partitioned by coarse cell, and the
+    ADC query's first join (broadcast LUT keyed by probed cells) must
+    plan a dynamic-partition-pruning subquery on that scan — the IVF
+    'scan n_probe/n_cells of the index' promise at the storage layer."""
+    from pyspark.sql import functions as F
+
+    from planet_dump_ng_spark.operators.ivf import (
+        ivfpq_build,
+        ivfpq_query,
+        read_ivfpq_index,
+        write_ivfpq_index,
+    )
+    from planet_dump_ng_spark.plans.registry import table
+
+    emb = table(spark, "/root/testdata/sf0.01", "embeddings")
+    coarse, books, codes = ivfpq_build(emb, dim=64)
+    idx = str(tmp_path / "idx")
+    write_ivfpq_index(coarse, books, codes, idx)
+    codes.unpersist()
+    c2, b2, k2 = read_ivfpq_index(spark, idx)
+    q = emb.filter(F.col("vec_id") % 100 == 0)
+    plan = (
+        ivfpq_query(c2, b2, k2, q, dim=64)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "dynamicpruning" in plan.lower()
 
 
 def test_vectorized_leb128_bit_identical_to_scalar():

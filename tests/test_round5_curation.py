@@ -1,12 +1,14 @@
 """Round-5 curation extras: C4-style span dedup, quality-weighted
-sampling, token-budget selection, and incremental curation."""
+sampling, and the exact re-rank stage over the IVFPQ shortlist."""
 
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 
 from planet_dump_ng_spark.operators.dedup import span_dedup, span_occurrences
 from planet_dump_ng_spark.operators.sampling import quality_weighted_sample
+from planet_dump_ng_spark.operators.similarity import cosine_topk, rerank_exact
 
 
 def _md5(s: str) -> str:
@@ -97,6 +99,47 @@ def test_quality_weighted_sample_superset_stable(spark):
     assert base <= wider  # raising quotas only ever ADDS rows
 
 
+def test_rerank_exact_restores_exact_order(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    exact = cosine_topk(emb, queries, k=5)
+    # re-ranking the exact top-25 must reproduce the exact top-5 rows
+    cand = cosine_topk(emb, queries, k=25).select("query_id", "neighbor_id")
+    rr = rerank_exact(cand, emb, queries, k=5)
+    a = {(r.query_id, r.neighbor_id, r.rank) for r in exact.collect()}
+    b = {(r.query_id, r.neighbor_id, r.rank) for r in rr.collect()}
+    assert a == b and len(a) > 0
+
+
+def test_rerank_subset_of_candidates(spark, sf_dir):
+    from planet_dump_ng_spark.operators.ivf import ivfpq_adc_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    cand = ivfpq_adc_topk(emb, queries, dim=64, k=25)
+    rr = rerank_exact(cand, emb, queries, k=5)
+    cset = {(r.query_id, r.neighbor_id) for r in cand.collect()}
+    rset = {(r.query_id, r.neighbor_id) for r in rr.collect()}
+    assert rset <= cset and len(rset) > 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "span_dedup_c4",
+        "quality_weighted_sample",
+        "ann_ivfpq_rerank_topk",
+        "ann_ivfpq_rerank_recall",
+    ],
+)
+def test_new_queries_run(spark, sf_dir, name):
+    from planet_dump_ng_spark import plans
+
+    plans.load_all()
+    df = plans.QUERIES[name].spark(spark, sf_dir)
+    assert df.count() >= 0
+
+
 def test_span_dedup_rewrite_fixture(spark):
     from planet_dump_ng_spark.operators.dedup import span_dedup_rewrite
 
@@ -117,7 +160,7 @@ def test_span_dedup_rewrite_fixture(spark):
 
 def test_curate_span_dedup_stage(spark, sf_dir, tmp_path):
     from planet_dump_ng_spark.llm_pipeline import curate
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents")
     out = str(tmp_path / "curated_span")
@@ -130,10 +173,14 @@ def test_curate_span_dedup_stage(spark, sf_dir, tmp_path):
 
 
 def test_token_budget_select_greedy_exact(spark, sf_dir):
-    from planet_dump_ng_spark.operators.sampling import select_token_budget
+    from planet_dump_ng_spark import plans
+
+    plans.load_all()
+    out = plans.QUERIES["token_budget_select"].spark(spark, sf_dir)
+    rows = sorted(out.collect(), key=lambda r: (-r.qbin, r.doc_id))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     from planet_dump_ng_spark.operators.text import linear_quality_score, token_count
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     scored = linear_quality_score(docs).select(
         "doc_id",
         token_count("text").alias("n_tokens"),
@@ -141,8 +188,6 @@ def test_token_budget_select_greedy_exact(spark, sf_dir):
     )
     ref = sorted(scored.collect(), key=lambda r: (-r.qbin, r.doc_id))
     budget = sum(r.n_tokens for r in ref) // 2
-    out = select_token_budget(scored, "qbin", "n_tokens", "doc_id", budget)
-    rows = sorted(out.collect(), key=lambda r: (-r.qbin, r.doc_id))
     # driver-side replay of the greedy: prefix of the (qbin desc, id)
     # order whose cumulative mass fits the budget
     cum, expect = 0, []
@@ -155,10 +200,68 @@ def test_token_budget_select_greedy_exact(spark, sf_dir):
     assert rows and rows[-1].cum_tokens <= budget
 
 
+def test_bloom_screen_no_false_negatives(spark, sf_dir):
+    from planet_dump_ng_spark import plans
+    from planet_dump_ng_spark.operators.dedup import containment_pairs
+
+    plans.load_all()
+    out = plans.QUERIES["contamination_bloom_screen"].spark(spark, sf_dir)
+    flagged = {r.doc_id for r in out.collect()}
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    bench = docs.filter(F.col("doc_id") % 20 == 0)
+    probe = docs.filter(F.col("doc_id") % 20 != 0)
+    # every doc sharing ANY shingle with the bench set must be flagged
+    truly = {
+        r.train_id
+        for r in containment_pairs(
+            probe, bench, k=3, threshold=1e-9
+        ).collect()
+    }
+    assert truly <= flagged
+
+
+def test_span_novelty_stream_matches_batch(spark, sf_dir, tmp_path):
+    """The streamed novel-span set equals the batch anti-join for the
+    same new-batch/corpus split, under any micro-batch slicing."""
+    from planet_dump_ng_spark.operators.dedup import span_occurrences
+    from planet_dump_ng_spark.streaming import jobs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    new = docs.filter(F.col("doc_id") % 10 == 0)
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    spans = jobs.corpus_span_hashes(corpus).persist()
+    spans.count()
+
+    docs_dir = str(tmp_path / "span_docs_stream")
+    docs.repartition(4).write.mode("overwrite").parquet(docs_dir)
+    stream = jobs.read_documents_stream(spark, docs_dir, max_files_per_trigger=2)
+    jobs.run_to_memory(
+        jobs.span_novelty_stream(
+            stream.filter(F.col("doc_id") % 10 == 0), spans
+        ),
+        "spannovel_mem",
+        output_mode="append",
+    )
+    got = {
+        (r.doc_id, r.span_idx)
+        for r in spark.table("spannovel_mem").collect()
+    }
+    expected = {
+        (r.doc_id, r.span_idx)
+        for r in span_occurrences(new)
+        .join(spans, "h", "left_anti")
+        .collect()
+    }
+    assert got == expected and expected
+    # novel mass is a strict subset of the batch's span mass
+    assert len(expected) < span_occurrences(new).count()
+    spans.unpersist()
+
+
 def test_curate_quality_temper_and_token_budget(spark, sf_dir, tmp_path):
     from planet_dump_ng_spark.llm_pipeline import curate
     from planet_dump_ng_spark.operators.text import token_count
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents")
     out = str(tmp_path / "curated_budget")
@@ -249,7 +352,7 @@ def test_curate_increment_end_to_end(spark, sf_dir, tmp_path):
         ngram_jaccard_pairs,
     )
     from planet_dump_ng_spark.operators.sampling import xxhash_split
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 4 != 0)
@@ -300,7 +403,7 @@ def test_curate_increment_end_to_end(spark, sf_dir, tmp_path):
 def test_curate_increment_cli(spark, sf_dir, tmp_path, capsys):
     from planet_dump_ng_spark import llm_pipeline
     from planet_dump_ng_spark.llm_pipeline import curate
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents")
     base_path = str(tmp_path / "base.parquet")
@@ -328,7 +431,7 @@ def test_dedup_artifact_tracks_dataset(spark, sf_dir, tmp_path):
         curate,
         curate_increment,
     )
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents")
     out = str(tmp_path / "art_dataset")
@@ -364,7 +467,7 @@ def test_curate_increment_leakage_free(spark, sf_dir, tmp_path):
         minhash_lsh_join,
         ngram_jaccard_pairs,
     )
-    from conftest import table
+    from planet_dump_ng_spark.plans.registry import table
 
     docs = table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 4 != 0)

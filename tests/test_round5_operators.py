@@ -1,5 +1,110 @@
-"""Unit test for the round-5 linear quality classifier, pinned on
+"""Unit tests for the round-5 operators: asymmetric containment,
+char-level substring duplication, HLL register mergeability, the linear
+quality classifier, and the composed IVFPQ index — each pinned on
 crafted inputs where the expected answer is hand-computable."""
+
+from pyspark.sql import functions as F
+
+
+def test_superset_containment_detects_quote_expansion(spark):
+    """B wraps A verbatim: containment(A in B) = 1.0 while the symmetric
+    Jaccard is well below it; the reverse direction scores < 1."""
+    from planet_dump_ng_spark.operators.dedup import superset_containment_pairs
+
+    a = "alpha bravo charlie delta echo foxtrot golf hotel"
+    b = a + " india juliet kilo lima mike november oscar papa quebec romeo"
+    rows = [(1, a), (2, b), (3, "zulu yankee xray whiskey victor uniform")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {
+        (r.doc_a, r.doc_b): r
+        for r in superset_containment_pairs(df, threshold=0.1).collect()
+    }
+    # every 3-shingle of A appears in B
+    assert out[(1, 2)].containment == 1.0
+    # B has strictly more shingles, so B-in-A is strictly below 1
+    assert out[(2, 1)].containment < 1.0
+    assert out[(2, 1)].containment > 0.0
+    # the unrelated doc shares nothing
+    assert (3, 1) not in out and (1, 3) not in out
+
+
+def test_superset_containment_df_cap_drops_boilerplate(spark):
+    """A shingle present in MORE than max_df docs is dropped from the
+    index entirely: docs that share only boilerplate yield no pair."""
+    from planet_dump_ng_spark.operators.dedup import superset_containment_pairs
+
+    boiler = "terms of service apply here"
+    rows = [(i, boiler) for i in range(1, 5)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    # 4 docs share every shingle; cap at 3 removes them all -> no pairs
+    assert (
+        superset_containment_pairs(df, threshold=0.1, max_df=3).count() == 0
+    )
+    # cap at 4 keeps them: every ordered pair has containment 1.0
+    out = superset_containment_pairs(df, threshold=0.1, max_df=4).collect()
+    assert len(out) == 12 and all(r.containment == 1.0 for r in out)
+
+
+def test_exact_substring_duplication_shared_prefix(spark):
+    """Two docs sharing a verbatim 100-char prefix mark their strided
+    windows inside it as duplicated; a unique doc marks none."""
+    from planet_dump_ng_spark.plans.registry import table  # noqa: F401
+    import planet_dump_ng_spark.plans.dedup_plans  # noqa: F401 (registers)
+    from planet_dump_ng_spark.plans.registry import QUERIES
+
+    prefix = ("the quick brown fox jumps over the lazy dog again and again "
+              "until the sentence is one hundred chars long!!")[:100]
+    assert len(prefix) == 100
+    rows = [
+        (1, prefix + " tail one ends differently here"),
+        (2, prefix + " a wholly different continuation text"),
+        (3, "entirely unique content with no shared character windows at all"
+            " padded to be comfortably over fifty characters"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df.createOrReplaceTempView("documents")
+    # drive the operator body directly (same expression the plan uses)
+    w, stride = 50, 10
+    grams = F.expr(
+        f"transform(sequence(1, length(text) - {w - 1}, {stride}), "
+        f"p -> substring(text, p, {w}))"
+    )
+    sh = df.filter(F.length("text") >= w).select(
+        "doc_id", F.explode(grams).alias("s")
+    )
+    cnt = sh.groupBy("s").agg(F.countDistinct("doc_id").alias("nd"))
+    dup = (
+        sh.join(cnt, "s")
+        .groupBy("doc_id")
+        .agg(F.sum((F.col("nd") > 1).cast("long")).alias("n_dup"))
+    )
+    out = {r.doc_id: r.n_dup for r in dup.collect()}
+    # positions 1,11,21,31,41,51 have the full window inside the shared
+    # 100-char prefix (51+49 <= 100); later windows cross into the tails
+    assert out[1] >= 6 and out[2] >= 6
+    assert out[3] == 0
+
+
+def test_hll_registers_merge_equals_direct(spark):
+    """MAX-merging per-partition register tables yields the identical
+    estimate double as building registers over the union directly."""
+    from planet_dump_ng_spark.operators.sketches import (
+        hll_estimate_from_registers,
+        hll_registers,
+    )
+
+    df = spark.range(5000).select(
+        (F.col("id") % 2).alias("part"), (F.col("id") * 37 % 1999).alias("v")
+    )
+    per_part = hll_registers(df, ["part"], "v", p=6)
+    merged = per_part.groupBy("j").agg(F.max("rho").alias("rho"))
+    direct = hll_registers(df.select(F.lit(1).alias("g"), "v"), ["g"], "v", p=6)
+    est_m = hll_estimate_from_registers(
+        merged.select(F.lit(1).alias("g"), "j", "rho"), ["g"], p=6
+    ).collect()[0]
+    est_d = hll_estimate_from_registers(direct, ["g"], p=6).collect()[0]
+    assert est_m.hll_estimate == est_d.hll_estimate  # bit-identical
+    assert est_m.hll_registers == est_d.hll_registers
 
 
 def test_linear_quality_score_hand_computed(spark):
@@ -26,3 +131,411 @@ def test_linear_quality_score_hand_computed(spark):
     assert not out[2].keep  # digit spam fails
     assert out[2].digit_ratio > 0.8
     assert w["digit_ratio"] < 0  # model direction sanity
+
+
+def test_ivfpq_finds_own_cluster(spark):
+    """Clustered corpus: each query's top-1 ADC neighbour lies in its
+    own cluster, ranks are 1..k, k rows per query."""
+    from planet_dump_ng_spark.operators.ivf import ivfpq_adc_topk
+
+    import itertools
+
+    rows = []
+    vid = 0
+    for c, base in enumerate([0, 4]):
+        for i in range(10):
+            v = [0.0] * 8
+            v[base] = 10.0
+            v[base + 1] = float(i) * 0.01
+            rows.append((vid, v))
+            vid += 1
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = df.filter(F.col("vec_id").isin(0, 10))
+    out = ivfpq_adc_topk(
+        df, queries, dim=8, k=3, n_cells=2, coarse_rounds=2,
+        n_sub=2, pq_cells=4, pq_rounds=2, n_probe=1,
+    ).collect()
+    by_q = {}
+    for r in out:
+        by_q.setdefault(r.query_id, []).append(r)
+    assert set(by_q) == {0, 10}
+    for q, rs in by_q.items():
+        assert sorted(x.rank for x in rs) == [1, 2, 3]
+        cluster = set(range(10)) if q == 0 else set(range(10, 20))
+        # with n_probe=1 every candidate comes from the query's own cell
+        assert all(x.neighbor_id in cluster for x in rs)
+        assert all(x.adc_dist >= 0.0 for x in rs)
+
+
+def test_superset_containment_matches_python_reference(spark):
+    """Randomized corpus: the distributed inverted-index + df-cap + ratio
+    logic agrees pairwise with a brute-force Python reference computed
+    from the same hashed shingle sets (shingle/hash primitives are
+    property-tested separately in test_xxh64_property)."""
+    import random
+
+    from planet_dump_ng_spark.operators.dedup import (
+        shingle_hashes,
+        superset_containment_pairs,
+    )
+
+    rng = random.Random(42)
+    vocab = [f"w{i}" for i in range(40)]
+    rows = []
+    for doc_id in range(30):
+        n = rng.randint(0, 12)
+        rows.append((doc_id, " ".join(rng.choice(vocab) for _ in range(n))))
+    # plant a guaranteed superset pair
+    rows.append((100, rows[3][1] + " extra tail tokens here"))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    max_df, thr = 5, 0.3
+    sets = {
+        r.doc_id: set(r.h)
+        for r in df.select(
+            "doc_id", shingle_hashes("text", 3).alias("h")
+        ).collect()
+    }
+    from collections import Counter
+    dfreq = Counter(h for s in sets.values() for h in set(s))
+    capped = {d: {h for h in s if dfreq[h] <= max_df} for d, s in sets.items()}
+    expected = {}
+    for a, sa in capped.items():
+        for b, sb in capped.items():
+            if a == b or not sa:
+                continue
+            c = len(sa & sb) / len(sa)
+            if c >= thr:
+                expected[(a, b)] = (len(sa & sb), len(sa), c)
+
+    got = {
+        (r.doc_a, r.doc_b): (r.shared, r.size_a, r.containment)
+        for r in superset_containment_pairs(
+            df, k=3, threshold=thr, max_df=max_df
+        ).collect()
+    }
+    assert got == expected
+    assert any(a == 3 or b == 3 for a, b in got), "planted pair missing"
+
+
+def test_value_drift_tv_hand_computed(spark):
+    """TV distance replays by hand on a crafted two-cohort histogram."""
+    import planet_dump_ng_spark.plans.drift_plans as dp
+
+    # cohort a (even event_id): values in bin 0; cohort b: half bin 0,
+    # half bin 255 -> TV = 0.5 * (|1 - 0.5| + |0 - 0.5|) = 0.5
+    rows = []
+    for i in range(100):
+        rows.append((2 * i, 1.0))                       # a, bin 0
+        rows.append((2 * i + 1, 1.0 if i < 50 else 999.0))  # b, bins 0/255
+    df = spark.createDataFrame(rows, "event_id long, value double")
+    df.createOrReplaceTempView("_drift_events")
+
+    out = dp.value_drift_tv.__wrapped__ if hasattr(dp.value_drift_tv, "__wrapped__") else dp.value_drift_tv
+    # drive the plan body against the crafted frame via a monkeypatched table
+    import planet_dump_ng_spark.plans.registry as reg
+    orig = reg.table
+    try:
+        reg.table = lambda s, d, n: df if n == "events" else orig(s, d, n)
+        dp.table = reg.table
+        r = dp.value_drift_tv(spark, "unused").collect()[0]
+    finally:
+        reg.table = orig
+        dp.table = orig
+    assert r.n_a == 100 and r.n_b == 100
+    assert r.n_bins_hit == 2
+    assert r.tv_distance == 0.5
+
+
+def test_ivfpq_index_artifact_roundtrip(spark, sf_dir, tmp_path):
+    """write_ivfpq_index / read_ivfpq_index: serving from the persisted
+    artifact returns EXACTLY the direct build+query result (same params,
+    deterministic training), and the loaded query path touches only the
+    artifact tables."""
+    from planet_dump_ng_spark.operators.ivf import (
+        ivfpq_adc_topk,
+        ivfpq_build,
+        ivfpq_query,
+        read_ivfpq_index,
+        write_ivfpq_index,
+    )
+    from planet_dump_ng_spark.plans.registry import table
+
+    emb = table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    params = dict(n_cells=8, coarse_rounds=2, n_sub=4, pq_cells=8,
+                  pq_rounds=2)
+
+    direct = {
+        (r.query_id, r.rank): (r.neighbor_id, r.adc_dist)
+        for r in ivfpq_adc_topk(
+            emb, queries, dim=64, k=5, n_probe=2, **params
+        ).collect()
+    }
+
+    idx_dir = str(tmp_path / "ivfpq_index")
+    coarse, books, codes = ivfpq_build(emb, dim=64, **params)
+    write_ivfpq_index(coarse, books, codes, idx_dir)
+    codes.unpersist()
+
+    lcoarse, lbooks, lcodes = read_ivfpq_index(spark, idx_dir, n_sub=4)
+    served = {
+        (r.query_id, r.rank): (r.neighbor_id, r.adc_dist)
+        for r in ivfpq_query(
+            lcoarse, lbooks, lcodes, queries, dim=64, k=5, n_sub=4,
+            n_probe=2,
+        ).collect()
+    }
+    assert served == direct
+    assert len(served) > 0
+
+
+def test_ivfpq_add_matches_full_build_encoding(spark, sf_dir):
+    """Incremental add: encoding a held-out batch against the frozen
+    quantizers yields exactly the codes the batch would get from the
+    build's own encoder under the same trained tables, and querying the
+    appended index surfaces the new vectors."""
+    from planet_dump_ng_spark.operators.ivf import (
+        ivfpq_add,
+        ivfpq_build,
+        ivfpq_query,
+    )
+    from planet_dump_ng_spark.plans.registry import table
+
+    emb = table(spark, sf_dir, "embeddings")
+    base = emb.filter(F.col("vec_id") % 7 != 0)
+    batch = emb.filter(F.col("vec_id") % 7 == 0)
+    coarse, books, codes = ivfpq_build(base, dim=64)
+
+    added = ivfpq_add(coarse, books, batch, dim=64)
+    assert added.count() == batch.count()
+    assert added.columns == codes.columns
+
+    # idempotence contract: re-encoding BASE vectors against the same
+    # frozen tables reproduces the build's code rows exactly
+    re_base = {
+        r.vec_id: (r.cell, r.code0, r.code1, r.code2, r.code3)
+        for r in ivfpq_add(coarse, books, base, dim=64).collect()
+    }
+    built = {
+        r.vec_id: (r.cell, r.code0, r.code1, r.code2, r.code3)
+        for r in codes.collect()
+    }
+    assert re_base == built
+
+    # the appended index serves the new vectors: a batch vector queried
+    # against union codes finds itself... excluded by contract, so check
+    # its nearest neighbours come back non-empty with batch ids eligible
+    union_codes = codes.unionByName(added)
+    out = ivfpq_query(
+        coarse, books, union_codes, batch.limit(5), dim=64, k=3, n_probe=2
+    ).collect()
+    assert len(out) > 0
+    assert {r.rank for r in out} <= {1, 2, 3}
+    codes.unpersist()
+
+
+def test_ann_cli_build_add_query(spark, sf_dir, tmp_path, capsys):
+    """CLI lifecycle: build an index, add a held-out batch, query — the
+    result equals the library-call path over the same union."""
+    import json as _json
+
+    from planet_dump_ng_spark.ann_cli import main
+    from planet_dump_ng_spark.operators.ivf import (
+        ivfpq_add,
+        ivfpq_build,
+        ivfpq_query,
+    )
+    from planet_dump_ng_spark.plans.registry import table
+
+    emb = table(spark, sf_dir, "embeddings")
+    base_p = str(tmp_path / "base.parquet")
+    batch_p = str(tmp_path / "batch.parquet")
+    q_p = str(tmp_path / "queries.parquet")
+    emb.filter(F.col("vec_id") % 7 != 0).write.parquet(base_p)
+    emb.filter(F.col("vec_id") % 7 == 0).write.parquet(batch_p)
+    emb.filter(F.col("vec_id") % 100 == 0).write.parquet(q_p)
+    idx = str(tmp_path / "idx")
+    out_p = str(tmp_path / "topk.parquet")
+
+    assert main(["build", "--embeddings", base_p, "--index-dir", idx]) == 0
+    built = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert built["dim"] == 64
+
+    assert main(["add", "--embeddings", batch_p, "--index-dir", idx]) == 0
+    first = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert first["skipped_existing"] == 0 and first["added"] > 0
+    # IDEMPOTENT: retrying the same batch (partial-failure rerun) must
+    # not duplicate code rows — every id anti-joins away
+    assert main(["add", "--embeddings", batch_p, "--index-dir", idx]) == 0
+    retry = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert retry["added"] == 0 and retry["skipped_existing"] == first["added"]
+    assert main([
+        "query", "--index-dir", idx, "--queries", q_p, "--out", out_p,
+    ]) == 0
+
+    got = {
+        (r.query_id, r.rank): (r.neighbor_id, r.adc_dist)
+        for r in spark.read.parquet(out_p).collect()
+    }
+    base = emb.filter(F.col("vec_id") % 7 != 0)
+    batch = emb.filter(F.col("vec_id") % 7 == 0)
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    coarse, books, codes = ivfpq_build(base, dim=64)
+    union = codes.unionByName(ivfpq_add(coarse, books, batch, dim=64))
+    want = {
+        (r.query_id, r.rank): (r.neighbor_id, r.adc_dist)
+        for r in ivfpq_query(coarse, books, union, queries, dim=64).collect()
+    }
+    codes.unpersist()
+    assert got == want and len(got) > 0
+
+
+def test_search_cli_ranks_by_bm25(spark, sf_dir, tmp_path, capsys):
+    """search_cli: top-k JSON lines are ordered by the quantized score
+    with deterministic id tie-breaks, matching the operator directly."""
+    import json as _json
+
+    from planet_dump_ng_spark.operators.text import bm25_scores
+    from planet_dump_ng_spark.plans.registry import table
+    from planet_dump_ng_spark.search_cli import main
+
+    src = str(tmp_path / "docs.parquet")
+    table(spark, sf_dir, "documents").write.parquet(src)
+    assert main(["--input", src, "--terms", "vector", "hash", "--k", "5"]) == 0
+    got = [
+        _json.loads(line)
+        for line in capsys.readouterr().out.strip().splitlines()
+    ]
+    assert len(got) == 5
+
+    direct = (
+        bm25_scores(spark.read.parquet(src), ["vector", "hash"])
+        .orderBy(F.col("score_q").desc(), F.col("doc_id").asc())
+        .limit(5)
+        .collect()
+    )
+    assert [r.doc_id for r in direct] == [g["doc_id"] for g in got]
+    assert [r.bm25_score for r in direct] == [g["bm25_score"] for g in got]
+
+
+def test_bm25_matches_python_reference(spark):
+    """Randomized corpus: bm25_scores agrees bit-for-bit with a plain
+    Python evaluation of the same formula (same IEEE op order, same
+    1e-9 truncation)."""
+    import math
+    import random
+
+    from planet_dump_ng_spark.operators.text import bm25_scores
+
+    rng = random.Random(7)
+    vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30))))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    terms, k1, b = ["alpha", "gamma"], 1.2, 0.75
+
+    docs = {i: t.split() for i, t in rows}
+    n_docs = len(docs)
+    avgdl = sum(len(t) for t in docs.values()) / n_docs
+    dfreq = {
+        w: sum(1 for t in docs.values() if w in t) for w in terms
+    }
+    def mitchell_idf(n: int, d: int) -> float:
+        # the log2_ratio_mitchell replica: same IEEE op order
+        rq = int(float(n * 1048576) / float(d))
+        e = rq.bit_length() - 1
+        p2 = 1 << e
+        return (float(e) + float(rq - p2) / float(p2)) - 20.0
+
+    expected = {}
+    for i, toks in docs.items():
+        tsqs = []
+        for w in terms:
+            tf = toks.count(w)
+            if tf == 0:
+                continue
+            idf = mitchell_idf(n_docs, dfreq[w])
+            sat = (float(tf) * (k1 + 1.0)) / (
+                float(tf) + k1 * ((1.0 - b) + b * (float(len(toks)) / avgdl))
+            )
+            tsqs.append(int(idf * sat * 1e9))
+        if tsqs:
+            sq = sum(tsqs)
+            expected[i] = (len(tsqs), sq, float(sq) / 1e9)
+
+    got = {
+        r.doc_id: (r.n_matched_terms, r.score_q, r.bm25_score)
+        for r in bm25_scores(df, terms, k1=k1, b=b).collect()
+    }
+    assert got == expected and len(got) > 0
+
+
+def test_ivfpq_index_header_guards(spark, sf_dir, tmp_path):
+    """meta.json records the build geometry; a contradicting n_sub (or a
+    wrong-dim add batch via the CLI) errors loudly instead of silently
+    slicing the codebooks wrong."""
+    import pytest
+
+    from planet_dump_ng_spark.operators.ivf import (
+        ivfpq_build,
+        read_ivfpq_index,
+        read_ivfpq_meta,
+        write_ivfpq_index,
+    )
+    from planet_dump_ng_spark.plans.registry import table
+
+    emb = table(spark, sf_dir, "embeddings")
+    idx = str(tmp_path / "idx")
+    coarse, books, codes = ivfpq_build(emb, dim=64, n_sub=4)
+    write_ivfpq_index(coarse, books, codes, idx)
+    codes.unpersist()
+    meta = read_ivfpq_meta(idx)
+    assert meta == {
+        "format": "ivfpq-parquet-v1", "dim": 64, "n_sub": 4,
+        "sub_dim": 16, "n_cells": 8, "pq_cells": 8,
+        "has_vectors": False,
+    }
+    # header-derived load needs no n_sub at all
+    _, lbooks, _ = read_ivfpq_index(spark, idx)
+    assert len(lbooks) == 4
+    with pytest.raises(ValueError, match="n_sub=2 contradicts"):
+        read_ivfpq_index(spark, idx, n_sub=2)
+
+
+def test_ivfpq_compact_preserves_queries(spark, sf_dir, tmp_path):
+    """Compaction merges the small code files left by incremental adds
+    without changing a single neighbor: fewer files, identical top-k."""
+    from planet_dump_ng_spark.operators.ivf import (
+        ivfpq_add_to_dir,
+        ivfpq_build,
+        ivfpq_compact,
+        ivfpq_query,
+        read_ivfpq_index,
+        write_ivfpq_index,
+    )
+    from planet_dump_ng_spark.plans.registry import table
+
+    emb = table(spark, sf_dir, "embeddings")
+    base = emb.filter(F.col("vec_id") % 4 == 0)
+    idx = str(tmp_path / "ivfpq_compact_idx")
+    coarse, books, codes = ivfpq_build(base, dim=64)
+    write_ivfpq_index(coarse, books, codes, idx)
+    for m in (1, 2, 3):
+        ivfpq_add_to_dir(spark, idx, emb.filter(F.col("vec_id") % 4 == m))
+
+    queries = emb.filter(F.col("vec_id") % 11 == 0).limit(8)
+
+    def _topk():
+        c, b, k = read_ivfpq_index(spark, idx)
+        return {
+            (r.query_id, r.neighbor_id, r.rank)
+            for r in ivfpq_query(c, b, k, queries, dim=64, k=5).collect()
+        }
+
+    before = _topk()
+    stats = ivfpq_compact(spark, idx)
+    assert stats["files_after"] < stats["files_before"]
+    assert _topk() == before and len(before) > 0

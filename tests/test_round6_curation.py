@@ -13,7 +13,7 @@ from planet_dump_ng_spark.llm_pipeline import (
     curate,
     curate_increment,
 )
-from conftest import table
+from planet_dump_ng_spark.plans.registry import table
 
 
 def _base_batch(spark, sf_dir):
@@ -85,7 +85,7 @@ def test_fingerprint_count_is_the_commit_marker(spark, sf_dir, tmp_path):
     Under the old order (fingerprints first) this exact state passed the
     check with the buckets table silently missing rows."""
     from planet_dump_ng_spark.llm_pipeline import _DEDUP_LSH
-    from planet_dump_ng_spark.operators.dedup import lsh_buckets
+    from planet_dump_ng_spark.streaming.jobs import corpus_lsh_buckets
 
     docs = table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 3 == 0)
@@ -108,7 +108,7 @@ def test_fingerprint_count_is_the_commit_marker(spark, sf_dir, tmp_path):
     # dataset append — replay that exact window
     os.remove(f"{art}/_synced")
     mid_assigned.write.mode("append").partitionBy("split").parquet(out)
-    lsh_buckets(
+    corpus_lsh_buckets(
         mid.select("doc_id", "text"), **_DEDUP_LSH
     ).write.mode("append").parquet(f"{art}/buckets")
 
@@ -340,15 +340,22 @@ def test_increment_never_fabricates_curation_record(spark, sf_dir, tmp_path):
 
 
 def test_lsh_queries_leave_no_cache_entries(spark, sf_dir):
-    """minhash_lsh_candidates shares its bucket pass via localCheckpoint,
-    NOT persist(): a long-lived session (every increment runs candidates
-    once or twice) must not accumulate CacheManager entries."""
+    """minhash_lsh_candidates and the band-geometry evals share their
+    bucket pass via localCheckpoint, NOT persist(): a long-lived session
+    (streaming ingest runs candidates once or twice per micro-batch)
+    must not accumulate CacheManager entries."""
     import planet_dump_ng_spark.operators.dedup as dd
+    from planet_dump_ng_spark.plans.dedup_plans import (
+        lsh_band_match_histogram,
+        lsh_collision_curve,
+    )
 
     spark.catalog.clearCache()
     docs = table(spark, sf_dir, "documents")
     for mode in ("pairs", "star"):
         dd.minhash_lsh_candidates(docs, mode=mode).count()
+    lsh_band_match_histogram(spark, sf_dir).count()
+    lsh_collision_curve(spark, sf_dir).count()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -421,3 +428,56 @@ def test_increment_inherits_lsh_mode(spark, tmp_path):
     # the recorded mode survives the append path
     meta2 = json.load(open(f"{_dedup_artifact_dir(out)}/meta.json"))
     assert meta2["lsh_mode"] == "star"
+
+
+def test_curate_ingest_stream_matches_sequential_increments(
+    spark, sf_dir, tmp_path
+):
+    """The streaming ingest (curate_increment per micro-batch via
+    foreachBatch) must converge to exactly the dataset a sequence of
+    batch increments over the same files produces — same surviving ids,
+    same splits, artifact in lockstep."""
+    from planet_dump_ng_spark.streaming import jobs
+
+    docs = table(spark, sf_dir, "documents")
+    base = docs.filter(F.col("doc_id") % 3 == 0)
+    b1 = docs.filter(F.col("doc_id") % 3 == 1)
+    b2 = docs.filter(F.col("doc_id") % 3 == 2)
+    cols = ["doc_id", "source", "lang", "text", "n_chars"]
+
+    # sequential-batch reference
+    ref = str(tmp_path / "seq_ds")
+    curate(base, ref)
+    curate_increment(b1.select(*cols), ref)
+    curate_increment(b2.select(*cols), ref)
+    want = {
+        (r.doc_id, r.split)
+        for r in spark.read.parquet(ref).select("doc_id", "split").collect()
+    }
+
+    # streaming twin: same base, batches arrive as one file each
+    out = str(tmp_path / "stream_ds")
+    curate(base, out)
+    bus = str(tmp_path / "bus")
+    b1.select(*cols).coalesce(1).write.mode("append").parquet(bus)
+    b2.select(*cols).coalesce(1).write.mode("append").parquet(bus)
+    stream = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    reports = jobs.curate_ingest_stream(
+        stream, out, str(tmp_path / "ckpt"), compact_every=1
+    )
+    got = {
+        (r.doc_id, r.split)
+        for r in spark.read.parquet(out).select("doc_id", "split").collect()
+    }
+    assert got == want
+    assert len(reports) >= 1  # audit trail came back
+    n = spark.read.parquet(out).count()
+    art = _dedup_artifact_dir(out)
+    assert spark.read.parquet(f"{art}/fingerprints").count() == n
+
+    # redelivery: replaying the same files through a FRESH stream (new
+    # checkpoint) appends nothing — the increment's idempotence is the
+    # exactly-once mechanism, not sink transactions
+    stream2 = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    jobs.curate_ingest_stream(stream2, out, str(tmp_path / "ckpt2"))
+    assert spark.read.parquet(out).count() == n

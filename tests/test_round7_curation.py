@@ -19,7 +19,7 @@ from planet_dump_ng_spark.llm_pipeline import (
     dedup_compact,
 )
 from planet_dump_ng_spark.operators import dedup as dd
-from conftest import table
+from planet_dump_ng_spark.plans.registry import table
 
 
 def _mega_cluster_docs(spark, n_cluster=120, n_unique=20):
@@ -208,13 +208,18 @@ def test_lsh_geometry_single_sourced():
 
 
 def test_bpe_n_merges_zero_is_loud(spark):
-    from planet_dump_ng_spark.operators.tokenizer import write_bpe_tokenizer
+    from planet_dump_ng_spark.operators.tokenizer import (
+        bpe_vocab,
+        write_bpe_tokenizer,
+    )
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma")], "doc_id long, text string"
     )
     with pytest.raises(ValueError, match="n_merges"):
         write_bpe_tokenizer(docs, "/tmp/never-written-tokenizer", n_merges=0)
+    with pytest.raises(ValueError, match="n_merges"):
+        bpe_vocab(docs, n_merges=0)
     assert not os.path.exists("/tmp/never-written-tokenizer/meta.json")
 
 

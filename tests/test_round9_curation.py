@@ -4,12 +4,14 @@ Pins the curate()/curate_increment() ``near_dedup="exact"`` path (the
 prefix-filtered SSJoin whose output is identical to exhaustive all-pairs
 Jaccard — no LSH recall trade), the persisted ``_pindex`` prefix-index
 artifact lifecycle (write / add / compact, with the header-last crash
-protocol), and the inherit-or-refuse policy record.
+protocol), the inherit-or-refuse policy record, and the real MP4
+container parse that completes the multimodal decode set.
 """
 
 import json
 import os
 import shutil
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +26,11 @@ from planet_dump_ng_spark.operators import dedup as dd
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+
+def _clean(out):
+    for sfx in ("", "_dedup", "_pindex", "_dsir", "_pack"):
+        shutil.rmtree(out + sfx, ignore_errors=True)
 
 
 # -- curate(near_dedup="exact") ------------------------------------------------
@@ -293,6 +300,112 @@ def test_prefix_index_add_refuses_foreign_featurizer(
         dd.prefix_index_add(_docs(spark, sf_dir).limit(5), idx)
 
 
+def test_exact_vs_lsh_recall_query_sane(spark, sf_dir):
+    from planet_dump_ng_spark import plans
+
+    plans.load_all()
+    row = plans.QUERIES["dedup_exact_vs_lsh_recall"].spark(
+        spark, sf_dir
+    ).first()
+    assert row["n_missed"] >= 0
+    assert row["n_lsh_pairs"] + row["n_missed"] == row["n_exact_pairs"]
+    if row["n_exact_pairs"] > 0:
+        assert 0.0 <= row["lsh_recall"] <= 1.0
+    else:  # recall is undefined, not NaN, on a pair-free corpus
+        assert row["lsh_recall"] is None
+
+
+# -- MP4 container parse ---------------------------------------------------------
+
+
+def _box(typ: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", 8 + len(body)) + typ + body
+
+
+def _mp4_fixture(w=1920, h=1080, frames=(100, 50), timescale=1000, dur=5000):
+    from planet_dump_ng_spark.operators import multimodal as mm  # noqa: F401
+
+    mvhd = _box(
+        b"mvhd",
+        bytes(4) + bytes(8) + struct.pack(">II", timescale, dur) + bytes(80),
+    )
+    tkhd = _box(
+        b"tkhd", bytes(4) + bytes(72) + struct.pack(">II", w << 16, h << 16)
+    )
+    stts_body = bytes(4) + struct.pack(">I", len(frames))
+    for n in frames:
+        stts_body += struct.pack(">II", n, 512)
+    stbl = _box(b"stbl", _box(b"stts", stts_body))
+    trak = _box(b"trak", tkhd + _box(b"mdia", _box(b"minf", stbl)))
+    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isommp42")
+    return ftyp + _box(b"moov", mvhd + trak)
+
+
+def test_parse_mp4_header_real_dimensions():
+    from planet_dump_ng_spark.operators.multimodal import parse_mp4_header
+
+    assert parse_mp4_header(_mp4_fixture()) == (1920, 1080, 150, 5000)
+    # v1 tkhd/mvhd (64-bit times)
+    tkhd1 = _box(
+        b"tkhd",
+        b"\x01" + bytes(3) + bytes(84) + struct.pack(">II", 640 << 16, 360 << 16),
+    )
+    mvhd1 = _box(
+        b"mvhd",
+        b"\x01" + bytes(3) + bytes(16) + struct.pack(">IQ", 600, 1200) + bytes(80),
+    )
+    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isom")
+    payload = ftyp + _box(b"moov", mvhd1 + _box(b"trak", tkhd1))
+    assert parse_mp4_header(payload) == (640, 360, 1, 2000)
+
+
+def test_parse_mp4_header_rejects_non_mp4():
+    from planet_dump_ng_spark.operators.multimodal import parse_mp4_header
+
+    assert parse_mp4_header(b"not an mp4 at all, just text bytes here") is None
+    assert parse_mp4_header(b"") is None
+    # truncated box sizes terminate the walk instead of raising
+    assert parse_mp4_header(b"\x00\x00\x00\x08ftyp\xff\xff\xff\xffmoov") is None
+
+
+def test_parse_mp4_skips_audio_track():
+    """A zero-dimension (audio) trak before the video trak is skipped."""
+    from planet_dump_ng_spark.operators.multimodal import parse_mp4_header
+
+    audio_tkhd = _box(b"tkhd", bytes(4) + bytes(72) + struct.pack(">II", 0, 0))
+    video_tkhd = _box(
+        b"tkhd", bytes(4) + bytes(72) + struct.pack(">II", 320 << 16, 240 << 16)
+    )
+    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isom")
+    payload = ftyp + _box(
+        b"moov", _box(b"trak", audio_tkhd) + _box(b"trak", video_tkhd)
+    )
+    assert parse_mp4_header(payload)[:2] == (320, 240)
+
+
+def test_decode_image_meta_uses_real_mp4(spark):
+    from planet_dump_ng_spark.operators.multimodal import decode_image_meta
+
+    payload = _mp4_fixture(w=256, h=128, frames=(61,))
+    df = spark.createDataFrame(
+        [(1, bytearray(payload), {"format": "mp4", "n_bytes": len(payload)})],
+        "doc_id bigint, payload binary, media_meta struct<format:string,n_bytes:int>",
+    )
+    row = decode_image_meta(df).first()
+    assert (row["width"], row["height"], row["n_frames"]) == (256, 128, 61)
+
+
+def test_parse_image_header_rejects_overflow_dims():
+    from planet_dump_ng_spark.operators.multimodal import parse_image_header
+
+    sig = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
+    assert parse_image_header(sig + struct.pack(">II", 2**31, 5) + bytes(8)) is None
+    assert parse_image_header(sig + struct.pack(">II", 5, 0) + bytes(8)) is None
+    assert parse_image_header(
+        sig + struct.pack(">II", 640, 480) + bytes(8)
+    ) == ("png", 640, 480)
+
+
 # -- mid-compact crash windows (review findings) ---------------------------------
 
 
@@ -346,6 +459,17 @@ def test_exact_increment_rebuilds_pindex_after_mid_compact_crash(
     assert pmeta["n_docs"] == spark.read.parquet(out).count()
 
 
+def test_mp4_n_frames_overflow_falls_back_to_one():
+    """A crafted uint32 stts sample_count must not overflow the int32
+    n_frames column (same guard class as the PNG dimension check)."""
+    from planet_dump_ng_spark.operators.multimodal import parse_mp4_header
+
+    payload = _mp4_fixture(w=64, h=64, frames=(0xFFFFFFFF,))
+    w, h, n_frames, _dur = parse_mp4_header(payload)
+    assert (w, h) == (64, 64)
+    assert n_frames == 1  # implausible count ignored, not propagated
+
+
 def test_prefix_index_refuses_foreign_id_col(spark, sf_dir, built_index):
     idx, _ = built_index
     docs = _docs(spark, sf_dir).withColumnRenamed("doc_id", "vec_id")
@@ -388,3 +512,101 @@ def test_prefix_index_multi_add_equals_fresh_build(spark, sf_dir, tmp_path):
         spark.read.parquet(f"{idx}/pindex").count()
         == meta["n_prefix_entries"]
     )
+
+
+def test_curate_ingest_stream_exact_family(spark, sf_dir, tmp_path):
+    """The streaming ingest twin under near_dedup='exact': each
+    micro-batch's curate_increment INHERITS the recorded family, the
+    _pindex artifact grows in lockstep (and gets compacted by the
+    folded maintenance pass), and the streamed dataset equals the
+    sequential-batch reference — the same exactly-once-by-idempotence
+    contract the LSH twin pins in test_round6_curation."""
+    from planet_dump_ng_spark.streaming import jobs
+
+    docs = _docs(spark, sf_dir)
+    base = docs.filter(F.col("doc_id") % 3 == 0)
+    b1 = docs.filter(F.col("doc_id") % 3 == 1)
+    b2 = docs.filter(F.col("doc_id") % 3 == 2)
+    cols = ["doc_id", "source", "lang", "text", "n_chars"]
+
+    ref = str(tmp_path / "seq_ds")
+    curate(base, ref, near_dedup="exact")
+    curate_increment(b1.select(*cols), ref)
+    curate_increment(b2.select(*cols), ref)
+    want = {
+        (r.doc_id, r.split)
+        for r in spark.read.parquet(ref).select("doc_id", "split").collect()
+    }
+
+    out = str(tmp_path / "stream_ds")
+    curate(base, out, near_dedup="exact")
+    bus = str(tmp_path / "bus")
+    b1.select(*cols).coalesce(1).write.mode("append").parquet(bus)
+    b2.select(*cols).coalesce(1).write.mode("append").parquet(bus)
+    stream = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    reports = jobs.curate_ingest_stream(
+        stream, out, str(tmp_path / "ckpt"), compact_every=1
+    )
+    got = {
+        (r.doc_id, r.split)
+        for r in spark.read.parquet(out).select("doc_id", "split").collect()
+    }
+    assert got == want
+    assert len(reports) >= 1
+    n = spark.read.parquet(out).count()
+    pmeta = json.load(open(_pindex_dir(out) + "/meta.json"))
+    assert pmeta["n_docs"] == n  # artifact in lockstep through the stream
+    # redelivery through a fresh stream appends nothing
+    stream2 = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    jobs.curate_ingest_stream(stream2, out, str(tmp_path / "ckpt2"))
+    assert spark.read.parquet(out).count() == n
+    assert json.load(open(_pindex_dir(out) + "/meta.json")) == pmeta
+
+
+def test_pindex_cli_lifecycle(spark, sf_dir, tmp_path, capsys):
+    """The standalone CLI drives the full artifact lifecycle:
+    build -> add -> compact -> probe, with probe == derive."""
+    from planet_dump_ng_spark import pindex_cli
+
+    docs = _docs(spark, sf_dir)
+    corpus_p = str(tmp_path / "corpus.parquet")
+    batch_p = str(tmp_path / "batch.parquet")
+    add_p = str(tmp_path / "add.parquet")
+    docs.filter((F.col("doc_id") % 4).isin(1, 2)).write.parquet(corpus_p)
+    docs.filter(F.col("doc_id") % 4 == 3).write.parquet(add_p)
+    docs.filter(F.col("doc_id") % 4 == 0).write.parquet(batch_p)
+    idx = str(tmp_path / "idx")
+    out_p = str(tmp_path / "pairs.parquet")
+
+    assert pindex_cli.main(
+        ["build", "--input", corpus_p, "--index-dir", idx,
+         "--threshold", "0.5"]
+    ) == 0
+    assert pindex_cli.main(
+        ["add", "--input", add_p, "--index-dir", idx]
+    ) == 0
+    assert pindex_cli.main(["compact", "--index-dir", idx]) == 0
+    assert pindex_cli.main(
+        ["probe", "--input", batch_p, "--index-dir", idx, "--out", out_p]
+    ) == 0
+    got = sorted(
+        map(tuple, spark.read.parquet(out_p).collect())
+    )
+    want = sorted(
+        map(
+            tuple,
+            dd.ngram_jaccard_join(
+                docs.filter(F.col("doc_id") % 4 == 0),
+                docs.filter(F.col("doc_id") % 4 != 0),
+                k=3,
+                threshold=0.5,
+            ).collect(),
+        )
+    )
+    assert got == want
+    # probing below the recorded floor refuses
+    with pytest.raises(ValueError, match="threshold"):
+        pindex_cli.main(
+            ["probe", "--input", batch_p, "--index-dir", idx,
+             "--threshold", "0.3"]
+        )

@@ -5,7 +5,7 @@ the engine's SQL surface is the same query, not a translation."""
 import pytest
 
 from planet_dump_ng_spark import plans
-from planet_dump_ng_spark.session import load_tables
+from planet_dump_ng_spark.plans.registry import load_tables
 
 plans.load_all()
 

@@ -1,11 +1,74 @@
-"""Persisted BM25 index artifact (operators/text_index.py): the meta.json
-header refuses anything that is not an index."""
+"""Persisted BM25 index artifact (operators/text_index.py): served
+results equal the direct bm25_scores path bit-for-bit, the query scan
+prunes to the query terms' shards, incremental add is idempotent, and
+the CLI matches the library."""
 
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from planet_dump_ng_spark.operators import text_index as ti
+from planet_dump_ng_spark.operators.text import bm25_scores
+from planet_dump_ng_spark.plans.registry import table
+
+TERMS = ["vector", "hash", "merge"]
+
+
+def _scores(df):
+    return {
+        r.doc_id: (r.n_matched_terms, r.score_q, r.bm25_score)
+        for r in df.collect()
+    }
+
+
+def test_bm25_index_served_equals_direct(spark, sf_dir, tmp_path):
+    docs = table(spark, sf_dir, "documents")
+    direct = _scores(bm25_scores(docs, TERMS))
+
+    idx = str(tmp_path / "bm25_idx")
+    postings, doclen = ti.build_bm25_index(docs)
+    ti.write_bm25_index(postings, doclen, idx)
+
+    lp, ld, meta = ti.read_bm25_index(spark, idx)
+    assert meta["format"] == ti.FORMAT
+    assert meta["n_docs"] == docs.count()
+    served_df = ti.bm25_index_query(
+        spark, lp, ld, TERMS, n_shards=meta["n_shards"]
+    )
+    assert _scores(served_df) == direct
+    assert len(direct) > 0
+
+    # the postings scan carries a static shard partition filter: only
+    # the query terms' wshard partitions are read
+    plan = served_df._jdf.queryExecution().executedPlan().toString()
+    assert "wshard" in plan
+    shards = ti._term_shards(spark, TERMS, meta["n_shards"])
+    assert 0 < len(shards) <= len(TERMS)
+
+
+def test_bm25_index_add_idempotent_and_complete(spark, sf_dir, tmp_path):
+    docs = table(spark, sf_dir, "documents")
+    first = docs.filter(F.col("doc_id") % 2 == 0)
+    second = docs.filter(F.col("doc_id") % 2 == 1)
+
+    idx = str(tmp_path / "bm25_idx_add")
+    postings, doclen = ti.build_bm25_index(first)
+    ti.write_bm25_index(postings, doclen, idx)
+
+    n1 = ti.bm25_index_add(spark, idx, second)
+    assert n1 == second.count()
+    # retried batch: nothing appended, stats unchanged
+    meta_after = ti.read_bm25_meta(idx)
+    assert ti.bm25_index_add(spark, idx, second) == 0
+    assert ti.read_bm25_meta(idx) == meta_after
+    assert meta_after["n_docs"] == docs.count()
+
+    lp, ld, meta = ti.read_bm25_index(spark, idx)
+    served = _scores(
+        ti.bm25_index_query(spark, lp, ld, TERMS, n_shards=meta["n_shards"])
+    )
+    assert served == _scores(bm25_scores(docs, TERMS))
 
 
 def test_bm25_index_read_rejects_non_index(tmp_path, spark):
@@ -17,3 +80,107 @@ def test_bm25_index_read_rejects_non_index(tmp_path, spark):
     with pytest.raises(ValueError, match="format"):
         ti.read_bm25_meta(str(bad))
 
+
+def test_bm25_cli_build_query_matches_search_cli(spark, sf_dir, tmp_path, capsys):
+    from planet_dump_ng_spark.bm25_cli import main as bm25_main
+    from planet_dump_ng_spark.search_cli import main as search_main
+
+    src = str(tmp_path / "docs.parquet")
+    table(spark, sf_dir, "documents").write.parquet(src)
+    idx = str(tmp_path / "cli_idx")
+
+    assert bm25_main(["build", "--input", src, "--index-dir", idx]) == 0
+    built = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert built["format"] == ti.FORMAT
+
+    assert bm25_main(
+        ["query", "--index-dir", idx, "--terms", *TERMS, "--k", "5"]
+    ) == 0
+    served = [
+        json.loads(line)
+        for line in capsys.readouterr().out.strip().splitlines()
+    ]
+
+    assert search_main(
+        ["--input", src, "--terms", *TERMS, "--k", "5"]
+    ) == 0
+    direct = [
+        json.loads(line)
+        for line in capsys.readouterr().out.strip().splitlines()
+    ]
+    assert served == direct and len(served) == 5
+
+
+def test_bm25_index_compact_preserves_scores(spark, sf_dir, tmp_path):
+    """Compaction merges the small files left by incremental adds
+    without changing a single score: fewer postings files, identical
+    query results, meta untouched."""
+    from pyspark.sql import functions as F
+
+    docs = table(spark, sf_dir, "documents")
+    idx = str(tmp_path / "bm25_compact_idx")
+    head = docs.filter(F.col("doc_id") % 4 == 0)
+    postings, doclen = ti.build_bm25_index(head)
+    ti.write_bm25_index(postings, doclen, idx)
+    for m in (1, 2, 3):
+        ti.bm25_index_add(spark, idx, docs.filter(F.col("doc_id") % 4 == m))
+    meta_before = ti.read_bm25_meta(idx)
+    lp, ld, m0 = ti.read_bm25_index(spark, idx)
+    before = _scores(
+        ti.bm25_index_query(spark, lp, ld, TERMS, n_shards=m0["n_shards"])
+    )
+
+    stats = ti.bm25_index_compact(spark, idx)
+    assert stats["postings"]["files_after"] < stats["postings"]["files_before"]
+
+    assert ti.read_bm25_meta(idx) == meta_before
+    lp2, ld2, m2 = ti.read_bm25_index(spark, idx)
+    after = _scores(
+        ti.bm25_index_query(spark, lp2, ld2, TERMS, n_shards=m2["n_shards"])
+    )
+    assert after == before and len(after) > 0
+
+
+def test_bm25_cli_add_and_compact_roundtrip(spark, sf_dir, tmp_path, capsys):
+    """The CLI add/compact surface: an incremental add reports the
+    idempotence split, a replayed add adds 0, compact reports a file
+    drop, and the post-compact query equals the pre-compact one."""
+    from pyspark.sql import functions as F
+
+    from planet_dump_ng_spark.bm25_cli import main as bm25_main
+
+    docs = table(spark, sf_dir, "documents")
+    head_p = str(tmp_path / "head.parquet")
+    tail_p = str(tmp_path / "tail.parquet")
+    docs.filter(F.col("doc_id") % 3 == 0).write.parquet(head_p)
+    docs.filter(F.col("doc_id") % 3 != 0).write.parquet(tail_p)
+    idx = str(tmp_path / "cli_add_idx")
+
+    assert bm25_main(["build", "--input", head_p, "--index-dir", idx]) == 0
+    capsys.readouterr()
+    assert bm25_main(["add", "--input", tail_p, "--index-dir", idx]) == 0
+    added = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert added["added"] > 0 and added["skipped_existing"] == 0
+
+    # replay the same batch: idempotent, nothing added
+    assert bm25_main(["add", "--input", tail_p, "--index-dir", idx]) == 0
+    replay = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert replay["added"] == 0
+    assert replay["skipped_existing"] == added["added"]
+
+    def _query():
+        assert bm25_main(
+            ["query", "--index-dir", idx, "--terms", *TERMS, "--k", "5"]
+        ) == 0
+        return [
+            json.loads(line)
+            for line in capsys.readouterr().out.strip().splitlines()
+        ]
+
+    before = _query()
+    assert bm25_main(["compact", "--index-dir", idx]) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (
+        stats["postings"]["files_after"] < stats["postings"]["files_before"]
+    )
+    assert _query() == before and len(before) == 5

@@ -1,22 +1,98 @@
 """The persisted BPE tokenizer artifact (operators/tokenizer.py): the
-header is written last, and the curation CLI trains it on the train
-split."""
+train-once / apply-everywhere lifecycle.  Serving with the frozen rule
+table must be bit-equal to training-time encoding (the pandas-UDF fold
+is a twin of the SQL aggregate fold), and the meta.json header must
+refuse incompatible artifacts loudly."""
 
 import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from planet_dump_ng_spark.operators import text as tx
 from planet_dump_ng_spark.operators import tokenizer as tk
-from conftest import table
+from planet_dump_ng_spark.plans.registry import table
 
 
-def _merges(spark, tok):
+N_MERGES = 5
+
+
+def _stats_set(df):
     return {
-        (r.round, r.pair_left, r.pair_right, r.n)
-        for r in spark.read.parquet(f"{tok}/merges").collect()
+        (
+            r.doc_id,
+            r.n_tokens,
+            r.n_chars,
+            r.n_symbols,
+            round(r.compression, 12),
+        )
+        for r in df.collect()
     }
+
+
+def test_served_equals_direct(spark, sf_dir, tmp_path):
+    """Encoding through the artifact == text.bpe_encode_stats run fresh:
+    the frozen-rule pandas fold replays _BPE_MERGE_EXPR exactly,
+    including within-round chaining (a fresh merge seeding the next
+    step's left side)."""
+    docs = table(spark, sf_dir, "documents")
+    tok = str(tmp_path / "tok")
+    meta = tk.write_bpe_tokenizer(docs, tok, n_merges=N_MERGES)
+    assert meta["format"] == "bpe-tokenizer-v1"
+
+    merges, meta2 = tk.read_bpe_tokenizer(spark, tok)
+    assert meta2 == meta
+    served = tk.bpe_apply_stats(docs, merges)
+    direct = tx.bpe_encode_stats(docs, n_merges=N_MERGES)
+    assert _stats_set(served) == _stats_set(direct)
+    direct.unpersist()
+
+    # the persisted rule table IS the learned rule list
+    learned = tx.bpe_learn_merges(docs, n_merges=N_MERGES)
+    want = [
+        (r.round, r.pair_left, r.pair_right, r.n)
+        for r in learned.orderBy("round").collect()
+    ]
+    learned.unpersist()
+    got = [
+        (r.round, r.pair_left, r.pair_right, r.n)
+        for r in merges.orderBy("round").collect()
+    ]
+    assert got == want
+
+
+def test_encode_new_corpus_and_vocab(spark, sf_dir, tmp_path):
+    """The artifact encodes a corpus it never saw (the whole point);
+    the vocab table holds exactly the symbols the frozen rules can
+    produce, with corpus-weighted counts."""
+    docs = table(spark, sf_dir, "documents")
+    train = docs.filter(F.col("doc_id") % 2 == 0)
+    other = docs.filter(F.col("doc_id") % 2 == 1)
+    tok = str(tmp_path / "tok")
+    tk.write_bpe_tokenizer(train, tok, n_merges=N_MERGES)
+    merges, _ = tk.read_bpe_tokenizer(spark, tok)
+
+    out = tk.bpe_apply_stats(other, merges)
+    n_docs = other.filter(F.length("text") > 0).count()
+    rows = out.collect()
+    assert len(rows) == n_docs
+    assert all(r.n_symbols <= r.n_chars for r in rows)  # merges only shrink
+    assert all(r.n_symbols >= r.n_tokens for r in rows)
+
+    vocab = spark.read.parquet(f"{tok}/vocab")
+    syms = {r.symbol for r in vocab.collect()}
+    rules = {
+        r.pair_left + r.pair_right for r in merges.collect()
+    }
+    # every learned merged symbol that survived folding is a single
+    # vocab entry; multi-char symbols can only come from rules
+    assert all(len(s) == 1 or s in rules for s in syms)
+    # counts are corpus-weighted (total symbol mass == sum of n_symbols)
+    total = vocab.agg(F.sum("n")).first()[0]
+    want_total = (
+        tk.bpe_apply_stats(train, merges).agg(F.sum("n_symbols")).first()[0]
+    )
+    assert total == want_total
 
 
 def test_retrain_crash_never_leaves_stale_header(spark, sf_dir, tmp_path):
@@ -33,12 +109,94 @@ def test_retrain_crash_never_leaves_stale_header(spark, sf_dir, tmp_path):
     )
     with pytest.raises(Exception, match="simulated retrain crash"):
         tk.write_bpe_tokenizer(bad, tok, n_merges=2)
-    assert not os.path.exists(f"{tok}/meta.json")
+    with pytest.raises(ValueError, match="no meta.json"):
+        tk.read_bpe_tokenizer(spark, tok)
+
+
+def test_stateless_encode_survives_null_text(spark):
+    """A NULL-text row (legal in the documents schema) must be dropped,
+    not crash the Arrow fold — a poison-pill row on a stream bus would
+    otherwise kill the query on every restart."""
+    docs = spark.createDataFrame(
+        [(1, "hello hello world"), (2, None), (3, "")],
+        "doc_id long, text string",
+    )
+    rows = tk.bpe_apply_stats_stateless(docs, [("l", "l")]).collect()
+    assert {r.doc_id for r in rows} == {1}
+    assert rows[0].n_symbols == 13  # 'hello'->4 syms x2 + 'world'->5
+
+
+def test_meta_is_the_commit_marker_and_validates(spark, sf_dir, tmp_path):
+    import shutil
+
+    docs = table(spark, sf_dir, "documents").limit(50)
+    tok = str(tmp_path / "tok")
+    tk.write_bpe_tokenizer(docs, tok, n_merges=2)
+
+    # a half-written artifact (crash before meta.json) reads as NO
+    # artifact, never as a silently-shorter rule list
+    half = str(tmp_path / "half")
+    shutil.copytree(tok, half)
+    import os
+
+    os.remove(f"{half}/meta.json")
+    with pytest.raises(ValueError, match="no meta.json"):
+        tk.read_bpe_tokenizer(spark, half)
+
+    # incompatible pre-tokenizer refused loudly
+    bad = json.load(open(f"{tok}/meta.json"))
+    bad["pretokenizer"] = "bytelevel-v9"
+    json.dump(bad, open(f"{tok}/meta.json", "w"))
+    with pytest.raises(ValueError, match="silently diverge"):
+        tk.read_bpe_tokenizer(spark, tok)
+
+
+def test_stateless_equals_model_join(spark, sf_dir, tmp_path):
+    """The stateless row-map encode (the streaming shape) emits exactly
+    the distinct-word model-join encode's rows."""
+    docs = table(spark, sf_dir, "documents")
+    tok = str(tmp_path / "tok")
+    tk.write_bpe_tokenizer(docs, tok, n_merges=N_MERGES)
+    merges, _ = tk.read_bpe_tokenizer(spark, tok)
+    rules = [
+        (r.pair_left, r.pair_right) for r in merges.orderBy("round").collect()
+    ]
+    a = tk.bpe_apply_stats_stateless(docs, rules)
+    b = tk.bpe_apply_stats(docs, merges)
+    assert _stats_set(a) == _stats_set(b)
+
+
+def test_bpe_encode_stream_matches_batch(spark, sf_dir, tmp_path):
+    """Streaming encode over a file bus == batch encode over the same
+    files (stateless map: no watermark, append mode)."""
+    from planet_dump_ng_spark.streaming import jobs
+
+    docs = table(spark, sf_dir, "documents")
+    tok = str(tmp_path / "tok")
+    tk.write_bpe_tokenizer(docs, tok, n_merges=N_MERGES)
+
+    bus = str(tmp_path / "bus")
+    cols = ["doc_id", "source", "lang", "text", "n_chars"]
+    docs.filter(F.col("doc_id") % 2 == 0).select(*cols).coalesce(1).write.mode(
+        "append"
+    ).parquet(bus)
+    docs.filter(F.col("doc_id") % 2 == 1).select(*cols).coalesce(1).write.mode(
+        "append"
+    ).parquet(bus)
+
+    stream = jobs.read_documents_stream(spark, bus, max_files_per_trigger=1)
+    out = jobs.bpe_encode_stream(stream, tok)
+    jobs.run_to_memory(out, "bpe_stream_tbl", output_mode="append")
+    got = spark.table("bpe_stream_tbl")
+
+    merges, _ = tk.read_bpe_tokenizer(spark, tok)
+    want = tk.bpe_apply_stats(spark.read.parquet(bus), merges)
+    assert _stats_set(got) == _stats_set(want)
 
 
 def test_curation_cli_trains_tokenizer(spark, sf_dir, tmp_path, capsys):
     """--train-tokenizer ships the dataset with a tokenizer trained on
-    its train split — the artifact equals a direct train on
+    its train split — the artifact encodes and equals a direct train on
     the same split."""
     from planet_dump_ng_spark import llm_pipeline
 
@@ -53,10 +211,113 @@ def test_curation_cli_trains_tokenizer(spark, sf_dir, tmp_path, capsys):
     )
     assert rc == 0
     assert "tokenizer" in capsys.readouterr().out
-    train = spark.read.parquet(out).filter(F.col("split") == "train")
-    direct = str(tmp_path / "direct")
-    meta = tk.write_bpe_tokenizer(train, direct, n_merges=3)
-    assert json.load(open(f"{tok}/meta.json")) == meta
+    merges, meta = tk.read_bpe_tokenizer(spark, tok)
     assert meta["n_merges"] == 3
-    assert _merges(spark, tok) == _merges(spark, direct)
+    train = spark.read.parquet(out).filter(F.col("split") == "train")
+    want = tx.bpe_learn_merges(train, n_merges=3)
+    assert {
+        (r.round, r.pair_left, r.pair_right, r.n) for r in merges.collect()
+    } == {
+        (r.round, r.pair_left, r.pair_right, r.n) for r in want.collect()
+    }
+    want.unpersist()
 
+
+def test_tokenizer_cli_roundtrip(spark, sf_dir, tmp_path, capsys):
+    from planet_dump_ng_spark import tokenizer_cli
+
+    docs = table(spark, sf_dir, "documents")
+    inp = str(tmp_path / "docs.parquet")
+    docs.write.parquet(inp)
+    tok = str(tmp_path / "tok")
+
+    rc = tokenizer_cli.main(
+        ["train", "--input", inp, "--tokenizer-dir", tok, "--n-merges", "3"]
+    )
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["n_rules"] <= 3 and out["trained"] == tok
+
+    stats_out = str(tmp_path / "stats.parquet")
+    rc = tokenizer_cli.main(
+        ["encode", "--input", inp, "--tokenizer-dir", tok, "--out", stats_out]
+    )
+    assert rc == 0
+    enc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    merges, _ = tk.read_bpe_tokenizer(spark, tok)
+    want = tk.bpe_apply_stats(docs, merges)
+    assert enc["encoded_docs"] == want.count()
+    assert enc["n_symbols"] == want.agg(F.sum("n_symbols")).first()[0]
+    assert _stats_set(spark.read.parquet(stats_out)) == _stats_set(want)
+
+
+# ---------------------------------------------------------------------------
+# rank-priority fold == sequential reference fold (round-7: encode cost
+# must be independent of rule count; correctness must not move an inch)
+# ---------------------------------------------------------------------------
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+from planet_dump_ng_spark.operators.tokenizer import (  # noqa: E402
+    _build_rule_index,
+    _fold_symbols,
+    _fold_symbols_ranked,
+)
+
+_sym = st.text(alphabet="abc", min_size=1, max_size=3)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    word=st.text(alphabet="abc", min_size=0, max_size=12),
+    rules=st.lists(st.tuples(_sym, _sym), min_size=0, max_size=12),
+)
+def test_ranked_fold_equals_sequential_fold(word, rules):
+    """Bit-equality over RANDOM rule sets — including pathological ones
+    real BPE training can't produce (duplicate pairs, pairs whose parts
+    were never trainable, later rules re-forming earlier rules' string
+    pairs).  The ranked fold must reproduce the sequential pass
+    semantics exactly, not just on well-formed tokenizers."""
+    assert _fold_symbols_ranked(word, _build_rule_index(rules)) == \
+        _fold_symbols(word, rules)
+
+
+def test_ranked_fold_directed_cases():
+    cases = [
+        # later rule (y,z) creates 'yz'; earlier rule (x,yz) must NOT
+        # fire afterwards — sequential passes never revisit rule 0
+        ("xyz", [("x", "yz"), ("y", "z")], ["x", "yz"]),
+        # same pair listed twice: second occurrence CAN fire on
+        # instances formed between the two ranks
+        ("xyz", [("y", "z"), ("x", "yz")], ["xyz"]),
+        # non-overlapping left-to-right within a rule
+        ("xxxx", [("x", "x")], ["xx", "xx"]),
+        ("xxx", [("x", "x")], ["xx", "x"]),
+        # cascading rounds
+        ("aaaa", [("a", "a"), ("aa", "aa")], ["aaaa"]),
+        ("", [("a", "b")], []),
+        ("q", [("a", "b")], ["q"]),
+    ]
+    for word, rules, want in cases:
+        assert _fold_symbols(word, rules) == want  # reference agrees
+        assert _fold_symbols_ranked(word, _build_rule_index(rules)) == want
+
+
+def test_ranked_fold_rule_count_independent_speed():
+    """The whole point: 10^4 rules must not cost 10^4 work per word.
+    Compare the ranked fold against the sequential fold on a large
+    DISJOINT rule table (worst case for sequential: every rule scanned,
+    none applies) — the ranked fold must be dramatically faster."""
+    import time
+
+    rules = [(f"L{i}|", f"|R{i}") for i in range(10_000)]
+    idx = _build_rule_index(rules)
+    words = ["interchangeability" + str(i) for i in range(50)]
+    t0 = time.perf_counter()
+    fast = [_fold_symbols_ranked(w, idx) for w in words]
+    t_fast = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    slow = [_fold_symbols(w, rules) for w in words]
+    t_slow = time.perf_counter() - t0
+    assert fast == slow
+    assert t_fast * 10 < t_slow, (t_fast, t_slow)
