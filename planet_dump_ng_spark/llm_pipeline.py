@@ -27,6 +27,7 @@ auditable — silent data loss is the cardinal sin of training pipelines.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -50,9 +51,10 @@ class CurationReport:
     boilerplate from surviving pages — the docs column barely moves
     while the token column shows exactly what was cut).
 
-    ``phase_s`` carries wall seconds per pipeline section when the
-    caller's path records them (curate_increment does) — the
-    attribution that turns "the increment got slower" into "the LSH
+    ``phase_s`` carries wall seconds per pipeline section (both
+    :func:`curate` and :func:`curate_increment` record them, one entry
+    per stage checkpoint plus the setup, probe and write sections) —
+    the attribution that turns "the increment got slower" into "the LSH
     probe got slower"."""
 
     stages: list[tuple[str, int]] = field(default_factory=list)
@@ -219,19 +221,11 @@ def _write_dedup_artifact(
     def _write_urls() -> None:
         if url_col is None:
             return
-        # canonical-URL fingerprint table (url_col datasets): 8-byte
-        # xxhash64 of the canonical URL — what each increment batch
-        # anti-joins against instead of re-canonicalizing the corpus.
-        # NULL urls are EXCLUDED before hashing: xxhash64(NULL) is the
-        # seed CONSTANT, not NULL, so one stored null-url row would
-        # anti-join away every future null-url batch doc.  Lands
-        # BEFORE the fingerprints commit so the commit-marker order
-        # holds.
-        docs.select(
-            F.col("doc_id"), tx.canonical_url(F.col(url_col)).alias("_cu")
-        ).filter(F.col("_cu").isNotNull()).select(
-            F.col("doc_id"), F.xxhash64("_cu").alias("ufp")
-        ).write.mode(mode).parquet(f"{d}/urls")
+        # canonical-URL fingerprint table (url_col datasets): what each
+        # increment batch anti-joins against instead of
+        # re-canonicalizing the corpus.  Lands BEFORE the fingerprints
+        # commit so the commit-marker order holds.
+        _url_hashes(docs, url_col).write.mode(mode).parquet(f"{d}/urls")
 
     fp_df = docs.select(
         F.col("doc_id"), tx.fingerprint("text").alias("fp")
@@ -419,6 +413,400 @@ def compact_artifacts(spark, dataset_dir: str) -> dict:
     return stats
 
 
+#: The curation record: every policy :func:`curate` writes into the
+#: ``_dedup`` header and :func:`curate_increment` inherits or refuses —
+#: the xxhash split gate is content-stable only under the original
+#: fraction boundaries, and the dataset's dedup guarantees hold only if
+#: every increment dedups the same way.  Per field: the value an
+#: increment assumes when the dataset recorded none (pre-header
+#: datasets), the type values compare and are recorded in, and why a
+#: contradicting value is refused.
+_POLICIES = {
+    "fractions": (
+        None, dict,
+        "the content-stable split gate only holds when the boundaries "
+        "match",
+    ),
+    "leakage_free": (
+        False, bool,
+        "a dataset curated one way cannot take increments split the "
+        "other way",
+    ),
+    "near_dedup": (
+        "lsh", str,
+        "a dataset deduped under one detection family cannot take "
+        "increments deduped under the other (the dedup guarantee would "
+        "silently change mid-dataset)",
+    ),
+    "lsh_mode": (
+        "pairs", str,
+        "appends never rewrite meta.json, so accepting this would leave "
+        "the header misdescribing how increments were actually "
+        "self-deduped",
+    ),
+    "jaccard_threshold": (
+        0.8, float,
+        "increments deduped at a different threshold would silently "
+        "change the dataset's near-dup guarantee mid-dataset",
+    ),
+    "split_jaccard": (
+        0.3, float,
+        "the leakage-free guarantee ('no pair >= split_jaccard straddles "
+        "splits') holds at ONE similarity level",
+    ),
+    "max_bucket": (
+        None, int,
+        "the persisted bucket artifact was capped at build time with the "
+        "recorded value",
+    ),
+    "dsir_min_bits": (
+        None, float, "the gate threshold is part of the curation contract"
+    ),
+    # recorded beside the DSIR gate; no argument sets it
+    "dsir_target_desc": (None, str, None),
+    "max_surprisal_bits": (
+        None, float, "the gate ceiling is part of the curation contract"
+    ),
+    "url_col": (
+        None, str,
+        "the standing corpus was URL-deduped on the recorded column",
+    ),
+}
+#: The stages an increment can only apply as recorded (a frozen model, or
+#: a dedup the standing docs went through): passing one the dataset
+#: never recorded refuses.  Value: what the record would have held.
+_GATES = {
+    "dsir_min_bits": "DSIR gate — there is no frozen model to score "
+    "under; train one at curate() time with dsir_target",
+    "max_surprisal_bits": "surprisal gate — there is no frozen bigram LM "
+    "to score under; enable the gate at curate() time",
+    "url_col": "URL-dedup stage — the standing docs were never "
+    "URL-deduped, so the guarantee would start mid-dataset; enable it "
+    "at curate() time",
+}
+#: Fields whose pre-header default is the dataset's true history, not a
+#: guess (every pre-header dataset was curated with LSH pairs, before
+#: star mode and the exact family existed), so an increment records
+#: them even when nothing was passed or recorded.
+_HISTORY = ("near_dedup", "lsh_mode")
+
+
+def _resolve_policies(passed: dict, recorded: dict) -> tuple[dict, set]:
+    """Inherit-or-refuse for every field of the curation record.
+
+    Returns (value per field, the fields whose value is KNOWN: passed,
+    recorded, or a :data:`_HISTORY` default).  Known-ness is taken
+    BEFORE defaulting: the record an increment writes must carry only
+    known values — a pre-header dataset whose increment runs on defaults
+    must NOT have those defaults enshrined as "the curation record", or
+    a later increment passing the dataset's true custom values would be
+    refused against a fabricated one.  A passed value that contradicts
+    the record raises instead of silently mis-splitting appended docs
+    (or de-syncing the header from how increments were actually
+    deduped — appends never rewrite meta.json)."""
+    values, known = {}, set(_HISTORY)
+    for name, (default, cast, why) in _POLICIES.items():
+        mine, theirs = passed.get(name), recorded.get(name)
+        if mine is not None and theirs is None and name in _GATES:
+            raise ValueError(
+                f"{name} passed but the dataset records no {_GATES[name]}"
+            )
+        if mine is not None and theirs is not None and (
+            cast(mine) != cast(theirs)
+        ):
+            raise ValueError(
+                f"{name}={mine!r} contradicts the dataset's recorded "
+                f"{name}={theirs!r} — {why}; omit {name} to inherit the "
+                "recorded value"
+            )
+        value = mine if mine is not None else theirs
+        if value is not None:
+            known.add(name)
+        value = default if value is None else value
+        values[name] = None if value is None else cast(value)
+    return values, known
+
+
+def _curation_record(values: dict, known: set | None = None) -> dict:
+    """The ``_dedup`` header's curation record: each known, set field of
+    :data:`_POLICIES` that takes effect — ``lsh_mode`` only under LSH
+    (the exact family runs no banding) and ``split_jaccard`` only when
+    leakage-free (recording an inert value would make a later
+    restatement of it refusable for no reason)."""
+    live = {
+        "lsh_mode": values["near_dedup"] != "exact",
+        "split_jaccard": bool(values["leakage_free"]),
+    }
+    return {
+        name: cast(values[name])
+        for name, (_, cast, _) in _POLICIES.items()
+        if (known is None or name in known)
+        and values.get(name) is not None
+        and live.get(name, True)
+    }
+
+
+def _check_family(near_dedup: str, lsh_mode: str | None, modes) -> None:
+    """Refuse an unknown detection family or emission mode, and a
+    concrete emission mode under the exact family, which runs no
+    banding (silently discarding the mode would let a caller believe a
+    policy was applied that never ran)."""
+    if near_dedup not in ("lsh", "exact"):
+        raise ValueError(
+            f"near_dedup must be 'lsh' or 'exact', got {near_dedup!r}"
+        )
+    if near_dedup == "exact" and lsh_mode is not None:
+        raise ValueError(
+            f"lsh_mode={lsh_mode!r} with near_dedup='exact': the exact "
+            "family runs no banding, so a concrete emission mode cannot "
+            "take effect — omit lsh_mode"
+        )
+    if lsh_mode is not None and lsh_mode not in modes:
+        raise ValueError(f"lsh_mode must be one of {modes}, got {lsh_mode!r}")
+
+
+class _StageLog:
+    """The stage checkpoints and attrition audit both curation paths
+    share.
+
+    Each filtering stage persists its survivor set, counts it for the
+    audit FROM THE CACHE, and releases the previous stage's cache.
+    Without this, every stage's count() — and the final
+    materialization — recomputes the whole upstream chain (dedup joins
+    included), making the pipeline O(stages^2) work; with it each stage
+    runs once (measured ~2x end-to-end at sf0.1).  The checkpoints are
+    the actions, so the wall seconds between them (``report.phase_s``)
+    attribute real work.
+
+    ``audit_tokens``: one aggregate per checkpoint gives both audit
+    columns (docs, tokens).  Stages carry the per-doc token count as the
+    hidden ``__ntok`` column (recomputed only where the TEXT changes,
+    :func:`_with_ntok`), so every audit after the raw one sums a cached
+    long column instead of re-running the regex tokenizer over the
+    surviving corpus.  Off, the doc count comes off the stage cache for
+    free."""
+
+    def __init__(self, report: CurationReport, audit_tokens: bool) -> None:
+        self.report = report
+        self.audit_tokens = audit_tokens
+        self.prev: DataFrame | None = None
+        self.t_last = time.perf_counter()
+
+    def tick(self, phase: str) -> None:
+        now = time.perf_counter()
+        self.report.phase_s[phase] = round(
+            self.report.phase_s.get(phase, 0.0) + (now - self.t_last), 3
+        )
+        self.t_last = now
+
+    def counts(self, df: DataFrame) -> tuple[int, int | None]:
+        if not self.audit_tokens:
+            return df.count(), None
+        tok = (
+            F.col("__ntok")
+            if "__ntok" in df.columns
+            else tx.token_count("text").cast("bigint")
+        )
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(tok).cast("bigint").alias("t"),
+        ).first()
+        return row["n"], row["t"] or 0
+
+    def checkpoint(self, stage: str, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self.report.log(stage, *self.counts(df))
+        self.release()
+        self.prev = df
+        self.tick(stage)
+        return df
+
+    def keep(self, stage: str, docs: DataFrame, ids: DataFrame) -> DataFrame:
+        """Checkpoint the docs whose ``doc_id`` is in ``ids``."""
+        return self.checkpoint(stage, docs.join(ids, "doc_id", "left_semi"))
+
+    def drop(self, stage: str, docs: DataFrame, ids: DataFrame) -> DataFrame:
+        """Checkpoint the docs whose ``doc_id`` is not in ``ids``."""
+        return self.checkpoint(stage, docs.join(ids, "doc_id", "left_anti"))
+
+    def release(self) -> None:
+        if self.prev is not None:
+            self.prev.unpersist()
+
+
+def _with_ntok(df: DataFrame) -> DataFrame:
+    """(Re)derive the audit column — at entry, and after any stage that
+    rewrites text (span dedup, PII scrub), so the audit sums stay
+    bit-identical to tokenizing the stage's actual text."""
+    return df.withColumn("__ntok", tx.token_count("text").cast("bigint"))
+
+
+def _url_firsts(docs: DataFrame, url_col: str) -> tuple[DataFrame, DataFrame]:
+    """Within-set canonical-URL dedup: (the min-id doc per canonical URL,
+    the docs with a NULL url), both carrying the canonical URL as
+    ``_curl``.  NULL urls carry no URL evidence and pass through
+    (mixed-source crawls routinely lack URLs; grouping them would
+    collapse every url-less doc into one arbitrary survivor) — the
+    content stages downstream still dedup them."""
+    curled = docs.withColumn("_curl", tx.canonical_url(F.col(url_col)))
+    keep = (
+        curled.filter(F.col("_curl").isNotNull())
+        .groupBy("_curl")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    return (
+        curled.join(keep.select("doc_id"), "doc_id", "left_semi"),
+        curled.filter(F.col("_curl").isNull()),
+    )
+
+
+def _url_hashes(docs: DataFrame, url_col: str) -> DataFrame:
+    """(doc_id, ufp): the 8-byte xxhash64 of each doc's canonical URL —
+    the ``urls`` probe table.  NULL urls are EXCLUDED before hashing:
+    xxhash64(NULL) is the seed CONSTANT, not NULL, so one stored null-url
+    row would anti-join away every future null-url batch doc."""
+    return docs.select(
+        F.col("doc_id"), tx.canonical_url(F.col(url_col)).alias("_cu")
+    ).filter(F.col("_cu").isNotNull()).select(
+        F.col("doc_id"), F.xxhash64("_cu").alias("ufp")
+    )
+
+
+def _contaminated(docs: DataFrame, bench: DataFrame, threshold: float):
+    """ids of docs containing too much of an eval item (asymmetric
+    containment, eval side broadcast)."""
+    return dd.containment_pairs(
+        docs, bench, k=_DEDUP_LSH["k"], threshold=threshold
+    ).select(F.col("train_id").alias("doc_id")).distinct()
+
+
+def _rule_quality_keep(
+    docs: DataFrame, min_tokens: int, max_stopword_ratio: float
+) -> DataFrame:
+    """ids inside the token-stat bands that pass the repetition gates
+    (fused extractor: one tokenizer pass)."""
+    return tx.rule_quality_features(docs).filter(
+        (F.col("n_tokens") >= min_tokens)
+        & (F.col("stopword_ratio") <= max_stopword_ratio)
+        & F.col("repetition_keep")
+    ).select("doc_id")
+
+
+def _surprisal_keep(scored: DataFrame, max_surprisal_bits: float):
+    """ids whose mean per-bigram surprisal is at most the ceiling."""
+    return scored.filter(
+        F.col("mean_bits") <= F.lit(float(max_surprisal_bits))
+    ).select("doc_id")
+
+
+def _dsir_keep(scored: DataFrame, dsir_min_bits: float) -> DataFrame:
+    """ids whose MEAN per-feature DSIR weight (the summed weight is in
+    units of 2^-20 bits) clears the threshold."""
+    return scored.filter(
+        (F.col("logw_q20").cast("double") / F.col("n_feats") / F.lit(1048576.0))
+        >= F.lit(float(dsir_min_bits))
+    ).select("doc_id")
+
+
+def _pairs_within(
+    docs: DataFrame,
+    threshold: float,
+    near_dedup: str,
+    lsh_mode: str | None = None,
+    max_bucket: int | None = None,
+    buckets: DataFrame | None = None,
+) -> DataFrame:
+    """Verified near-dup pairs ``(id_a < id_b)`` inside one doc set:
+    the prefix-filtered SSJoin under ``near_dedup="exact"`` (identical to
+    exhaustive all-pairs Jaccard), else LSH candidates in ``lsh_mode``
+    (over ``buckets`` when the caller already built the bucket table)
+    verified with exact Jaccard."""
+    if near_dedup == "exact":
+        return dd.ngram_jaccard_pairs(
+            docs, k=_DEDUP_LSH["k"], threshold=threshold, prefix_filter=True
+        )
+    cands = dd.minhash_lsh_candidates(
+        docs, **_DEDUP_LSH, mode=lsh_mode, max_bucket=max_bucket,
+        buckets=buckets,
+    )
+    return dd.ngram_jaccard_pairs(
+        docs, k=_DEDUP_LSH["k"], threshold=threshold, candidates=cands
+    )
+
+
+def _pairs_against_corpus(
+    docs: DataFrame,
+    corpus: DataFrame,
+    threshold: float,
+    near_dedup: str,
+    dataset_dir: str,
+    have_pindex: bool,
+    max_bucket: int | None,
+    buckets: DataFrame | None,
+) -> DataFrame:
+    """Verified near-dup pairs ``(batch id_a, corpus id_b)``, each an
+    asymmetric join whose per-batch cost follows the batch.  Exact
+    family: the prefix join SERVED from the persisted ``_pindex``
+    artifact when present, derived from the corpus otherwise (a
+    ``write_dedup_artifact=False`` dataset).  LSH family: the corpus
+    side is the precomputed bucket artifact when present, and only
+    corpus docs that appear as candidates get shingled for the verify;
+    ``buckets`` is the batch's bucket table."""
+    if near_dedup == "exact":
+        if have_pindex:
+            return dd.ngram_jaccard_join(
+                docs, k=_DEDUP_LSH["k"], threshold=threshold,
+                corpus_index=_pindex_dir(dataset_dir),
+            )
+        return dd.ngram_jaccard_join(
+            docs, corpus.select("doc_id", "text"),
+            k=_DEDUP_LSH["k"], threshold=threshold,
+        )
+    import os
+
+    art_buckets = f"{_dedup_artifact_dir(dataset_dir)}/buckets"
+    cands = dd.minhash_lsh_join(
+        docs, corpus, **_DEDUP_LSH,
+        corpus_buckets=(
+            corpus.sparkSession.read.parquet(art_buckets)
+            if os.path.exists(art_buckets)
+            else None
+        ),
+        # re-apply a recorded cap at probe time: appends cap within
+        # their batch, so the UNION of capped writes can exceed the cap
+        # per bucket between compactions — re-ranking near-capped
+        # buckets is cheap and restores the O(cap) probe bound
+        max_bucket=max_bucket,
+        new_buckets=buckets,
+    )
+    corpus_needed = corpus.select("doc_id", "text").join(
+        cands.select(F.col("id_b").alias("doc_id")).distinct(),
+        "doc_id",
+        "left_semi",
+    )
+    return dd.ngram_jaccard_pairs(
+        docs.select("doc_id", "text").unionByName(corpus_needed),
+        k=_DEDUP_LSH["k"], threshold=threshold, candidates=cands,
+    )
+
+
+def _components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(id, component) over ``docs`` with ``pairs`` as the edges."""
+    from planet_dump_ng_spark.operators.graph import connected_components
+
+    return connected_components(
+        docs.select(F.col("doc_id").alias("id")),
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+    )
+
+
+def _print_attrition(report: CurationReport) -> None:
+    toks = dict(report.tokens)
+    for stage, n in report.stages:
+        t = f" tokens={toks[stage]}" if stage in toks else ""
+        print(f"{stage:16s} {n}{t}")
+
+
 def curate(
     docs: DataFrame,
     out_dir: str,
@@ -563,119 +951,32 @@ def curate(
     corpus re-canonicalization per batch), and the column name is
     recorded with the usual inherit-or-refuse discipline.
     """
-    if near_dedup not in ("lsh", "exact"):
-        raise ValueError(
-            f"near_dedup must be 'lsh' or 'exact', got {near_dedup!r}"
-        )
-    if near_dedup == "exact":
-        if lsh_mode is not None:
-            raise ValueError(
-                f"lsh_mode={lsh_mode!r} with near_dedup='exact': the "
-                "exact family runs no banding, so a concrete emission "
-                "mode cannot take effect — omit lsh_mode (silently "
-                "discarding it would let a caller believe a policy was "
-                "applied that never ran)"
-            )
-    elif lsh_mode is None:
+    _check_family(near_dedup, lsh_mode, ("pairs", "star", "auto"))
+    if near_dedup == "lsh" and lsh_mode is None:
         lsh_mode = "star"
-    elif lsh_mode not in ("pairs", "star", "auto"):
-        raise ValueError(
-            f"lsh_mode must be 'pairs', 'star' or 'auto', got {lsh_mode!r}"
-        )
     if dsir_min_bits is not None and dsir_target is None:
         raise ValueError(
             "dsir_min_bits without dsir_target: no model would be "
             "trained, so no gate would run — pass dsir_target to "
             "enable the DSIR domain gate"
         )
-    import time as _time
-
     report = CurationReport()
-    _t_last = _time.perf_counter()
-
-    def _tick(phase: str) -> None:
-        # wall seconds per stage (the stage checkpoints are the actions,
-        # so the boundaries attribute real work) — report.phase_s turns
-        # "curation got slower" into "the near-dedup stage got slower"
-        nonlocal _t_last
-        now = _time.perf_counter()
-        report.phase_s[phase] = round(
-            report.phase_s.get(phase, 0.0) + (now - _t_last), 3
-        )
-        _t_last = now
-
-    def _counts(df: DataFrame) -> tuple[int, int]:
-        # one aggregate pass gives both audit columns (docs, tokens);
-        # stages carry the per-doc token count as the hidden __ntok
-        # column (recomputed only where the TEXT itself changes), so
-        # every post-raw audit sums a cached long column instead of
-        # re-running the regex tokenizer over the full surviving corpus
-        # — at 100 TB the old shape re-tokenized everything once per
-        # stage boundary purely for the attrition report
-        tok = (
-            F.col("__ntok")
-            if "__ntok" in df.columns
-            else tx.token_count("text").cast("bigint")
-        )
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(tok).cast("bigint").alias("t"),
-        ).first()
-        return row["n"], row["t"] or 0
-
-    def _retok(df: DataFrame) -> DataFrame:
-        # (re)derive the audit column — at entry, and after any stage
-        # that rewrites text (span dedup, PII scrub), so the audit sums
-        # stay bit-identical to tokenizing the stage's actual text
-        return df.withColumn(
-            "__ntok", tx.token_count("text").cast("bigint")
-        )
-
-    docs = _retok(docs)
-    report.log("raw", *_counts(docs))
-    _tick("raw")
-
-    # Stage checkpointing: each filtering stage persists its survivor set,
-    # counts it for the attrition audit FROM THE CACHE, and releases the
-    # previous stage's cache.  Without this, every stage's count() — and
-    # the final materialization — recomputes the whole upstream chain
-    # (dedup joins included), making the pipeline O(stages^2) work; with
-    # it each stage runs once (measured ~2x end-to-end at sf0.1).
-    prev: DataFrame | None = None
-
-    def checkpoint(stage: str, df: DataFrame) -> DataFrame:
-        nonlocal prev
-        df = df.persist()
-        report.log(stage, *_counts(df))
-        if prev is not None:
-            prev.unpersist()
-        prev = df
-        _tick(stage)
-        return df
+    log = _StageLog(report, audit_tokens=True)
+    docs = _with_ntok(docs)
+    report.log("raw", *log.counts(docs))
+    log.tick("raw")
 
     # 0. optional canonical-URL dedup, FIRST: strictly cheaper than any
     # content stage (regexp/array ops on the URL string, one 8-byte-key
     # group), and removing re-crawls up front shrinks everything after.
-    # NULL urls carry no URL evidence and PASS THROUGH untouched
-    # (mixed-source crawls routinely lack URLs; grouping them would
-    # collapse every url-less doc into one arbitrary survivor) — the
-    # content stages downstream still dedup them.
     if url_col is not None:
-        curled = docs.withColumn("_curl", tx.canonical_url(F.col(url_col)))
-        keep_url = (
-            curled.filter(F.col("_curl").isNotNull())
-            .groupBy("_curl")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
-        docs = checkpoint(
-            "url_dedup",
-            curled.join(keep_url.select("doc_id"), "doc_id", "left_semi")
-            .unionByName(curled.filter(F.col("_curl").isNull()))
-            .drop("_curl"),
+        firsts, no_url = _url_firsts(docs, url_col)
+        docs = log.checkpoint(
+            "url_dedup", firsts.unionByName(no_url).drop("_curl")
         )
 
     # 1. exact dedup: keep the first occurrence per canonical fingerprint
-    docs = checkpoint("exact_dedup", dd.dedup_keep_first(docs))
+    docs = log.checkpoint("exact_dedup", dd.dedup_keep_first(docs))
 
     # 1b. optional C4-style span dedup: REWRITE each doc to only the
     # spans whose first corpus-wide occurrence it owns (repeated
@@ -683,9 +984,11 @@ def curate(
     # empty drop.  Runs before near-dedup so boilerplate mass can no
     # longer vote two otherwise-distinct pages into near-duplicates.
     if span_dedup_tokens is not None:
-        docs = checkpoint(
+        docs = log.checkpoint(
             "span_dedup",
-            _retok(dd.span_dedup_rewrite(docs, span_tokens=span_dedup_tokens)),
+            _with_ntok(
+                dd.span_dedup_rewrite(docs, span_tokens=span_dedup_tokens)
+            ),
         )
 
     # 2. near-dup removal: the larger doc id of every verified pair
@@ -708,24 +1011,14 @@ def curate(
         )
         lsh_mode = "pairs" if widest <= auto_star_width else "star"
         report.lsh_auto_widest = int(widest)
-        _tick("lsh_auto_probe")
+        log.tick("lsh_auto_probe")
     report.lsh_mode_resolved = lsh_mode
-    if near_dedup == "exact":
-        pairs = dd.ngram_jaccard_pairs(
-            docs, k=_DEDUP_LSH["k"], threshold=jaccard_threshold,
-            prefix_filter=True,
-        )
-    else:
-        cands = dd.minhash_lsh_candidates(
-            docs, **_DEDUP_LSH, mode=lsh_mode, max_bucket=max_bucket,
-            buckets=bkts,
-        )
-        pairs = dd.ngram_jaccard_pairs(
-            docs, k=_DEDUP_LSH["k"], threshold=jaccard_threshold,
-            candidates=cands,
-        )
-    losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    docs = checkpoint("near_dedup", docs.join(losers, "doc_id", "left_anti"))
+    pairs = _pairs_within(
+        docs, jaccard_threshold, near_dedup, lsh_mode, max_bucket, bkts
+    )
+    docs = log.drop(
+        "near_dedup", docs, pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    )
 
     # 2b. optional semantic dedup (SemDeDup): embeddings keyed by doc_id
     # cluster under the IVF coarse quantizer; inside a cell, any doc with
@@ -754,31 +1047,27 @@ def curate(
                 F.col("vec_id").alias("doc_id")
             )
             docs = docs.join(drop_ids, "doc_id", "left_anti")
-        docs = checkpoint("semantic_dedup", docs)
+        docs = log.checkpoint("semantic_dedup", docs)
 
     # 3. decontamination: drop any training doc containing too much of an
-    # eval item (asymmetric containment, eval side broadcast)
+    # eval item
     if bench is not None:
-        dirty = dd.containment_pairs(
-            docs, bench, k=_DEDUP_LSH["k"], threshold=containment_threshold
-        ).select(F.col("train_id").alias("doc_id")).distinct()
-        docs = checkpoint("decontaminated", docs.join(dirty, "doc_id", "left_anti"))
+        docs = log.drop(
+            "decontaminated", docs,
+            _contaminated(docs, bench, containment_threshold),
+        )
 
     # 4. PII scrub: a text TRANSFORM (no rows drop) — masks applied
     # before any text leaves the pipeline
     if scrub_pii:
-        docs = _retok(docs.withColumn("text", tx.scrub_pii("text")))
+        docs = _with_ntok(docs.withColumn("text", tx.scrub_pii("text")))
 
     # 5. quality filter: token-stat bands + repetition gates, one
-    # combined map stage feeding a single semi join (fused extractor:
-    # one tokenizer pass instead of the composition's two)
-    feats = tx.rule_quality_features(docs)
-    keep = feats.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
-        & F.col("repetition_keep")
-    ).select("doc_id")
-    docs = checkpoint("quality", docs.join(keep, "doc_id", "left_semi"))
+    # combined map stage feeding a single semi join
+    docs = log.keep(
+        "quality", docs,
+        _rule_quality_keep(docs, min_tokens, max_stopword_ratio),
+    )
 
     # 5b. optional learned quality gate: the weighted linear classifier
     # (operators.text.linear_quality_score) ON TOP of the rule bands —
@@ -786,15 +1075,11 @@ def curate(
     # docs keep iff margin > classifier_margin.  Map-only + one semi join.
     if classifier_margin is not None:
         scored = tx.linear_quality_score(docs)
-        docs = checkpoint(
-            "classifier",
-            docs.join(
-                scored.filter(
-                    F.col("quality_margin") > F.lit(float(classifier_margin))
-                ).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            ),
+        docs = log.keep(
+            "classifier", docs,
+            scored.filter(
+                F.col("quality_margin") > F.lit(float(classifier_margin))
+            ).select("doc_id"),
         )
 
     # 5b2. optional LM-surprisal quality gate (CCNet-style,
@@ -810,11 +1095,8 @@ def curate(
         from planet_dump_ng_spark.operators import lm as blm
 
         _, sc = blm.bigram_lm_train_and_score(docs, _lm_model_dir(out_dir))
-        keep_ids = sc.filter(
-            F.col("mean_bits") <= F.lit(float(max_surprisal_bits))
-        ).select("doc_id")
-        docs = checkpoint(
-            "surprisal_gate", docs.join(keep_ids, "doc_id", "left_semi")
+        docs = log.keep(
+            "surprisal_gate", docs, _surprisal_keep(sc, max_surprisal_bits)
         )
 
     # 5c. optional DSIR domain gate (operators.dsir): train the hashed
@@ -827,6 +1109,7 @@ def curate(
     # ship, before mixing so mix weights act on domain-matched docs.
     # Docs that emit no scored feature (nothing the model ever saw)
     # carry no domain evidence and drop.
+    tgt_desc = None
     if dsir_target is not None:
         from planet_dump_ng_spark.operators import dsir as dsr
 
@@ -838,28 +1121,17 @@ def curate(
         tgt_desc = (
             dsir_target if isinstance(dsir_target, str) else "custom-predicate"
         )
-        model_dir = _dsir_model_dir(out_dir)
         # one feature scan trains the model, persists it AND scores the
         # corpus (dsir_train_and_score shares the materialized feature
         # table) — the gate must not pay the tokenize+explode pass twice
         _, w = dsr.dsir_train_and_score(
-            docs, tgt, model_dir, target_desc=tgt_desc
+            docs, tgt, _dsir_model_dir(out_dir), target_desc=tgt_desc
         )
-        keep_ids = w.filter(
-            (
-                F.col("logw_q20").cast("double")
-                / F.col("n_feats")
-                / F.lit(1048576.0)
-            )
-            >= F.lit(float(dsir_min_bits))
-        ).select("doc_id")
-        docs = checkpoint(
-            "dsir_gate", docs.join(keep_ids, "doc_id", "left_semi")
-        )
+        docs = log.keep("dsir_gate", docs, _dsir_keep(w, dsir_min_bits))
 
     # 6. optional dataset mixing: per-source keep fractions
     if mix_weights:
-        docs = checkpoint(
+        docs = log.checkpoint(
             "mixed",
             weighted_mix(docs, "doc_id", "source", mix_weights).drop("bucket"),
         )
@@ -870,7 +1142,7 @@ def curate(
     if lang_temperature is not None:
         from planet_dump_ng_spark.operators.sampling import temperature_resample
 
-        docs = checkpoint(
+        docs = log.checkpoint(
             "lang_tempered",
             temperature_resample(
                 docs, "doc_id", "lang", alpha=lang_temperature
@@ -890,7 +1162,7 @@ def curate(
         # at every text rewrite), so the tempering score reuses it
         # instead of tokenizing the corpus again
         scored = docs.withColumn("_qt_score", F.col("__ntok"))
-        docs = checkpoint(
+        docs = log.checkpoint(
             "quality_tempered",
             quality_weighted_sample(
                 scored, "_qt_score", "doc_id", quotas=tuple(quality_temper)
@@ -916,7 +1188,7 @@ def curate(
         kept = select_token_budget(
             g, "_tb_bin", "_tb_tok", "doc_id", token_budget
         )
-        docs = checkpoint("token_budget", kept.select(*docs.columns))
+        docs = log.checkpoint("token_budget", kept.select(*docs.columns))
 
     # the audit column never leaves the pipeline: the materialized
     # splits and every artifact below see exactly the pre-round-10
@@ -940,29 +1212,14 @@ def curate(
     # doc id, so surviving docs that are still similar (the band between
     # split_jaccard and the dedup threshold) can never straddle
     # train/test — the eval-contamination channel a row-level split
-    # leaves open.  Reuses the LSH+components machinery on the survivors.
+    # leaves open.  Reuses the LSH+components machinery on the survivors;
+    # under exact mode the component edges are exhaustive, so the leakage
+    # guarantee has no star-emission recall caveat.
     if leakage_free:
-        from planet_dump_ng_spark.operators.graph import connected_components
-
-        if near_dedup == "exact":
-            # exhaustive component edges: under exact mode the leakage
-            # guarantee has no star-emission recall caveat
-            pairs2 = dd.ngram_jaccard_pairs(
-                docs, k=_DEDUP_LSH["k"], threshold=split_jaccard,
-                prefix_filter=True,
-            )
-        else:
-            cands2 = dd.minhash_lsh_candidates(
-                docs, **_DEDUP_LSH, mode=lsh_mode, max_bucket=max_bucket
-            )
-            pairs2 = dd.ngram_jaccard_pairs(
-                docs, k=_DEDUP_LSH["k"], threshold=split_jaccard,
-                candidates=cands2,
-            )
-        comp = connected_components(
-            docs.select(F.col("doc_id").alias("id")),
-            pairs2.select(
-                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        comp = _components(
+            docs,
+            _pairs_within(
+                docs, split_jaccard, near_dedup, lsh_mode, max_bucket
             ),
         )
         docs = docs.join(
@@ -980,7 +1237,7 @@ def curate(
         )
     else:
         manifest = materialize_splits(docs, out_dir, "doc_id", fractions)
-    _tick("materialize")
+    log.tick("materialize")
 
     # 8. optional packing manifest over the materialized train split:
     # global token offsets in deterministic order, written beside the
@@ -994,48 +1251,28 @@ def curate(
             capacity=pack_capacity,
         )
         packed.write.mode("overwrite").parquet(f"{out_dir.rstrip('/')}_pack")
-        _tick("pack")
+        log.tick("pack")
     # dedup artifact beside the dataset: what curate_increment probes.
-    # The header also records the SPLIT parameters: the xxhash split
-    # gate is content-stable only if increments use the same fraction
-    # boundaries (and leakage discipline), so curate_increment defaults
-    # from — and validates against — this record.
+    # The header also records the curation policies (_POLICIES): the
+    # xxhash split gate is content-stable only if increments use the
+    # same fraction boundaries (and leakage discipline), and the dedup
+    # thresholds and gates are the dataset's guarantee ("no pair >=
+    # jaccard_threshold survives"), so curate_increment defaults from —
+    # and validates against — this record.
     if write_dedup_artifact:
-        extra_meta = {
-            "fractions": fractions
-            or {"train": 0.8, "val": 0.1, "test": 0.1},
+        record = _curation_record({
+            "fractions": fractions or {"train": 0.8, "val": 0.1, "test": 0.1},
             "leakage_free": leakage_free,
             "near_dedup": near_dedup,
-            # the dedup thresholds are part of the dataset's guarantee
-            # ("no pair >= jaccard_threshold survives"; leakage_free
-            # adds "no pair >= split_jaccard straddles splits") — an
-            # increment running at a DIFFERENT threshold would weaken
-            # that guarantee mid-dataset, so record them for the same
-            # inherit-or-refuse defaulting as every policy above.
-            # split_jaccard is recorded only when leakage_free: it has
-            # no effect otherwise, and recording an inert default would
-            # make a later leakage-free restatement refusable for no
-            # reason.
-            "jaccard_threshold": float(jaccard_threshold),
-        }
-        if leakage_free:
-            extra_meta["split_jaccard"] = float(split_jaccard)
-        if lsh_mode is not None:  # exact mode ran no banding
-            extra_meta["lsh_mode"] = lsh_mode
-        if max_bucket is not None:
-            extra_meta["max_bucket"] = max_bucket
-        if dsir_target is not None:
-            # the gate is part of the dataset's curation contract:
-            # increments must apply the SAME frozen model at the SAME
-            # threshold (inherit-or-refuse, like every policy above)
-            extra_meta["dsir_min_bits"] = float(dsir_min_bits)
-            extra_meta["dsir_target_desc"] = tgt_desc
-        if max_surprisal_bits is not None:
-            # same contract as the DSIR gate: increments must score
-            # under the frozen model at the recorded ceiling
-            extra_meta["max_surprisal_bits"] = float(max_surprisal_bits)
-        if url_col is not None:
-            extra_meta["url_col"] = url_col
+            "lsh_mode": lsh_mode,
+            "jaccard_threshold": jaccard_threshold,
+            "split_jaccard": split_jaccard,
+            "max_bucket": max_bucket,
+            "dsir_min_bits": dsir_min_bits,
+            "dsir_target_desc": tgt_desc,
+            "max_surprisal_bits": max_surprisal_bits,
+            "url_col": url_col,
+        })
         pindex_task = None
         if near_dedup == "exact":
             # the exact twin of the LSH bucket artifact: every increment
@@ -1057,14 +1294,13 @@ def curate(
                     ),
                 )
         _write_dedup_artifact(
-            docs, out_dir, extra_meta=extra_meta, max_bucket=max_bucket,
+            docs, out_dir, extra_meta=record, max_bucket=max_bucket,
             include_buckets=(near_dedup != "exact"),
             url_col=url_col,
             concurrent_extra=pindex_task,
         )
-        _tick("dedup_artifact")
-    if prev is not None:  # the dataset is on disk; release the last cache
-        prev.unpersist()
+        log.tick("dedup_artifact")
+    log.release()  # the dataset is on disk; release the last cache
     return manifest, report
 
 
@@ -1150,54 +1386,13 @@ def curate_increment(
     per-batch ingest cost, while the doc counts (cache-side
     ``count()``) carry the attrition audit for free.
     """
-    import time as _time
+    passed = dict(locals())  # the policy arguments carry the record's names
+    import os
 
     spark = new_docs.sparkSession
     corpus = spark.read.parquet(dataset_dir)
     report = CurationReport()
-    _t_last = _time.perf_counter()
-
-    def _tick(phase: str) -> None:
-        nonlocal _t_last
-        now = _time.perf_counter()
-        report.phase_s[phase] = round(
-            report.phase_s.get(phase, 0.0) + (now - _t_last), 3
-        )
-        _t_last = now
-
-    recorded = _read_dedup_meta(_dedup_artifact_dir(dataset_dir))
-    if fractions is None:
-        fractions = recorded.get("fractions")
-    elif (
-        recorded.get("fractions") is not None
-        and recorded["fractions"] != fractions
-    ):
-        raise ValueError(
-            f"increment fractions {fractions} contradict the dataset's "
-            f"recorded curation fractions {recorded['fractions']} — the "
-            "content-stable split gate only holds when the boundaries "
-            "match; omit fractions to inherit the recorded ones"
-        )
-    # known-ness BEFORE defaulting: the artifact record written at the
-    # end must carry only values that were actually passed or recorded —
-    # a pre-header dataset (curated before parameters were recorded)
-    # whose increment runs on defaults must NOT have those defaults
-    # enshrined as "the curation record", or a later increment passing
-    # the dataset's true custom fractions would be rejected against a
-    # fabricated one
-    _lf_known = leakage_free is not None or "leakage_free" in recorded
-    if leakage_free is None:
-        leakage_free = bool(recorded.get("leakage_free", False))
-    elif (
-        recorded.get("leakage_free") is not None
-        and bool(recorded["leakage_free"]) != leakage_free
-    ):
-        raise ValueError(
-            f"leakage_free={leakage_free} contradicts the dataset's "
-            f"recorded leakage_free={recorded['leakage_free']} — a "
-            "dataset curated one way cannot take increments split the "
-            "other way; omit the flag to inherit the recorded policy"
-        )
+    log = _StageLog(report, audit_tokens)
     if lsh_mode == "auto":
         raise ValueError(
             "lsh_mode='auto' resolves at curate() time (the probe ran "
@@ -1205,186 +1400,33 @@ def curate_increment(
             "header); increments inherit the recorded concrete mode — "
             "omit the flag"
         )
-    _lsh_explicit = lsh_mode is not None
-    if lsh_mode is None:
-        lsh_mode = recorded.get("lsh_mode", "pairs")
-    elif (
-        recorded.get("lsh_mode") is not None
-        and recorded["lsh_mode"] != lsh_mode
-    ):
-        raise ValueError(
-            f"lsh_mode={lsh_mode!r} contradicts the dataset's recorded "
-            f"lsh_mode={recorded['lsh_mode']!r} — appends never rewrite "
-            "meta.json, so accepting this would leave the header "
-            "misdescribing how increments were actually self-deduped; "
-            "omit the flag to inherit the recorded mode"
-        )
-    if lsh_mode not in ("pairs", "star"):
-        raise ValueError(f"lsh_mode must be 'pairs' or 'star', got {lsh_mode!r}")
-    if near_dedup is None:
-        near_dedup = recorded.get("near_dedup", "lsh")
-    elif (
-        recorded.get("near_dedup") is not None
-        and recorded["near_dedup"] != near_dedup
-    ):
-        raise ValueError(
-            f"near_dedup={near_dedup!r} contradicts the dataset's recorded "
-            f"near_dedup={recorded['near_dedup']!r} — a dataset deduped "
-            "under one detection family cannot take increments deduped "
-            "under the other (the dedup guarantee would silently change "
-            "mid-dataset); omit the flag to inherit the recorded family"
-        )
-    if near_dedup not in ("lsh", "exact"):
-        raise ValueError(
-            f"near_dedup must be 'lsh' or 'exact', got {near_dedup!r}"
-        )
-    if near_dedup == "exact" and _lsh_explicit:
-        # exact datasets record no lsh_mode, so the contradiction check
-        # above never fires for them — refuse the same contradictory
-        # pair curate() refuses, instead of silently discarding a mode
-        # the caller believes was applied
-        raise ValueError(
-            f"lsh_mode={lsh_mode!r} with a near_dedup='exact' dataset: "
-            "the exact family runs no banding, so the mode cannot take "
-            "effect — omit the flag"
-        )
-    # dedup thresholds inherit-or-refuse, same as every policy above:
-    # the dataset's "no pair >= t survives" guarantee is only as strong
-    # as its weakest increment, and the _pindex floor check catches
-    # only a LOWER probe threshold — a silently-raised one would
-    # weaken the exactness guarantee mid-dataset with no error at all.
-    _jt_known = (
-        jaccard_threshold is not None or "jaccard_threshold" in recorded
-    )
-    if jaccard_threshold is None:
-        jaccard_threshold = float(recorded.get("jaccard_threshold", 0.8))
-    elif "jaccard_threshold" in recorded and float(
-        recorded["jaccard_threshold"]
-    ) != float(jaccard_threshold):
-        raise ValueError(
-            f"jaccard_threshold={jaccard_threshold} contradicts the "
-            f"dataset's recorded jaccard_threshold="
-            f"{recorded['jaccard_threshold']} — increments deduped at a "
-            "different threshold would silently change the dataset's "
-            "near-dup guarantee mid-dataset; omit the argument to "
-            "inherit the recorded one"
-        )
-    _sj_known = split_jaccard is not None or "split_jaccard" in recorded
-    if split_jaccard is None:
-        split_jaccard = float(recorded.get("split_jaccard", 0.3))
-    elif "split_jaccard" in recorded and float(
-        recorded["split_jaccard"]
-    ) != float(split_jaccard):
-        raise ValueError(
-            f"split_jaccard={split_jaccard} contradicts the dataset's "
-            f"recorded split_jaccard={recorded['split_jaccard']} — the "
-            "leakage-free guarantee ('no pair >= split_jaccard "
-            "straddles splits') holds at ONE similarity level; omit "
-            "the argument to inherit the recorded one"
-        )
-    if max_bucket is None:
-        max_bucket = recorded.get("max_bucket")
-    elif (
-        recorded.get("max_bucket") is not None
-        and recorded["max_bucket"] != max_bucket
-    ):
-        raise ValueError(
-            f"max_bucket={max_bucket} contradicts the dataset's recorded "
-            f"max_bucket={recorded['max_bucket']} — the persisted bucket "
-            "artifact was capped at build time with the recorded value; "
-            "omit the argument to inherit it"
-        )
-    # DSIR gate: an increment can never TRAIN a model (the domain
-    # definition must not drift batch by batch) — it applies the frozen
-    # one curate() persisted, at the recorded threshold.
-    _dsir_known = "dsir_min_bits" in recorded
-    if dsir_min_bits is None:
-        dsir_min_bits = recorded.get("dsir_min_bits")
-    elif not _dsir_known:
-        raise ValueError(
-            "dsir_min_bits passed but the dataset records no DSIR gate "
-            "— there is no frozen model to score under; train one at "
-            "curate() time with dsir_target"
-        )
-    elif recorded["dsir_min_bits"] != dsir_min_bits:
-        raise ValueError(
-            f"dsir_min_bits={dsir_min_bits} contradicts the dataset's "
-            f"recorded dsir_min_bits={recorded['dsir_min_bits']} — the "
-            "gate threshold is part of the curation contract; omit the "
-            "argument to inherit it"
-        )
-    # LM-surprisal gate: same frozen-model discipline — an increment
-    # can never retrain the fluency definition, only apply it.
-    _ms_known = "max_surprisal_bits" in recorded
-    if max_surprisal_bits is None:
-        max_surprisal_bits = recorded.get("max_surprisal_bits")
-    elif not _ms_known:
-        raise ValueError(
-            "max_surprisal_bits passed but the dataset records no "
-            "surprisal gate — there is no frozen bigram LM to score "
-            "under; enable the gate at curate() time"
-        )
-    elif recorded["max_surprisal_bits"] != max_surprisal_bits:
-        raise ValueError(
-            f"max_surprisal_bits={max_surprisal_bits} contradicts the "
-            f"dataset's recorded max_surprisal_bits="
-            f"{recorded['max_surprisal_bits']} — the gate ceiling is "
-            "part of the curation contract; omit the argument to "
-            "inherit it"
-        )
-    # canonical-URL dedup stage: inherit the recorded column (the
-    # standing corpus was URL-deduped against it, so batches must be
-    # too), refuse a contradiction or an unrecorded enablement.
-    _url_known = "url_col" in recorded
-    if url_col is None:
-        url_col = recorded.get("url_col")
-    elif not _url_known:
-        raise ValueError(
-            "url_col passed but the dataset records no URL-dedup stage "
-            "— the standing docs were never URL-deduped, so the "
-            "guarantee would start mid-dataset; enable it at curate() "
-            "time"
-        )
-    elif recorded["url_col"] != url_col:
-        raise ValueError(
-            f"url_col={url_col!r} contradicts the dataset's recorded "
-            f"url_col={recorded['url_col']!r} — omit the argument to "
-            "inherit the recorded column"
-        )
+    art = _dedup_artifact_dir(dataset_dir)
+    recorded = _read_dedup_meta(art)
+    # the DSIR and surprisal gates apply the FROZEN models curate()
+    # persisted at the recorded thresholds — an increment can never
+    # retrain a gate (the domain and fluency definitions must not drift
+    # batch by batch); the dedup thresholds are only as strong as the
+    # weakest increment, and the _pindex floor check catches only a
+    # LOWER probe threshold
+    policy, known = _resolve_policies(passed, recorded)
+    # exact datasets record no lsh_mode, so no contradiction fires for
+    # them: refuse the contradictory pair curate() refuses
+    _check_family(policy["near_dedup"], lsh_mode, ("pairs", "star"))
+    (
+        fractions, leakage_free, near_dedup, lsh_mode, jaccard_threshold,
+        split_jaccard, max_bucket, dsir_min_bits, max_surprisal_bits,
+        url_col,
+    ) = (policy[k] for k in (
+        "fractions", "leakage_free", "near_dedup", "lsh_mode",
+        "jaccard_threshold", "split_jaccard", "max_bucket", "dsir_min_bits",
+        "max_surprisal_bits", "url_col",
+    ))
+    lsh_family = near_dedup != "exact"
+    # the _pindex threshold: the lowest one an increment probes
+    pindex_floor = split_jaccard if leakage_free else jaccard_threshold
 
-    def _counts(df: DataFrame) -> tuple[int, int | None]:
-        if not audit_tokens:
-            # the doc count comes off the stage cache for free; the
-            # token column would re-scan every text per checkpoint
-            return df.count(), None
-        # post-raw stages carry the batch token counts as the hidden
-        # __ntok column (the curate() audit discipline), so the opt-in
-        # token audit sums a cached long instead of re-tokenizing the
-        # batch per checkpoint
-        tok = (
-            F.col("__ntok")
-            if "__ntok" in df.columns
-            else tx.token_count("text").cast("bigint")
-        )
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(tok).cast("bigint").alias("t"),
-        ).first()
-        return row["n"], row["t"] or 0
-
-    report.log("raw", *_counts(new_docs))
-    _tick("setup")
-    prev: DataFrame | None = None
-
-    def checkpoint(stage: str, df: DataFrame) -> DataFrame:
-        nonlocal prev
-        df = df.persist()
-        report.log(stage, *_counts(df))
-        if prev is not None:
-            prev.unpersist()
-        prev = df
-        _tick(stage)
-        return df
+    report.log("raw", *log.counts(new_docs))
+    log.tick("setup")
 
     # 1. idempotence + within-batch exact dedup: ids the dataset already
     # holds drop first (a redelivered batch is a no-op), then the batch
@@ -1402,19 +1444,14 @@ def curate_increment(
     if audit_tokens:
         # derive the audit column once, post-scrub (the text never
         # changes again in this path)
-        docs = docs.withColumn(
-            "__ntok", tx.token_count("text").cast("bigint")
-        )
-    docs = checkpoint("batch_exact", dd.dedup_keep_first(docs))
+        docs = _with_ntok(docs)
+    docs = log.checkpoint("batch_exact", dd.dedup_keep_first(docs))
 
     # 2. exact dedup vs the corpus: probe the fingerprint set — digests,
     # never text, cross the shuffle.  The persisted _dedup artifact
     # (written by curate(), extended by every increment) makes this a
     # read of precomputed digests; without it, fall back to one
     # corpus-sized derivation.
-    import os
-
-    art = _dedup_artifact_dir(dataset_dir)
     _check_dedup_meta(art)
     # exact-mode artifacts carry no buckets table (they probe _pindex),
     # so artifact presence is either probe table; the fingerprint
@@ -1438,7 +1475,6 @@ def curate_increment(
     # write a batch-only buckets table that every later probe trusts as
     # the corpus (and the next compact preamble would delete the real
     # one as .old debris)
-    lsh_family = near_dedup != "exact"
     probe_tables_ok = (
         os.path.exists(f"{art}/fingerprints")
         and (
@@ -1492,21 +1528,12 @@ def curate_increment(
                 corpus,
                 dataset_dir,
                 mode="overwrite",
-                extra_meta={
-                    k: recorded[k]
-                    for k in (
-                        "fractions", "leakage_free", "lsh_mode",
-                        "max_bucket", "dsir_min_bits", "dsir_target_desc",
-                        "near_dedup", "jaccard_threshold", "split_jaccard",
-                        "max_surprisal_bits", "url_col",
-                    )
-                    if k in recorded
-                },
+                extra_meta={k: recorded[k] for k in _POLICIES if k in recorded},
                 max_bucket=recorded.get("max_bucket"),
-                include_buckets=(near_dedup != "exact"),
+                include_buckets=lsh_family,
                 url_col=url_col,
             )
-        if near_dedup == "exact":
+        if not lsh_family:
             # the prefix index has its own crash windows (a kill inside
             # prefix_index_add leaves it headerless; one between the
             # dataset append and the add leaves it short) — same
@@ -1531,15 +1558,13 @@ def curate_increment(
                 # back to the call-time threshold (which, under the
                 # inherit-or-refuse defaulting above, is the recorded
                 # curation threshold anyway).
-                want = float(
-                    split_jaccard if leakage_free else jaccard_threshold
-                )
+                want = pindex_floor
                 if "threshold" in pmeta:
                     want = min(float(pmeta["threshold"]), want)
                 dd.write_prefix_index(
                     corpus, pind, k=_DEDUP_LSH["k"], threshold=want
                 )
-    _tick("stale_check")
+    log.tick("stale_check")
 
     # 2a. canonical-URL dedup (url_col datasets), cheapest probe first:
     # within-batch min-id per canonical URL, then anti-join the batch's
@@ -1547,37 +1572,19 @@ def curate_increment(
     # whenever the gate is recorded — the stale check above rebuilds a
     # missing one); the fallback derivation canonicalizes the corpus's
     # url column once (artifact-less write_dedup_artifact=False
-    # datasets only).
+    # datasets only).  NULL urls pass through both probes untouched.
     if url_col is not None:
-        # NULL urls pass through both probes untouched (no URL
-        # evidence; and xxhash64(NULL) is the seed constant, so hashing
-        # them would collide every null-url doc — the curate() stage
-        # documents the same rule)
-        curled = docs.withColumn("_curl", tx.canonical_url(F.col(url_col)))
-        keep_url = (
-            curled.filter(F.col("_curl").isNotNull())
-            .groupBy("_curl")
-            .agg(F.min("doc_id").alias("doc_id"))
-        )
+        firsts, no_url = _url_firsts(docs, url_col)
         corp_u = (
-            spark.read.parquet(f"{art}/urls").select(
-                F.col("ufp").alias("_ufp")
-            )
+            spark.read.parquet(f"{art}/urls")
             if os.path.exists(f"{art}/urls")
-            else corpus.select(
-                tx.canonical_url(F.col(url_col)).alias("_cu")
-            ).filter(F.col("_cu").isNotNull()).select(
-                F.xxhash64("_cu").alias("_ufp")
-            )
-        ).distinct()
-        docs = checkpoint(
+            else _url_hashes(corpus, url_col)
+        ).select(F.col("ufp").alias("_ufp")).distinct()
+        docs = log.checkpoint(
             "url_dedup",
-            curled.join(keep_url.select("doc_id"), "doc_id", "left_semi")
-            .withColumn("_ufp", F.xxhash64("_curl"))
+            firsts.withColumn("_ufp", F.xxhash64("_curl"))
             .join(corp_u, "_ufp", "left_anti")
-            .unionByName(curled.filter(F.col("_curl").isNull()).withColumn(
-                "_ufp", F.lit(None).cast("bigint")
-            ))
+            .unionByName(no_url.withColumn("_ufp", F.lit(None).cast("bigint")))
             .drop("_ufp", "_curl"),
         )
 
@@ -1588,7 +1595,7 @@ def curate_increment(
         if have_art
         else corpus.select(tx.fingerprint("text").alias("_fp"))
     ).distinct()
-    docs = checkpoint(
+    docs = log.checkpoint(
         "corpus_exact",
         docs.withColumn("_fp", tx.fingerprint("text"))
         .join(corp_fp, "_fp", "left_anti")
@@ -1597,111 +1604,52 @@ def curate_increment(
 
     # 3. near-dedup: within-batch self-dedup plus the asymmetric
     # batch-vs-corpus join, per the inherited detection family.
-    have_pindex = near_dedup == "exact" and os.path.exists(
-        f"{pind}/meta.json"
-    )
-    if near_dedup == "exact":
-        # exact family: prefix-filtered SSJoin within the batch, and the
-        # batch-vs-corpus prefix join SERVED from the persisted _pindex
-        # artifact when present (per-batch cost follows the batch's
-        # candidate fan-out, not a corpus rescan) — derive-from-corpus
-        # otherwise (a write_dedup_artifact=False dataset).
-        self_pairs = dd.ngram_jaccard_pairs(
-            docs, k=_DEDUP_LSH["k"], threshold=jaccard_threshold,
-            prefix_filter=True,
+    have_pindex = not lsh_family and os.path.exists(f"{pind}/meta.json")
+
+    def batch_buckets(docs: DataFrame) -> DataFrame | None:
+        # LSH family: ONE batch signature pass feeds both the
+        # within-batch self-join and the batch-vs-corpus probe
+        # (localCheckpoint, not persist — blocks release on GC, no
+        # CacheManager entry per ingest batch); at ingest scale the
+        # batch signature map is the dominant per-batch cost
+        if not lsh_family:
+            return None
+        return dd.lsh_buckets(docs, **_DEDUP_LSH).localCheckpoint(eager=False)
+
+    def within(docs, threshold, bkts) -> DataFrame:
+        return _pairs_within(
+            docs, threshold, near_dedup, lsh_mode, max_bucket, bkts
         )
-        self_losers = self_pairs.select(
-            F.col("id_b").alias("doc_id")
-        ).distinct()
-        if have_pindex:
-            cross_pairs = dd.ngram_jaccard_join(
-                docs, k=_DEDUP_LSH["k"], threshold=jaccard_threshold,
-                corpus_index=pind,
-            )
-        else:
-            cross_pairs = dd.ngram_jaccard_join(
-                docs, corpus.select("doc_id", "text"),
-                k=_DEDUP_LSH["k"], threshold=jaccard_threshold,
-            )
-        cross_losers = cross_pairs.select(
-            F.col("id_a").alias("doc_id")
-        ).distinct()
-    else:
-        # LSH family: both sides verified with exact Jaccard on the
-        # candidate pairs only.  The corpus side of the LSH join is the
-        # precomputed bucket artifact when present (per-batch cost is
-        # then proportional to the batch), and only corpus docs that
-        # actually appear as candidates get shingled for the verify.
-        # ONE batch signature pass feeds both the within-batch self-join
-        # and the batch-vs-corpus probe (localCheckpoint, not persist —
-        # blocks release on GC, no CacheManager entry per ingest batch);
-        # at ingest scale the batch signature map is the dominant
-        # per-batch cost
-        batch_buckets = dd.lsh_buckets(
-            docs, **_DEDUP_LSH
-        ).localCheckpoint(eager=False)
-        self_cands = dd.minhash_lsh_candidates(
-            docs, **_DEDUP_LSH, mode=lsh_mode, max_bucket=max_bucket,
-            buckets=batch_buckets,
+
+    def against_corpus(docs, threshold, bkts) -> DataFrame:
+        return _pairs_against_corpus(
+            docs, corpus, threshold, near_dedup, dataset_dir, have_pindex,
+            max_bucket, bkts,
         )
-        self_pairs = dd.ngram_jaccard_pairs(
-            docs, k=_DEDUP_LSH["k"], threshold=jaccard_threshold,
-            candidates=self_cands,
-        )
-        self_losers = self_pairs.select(
-            F.col("id_b").alias("doc_id")
-        ).distinct()
-        cross_cands = dd.minhash_lsh_join(
-            docs, corpus, **_DEDUP_LSH,
-            corpus_buckets=(
-                spark.read.parquet(f"{art}/buckets")
-                if os.path.exists(f"{art}/buckets")
-                else None
-            ),
-            # re-apply a recorded cap at probe time: appends cap within
-            # their batch, so the UNION of capped writes can exceed the cap
-            # per bucket between compactions — re-ranking near-capped
-            # buckets is cheap and restores the O(cap) probe bound
-            max_bucket=max_bucket,
-            new_buckets=batch_buckets,
-        )
-        corpus_needed = corpus.select("doc_id", "text").join(
-            cross_cands.select(F.col("id_b").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        both = docs.select("doc_id", "text").unionByName(corpus_needed)
-        cross_pairs = dd.ngram_jaccard_pairs(
-            both,
-            k=_DEDUP_LSH["k"],
-            threshold=jaccard_threshold,
-            candidates=cross_cands,
-        )
-        cross_losers = cross_pairs.select(
-            F.col("id_a").alias("doc_id")
-        ).distinct()
-    docs = checkpoint(
+
+    bkts = batch_buckets(docs)
+    self_losers = within(docs, jaccard_threshold, bkts).select(
+        F.col("id_b").alias("doc_id")
+    ).distinct()
+    cross_losers = against_corpus(docs, jaccard_threshold, bkts).select(
+        F.col("id_a").alias("doc_id")
+    ).distinct()
+    docs = log.drop(
         "near_dedup",
-        docs.join(self_losers, "doc_id", "left_anti").join(
-            cross_losers, "doc_id", "left_anti"
-        ),
+        docs.join(self_losers, "doc_id", "left_anti"),
+        cross_losers,
     )
 
-    # 4. decontamination / scrub / quality gates — identical to curate()
+    # 4. decontamination / quality gates — the same rules as curate()
     if bench is not None:
-        dirty = dd.containment_pairs(
-            docs, bench, k=_DEDUP_LSH["k"], threshold=containment_threshold
-        ).select(F.col("train_id").alias("doc_id")).distinct()
-        docs = checkpoint(
-            "decontaminated", docs.join(dirty, "doc_id", "left_anti")
+        docs = log.drop(
+            "decontaminated", docs,
+            _contaminated(docs, bench, containment_threshold),
         )
-    feats = tx.rule_quality_features(docs)
-    keep = feats.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
-        & F.col("repetition_keep")
-    ).select("doc_id")
-    docs = checkpoint("quality", docs.join(keep, "doc_id", "left_semi"))
+    docs = log.keep(
+        "quality", docs,
+        _rule_quality_keep(docs, min_tokens, max_stopword_ratio),
+    )
 
     # 4a0. LM-surprisal gate under the FROZEN bigram LM curate()
     # persisted — same stage position and mean-bits semantics as the
@@ -1712,11 +1660,8 @@ def curate_increment(
         from planet_dump_ng_spark.operators import lm as blm
 
         sc = blm.score_with_bigram_lm(docs, _lm_model_dir(dataset_dir))
-        keep_ids = sc.filter(
-            F.col("mean_bits") <= F.lit(float(max_surprisal_bits))
-        ).select("doc_id")
-        docs = checkpoint(
-            "surprisal_gate", docs.join(keep_ids, "doc_id", "left_semi")
+        docs = log.keep(
+            "surprisal_gate", docs, _surprisal_keep(sc, max_surprisal_bits)
         )
 
     # 4a. DSIR domain gate under the FROZEN model curate() persisted —
@@ -1730,17 +1675,7 @@ def curate_increment(
         from planet_dump_ng_spark.operators import dsir as dsr
 
         w = dsr.dsir_score_with_model(docs, _dsir_model_dir(dataset_dir))
-        keep_ids = w.filter(
-            (
-                F.col("logw_q20").cast("double")
-                / F.col("n_feats")
-                / F.lit(1048576.0)
-            )
-            >= F.lit(float(dsir_min_bits))
-        ).select("doc_id")
-        docs = checkpoint(
-            "dsir_gate", docs.join(keep_ids, "doc_id", "left_semi")
-        )
+        docs = log.keep("dsir_gate", docs, _dsir_keep(w, dsir_min_bits))
 
     # 4b. leakage-free split inheritance: a dataset curated with
     # leakage_free=True guarantees no near-dup pair above split_jaccard
@@ -1755,69 +1690,14 @@ def curate_increment(
     forced_split_col = None
     split_key = None
     if leakage_free:
-        from planet_dump_ng_spark.operators.graph import connected_components
-
-        k_sh = _DEDUP_LSH["k"]
-        if near_dedup == "exact":
-            # exact family: the split guard's edges are exhaustive too —
-            # the _pindex floor is split_jaccard for leakage-free
-            # datasets, so the lower-threshold probe is in-contract
-            sp2 = dd.ngram_jaccard_pairs(
-                docs, k=k_sh, threshold=split_jaccard, prefix_filter=True
-            )
-            comp = connected_components(
-                docs.select(F.col("doc_id").alias("id")),
-                sp2.select(
-                    F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-                ),
-            )
-            if have_pindex:
-                cp2 = dd.ngram_jaccard_join(
-                    docs, k=k_sh, threshold=split_jaccard, corpus_index=pind
-                )
-            else:
-                cp2 = dd.ngram_jaccard_join(
-                    docs, corpus.select("doc_id", "text"),
-                    k=k_sh, threshold=split_jaccard,
-                )
-        else:
-            # docs has shrunk since the near-dedup stage (gates dropped
-            # rows), so this stage derives its OWN shared bucket table
-            guard_buckets = dd.lsh_buckets(
-                docs, **_DEDUP_LSH
-            ).localCheckpoint(eager=False)
-            sc2 = dd.minhash_lsh_candidates(
-                docs, **_DEDUP_LSH, mode=lsh_mode, max_bucket=max_bucket,
-                buckets=guard_buckets,
-            )
-            sp2 = dd.ngram_jaccard_pairs(
-                docs, k=k_sh, threshold=split_jaccard, candidates=sc2
-            )
-            comp = connected_components(
-                docs.select(F.col("doc_id").alias("id")),
-                sp2.select(
-                    F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-                ),
-            )
-            cc2 = dd.minhash_lsh_join(
-                docs, corpus, **_DEDUP_LSH,
-                corpus_buckets=(
-                    spark.read.parquet(f"{art}/buckets")
-                    if os.path.exists(f"{art}/buckets")
-                    else None
-                ),
-                max_bucket=max_bucket,
-                new_buckets=guard_buckets,
-            )
-            corpus_needed2 = corpus.select("doc_id", "text").join(
-                cc2.select(F.col("id_b").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_semi",
-            )
-            cp2 = dd.ngram_jaccard_pairs(
-                docs.select("doc_id", "text").unionByName(corpus_needed2),
-                k=k_sh, threshold=split_jaccard, candidates=cc2,
-            )
+        # docs has shrunk since the near-dedup stage (gates dropped
+        # rows), so this stage derives its OWN shared bucket table.
+        # Under the exact family the split guard's edges are exhaustive
+        # too — the _pindex floor is split_jaccard for leakage-free
+        # datasets, so the lower-threshold probe is in-contract
+        bkts = batch_buckets(docs)
+        comp = _components(docs, within(docs, split_jaccard, bkts))
+        cp2 = against_corpus(docs, split_jaccard, bkts)
         # ALL partner rows, not a per-doc election: the distinct-split
         # count below must see every partner's split, or a doc bridging
         # train and test content would count a single (elected) split
@@ -1847,7 +1727,7 @@ def curate_increment(
             F.col("w.ps").alias("_forced_split"),
             "nsplits",
         )
-        docs = checkpoint(
+        docs = log.checkpoint(
             "split_guard",
             docs.join(assign, "doc_id").filter(F.col("nsplits") <= 1).drop(
                 "nsplits"
@@ -1865,8 +1745,7 @@ def curate_increment(
     # lineage to the dataset path.  The audit column stays out of the
     # appended dataset (same schema discipline as curate()).
     docs = docs.drop("__ntok").localCheckpoint(eager=True)
-    if prev is not None:
-        prev.unpersist()
+    log.release()
     # drop the known-clean marker BEFORE the dataset grows: from here
     # until the artifact appends land, a crash leaves dataset/artifact
     # out of step and the next increment must take the full count check
@@ -1884,43 +1763,15 @@ def curate_increment(
     # session's lifetime, and severs any lineage back to dataset_dir
     manifest_rows = manifest.collect()
     manifest = spark.createDataFrame(manifest_rows, manifest.schema)
-    _tick("append")
+    log.tick("append")
     # extend the dedup artifact with the appended docs so the NEXT
     # increment probes them too; docs is checkpointed, so the artifact
     # appends cannot be poisoned by their own writes.  A pre-artifact
     # dataset gets a one-time backfill from the GROWN dataset (a fresh
-    # read, so it already includes this increment exactly once).
-    # record only what is KNOWN: fractions is non-None exactly when the
-    # user passed it or the header recorded it; leakage_free likewise via
-    # _lf_known.  lsh_mode is always safe to record — every pre-header
-    # dataset was curated before star mode existed, so "pairs" is its
-    # true history, not a guess.
-    extra = {"near_dedup": near_dedup}
-    if near_dedup != "exact":  # exact runs no banding; don't record one
-        extra["lsh_mode"] = lsh_mode
-    if fractions is not None:
-        extra["fractions"] = fractions
-    if _lf_known:
-        extra["leakage_free"] = leakage_free
-    if _jt_known:
-        extra["jaccard_threshold"] = float(jaccard_threshold)
-    if _sj_known and leakage_free:
-        # curate() records split_jaccard only when leakage_free (inert
-        # otherwise); recording an inert passed value here would make a
-        # later equally-inert restatement refusable for no reason
-        extra["split_jaccard"] = float(split_jaccard)
-    if max_bucket is not None:
-        extra["max_bucket"] = max_bucket
-    if _dsir_known:
-        extra["dsir_min_bits"] = recorded["dsir_min_bits"]
-        if "dsir_target_desc" in recorded:
-            extra["dsir_target_desc"] = recorded["dsir_target_desc"]
-    if _ms_known:
-        extra["max_surprisal_bits"] = recorded["max_surprisal_bits"]
-    if _url_known:
-        extra["url_col"] = recorded["url_col"]
+    # read, so it already includes this increment exactly once); its
+    # header records only what is KNOWN (_resolve_policies).
     pindex_task = None
-    if near_dedup == "exact":
+    if not lsh_family:
         # extend the prefix index with the appended survivors.  Runs
         # CONCURRENTLY with the _dedup fingerprints append (passed as
         # concurrent_extra): _synced is still created only after BOTH
@@ -1938,9 +1789,7 @@ def curate_increment(
                     spark.read.parquet(dataset_dir),
                     pind,
                     k=_DEDUP_LSH["k"],
-                    threshold=(
-                        split_jaccard if leakage_free else jaccard_threshold
-                    ),
+                    threshold=pindex_floor,
                 )
     if have_art:
         # bake only a RECORDED cap into the appended buckets — an
@@ -1949,34 +1798,27 @@ def curate_increment(
         # Reuse the batch bucket table the near-dedup (or split-guard)
         # stage already materialized, filtered to the survivors: the
         # append must not pay the batch signature map a second time.
-        reuse = None
-        if near_dedup != "exact":
-            src_b = guard_buckets if leakage_free else batch_buckets
-            reuse = src_b.join(
+        target, mode, cap = docs, "append", recorded.get("max_bucket")
+        if bkts is not None:
+            bkts = bkts.join(
                 docs.select(F.col("doc_id").alias("id")), "id", "left_semi"
             )
-        _write_dedup_artifact(
-            docs, dataset_dir, mode="append",
-            extra_meta=extra, max_bucket=recorded.get("max_bucket"),
-            include_buckets=(near_dedup != "exact"),
-            buckets=reuse,
-            url_col=url_col,
-            concurrent_extra=pindex_task,
-        )
     else:
-        _write_dedup_artifact(
-            spark.read.parquet(dataset_dir),
-            dataset_dir,
-            mode="overwrite",
-            extra_meta=extra,
-            max_bucket=max_bucket,
-            include_buckets=(near_dedup != "exact"),
-            url_col=url_col,
-            concurrent_extra=pindex_task,
+        target, mode, cap = (
+            spark.read.parquet(dataset_dir), "overwrite", max_bucket
         )
+        bkts = None
+    _write_dedup_artifact(
+        target, dataset_dir, mode=mode,
+        extra_meta=_curation_record(policy, known), max_bucket=cap,
+        include_buckets=lsh_family,
+        buckets=bkts,
+        url_col=url_col,
+        concurrent_extra=pindex_task,
+    )
     # _write_dedup_artifact re-created the _synced marker after its
     # fingerprints append — the artifact is in step with the dataset again
-    _tick("artifact_extend")
+    log.tick("artifact_extend")
     return manifest, report
 
 
@@ -2277,10 +2119,7 @@ def main(argv: list[str] | None = None) -> int:
             max_surprisal_bits=args.max_surprisal_bits,
             url_col=args.url_col,
         )
-        toks = dict(report.tokens)
-        for stage, n in report.stages:
-            t = f" tokens={toks[stage]}" if stage in toks else ""
-            print(f"{stage:16s} {n}{t}")
+        _print_attrition(report)
         for r in manifest.collect():
             print(f"split={r.split:6s} appended={r.n_rows}")
         return 0
@@ -2357,10 +2196,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"{'tokenizer':16s} {tmeta['n_rules']} rules learned")
     if n_quarantined:
         print(f"{'quarantined':16s} {n_quarantined}")
-    toks = dict(report.tokens)
-    for stage, n in report.stages:
-        t = f" tokens={toks[stage]}" if stage in toks else ""
-        print(f"{stage:16s} {n}{t}")
+    _print_attrition(report)
     for r in manifest.collect():
         print(f"split={r.split:6s} rows={r.n_rows} ids={r.n_ids}")
     return 0

@@ -19,11 +19,17 @@ def spark():
     # the pipeline/golden paths still run the production session
     # (get_spark defaults: AQE on).  Tests that assert PLAN shape under
     # the production planner opt back in via ``plan_session``.
+    # A 2 GB driver heap instead of the production 8 GB: the suite's
+    # inputs are a few MB, and G1 grows the heap toward its cap (the
+    # test JVM reached 7.1 GB resident under 8 GB).
     spark = get_spark(
         "tests",
         master="local[4]",
         shuffle_partitions=1,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
+        extra_conf={
+            "spark.sql.adaptive.enabled": "false",
+            "spark.driver.memory": "2g",
+        },
     )
     yield spark
 

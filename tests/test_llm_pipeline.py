@@ -1,6 +1,7 @@
 """End-to-end curation pipeline: stage attrition, survivor correctness,
 and materialized output integrity on the real sf documents table."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from planet_dump_ng_spark.llm_pipeline import curate
@@ -8,7 +9,12 @@ from planet_dump_ng_spark.operators import dedup as dd
 from planet_dump_ng_spark.plans.registry import table
 
 
-def test_curate_end_to_end(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("session", ["spark", "plan_session"])
+def test_curate_end_to_end(session, request, sf_dir, tmp_path):
+    """Also under ``plan_session`` (AQE on, the production shuffle
+    width), so AQE's runtime rewrites of the curation plans are checked
+    by results, not only by plan shape."""
+    spark = request.getfixturevalue(session)
     docs = table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0).select("doc_id", "text")
     out = str(tmp_path / "curated")

@@ -199,13 +199,32 @@ def test_half_written_artifact_recovers(spark, sf_dir, tmp_path):
     (the window the meta/buckets/fingerprints order creates) must be a
     repairable stale state, not a brick: the next increment detects the
     absent fingerprints table and rebuilds, never raising
-    PATH_NOT_FOUND on the read that was supposed to detect it."""
+    PATH_NOT_FOUND on the read that was supposed to detect it.  The
+    rebuild must carry the WHOLE curation record over, every policy of
+    it, not just the fractions."""
     import shutil
 
     base, batch = _base_batch(spark, sf_dir)
     out = str(tmp_path / "half_ds")
-    curate(base, out, fractions={"train": 0.9, "test": 0.1})
+    # max_bucket is wider than the 500-doc corpus: recorded, but it caps
+    # no bucket, so every doc keeps its bucket rows
+    curate(
+        base, out, fractions={"train": 0.9, "test": 0.1}, leakage_free=True,
+        lsh_mode="pairs", max_bucket=512, jaccard_threshold=0.75,
+        split_jaccard=0.4,
+    )
     art = _dedup_artifact_dir(out)
+    meta = json.load(open(f"{art}/meta.json"))
+    assert {
+        k: meta[k] for k in (
+            "fractions", "leakage_free", "near_dedup", "lsh_mode",
+            "max_bucket", "jaccard_threshold", "split_jaccard",
+        )
+    } == {
+        "fractions": {"train": 0.9, "test": 0.1}, "leakage_free": True,
+        "near_dedup": "lsh", "lsh_mode": "pairs", "max_bucket": 512,
+        "jaccard_threshold": 0.75, "split_jaccard": 0.4,
+    }
     shutil.rmtree(f"{art}/fingerprints")  # the simulated crash state
 
     curate_increment(batch, out)  # must repair, not raise
@@ -216,8 +235,7 @@ def test_half_written_artifact_recovers(spark, sf_dir, tmp_path):
         == n
     )
     # the rebuild preserved the recorded curation parameters
-    meta = json.load(open(f"{art}/meta.json"))
-    assert meta["fractions"] == {"train": 0.9, "test": 0.1}
+    assert json.load(open(f"{art}/meta.json")) == meta
 
 
 def test_temporary_only_fingerprints_recovers(spark, sf_dir, tmp_path):
