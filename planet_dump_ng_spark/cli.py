@@ -6,9 +6,10 @@
         --xml planet.osm.bz2 --history-pbf history.osm.pbf
 
 Differences from the reference, by design:
-- ``--dump-file`` takes a PLAIN-format dump (``pg_restore -f -`` output);
-  pg_restore against the custom format is one subprocess away and kept
-  outside the engine.
+- ``--dump-file`` takes a plain-format dump (``pg_restore -f -`` output)
+  or, named ``*.dmp``, a custom-format archive, which is extracted by
+  one ``pg_restore -a -t <table>`` subprocess per table, all concurrent
+  (``sources.extract_tables_parallel``; needs pg_restore on PATH).
 - ``--compress-command``: bzip2/gzip-family commands whose format
   matches the output suffix run cluster-parallel inside the XML sink
   (multistream bz2 / multi-member gz — no shell in the executors); any
@@ -54,7 +55,8 @@ def build_parser() -> argparse.ArgumentParser:
         prog="planet-dump-ng-spark",
         description="Convert an OpenStreetMap database dump to planet files.",
     )
-    p.add_argument("--dump-file", "-f", required=True, help="plain-format pg dump")
+    p.add_argument("--dump-file", "-f", required=True,
+                   help="plain-format pg dump, or a custom-format archive named *.dmp")
     p.add_argument(
         "--dense-nodes",
         "-d",
@@ -201,13 +203,8 @@ def meta_from_args(args: argparse.Namespace) -> dict:
         if getattr(args, "meta_file", None)
         else {}
     )
-    for attr, key in [
-        ("meta_author", "copyright"),
-        ("meta_source", "source"),
-        ("meta_copyleft", "license"),
-        ("meta_attribution", "attribution"),
-    ]:
-        v = getattr(args, attr, None)
+    for flag, key in _META_KEYS.items():
+        v = getattr(args, flag.replace("-", "_"), None)
         if v:
             out[key] = v
     return out

@@ -188,9 +188,8 @@ def _write_dedup_artifact(
     import json
     import os
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
-    from planet_dump_ng_spark.session import capture_job_context
+    from planet_dump_ng_spark.session import run_side_by_side
 
     d = _dedup_artifact_dir(dataset_dir)
     os.makedirs(d, exist_ok=True)
@@ -230,33 +229,22 @@ def _write_dedup_artifact(
     fp_df = docs.select(
         F.col("doc_id"), tx.fingerprint("text").alias("fp")
     )
-    extras = [concurrent_extra] if concurrent_extra is not None else []
-    # pool threads do not inherit the caller's local properties: each task
-    # re-applies its scheduler pool and job description first
-    job_context = capture_job_context(docs.sparkSession)
-
-    def in_context(task) -> None:
-        job_context()
-        task()
-
-    def run_side_by_side(*tasks) -> None:
-        with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-            for fut in [pool.submit(in_context, t) for t in tasks]:
-                fut.result()
-
+    extras = {"concurrent_extra": concurrent_extra} if concurrent_extra else {}
     if mode == "overwrite":
         fp_tmp = f"{d}/fingerprints.build"
         shutil.rmtree(f"{d}/fingerprints", ignore_errors=True)
         shutil.rmtree(fp_tmp, ignore_errors=True)
-        run_side_by_side(
-            _write_buckets,
-            _write_urls,
-            lambda: fp_df.write.mode("overwrite").parquet(fp_tmp),
-            *extras,
-        )
+        run_side_by_side(docs.sparkSession, {
+            "buckets": _write_buckets,
+            "urls": _write_urls,
+            "fingerprints": lambda: fp_df.write.mode("overwrite").parquet(fp_tmp),
+            **extras,
+        })
         os.rename(fp_tmp, f"{d}/fingerprints")
     elif include_buckets or url_col is not None:
-        run_side_by_side(_write_buckets, _write_urls, *extras)
+        run_side_by_side(
+            docs.sparkSession, {"buckets": _write_buckets, "urls": _write_urls, **extras}
+        )
         fp_df.write.mode(mode).parquet(f"{d}/fingerprints")
     else:
         # exact-family append: no same-directory table precedes the
@@ -265,10 +253,10 @@ def _write_dedup_artifact(
         # curate_increment's stale pass validates independently — so
         # the fingerprints append may overlap it; _synced still lands
         # only after both complete
-        run_side_by_side(
-            *extras,
-            lambda: fp_df.write.mode(mode).parquet(f"{d}/fingerprints"),
-        )
+        run_side_by_side(docs.sparkSession, {
+            **extras,
+            "fingerprints": lambda: fp_df.write.mode(mode).parquet(f"{d}/fingerprints"),
+        })
     # known-clean marker, written strictly after the commit-marker table:
     # its presence lets the next increment skip the dataset-vs-artifact
     # count check entirely (curate_increment deletes it before every

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import functools
 import os
-from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime
 
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from planet_dump_ng_spark.operators import assembly, history
 from planet_dump_ng_spark.schemas import TABLES
+from planet_dump_ng_spark.session import run_side_by_side
 from planet_dump_ng_spark.sinks import pbf_sink, xml_sink
 from planet_dump_ng_spark.sources import (
     extract_tables_parallel,
@@ -156,8 +157,13 @@ def write_outputs(
     versions; 'changesets'/'discussions' consume only the changesets frame
     (F7).  Each element type is arranged once (:func:`arrange_elements`)
     and each output is one Spark job over the arrangements; those read by
-    more than one output are persisted (multicast).
+    more than one output are persisted (multicast).  The persisted
+    arrangements are built and the PBF changeset check runs while the
+    outputs are planned; then every output's job runs side by side, from
+    one thread each (the reference's one thread per writer,
+    planet-dump.cpp:242-259), labelled ``emit:<file>``.
     """
+    spark = frames.changesets.sparkSession
     # Scope canChangeCachedPlanOutputPartitioning=true over the WHOLE
     # phase: the conf is captured when each InMemoryRelation is created
     # (the .persist() of each arrangement), so it must be live before the
@@ -173,226 +179,178 @@ def write_outputs(
     # re-shuffles its persisted label state).  The emit's consumers
     # only scan the arrangements in partition order, so here the
     # unknown-partitioning trade costs nothing.
-    _CACHED_REPART = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    spark_for_conf = frames.changesets.sparkSession
-    _prev_repart = spark_for_conf.conf.get(_CACHED_REPART, None)
-    spark_for_conf.conf.set(_CACHED_REPART, "true")
-    try:
-        _write_outputs_body(
-            frames, outputs, generator, meta, dense_nodes, compress_command
+    with _conf_scope(
+        spark, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+    ):
+        # -- shared arrangements: sort each stream ONCE ------------------
+        # Every output variant consumes the same (id, version)-ordered
+        # stream; the current view, rendering and anonymization are
+        # order-preserving filters and projections, so one range-partition
+        # + sort per element type (persisted when >1 output reads it) feeds
+        # every sink — the reference's single-pass multicast
+        # (copy_elements.cpp:372-415) as cached arrangements.
+        uses_elements = sum(
+            o.kind in ("planet", "history", "pbf", "pbf-history") for o in outputs
         )
-    finally:
-        if _prev_repart is None:
-            spark_for_conf.conf.unset(_CACHED_REPART)
-        else:
-            spark_for_conf.conf.set(_CACHED_REPART, _prev_repart)
+        uses_changesets = sum(
+            o.kind in ("planet", "history", "changesets", "discussions")
+            for o in outputs
+        )
 
+        def shared(df, n_users):
+            return df.persist() if n_users > 1 else df
 
-def _write_outputs_body(
-    frames: PlanetFrames,
-    outputs: list[OutputSpec],
-    generator: str,
-    meta: dict | None,
-    dense_nodes: bool,
-    compress_command: str | None,
-) -> None:
-    """The body of :func:`write_outputs` (split out so the cached-
-    repartitioning conf scope above wraps the arrangement persists AND
-    the write jobs — InMemoryRelation captures the conf at persist
-    time)."""
-    # -- shared arrangements: sort each stream ONCE ----------------------
-    # Every output variant consumes the same (id, version)-ordered stream;
-    # the current view, rendering and anonymization are order-preserving
-    # filters and projections, so one range-partition + sort per element
-    # type (persisted when >1 output reads it) feeds every sink — the
-    # reference's single-pass multicast (copy_elements.cpp:372-415) as
-    # cached arrangements.
-    uses_elements = sum(
-        o.kind in ("planet", "history", "pbf", "pbf-history") for o in outputs
-    )
-    uses_changesets = sum(
-        o.kind in ("planet", "history", "changesets", "discussions")
-        for o in outputs
-    )
-
-    def shared(df, n_users):
-        return df.persist() if n_users > 1 else df
-
-    arranged = (
-        {
+        arranged = {
             t: shared(arrange_elements(getattr(frames, t)), uses_elements)
             for t in ELEMENT_TYPES
+            if uses_elements
         }
-        if uses_elements
-        else {}
-    )
-    cs_arranged = (
-        shared(
-            frames.changesets.repartitionByRange(F.col("id")).sortWithinPartitions(
-                "id"
-            ),
-            uses_changesets,
-        )
-        if uses_changesets
-        else None
-    )
-
-    def prepare(spec: OutputSpec):
-        """Build the output's frames (driver-side planning only) and
-        return the call that writes it."""
-        if spec.kind in ("changesets", "discussions"):
-            rendered = xml_sink.render_changesets(
-                cs_arranged,
-                frames.max_ts,
-                anonymize=spec.anonymize,
-                discussions=spec.kind == "discussions",
+        cs_arranged = (
+            shared(
+                frames.changesets.repartitionByRange(F.col("id"))
+                .sortWithinPartitions("id"),
+                uses_changesets,
             )
+            if uses_changesets
+            else None
+        )
+
+        def prepare(spec: OutputSpec):
+            """Build the output's frames (driver-side planning only) and
+            return the call that writes it."""
+            if spec.kind in ("changesets", "discussions"):
+                rendered = xml_sink.render_changesets(
+                    cs_arranged,
+                    frames.max_ts,
+                    anonymize=spec.anonymize,
+                    discussions=spec.kind == "discussions",
+                )
+                return functools.partial(
+                    xml_sink.write_xml_file,
+                    [(rendered, ["id"])],
+                    spec.path,
+                    generator,
+                    frames.max_ts,
+                    pre_arranged=True,
+                    meta=meta,
+                    compress_command=compress_command,
+                )
+
+            hist = spec.kind in ("history", "pbf-history")
+            n, w, r = (
+                arranged[t].drop(history.LATEST)
+                if hist
+                else history.current_of(arranged[t])
+                for t in ELEMENT_TYPES
+            )
+            if spec.kind in ("pbf", "pbf-history"):
+                return functools.partial(
+                    pbf_sink.write_pbf_file,
+                    n,
+                    w,
+                    r,
+                    spec.path,
+                    history=hist,
+                    anonymize=spec.anonymize,
+                    generator=generator,
+                    max_ts=frames.max_ts,
+                    pre_arranged=True,
+                    source=(meta or {}).get("source", pbf_sink.OSM_API_ORIGIN),
+                    dense_nodes=dense_nodes,
+                )
+            parts = [
+                (
+                    xml_sink.render_changesets(
+                        cs_arranged, frames.max_ts, anonymize=spec.anonymize
+                    ),
+                    ["id"],
+                ),
+                (xml_sink.render_nodes(n, hist, spec.anonymize), ["id", "version"]),
+                (xml_sink.render_ways(w, hist, spec.anonymize), ["id", "version"]),
+                (
+                    xml_sink.render_relations(r, hist, spec.anonymize),
+                    ["id", "version"],
+                ),
+            ]
             return functools.partial(
                 xml_sink.write_xml_file,
-                [(rendered, ["id"])],
-                spec.path,
-                generator,
-                frames.max_ts,
-                pre_arranged=True,
-                meta=meta,
-                compress_command=compress_command,
+                parts, spec.path, generator, frames.max_ts, pre_arranged=True,
+                meta=meta, compress_command=compress_command,
             )
 
-        hist = spec.kind in ("history", "pbf-history")
-        n, w, r = (
-            arranged[t].drop(history.LATEST) if hist else history.current_of(arranged[t])
-            for t in ELEMENT_TYPES
-        )
-        if spec.kind in ("pbf", "pbf-history"):
-            return functools.partial(
-                pbf_sink.write_pbf_file,
-                n,
-                w,
-                r,
-                spec.path,
-                history=hist,
-                anonymize=spec.anonymize,
-                generator=generator,
-                max_ts=frames.max_ts,
-                pre_arranged=True,
-                source=(meta or {}).get("source", pbf_sink.OSM_API_ORIGIN),
-                dense_nodes=dense_nodes,
-            )
-        parts = [
-            (
-                xml_sink.render_changesets(
-                    cs_arranged, frames.max_ts, anonymize=spec.anonymize
-                ),
-                ["id"],
-            ),
-            (xml_sink.render_nodes(n, hist, spec.anonymize), ["id", "version"]),
-            (xml_sink.render_ways(w, hist, spec.anonymize), ["id", "version"]),
-            (xml_sink.render_relations(r, hist, spec.anonymize), ["id", "version"]),
-        ]
-        return functools.partial(
-            xml_sink.write_xml_file,
-            parts, spec.path, generator, frames.max_ts, pre_arranged=True,
-            meta=meta, compress_command=compress_command,
-        )
+        cached = {
+            t: df
+            for t, df in {**arranged, "changesets": cs_arranged}.items()
+            if df is not None and df.is_cached
+        }
 
-    def check_changesets() -> None:
-        # PBF strictness (pbf_writer.cpp:312-318): with full user info, an
-        # element referencing a missing changeset must error, not silently
-        # go anonymous (only XML is silent).  One union-ed anti-join before
-        # any output, over the persisted arrangements when there are some.
-        refs = functools.reduce(
-            DataFrame.unionByName,
-            [
-                (arranged[t] if uses_elements > 1 else getattr(frames, t))
-                .select("changeset_id")
-                for t in ELEMENT_TYPES
-            ],
-        )
-        assembly.check_changesets_present(
-            refs, cs_arranged if uses_changesets > 1 else frames.changesets
-        )
+        def build_and_check() -> None:
+            # Each persisted arrangement is built by its own job (a noop
+            # write: nothing collected), all at once.  A cached plan runs its adaptive stages on the thread
+            # that first reads it, so one query over several unbuilt caches
+            # (the check, or an XML output's union) builds them one after
+            # another: a chain of small jobs whose length follows the
+            # driver's latency.
+            run_side_by_side(spark, {
+                t: df.write.format("noop").mode("overwrite").save
+                for t, df in cached.items()
+            })
+            if any(o.kind in ("pbf", "pbf-history") and not o.anonymize
+                   for o in outputs):
+                # PBF strictness (pbf_writer.cpp:312-318): with full user
+                # info, an element referencing a missing changeset must
+                # error, not silently go anonymous (only XML is silent).
+                # One union-ed anti-join before any output, over the
+                # persisted arrangements when there are some.
+                refs = functools.reduce(
+                    DataFrame.unionByName,
+                    [
+                        (arranged[t] if uses_elements > 1 else getattr(frames, t))
+                        .select("changeset_id")
+                        for t in ELEMENT_TYPES
+                    ],
+                )
+                assembly.check_changesets_present(
+                    refs, cs_arranged if uses_changesets > 1 else frames.changesets
+                )
 
-    cached = [
-        df
-        for df in (*arranged.values(), cs_arranged)
-        if df is not None and df.is_cached
-    ]
-    strict = any(
-        o.kind in ("pbf", "pbf-history") and not o.anonymize for o in outputs
-    )
-
-    def build_and_check() -> None:
-        # Each persisted arrangement is built by its own job, all at once.
-        # A cached plan runs its adaptive stages on the thread that first
-        # reads it, so one query over several unbuilt caches (the check,
-        # or an XML output's union) builds them one after another: a chain
-        # of small jobs whose length follows the driver's latency.
-        with ThreadPoolExecutor(max_workers=max(len(cached), 1)) as pool:
-            list(pool.map(_build, cached))
-        if strict:
-            check_changesets()
-
-    try:
-        # the builds and the check run on a side thread while this one
-        # plans every output (about a second of driver time for five
-        # outputs), so the outputs' jobs start as soon as the check ends,
-        # each one job over finished caches
-        with ThreadPoolExecutor(max_workers=1) as side:
-            ready = side.submit(build_and_check)
-            writes = {spec.path: prepare(spec) for spec in outputs}
-            ready.result()
-        _write_all(writes, spark=frames.changesets.sparkSession)
-    finally:
-        for df in (*arranged.values(), cs_arranged):
-            if df is not None and df.is_cached:
+        try:
+            # the builds and the check run beside the planning of every
+            # output (about a second of driver time for five outputs), so
+            # the outputs' jobs start as soon as the check ends, each one
+            # job over finished caches
+            writes = run_side_by_side(spark, {
+                "build_and_check": build_and_check,
+                "plan": lambda: {
+                    o.path: functools.partial(_emit, spark, o.path, prepare(o))
+                    for o in outputs
+                },
+            })["plan"]
+            run_side_by_side(spark, writes)
+        finally:
+            for df in cached.values():
                 df.unpersist()
 
 
-def _build(df: DataFrame) -> None:
-    """Materialize a persisted frame: one job, nothing collected."""
-    df.write.format("noop").mode("overwrite").save()
+@contextmanager
+def _conf_scope(spark: SparkSession, key: str, value: str):
+    """Set a session conf for the block, then put back its old value."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
-def _write_all(writes: dict, spark) -> None:
-    """Run every output's write ({path: call}), side by side when there
-    are several.
-
-    The reference's writers consume ONE multicast pass concurrently
-    (planet-dump.cpp:242-259, one thread per writer).  Spark analog: each
-    output's job is submitted from its own thread, in its own on-demand
-    FAIR pool (pool name = thread-local property): with every job in one
-    pool the pool's internal FIFO still serializes whole stages across
-    outputs; one pool per output is what round-robins task slots between
-    the writers (session.py sets spark.scheduler.mode=FAIR)."""
-    if len(writes) < 2:
-        for write in writes.values():
-            write()
-        return
-
-    def write_pooled(path: str) -> None:
-        name = os.path.basename(path)
-        sc = spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", f"emit-{name}")
-        # label the output's job (guide §1: label your jobs), so event
-        # logs attribute it to its output file
-        sc.setJobDescription(f"emit:{name}")
-        try:
-            writes[path]()
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-            sc.setJobDescription(None)
-
-    # submit (not map): map surfaces only the FIRST failure while sibling
-    # outputs still run to completion — failed paths must all be
-    # reported, not just one.
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futures = {path: pool.submit(write_pooled, path) for path in writes}
-    failures = {path: f.exception() for path, f in futures.items() if f.exception()}
-    if failures:
-        detail = "; ".join(f"{p}: {e!r}" for p, e in failures.items())
-        raise RuntimeError(
-            f"{len(failures)}/{len(writes)} outputs failed: {detail}"
-        ) from next(iter(failures.values()))
+def _emit(spark: SparkSession, path: str, write) -> None:
+    """Run one output's write with its jobs labelled ``emit:<file>``, so
+    event logs attribute them to the output file."""
+    spark.sparkContext.setJobDescription(f"emit:{os.path.basename(path)}")
+    write()
 
 
 def run_dump(
@@ -407,7 +365,9 @@ def run_dump(
     dense_nodes: bool = True,
     compress_command: str | None = None,
 ) -> PlanetFrames:
-    """Full lifecycle from a plain-format pg_dump file.
+    """Full lifecycle from a pg_dump: a plain-format file, or a
+    custom-format archive named ``*.dmp`` (one ``pg_restore`` per table,
+    :func:`sources.extract_tables_parallel`).
 
     With ``stage`` (default) every table is decoded once into parquet
     (staging.py, operator S9) so the N output actions scan columnar data
@@ -433,7 +393,6 @@ def run_dump(
             # per-table parallel pg_restore fan-out (the reference's 12
             # concurrent extraction passes) — no monolithic .sql
             # intermediate, no single-core split pass
-            os.makedirs(work_dir, exist_ok=True)
             extract_tables_parallel(dump_file, copy_dir, list(ELEMENT_TABLES))
         else:
             split_dump_file(dump_file, copy_dir, list(ELEMENT_TABLES))
@@ -443,14 +402,12 @@ def run_dump(
             # submitted from threads so the scheduler overlaps them (the
             # Spark analog of the reference's 12 parallel extraction
             # threads, planet-dump.cpp:127-140)
-            with ThreadPoolExecutor(max_workers=12) as pool:
-                futures = {
-                    t: pool.submit(
-                        staging.stage_table, spark, df, stage_dir, t, resume
-                    )
-                    for t, df in tables.items()
-                }
-                tables = {t: f.result() for t, f in futures.items()}
+            tables = run_side_by_side(spark, {
+                t: functools.partial(
+                    staging.stage_table, spark, df, stage_dir, t, resume
+                )
+                for t, df in tables.items()
+            })
     frames = build_planet(spark, tables)
     write_outputs(
         frames,

@@ -14,7 +14,10 @@ UnsafeExternalSorter and the shuffle service; the knobs that matter are
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -107,15 +110,6 @@ def get_spark(
                 "-Xlog:disable -Xlog:all=warning:stderr:uptime,level,tags",
             ),
         )
-        # FAIR task scheduling: the multicast emit (pipeline.write_outputs)
-        # submits one job per output from threads — under FIFO an
-        # earlier output's wide stage monopolizes every task slot and the
-        # sibling outputs' stages queue whole-stage-at-a-time behind it
-        # (observed as multi-second straggler gaps on the XML outputs).
-        # FAIR round-robins slots between the concurrent jobs, which is
-        # the reference's one-thread-per-writer concurrency model
-        # (planet-dump.cpp:242-259) expressed in scheduler terms.
-        .config("spark.scheduler.mode", "FAIR")
         # Python workers fork from the package's daemon: the stock
         # pyspark.daemon plus a zip importer that re-reads pyspark.zip
         # only when the archive changed.  The stock importer re-reads it
@@ -131,23 +125,38 @@ def get_spark(
     return spark
 
 
-def capture_job_context(spark: SparkSession):
-    """Capture the calling thread's scheduler pool + job description and
-    return a thunk that re-applies them on whatever thread calls it.
+def run_side_by_side(spark: SparkSession, calls: dict[str, Callable]) -> dict:
+    """Run the calls side by side, from a pool with one thread per call,
+    and return {key: result} — the engine's one way to submit Spark jobs
+    concurrently (the reference's one thread per writer or table,
+    planet-dump.cpp:127-140, 242-259).
 
-    PySpark local properties are PER PYTHON THREAD (pinned-thread mode):
-    a plain ``ThreadPoolExecutor`` worker does NOT inherit them, so jobs
-    fanned out through a pool silently drop the caller's FAIR pool and
-    job description — they land in the default FIFO pool, unlabelled
-    (llm_pipeline._write_dedup_artifact applies it).  Each pool task
-    calls the thunk first; worker threads are reused, so it must be
-    applied per task, not per thread."""
-    sc = spark.sparkContext
-    pool = sc.getLocalProperty("spark.scheduler.pool")
-    desc = sc.getLocalProperty("spark.job.description")
+    Local properties are per Python thread in PySpark's pinned-thread
+    mode, so a plain pool thread would drop the caller's job
+    description, job group and scheduler pool.  Each call is wrapped on
+    THIS thread by ``inheritable_thread_target``, which copies them once
+    per call: a call may set its own description without touching a
+    sibling's.  Every call runs to its end.  When several fail, one
+    error names every failed key, chained from the first of them; a
+    lone failure is raised as itself, its key added as a note, so
+    callers still catch its type (the PBF changeset check's
+    ValueError).
 
-    def apply() -> None:
-        sc.setLocalProperty("spark.scheduler.pool", pool)
-        sc.setLocalProperty("spark.job.description", desc)
-
-    return apply
+    The jobs share Spark's default FIFO scheduler.  Per-output FAIR
+    pools paid when each output was many jobs; with each output one job
+    over finished caches they measured no faster (CHANGES.md)."""
+    with ThreadPoolExecutor(max_workers=max(len(calls), 1)) as pool:
+        futures = {
+            key: pool.submit(inheritable_thread_target(spark)(call))
+            for key, call in calls.items()
+        }
+    failed = {key: f.exception() for key, f in futures.items() if f.exception()}
+    if len(failed) > 1:
+        detail = "; ".join(f"{key}: {type(e).__name__}: {e}" for key, e in failed.items())
+        raise RuntimeError(
+            f"{len(failed)}/{len(calls)} calls failed: {detail}"
+        ) from next(iter(failed.values()))
+    for key, e in failed.items():
+        e.add_note(f"raised by the side-by-side call {key!r}")
+        raise e
+    return {key: f.result() for key, f in futures.items()}

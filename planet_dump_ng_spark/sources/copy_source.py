@@ -217,25 +217,6 @@ def read_copy_table(
     return parts.select(*out_cols)
 
 
-def extract_custom_dump(dump_path: str, out_sql: str) -> str:
-    """S1 single-pass variant: pg_dump CUSTOM-format archive -> one
-    monolithic plain COPY text file via ``pg_restore`` (kept for callers
-    that want the intermediate .sql on disk); the pipeline itself uses
-    the concurrent per-table :func:`extract_tables_parallel` fan-out.
-
-    Returns ``out_sql``.  Raises FileNotFoundError when pg_restore is not
-    installed."""
-    import shutil as _shutil
-    import subprocess
-
-    if _shutil.which("pg_restore") is None:
-        raise FileNotFoundError("pg_restore not found on PATH")
-    subprocess.run(
-        ["pg_restore", "-f", out_sql, "-a", dump_path], check=True
-    )
-    return out_sql
-
-
 def extract_tables_parallel(
     dump_path: str,
     out_dir: str,
@@ -245,11 +226,10 @@ def extract_tables_parallel(
     """S1 at full width: one ``pg_restore -a -t <table>`` subprocess PER
     TABLE, all concurrent — exactly the reference's extraction strategy
     (12 parallel per-table passes, src/planet-dump.cpp:127-140 +
-    src/dump_reader.cpp:656-663).  Replaces the monolithic
-    extract_custom_dump + sequential :func:`split_dump_file` pair for
-    custom-format archives: no intermediate whole-dump .sql file, no
-    single-core split pass over it, and wall-clock is the SLOWEST table
-    instead of the sum.
+    src/dump_reader.cpp:656-663).  Custom-format archives need no
+    intermediate whole-dump .sql file and no single-core
+    :func:`split_dump_file` pass over one, and wall-clock is the SLOWEST
+    table instead of the sum.
 
     Each pg_restore's output is piped through ``sed -n
     '/^COPY /,/^\\\\.$/p'`` (C-speed, streaming) so only the COPY

@@ -5,6 +5,7 @@ import bz2
 import dataclasses
 import os
 import sys
+import threading
 import zipfile
 import zipimport
 import xml.etree.ElementTree as ET
@@ -13,7 +14,7 @@ import pytest
 
 from planet_dump_ng_spark import llm_pipeline, pipeline
 from planet_dump_ng_spark.operators import history
-from planet_dump_ng_spark.session import DAEMON_MODULE
+from planet_dump_ng_spark.session import DAEMON_MODULE, run_side_by_side
 from planet_dump_ng_spark.sinks import pbf_sink, xml_sink
 from planet_dump_ng_spark.sources import split_dump_file
 from planet_dump_ng_spark.worker_daemon import StampedZipImporter, install
@@ -340,3 +341,61 @@ def test_dedup_artifact_pool_jobs_carry_callers_description(spark, tmp_path):
     finally:
         sc.setJobDescription(None)
     assert seen == ["curate:dedup-artifact"]
+
+
+# -- running Spark jobs side by side ------------------------------------------
+
+
+def test_side_by_side_runs_every_call_and_names_every_failure(spark):
+    ran = []
+
+    def fail(msg: str):
+        def call() -> None:
+            raise ValueError(msg)
+
+        return call
+
+    with pytest.raises(RuntimeError, match=r"2/3 calls failed: a: .*a-broke.*; b: .*b-broke") as err:
+        run_side_by_side(
+            spark, {"a": fail("a-broke"), "b": fail("b-broke"), "c": lambda: ran.append("c")}
+        )
+    assert ran == ["c"]
+    assert str(err.value.__cause__) == "a-broke"
+    # a lone failure keeps its own type, its key added as a note
+    with pytest.raises(ValueError, match="a-broke") as err:
+        run_side_by_side(spark, {"a": fail("a-broke"), "c": lambda: ran.append("c")})
+    assert err.value.__notes__ == ["raised by the side-by-side call 'a'"]
+    assert ran == ["c", "c"]
+
+
+def test_side_by_side_calls_carry_callers_job_context(spark):
+    sc = spark.sparkContext
+    own_set = threading.Event()
+
+    def task_props():
+        from pyspark import TaskContext
+
+        return sc.parallelize([0], 1).map(
+            lambda _: tuple(TaskContext.get().getLocalProperty(k)
+                            for k in ("spark.job.description", "spark.scheduler.pool"))
+        ).collect()
+
+    def own():
+        sc.setJobDescription("own-desc")
+        own_set.set()
+        return task_props()
+
+    def sibling():
+        # runs after its sibling set its own description
+        own_set.wait(60)
+        return task_props()
+
+    sc.setJobDescription("caller-desc")
+    sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
+    try:
+        got = run_side_by_side(spark, {"own": own, "sibling": sibling})
+    finally:
+        sc.setJobDescription(None)
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    assert got == {"own": [("own-desc", "caller-pool")],
+                   "sibling": [("caller-desc", "caller-pool")]}
