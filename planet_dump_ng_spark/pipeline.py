@@ -286,11 +286,11 @@ def write_outputs(
 
         def build_and_check() -> None:
             # Each persisted arrangement is built by its own job (a noop
-            # write: nothing collected), all at once.  A cached plan runs its adaptive stages on the thread
-            # that first reads it, so one query over several unbuilt caches
-            # (the check, or an XML output's union) builds them one after
-            # another: a chain of small jobs whose length follows the
-            # driver's latency.
+            # write: nothing collected), all at once.  A cached plan runs
+            # its adaptive stages on the thread that first reads it, so one
+            # query over several unbuilt caches (the check, or an XML
+            # output's union) builds them one after another: a chain of
+            # small jobs whose length follows the driver's latency.
             run_side_by_side(spark, {
                 t: df.write.format("noop").mode("overwrite").save
                 for t, df in cached.items()
